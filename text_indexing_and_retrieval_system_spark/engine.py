@@ -43,7 +43,7 @@ from .operators.segments import Manifests, build_index, term_bucket_py
 POSTINGS_SCHEMA = "term string, doc_id_int long, tf int, dl int, positions array<int>"
 
 # search_batch winner-merge crossover: at or below this many estimated
-# per-(query, bucket) winner rows the driver merges locally; above it the
+# per-(query, kernel group) winner rows the driver merges locally; above it the
 # distributed merge keeps the collect at ~k x queries rows (env override
 # for scaling experiments)
 DRIVER_MERGE_MAX_ROWS = int(os.environ.get("TIRS_DRIVER_MERGE_MAX_ROWS", "2000000"))
@@ -147,16 +147,19 @@ class InvertedIndex:
             if info and info.get("range_shift") is not None:
                 self.range_shift = int(info["range_shift"])
                 break
-        # kernel tasks: one shuffle partition per ACTUAL range bucket via
-        # the slot mapping (wand._with_slot) — no collision stragglers,
-        # no empty partitions paying closure ship + unpickle. The bucket
-        # count follows from the doc-id geometry (shift is chosen from
-        # n_convs, so the realized count can be below n_range_buckets);
-        # +1 covers the edge bucket.
+        # number of range buckets the kernels pack into groups
+        # (wand._with_slot: one group per core slot, each group alone on
+        # its own shuffle partition). It follows from the doc-id
+        # geometry: conv ints are dense in [0, n_convs), so every doc id
+        # is below n_convs << TURN_BITS, and the shift is chosen from
+        # n_convs, so the realized count can be below n_range_buckets.
+        # Counting exactly keeps an always-empty bucket from owning a
+        # group; a doc outside the count would still score exactly (the
+        # null overflow group).
         if self.range_shift is not None:
             n_convs = int(self.stats.get("n_convs") or 0)
-            max_doc = (n_convs << TURN_BITS) + (1 << TURN_BITS)
-            self.kernel_buckets = (max_doc >> self.range_shift) + 1
+            top = max((n_convs << TURN_BITS) - 1, 0)
+            self.kernel_buckets = (top >> self.range_shift) + 1
         else:
             self.kernel_buckets = self.n_range_buckets + 1
         norm = cfg.get("normalize", {})
@@ -701,7 +704,7 @@ class InvertedIndex:
             acc_decoded=acc_decoded,
             n_buckets=self.kernel_buckets,
         )
-        # per-bucket winners are tiny (<= k x n_buckets): merge on the
+        # per-group winners are tiny (<= k x groups): merge on the
         # driver and resolve doc_id strings with one pruned point-lookup —
         # 2 small jobs total instead of join+sort+limit stages. Ties break
         # on doc_id_int, the engine-wide contract (ranking.top_k).
@@ -968,15 +971,17 @@ class InvertedIndex:
             batch_key=uuid.uuid4().hex,
         )
         mark("plan")
-        # merge the per-(query, bucket) winners to per-query top-k:
-        # small batches (k x queries x buckets winners fit the driver)
+        # merge the per-(query, group) winners to per-query top-k:
+        # small batches (k x queries x groups winners fit the driver)
         # merge in numpy on the driver — one Spark stage less; beyond the
         # threshold, the distributed merge keeps the driver collect at
         # k x queries rows (the 1000-executor path).
         # measured at 2.4M-turn scale: the driver merge (Arrow toPandas +
         # one lexsort) beats the distributed merge (an extra stage with a
         # python pass per query group) up to at least 1.6M winner rows
-        est_rows = k * len(queries) * self.n_range_buckets
+        est_rows = k * len(queries) * wand.kernel_groups(
+            self.spark, self.kernel_buckets
+        )
         if est_rows <= DRIVER_MERGE_MAX_ROWS:
             lpdf = local.toPandas()
             mark("kernel_and_collect")

@@ -4,10 +4,11 @@ Spark-shaped successor of the reference's DAAT + thresholding + early
 stopping (`/root/reference/code/indexes/query_processing/
 query_processing_engine.py:364-460`): instead of one pointer-advancing
 Python loop, the doc space is already split into contiguous doc-id range
-buckets at build time, so each executor scores one bucket's blocks fully
+buckets at build time, and whole buckets are packed into one kernel
+group per core slot; each task scores one group's blocks fully
 vectorized (numpy) and emits a local top-k; the global top-k is the
-TakeOrderedAndProject merge of the per-bucket winners — the distributed
-analogue of the reference's single min-heap (`:407-450`).
+merge of the per-group winners — the distributed analogue of the
+reference's single min-heap (`:407-450`).
 
 Block-level pruning (the block-max part): a block cannot contribute to
 the top-k unless `idf_t * block_max_impact + Σ_{u≠t} ub_u > θ`, where
@@ -23,8 +24,6 @@ oracle/DataFrame paths bit-for-bit.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -36,16 +35,6 @@ K1 = 1.2
 B = 0.75
 
 TOPK_SCHEMA = "doc_id_int long, score double"
-
-# fixed partition count for the bucket-kernel shuffles: an EXPLICIT
-# repartition (not groupBy's default) so AQE can't coalesce the stage
-# down by Arrow byte size — the kernel's cost is python CPU per bucket,
-# which AQE's size heuristic cannot see. 64 partitions over <=32 bucket
-# keys keeps hash collisions (two buckets on one task = a straggler)
-# rare while staying cheap at low core counts; identical at every
-# parallelism level so scaling runs compare identical plans.
-KERNEL_SHUFFLE_PARTITIONS = 64
-
 
 KERNEL_COLS = ["term", "range_bucket", "first_doc", "last_doc", "block_max_impact", "payload"]
 
@@ -72,10 +61,11 @@ def _murmur3_int32(x: int, seed: int = 42) -> int:
 
 def _slot_values(n_parts: int) -> list[int]:
     """For each partition index p in [0, n_parts): an int v with
-    murmur3(v) % n_parts == p. Remapping bucket b to value v_b makes
-    Spark's HashPartitioning place every bucket on its OWN partition —
-    n_parts tasks, all non-empty, no hash-collision stragglers and no
-    empty partitions each paying the UDF-closure ship + unpickle."""
+    murmur3(v) % n_parts == p. Remapping kernel group g to value v_g
+    makes Spark's HashPartitioning place every group on its OWN
+    partition — n_parts tasks, all non-empty, no hash-collision
+    stragglers and no empty partitions each paying the UDF-closure
+    ship + unpickle."""
     out: dict[int, int] = {}
     v = 0
     while len(out) < n_parts:
@@ -86,26 +76,59 @@ def _slot_values(n_parts: int) -> list[int]:
     return [out[p] for p in range(n_parts)]
 
 
+def _core_slots(spark) -> int:
+    """Width of every kernel-side Python stage: one task per core slot.
+    A Python task costs ~0.2 s of fixed slot time (worker hand-off,
+    closure unpickle, Arrow setup), so a stage wider than the cores pays
+    that overhead in extra waves while doing no more scoring work. An
+    EXPLICIT repartition to this count also keeps AQE from coalescing
+    the stage by Arrow byte size — the kernel's cost is Python CPU,
+    which AQE's size heuristic cannot see."""
+    return max(1, spark.sparkContext.defaultParallelism)
+
+
+def kernel_groups(spark, n_buckets: int) -> int:
+    """Number of kernel groups (= kernel tasks) for `n_buckets` range
+    buckets: one per core slot, never more than there are buckets. With
+    at least as many cores as buckets this is one group per bucket."""
+    return max(1, min(n_buckets, _core_slots(spark)))
+
+
+def _kernel_frame(df: DataFrame, n_buckets: int | None):
+    """`df` repartitioned so each kernel group sits alone on its own
+    shuffle partition -> (frame, grouping column). Without a bucket count
+    (legacy callers) the range buckets hash onto the core slots."""
+    if not n_buckets:
+        return df.repartition(_core_slots(df.sparkSession), "range_bucket"), "range_bucket"
+    slotted, n_groups = _with_slot(df, n_buckets)
+    return slotted.repartition(n_groups, "__slot"), "__slot"
+
+
+def _grouped(df: DataFrame, n_buckets: int | None = None):
+    frame, key = _kernel_frame(df, n_buckets)
+    return frame.groupBy(key)
+
+
 def _bucket_grouped(blocks: DataFrame, n_buckets: int | None = None):
     # slim the kernel shuffle to the columns the kernels read (drops the
     # partition/bucket/stats columns; pos_payload rides along only when
     # the caller selected it for a phrase tree)
     cols = KERNEL_COLS + (["pos_payload"] if "pos_payload" in blocks.columns else [])
-    slim = blocks.select(*cols)
-    if not n_buckets:
-        return slim.repartition(KERNEL_SHUFFLE_PARTITIONS, "range_bucket").groupBy(
-            "range_bucket"
-        )
-    slotted, n_parts = _with_slot(slim, n_buckets)
-    return slotted.repartition(n_parts, "__slot").groupBy("__slot")
+    return _grouped(blocks.select(*cols), n_buckets)
 
 
 def _with_slot(df: DataFrame, n_buckets: int):
-    """Attach the partition-placement slot column (see _slot_values).
-    Buckets outside [0, n_buckets) map to null — they share one group,
-    which is still EXACT: a group holding several buckets' blocks scores
+    """Attach the partition-placement slot column (see _slot_values):
+    range bucket b belongs to kernel group b * n_groups // n_buckets, so
+    each group is a contiguous run of whole buckets and there are
+    kernel_groups() of them — one per core slot. Returns (frame,
+    n_groups).
+
+    Packing is EXACT: a group holding several buckets' blocks scores
     like one bigger bucket (doc sets are disjoint), so placement only
-    ever affects performance, never results.
+    ever affects performance, never results. Buckets outside
+    [0, n_buckets) map to null and share one more group, which is exact
+    for the same reason.
 
     NOTE (round-5 falsified idea): subdividing a range bucket into
     finer placement groups (e.g. by first_doc bits) is NOT sound here,
@@ -115,24 +138,15 @@ def _with_slot(df: DataFrame, n_buckets: int):
     emit partial scores (caught by
     test_batch_kernel_split_is_placement_invariant before it shipped).
     Groups must stay unions of whole doc-range buckets."""
-    n_parts = n_buckets
-    vals = _slot_values(n_parts)
+    n_groups = kernel_groups(df.sparkSession, n_buckets)
+    vals = _slot_values(n_groups)
     # ONE py4j call: F.create_map over 2*n literal Columns costs ~n
     # driver round trips (~0.1 s/query at 32 buckets, pure driver time)
-    pairs = ",".join(f"{b},{vals[b]}" for b in range(n_parts))
+    pairs = ",".join(
+        f"{b},{vals[b * n_groups // n_buckets]}" for b in range(n_buckets)
+    )
     mapping = F.expr(f"map({pairs})")
-    return df.withColumn("__slot", mapping[F.col("range_bucket")]), n_parts
-
-
-def _dl_grouped(dl_b: DataFrame, n_buckets: int | None = None):
-    """Doclen side of the NOT-universe cogroup, slotted with the SAME
-    mapping as the blocks side so matching buckets land together."""
-    if not n_buckets:
-        return dl_b.repartition(KERNEL_SHUFFLE_PARTITIONS, "range_bucket").groupBy(
-            "range_bucket"
-        )
-    slotted, n_parts = _with_slot(dl_b, n_buckets)
-    return slotted.repartition(n_parts, "__slot").groupBy("__slot")
+    return df.withColumn("__slot", mapping[F.col("range_bucket")]), n_groups
 
 
 def _empty_topk() -> pd.DataFrame:
@@ -448,8 +462,8 @@ def topk_disjunctive(
     return _bucket_grouped(blocks, n_buckets).applyInPandas(run, schema=TOPK_SCHEMA)
 
 
-# packed winner rows: ONE row per (query, bucket) with the winners as
-# raw int64/float64 arrays. At 1k+ queries x dozens of buckets the
+# packed winner rows: ONE row per (query, kernel group) with the winners
+# as raw int64/float64 arrays. At 1k+ queries x dozens of groups the
 # row-per-winner format put ~1M rows through Arrow serialization, the
 # driver collect, and the merge lexsort input conversion — a corpus-
 # independent tail at every parallelism level; packed it is ~25k rows
@@ -475,7 +489,7 @@ def _unpack_winner_rows(lpdf: pd.DataFrame) -> tuple[np.ndarray, ...]:
 # the ONE vectorized codec pass it saves. The vectorized decode stays
 # unconditional; scripts/bench_batch_ab.py holds the harness.
 def _decode_terms(pdf: pd.DataFrame, avgdl: float, local: bool = False):
-    """All of a bucket's blocks -> {term: (sorted doc ids, impacts)} in
+    """All of a kernel group's blocks -> {term: (sorted doc ids, impacts)} in
     ONE vectorized codec pass (codec.unpack_postings_batch) + one
     vectorized BM25-impact computation over every row — replaces the
     per-block decode loop (~90us/block of numpy setup overhead, which
@@ -483,10 +497,12 @@ def _decode_terms(pdf: pd.DataFrame, avgdl: float, local: bool = False):
 
     With `local=True` returns (per_term, base) where doc ids are int32
     offsets from `base` — valid whenever the group's doc span fits 31
-    bits (one range bucket always does; the merged overflow-slot group
-    may not, and falls back to global int64 with base=0). The batch
-    scoring path runs entirely in the int32 space: ~half the memory
-    traffic on a kernel that is bandwidth-bound, identical scores."""
+    bits. One range bucket always does; a group packing several buckets
+    (few cores over a very large doc-id space) or the null overflow
+    group may not, and falls back to global int64 with base=0 — slower,
+    same scores. The batch scoring path runs entirely in the int32
+    space: ~half the memory traffic on a kernel that is bandwidth-bound,
+    identical scores."""
     want_local = local
     per_term: dict[str, tuple[np.ndarray, np.ndarray]] = {}
     if not len(pdf):
@@ -499,7 +515,7 @@ def _decode_terms(pdf: pd.DataFrame, avgdl: float, local: bool = False):
         if int(pdf["last_doc"].max()) - base < (1 << 31):
             use_local32 = True
         else:
-            base = 0  # span too wide (merged overflow group): global mode
+            base = 0  # span too wide (packed or overflow group): global mode
     first_docs = (
         pdf["first_doc"].to_numpy(dtype=np.int64) if use_local32 else None
     )
@@ -525,9 +541,9 @@ def _decode_terms(pdf: pd.DataFrame, avgdl: float, local: bool = False):
 
 
 # process-local per-batch theta store: {batch_key: {qid: kth-best score
-# seen so far}}. Buckets hold DISJOINT doc-id ranges, so the kth-best
-# score within any already-scored bucket is a lower bound on the global
-# kth-best — later buckets in the same worker process can drop emission
+# seen so far}}. Kernel groups hold DISJOINT doc-id ranges, so the
+# kth-best score within any already-scored group is a lower bound on the
+# global kth-best — later groups in the same worker process can drop emission
 # rows below it without affecting the merged top-k (same certified-seed
 # argument as _THETA_SEEDS on the wand path). Only the CURRENT batch's
 # thetas are kept (replaced when a new batch_key arrives).
@@ -545,10 +561,17 @@ def topk_disjunctive_batch(
     """Many queries in ONE distributed pass (the reference runs its whole
     200-query benchmark sequentially, `performance_metrics.py:521-559`;
     here the batch shares a single scan + decode of the union of posting
-    lists per bucket, and per-query scoring is a numpy loop).
+    lists per kernel group, and per-query scoring is a numpy loop).
 
-    Returns (query_id, doc_id_int, score) — per-bucket local top-k per
-    query; caller does the tiny global merge.
+    Returns packed (query_id, doc_ids, scores) rows — per-group local
+    top-k per query; caller does the tiny global merge.
+
+    Cost model: each kernel group is one Python task with ~0.2 s of
+    fixed overhead, plus one pass of the per-query loop over the group's
+    decoded terms. Both scale with the number of GROUPS, not buckets, so
+    the range buckets are packed into one group per core slot
+    (_with_slot): at 4 cores a 32-bucket index runs 4 kernel tasks,
+    each looping the batch once over 8 buckets' postings.
 
     `queries_meta` may be a plain dict or a pyspark Broadcast of one.
     Pass a Broadcast for big batches: a plain dict is pickled into the
@@ -559,10 +582,6 @@ def topk_disjunctive_batch(
     """
 
     def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        import time as _t
-
-        _t0 = _t.time()
-        _c0 = _t.process_time()
         qmetas = (
             queries_meta.value if hasattr(queries_meta, "value") else queries_meta
         )
@@ -572,8 +591,8 @@ def topk_disjunctive_batch(
         if pdf.empty:
             return empty
         # per-batch emission thetas shared across this worker process's
-        # buckets (see _BATCH_THETA): the first bucket a worker scores
-        # emits its full local top-k; later buckets drop rows strictly
+        # groups (see _BATCH_THETA): the first group a worker scores
+        # emits its full local top-k; later groups drop rows strictly
         # below the best kth score seen — the merged global top-k is
         # bit-identical, with ~60% fewer winner rows through Arrow,
         # collect, and the driver merge (a corpus-independent tail)
@@ -589,15 +608,14 @@ def topk_disjunctive_batch(
                 _w._BATCH_THETA.clear()
                 _w._BATCH_THETA[batch_key] = {}
             thetas = _w._BATCH_THETA[batch_key]
-        # int32 bucket-local doc space (see _decode_terms): scoring is
+        # int32 group-local doc space (see _decode_terms): scoring is
         # bandwidth-bound, so halving the doc-array traffic is wall time
         per_term, doc_base = _decode_terms(pdf, avgdl, local=True)
-        _t_decode = _t.time() - _t0
         # numpy accumulation + ONE output frame: a pandas DataFrame per
-        # query + concat measured ~1s/bucket of pure allocator overhead
-        # at 1024 queries. (A bucket-level dense-score-buffer variant
+        # query + concat measured ~1s/group of pure allocator overhead
+        # at 1024 queries. (A group-level dense-score-buffer variant
         # with per-term index maps was tried and measured 1.6x SLOWER —
-        # scattered writes into a bucket-wide float buffer lose to the
+        # scattered writes into a group-wide float buffer lose to the
         # per-query contiguous unique+searchsorted arrays.)
         qid_list: list[int] = []
         doc_blobs: list[bytes] = []
@@ -661,16 +679,6 @@ def topk_disjunctive_batch(
                 qid_list.append(qid)
                 doc_blobs.append(docs_g.tobytes())
                 score_blobs.append(sel_scores.tobytes())
-        _log = os.environ.get("TIRS_KERNEL_TIMELOG")
-        if _log:
-            # opt-in per-group diagnostic (scaling-bench skew analysis):
-            # one line per kernel group with decode/total split
-            with open(_log, "a") as _fh:
-                _fh.write(
-                    f"{key[0]},{len(pdf)},{_t_decode:.4f},"
-                    f"{_t.time() - _t0:.4f},"
-                    f"{_t.process_time() - _c0:.4f},{os.getpid()}\n"
-                )
         if not qid_list:
             return empty
         return pd.DataFrame(
@@ -875,13 +883,16 @@ def boolean_topk(
 ) -> DataFrame:
     """Arbitrary boolean/phrase query + BM25 ranking in ONE kernel pass —
     the interactive successor of the DataFrame join plan (same results,
-    bit-identical scores, ~4 Catalyst stages fewer). Per range bucket:
-    decode -> set-evaluate the tree -> score candidates -> local top-k;
-    the caller merges the tiny per-bucket winners.
+    bit-identical scores, ~4 Catalyst stages fewer). Per kernel group
+    (a run of whole range buckets, see _with_slot): decode ->
+    set-evaluate the tree -> score candidates -> local top-k; the caller
+    merges the tiny per-group winners.
 
     NOT needs the complement universe, so when the tree contains one the
     blocks are COGROUPed with the doclen table (bucketed by the same
-    doc-id range shift) — this also covers buckets where the query's
+    doc-id range shift and slotted with the same group mapping, so a
+    group's universe is exactly its buckets' docs) — this also covers
+    buckets where the query's
     tokens have no blocks at all but whose docs still match the
     complement."""
     needs_universe = tree_has(tree, "not")
@@ -905,7 +916,7 @@ def boolean_topk(
 
         return (
             _bucket_grouped(blocks, n_buckets)
-            .cogroup(_dl_grouped(dl_b, n_buckets))
+            .cogroup(_grouped(dl_b, n_buckets))
             .applyInPandas(run_co, schema=TOPK_SCHEMA)
         )
 
@@ -918,7 +929,7 @@ def boolean_topk(
 def merge_query_topk_driver(
     lpdf: pd.DataFrame, k: int
 ) -> dict[int, list[tuple[int, float]]]:
-    """Driver-side vectorized merge of the per-(query, bucket) winners.
+    """Driver-side vectorized merge of the per-(query, group) winners.
 
     Two stages, both exact: (1) a per-query k-th-largest-score threshold
     (padded 2D np.partition over the row-level blobs) prunes the winner
@@ -971,7 +982,7 @@ def merge_query_topk_driver(
 
 
 def merge_query_topk(local: DataFrame, k: int) -> DataFrame:
-    """Merge per-(query, bucket) winners to a global per-query top-k
+    """Merge per-(query, group) winners to a global per-query top-k
     inside Spark (one small shuffle on query_id) so the driver collects
     only k rows per query. One vectorized pandas pass per PARTITION —
     not per query group (applyInPandas with thousands of tiny groups
@@ -1000,6 +1011,6 @@ def merge_query_topk(local: DataFrame, k: int) -> DataFrame:
                 }
             )
 
-    return local.repartition(KERNEL_SHUFFLE_PARTITIONS, "query_id").mapInPandas(
-        run, schema=BATCH_TOPK_SCHEMA
-    )
+    return local.repartition(
+        _core_slots(local.sparkSession), "query_id"
+    ).mapInPandas(run, schema=BATCH_TOPK_SCHEMA)

@@ -174,7 +174,7 @@ def main_realistic(cores: int, n_convs: int, n_queries: int = 32) -> None:
     check (wand.score_bucket_pruned) turns them into whole-block skips.
     Builds (and caches) the index at `n_convs` conversations (160k
     convs ~= 1.01M turns), then reports skip rate, latency, and
-    asserts bit-identity vs the unpruned DataFrame plan."""
+    asserts bit-identity vs the unpruned bucket kernel."""
     import random
 
     import numpy as np
@@ -234,10 +234,10 @@ def main_realistic(cores: int, n_convs: int, n_queries: int = 32) -> None:
         for _ in range(n_queries)
     ]
 
-    # bit-identity vs the unpruned DataFrame plan (full TAAT join)
+    # bit-identity vs the unpruned bucket kernel (full boolean+score pass)
     for q in qs[:6]:
         a = idx.search_collect(q, k=10, strategy="wand")
-        b = idx.search_collect(q, k=10, strategy="dataframe")
+        b = idx.search_collect(q, k=10, strategy="kernel")
         assert a.docs == b.docs and a.scores == b.scores, f"MISMATCH: {q}"
 
     def run_pass(k):
@@ -285,7 +285,7 @@ def main_realistic(cores: int, n_convs: int, n_queries: int = 32) -> None:
         "block_bound_p99_over_p50_median": round(
             float(np.median(ratios)) if ratios else float("nan"), 3
         ),
-        "identical_vs_dataframe": 6,
+        "identical_vs_kernel": 6,
     }
     print(json.dumps(out))
     spark.stop()

@@ -8,7 +8,7 @@ covering all 15 reference templates (`generate_queries.py:24-40`).
 import pandas as pd
 import pytest
 
-from text_indexing_and_retrieval_system_spark import querygen
+from text_indexing_and_retrieval_system_spark import engine, querygen
 from text_indexing_and_retrieval_system_spark.functions.normalize import (
     normalize_to_tokens,
 )
@@ -44,22 +44,53 @@ def _assert_match(oracle_hits, engine_result, query):
     )
 
 
-@pytest.mark.parametrize("scorer", ["bm25", "tfidf", "wordcount"])
+SCORERS = ["bm25", "tfidf", "wordcount"]
+
+
+@pytest.fixture(scope="module")
+def distributed_index(spark, built_index):
+    """A second handle on the same index with both driver-local gates
+    closed, so every kernel query runs as a distributed Spark job."""
+    idx = engine.InvertedIndex(spark, built_index.dir)
+    idx.DRIVER_WAND_MAX_DF = 0
+    idx.DRIVER_NOT_MAX_DOCS = 0
+    return idx
+
+
+@pytest.mark.parametrize("scorer", SCORERS)
 def test_single_term_all_scorers(built_index, oracle_index, scorer):
-    q = '"stat"'  # high-frequency stem in the synthetic vocab? use pool below
     # pick a term guaranteed present: the most frequent non-stopword stem
     term = max(oracle_index.postings, key=lambda t: len(oracle_index.postings[t]))
     q = f'"{term}"'
     want = oracle_index.search(q, k=K, scorer=scorer)
-    got = built_index.search_collect(q, k=K, scorer=scorer, strategy="dataframe")
+    got = built_index.search_collect(q, k=K, scorer=scorer)
     _assert_match(want, got, q)
 
 
-def test_golden_queries_dataframe(built_index, oracle_index, query_set):
-    for q in query_set:
-        want = oracle_index.search(q, k=K, scorer="bm25")
-        got = built_index.search_collect(q, k=K, scorer="bm25", strategy="dataframe")
-        _assert_match(want, got, q)
+@pytest.mark.parametrize("scorer", SCORERS)
+def test_query_shapes_all_scorers(
+    built_index, distributed_index, oracle_index, corpus_pdf, scorer
+):
+    """Every scorer x term/AND/OR/NOT/PHRASE/PHRASE OR on the bucket
+    kernel, driver-local and distributed, bit-exact against the oracle."""
+    by_df = sorted(oracle_index.postings, key=lambda t: -len(oracle_index.postings[t]))
+    hot, mid = by_df[0], by_df[20]
+    tokens = normalize_to_tokens(corpus_pdf["text"].head(50))
+    phrase = next(f"{lst[0]} {lst[1]}" for lst in tokens if len(lst) >= 2)
+    queries = [
+        f'"{mid}"',
+        f'"{hot}" AND "{mid}"',
+        f'"{hot}" OR "{mid}"',
+        f'"{mid}" AND NOT "{hot}"',
+        f'NOT "{hot}"',
+        f'PHRASE "{phrase}"',
+        f'PHRASE "{phrase}" OR "{mid}"',
+    ]
+    for q in queries:
+        want = oracle_index.search(q, k=K, scorer=scorer)
+        for where, idx in (("driver", built_index), ("distributed", distributed_index)):
+            got = idx.search_collect(q, k=K, scorer=scorer, strategy="kernel")
+            _assert_match(want, got, f"{q} [{scorer} kernel, {where}]")
 
 
 def test_golden_queries_kernel(built_index, oracle_index, query_set):
@@ -92,16 +123,16 @@ def test_kernel_not_and_phrase(built_index, oracle_index, corpus_pdf):
         _assert_match(want, got, q + " [kernel]")
 
 
-def test_wand_matches_dataframe_on_disjunctions(built_index, oracle_index):
+def test_wand_matches_kernel_on_disjunctions(built_index, oracle_index):
     terms = sorted(
         oracle_index.postings, key=lambda t: -len(oracle_index.postings[t])
     )[:6]
     q = " OR ".join(f'"{t}"' for t in terms)
     want = oracle_index.search(q, k=K, scorer="bm25")
     got_wand = built_index.search_collect(q, k=K, strategy="wand")
-    got_df = built_index.search_collect(q, k=K, strategy="dataframe")
+    got_kernel = built_index.search_collect(q, k=K, strategy="kernel")
     _assert_match(want, got_wand, q + " [wand]")
-    _assert_match(want, got_df, q + " [dataframe]")
+    _assert_match(want, got_kernel, q + " [kernel]")
 
 
 def test_phrase_query(built_index, oracle_index, corpus_pdf):
@@ -115,7 +146,7 @@ def test_phrase_query(built_index, oracle_index, corpus_pdf):
     assert phrase
     q = f'PHRASE "{phrase}"'
     want = oracle_index.search(q, k=K)
-    got = built_index.search_collect(q, k=K, strategy="dataframe")
+    got = built_index.search_collect(q, k=K)
     assert len(want) > 0
     _assert_match(want, got, q)
 
@@ -125,7 +156,7 @@ def test_not_query(built_index, oracle_index):
     mid = sorted(oracle_index.postings, key=lambda t: -len(oracle_index.postings[t]))[20]
     q = f'"{mid}" AND NOT "{term}"'
     want = oracle_index.search(q, k=K)
-    got = built_index.search_collect(q, k=K, strategy="dataframe")
+    got = built_index.search_collect(q, k=K)
     _assert_match(want, got, q)
 
 

@@ -55,8 +55,8 @@ def test_stream_ingest_equals_batch_build(
 
     inc_idx = engine.load(spark, idx_dir)
     for qtext in ['"said"', '"said" OR "index"', 'NOT "said"']:
-        a = built_index.search_collect(qtext, k=10, strategy="dataframe")
-        b = inc_idx.search_collect(qtext, k=10, strategy="dataframe")
+        a = built_index.search_collect(qtext, k=10)
+        b = inc_idx.search_collect(qtext, k=10)
         assert a.docs == b.docs, qtext
         assert a.scores == b.scores, qtext
 

@@ -7,10 +7,10 @@ capabilities of the reference `Vinit2244/Text-Indexing-and-Retrieval-System`
 - tokenize/normalize via vectorized Arrow (pandas) UDFs
 - inverted index as columnar tables (postings / doclen / stats), postings
   delta-gap + varint packed into binary payloads with per-block max scores
-- boolean query algebra as semi/anti joins, phrase via positional
-  intersection
-- BM25 (k1=1.2, b=0.75) top-k via either a pure-DataFrame aggregate plan
-  (Catalyst-optimized) or a block-max WAND mapInPandas scorer
+- boolean query algebra (AND/OR/NOT, phrase via positional
+  intersection) and BM25 (k1=1.2, b=0.75) / TF-IDF / word-count ranking
+  in one vectorized numpy kernel per doc-range bucket, driver-local or
+  distributed; BM25 pure disjunctions take a block-max WAND scorer
 - skew-aware (salted two-level merge), resumable (segment manifests)
 
 No code is copied from the reference; reference file:line citations in

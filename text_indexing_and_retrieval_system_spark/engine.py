@@ -6,17 +6,19 @@ query_processing_engine.py:549-651`):
 
     query string ──(driver)── parse → AST → scoring terms
       → strategy dispatch (auto):
-        "wand"     pure disjunctions — block-max bucket scorer with
+        "wand"     bm25 pure disjunctions — block-max bucket scorer with
                    MaxScore skipping + certified cross-bucket θ seeds
-        "kernel"   every other bm25 query — the whole boolean/phrase
-                   tree set-evaluated in numpy per doc-range bucket
-                   (NOT via doclen cogroup), then scored exactly
-        "dataframe" non-bm25 scorers / verification — semi/anti-join
-                   candidate plan + deterministic-order fold aggregate
+        "kernel"   every other query and scorer — the whole
+                   boolean/phrase tree set-evaluated in numpy per
+                   doc-range bucket (NOT via doclen cogroup), then scored
+                   exactly as Σ weight × impact (bm25: idf × BM25
+                   tf-normalization; tfidf: ln(N/df) × tf; wordcount: tf)
       → top-k (score DESC, doc_id_int ASC) → optional hydration join
 
-All strategies are bit-identical in scores and order (golden suite runs
-them against the same oracle). Control crosses driver→executor once per
+Both strategies run driver-local over cached posting blocks below the
+size gates and as one distributed bucket-kernel job above them. All are
+bit-identical in scores and order (golden suite runs them against the
+same oracle). Control crosses driver→executor once per
 query on the kernel/wand paths (plus a dict-lookup id resolution from
 the driver-cached convmap), matching SURVEY.md §3.1's target.
 """
@@ -24,6 +26,7 @@ the driver-cached convmap), matching SURVEY.md §3.1's target.
 from __future__ import annotations
 
 import json
+import math
 import os
 import uuid
 from dataclasses import dataclass
@@ -32,68 +35,19 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions import codec
 from .functions.normalize import NormalizeConfig, normalize_query_terms
 from .operators import query_parser as qp
-from .operators import ranking, wand
-from .operators.boolean import BooleanPlanner
+from .operators import wand
 from .operators.index_build import TURN_BITS, IndexBuildConfig
 from .operators.segments import Manifests, build_index, term_bucket_py
 
-POSTINGS_SCHEMA = "term string, doc_id_int long, tf int, dl int, positions array<int>"
-
 # search_batch winner-merge crossover: at or below this many estimated
 # per-(query, kernel group) winner rows the driver merges locally; above it the
-# distributed merge keeps the collect at ~k x queries rows (env override
-# for scaling experiments)
-DRIVER_MERGE_MAX_ROWS = int(os.environ.get("TIRS_DRIVER_MERGE_MAX_ROWS", "2000000"))
+# distributed merge keeps the collect at ~k x queries rows
+DRIVER_MERGE_MAX_ROWS = 2_000_000
 
-
-def _unpack_blocks(blocks: DataFrame, with_positions: bool) -> DataFrame:
-    """Compressed block rows → exploded postings (Arrow-batched numpy).
-    Positions live in their own `pos_payload` column, only selected (and
-    so only scanned/decoded) when the caller needs them."""
-    cols = ["term", "payload"] + (["pos_payload"] if with_positions else [])
-
-    import numpy as np
-
-    def run(batches):
-        empty = pd.DataFrame(columns=["term", "doc_id_int", "tf", "dl", "positions"])
-        for pdf in batches:
-            if not len(pdf):
-                yield empty
-                continue
-            if with_positions:
-                outs = []
-                for row in pdf.itertuples(index=False):
-                    d, tf, dl, _ = codec.unpack_postings(bytes(row.payload))
-                    pos = codec.unpack_positions(bytes(row.pos_payload), len(d))
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "term": row.term,
-                                "doc_id_int": d,
-                                "tf": tf.astype("int32"),
-                                "dl": dl.astype("int32"),
-                                "positions": [list(p) for p in pos],
-                            }
-                        )
-                    )
-                yield pd.concat(outs, ignore_index=True)
-                continue
-            # no-positions fast path: one vectorized decode per Arrow batch
-            bn, d, tf, dl = codec.unpack_postings_batch(pdf["payload"].to_list())
-            yield pd.DataFrame(
-                {
-                    "term": np.repeat(pdf["term"].to_numpy(), bn),
-                    "doc_id_int": d,
-                    "tf": tf.astype("int32"),
-                    "dl": dl.astype("int32"),
-                    "positions": [None] * int(bn.sum()),
-                }
-            )
-
-    return blocks.select(*cols).mapInPandas(run, schema=POSTINGS_SCHEMA)
+STRATEGIES = ("auto", "wand", "kernel")
+SCORERS = ("bm25", "tfidf", "wordcount")
 
 
 @dataclass
@@ -147,6 +101,11 @@ class InvertedIndex:
             if info and info.get("range_shift") is not None:
                 self.range_shift = int(info["range_shift"])
                 break
+        if self.range_shift is None:
+            raise ValueError(
+                f"index at {self.dir} predates doc-id range bucketing — "
+                "rebuild it (no postings manifest records a range_shift)"
+            )
         # number of range buckets the kernels pack into groups
         # (wand._with_slot: one group per core slot, each group alone on
         # its own shuffle partition). It follows from the doc-id
@@ -156,12 +115,9 @@ class InvertedIndex:
         # Counting exactly keeps an always-empty bucket from owning a
         # group; a doc outside the count would still score exactly (the
         # null overflow group).
-        if self.range_shift is not None:
-            n_convs = int(self.stats.get("n_convs") or 0)
-            top = max((n_convs << TURN_BITS) - 1, 0)
-            self.kernel_buckets = (top >> self.range_shift) + 1
-        else:
-            self.kernel_buckets = self.n_range_buckets + 1
+        n_convs = int(self.stats.get("n_convs") or 0)
+        top = max((n_convs << TURN_BITS) - 1, 0)
+        self.kernel_buckets = (top >> self.range_shift) + 1
         norm = cfg.get("normalize", {})
         if norm:
             norm = dict(norm)
@@ -266,11 +222,6 @@ class InvertedIndex:
             df = df.drop("pos_payload")
         return df
 
-    def postings_for(self, tokens: list[str], with_positions: bool = False) -> DataFrame:
-        return _unpack_blocks(
-            self.blocks_for(tokens, with_positions=with_positions), with_positions
-        )
-
     LEX_DRIVER_CACHE_MAX = 5_000_000  # terms; ~0.5 GB driver budget
     # interactive head-cache gate: queries whose terms' total df is under
     # this run driver-local (one single-stage pruned fetch + in-process
@@ -292,7 +243,7 @@ class InvertedIndex:
     # ~110M df) and keep per-term fetches + the distributed kernel;
     # gate value is df-based (lexicon stats), not filesystem probing,
     # so it is storage-agnostic.
-    BULK_PRELOAD_MAX_DF = int(os.environ.get("TIRS_BULK_PRELOAD_MAX_DF", "16000000"))
+    BULK_PRELOAD_MAX_DF = 16_000_000
     DRIVER_NOT_MAX_DOCS = 2_000_000  # NOT complement needs the universe
     CONVMAP_DRIVER_CACHE_MAX = 5_000_000  # convs
 
@@ -351,9 +302,9 @@ class InvertedIndex:
         )
 
     def doclen(self) -> DataFrame:
-        """doclen table, persisted for the handle's lifetime — it appears
-        2-3x in every boolean plan (NOT universe, id resolution, top-k
-        join), and interactive serving re-reads it per query otherwise.
+        """doclen table, persisted for the handle's lifetime — the NOT
+        universe of the distributed kernel and the id-resolution fallback
+        read it, and interactive serving re-reads it per query otherwise.
         reload() drops the cached relation. (On a 10^12-doc deployment the
         executors' storage tier holds it the same way.)"""
         if self._doclen_df is None:
@@ -406,16 +357,22 @@ class InvertedIndex:
         return False
 
     def _resolve_strategy(self, node: qp.Node, scorer: str, strategy: str) -> str:
-        """auto -> wand for pure disjunctions (block-max pruning applies),
-        kernel for every other bm25 query (single-pass boolean+score),
-        dataframe otherwise (non-bm25 scorers, or no range metadata)."""
-        if strategy != "auto":
-            return strategy
-        if self._is_pure_disjunction(node):
+        """wand for bm25 under an explicit "wand" or for an auto pure
+        disjunction (its block-max bounds are BM25 impacts); kernel for
+        everything else (single-pass boolean+score, any scorer). Unknown
+        values raise before any Spark job runs."""
+        if strategy not in STRATEGIES:
+            raise ValueError(
+                f"unknown strategy {strategy!r}; expected one of {STRATEGIES}"
+            )
+        if scorer not in SCORERS:
+            raise ValueError(f"unknown scorer {scorer!r}; expected one of {SCORERS}")
+        if scorer == "bm25" and (
+            strategy == "wand"
+            or (strategy == "auto" and self._is_pure_disjunction(node))
+        ):
             return "wand"
-        if scorer == "bm25" and self.range_shift is not None:
-            return "kernel"
-        return "dataframe"
+        return "kernel"
 
     def search(
         self,
@@ -427,7 +384,8 @@ class InvertedIndex:
     ) -> DataFrame:
         """Returns DataFrame (doc_id, doc_id_int, score[, text...]) of the
         top-k, totally ordered by (score DESC, doc_id_int ASC) — the
-        engine-wide tie-break contract (see ranking.top_k)."""
+        engine-wide tie-break contract: tie-breaking on the doc_id string
+        would diverge when one conv_id is a prefix of another."""
         node = qp.parse(query)
         occ, all_tokens = self._query_tokens(node)
         strategy = self._resolve_strategy(node, scorer, strategy)
@@ -445,85 +403,31 @@ class InvertedIndex:
             ).orderBy(F.desc("score"), F.asc("doc_id_int"))
         return out
 
-    def _search_dataframe_rows(
-        self,
-        node: qp.Node,
-        occ: list[tuple[int, str]],
-        all_tokens: list[str],
-        k: int,
-        scorer: str,
-    ) -> list[tuple]:
-        """Boolean + ranked plan executed as ONE Spark job returning the
-        k winner tuples. Interactive-latency choices (round-1 verdict
-        wrong-#4: ~1.9 s/query floor from persist + 3 jobs + rebuild):
-        - no persist: where the boolean plan and the scorer reuse a
-          token's postings, the identical shuffle children dedupe via
-          ReusedExchange instead of paying a separate materialize job;
-        - per-term metadata (occurrence indexes, idf, df) folded in as
-          literal MAP expressions — two broadcast joins less to plan;
-        - the k rows are returned to the caller; search() wraps them in a
-          local DataFrame, search_collect() consumes them directly."""
-        needs_positions = "phrase" in _kinds(node)
-        postings = self.postings_for(all_tokens, with_positions=needs_positions)
-        by_token = lambda t: postings.filter(F.col("term") == t)  # noqa: E731
-        planner = BooleanPlanner(by_token, self.doclen, self.normalize_cfg)
-        candidates = planner.plan(node)
-
-        lex = self.lexicon_for(sorted({t for _, t in occ})) if occ else None
-        if occ and len(lex):
-            idf_by_term = dict(zip(lex["term"], lex["idf"]))
-            df_by_term = dict(zip(lex["term"], lex["df"]))
-            occ_by_term: dict[str, list[int]] = {}
-            for i, t in occ:
-                if t in idf_by_term:
-                    occ_by_term.setdefault(t, []).append(i)
-            terms = sorted(occ_by_term)
-            tidx_map = F.create_map(
-                *[
-                    x
-                    for t in terms
-                    for x in (
-                        F.lit(t),
-                        F.array(*[F.lit(i) for i in occ_by_term[t]]),
-                    )
-                ]
-            )
-            idf_map = F.create_map(
-                *[x for t in terms for x in (F.lit(t), F.lit(float(idf_by_term[t])))]
-            )
-            df_map = F.create_map(
-                *[x for t in terms for x in (F.lit(t), F.lit(int(df_by_term[t])))]
-            )
-            tp = postings.filter(F.col("term").isin(terms)).select(
-                F.explode(tidx_map[F.col("term")]).alias("term_idx"),
-                "doc_id_int",
-                "tf",
-                "dl",
-                df_map[F.col("term")].alias("df"),
-                idf_map[F.col("term")].alias("idf"),
-            )
-            scored = ranking.score_candidates(
-                candidates, tp, scorer, self.stats["avgdl"], self.stats["n_docs"]
-            )
-        else:
-            scored = candidates.select("doc_id_int", F.lit(0.0).alias("score"))
-        out = ranking.top_k(scored, self.doclen(), k)
-        return [(r["doc_id"], r["doc_id_int"], r["score"]) for r in out.collect()]
-
     def _term_meta(
-        self, occ: list[tuple[int, str]]
+        self, occ: list[tuple[int, str]], scorer: str = "bm25"
     ) -> dict[str, list[tuple[int, float]]]:
-        """term -> [(occurrence_idx, idf)] for the query's scoring terms
-        found in the lexicon."""
+        """term -> [(occurrence_idx, weight)] for the query's scoring terms
+        found in the lexicon. The weight multiplies the kernel's impact:
+        bm25 the lexicon idf, tfidf ln(N/df) computed here exactly as the
+        oracle does, wordcount 1.0."""
         tokens = sorted({t for _, t in occ})
         if not tokens:
             return {}
         lex = self.lexicon_for(tokens)
-        idf_by_term = dict(zip(lex["term"], lex["idf"]))
+        if scorer == "bm25":
+            weights = zip(lex["term"], map(float, lex["idf"]))
+        elif scorer == "tfidf":
+            n_docs = int(self.stats["n_docs"])
+            weights = (
+                (t, math.log(n_docs / int(df))) for t, df in zip(lex["term"], lex["df"])
+            )
+        else:
+            weights = ((t, 1.0) for t in lex["term"])
+        weight_by_term = dict(weights)
         meta: dict[str, list[tuple[int, float]]] = {}
         for i, t in occ:
-            if t in idf_by_term:
-                meta.setdefault(t, []).append((i, float(idf_by_term[t])))
+            if t in weight_by_term:
+                meta.setdefault(t, []).append((i, weight_by_term[t]))
         return meta
 
     def _search_rows(
@@ -539,16 +443,8 @@ class InvertedIndex:
         wraps them in a DataFrame; search_collect() consumes them
         directly (no local-DataFrame round trip, ~0.3 s/query saved)."""
         if strategy == "wand":
-            return self._search_wand_rows(node, occ, k, scorer)
-        if strategy == "kernel":
-            if scorer != "bm25":
-                # the kernel scores BM25 only; an explicit strategy="kernel"
-                # with another scorer (reachable via the CLI's independent
-                # --scorer/--strategy flags) falls back to the DataFrame
-                # plan instead of silently returning BM25 scores
-                return self._search_dataframe_rows(node, occ, all_tokens, k, scorer)
-            return self._search_kernel_rows(node, occ, all_tokens, k)
-        return self._search_dataframe_rows(node, occ, all_tokens, k, scorer)
+            return self._search_wand_rows(occ, k)
+        return self._search_kernel_rows(node, occ, all_tokens, k, scorer)
 
     def _finalize_topk(self, rows: list, k: int) -> list[tuple]:
         """Per-bucket winners -> global top-k tuples: driver merge on
@@ -558,15 +454,22 @@ class InvertedIndex:
         return [(id_map[r["doc_id_int"]], r["doc_id_int"], r["score"]) for r in rows]
 
     def _search_kernel_rows(
-        self, node: qp.Node, occ: list[tuple[int, str]], all_tokens: list[str], k: int
+        self,
+        node: qp.Node,
+        occ: list[tuple[int, str]],
+        all_tokens: list[str],
+        k: int,
+        scorer: str,
     ) -> list[tuple]:
-        """Full boolean/phrase + BM25 in one bucket-kernel job (see
-        wand.boolean_topk) — the interactive path for non-disjunctive
-        queries; results bit-identical to the DataFrame plan."""
+        """Full boolean/phrase + ranking in one bucket-kernel pass (see
+        wand.boolean_topk), driver-local or distributed — the path for
+        every query but bm25 pure disjunctions; results bit-identical to
+        the oracle for every scorer."""
         tree = wand.normalize_tree(
             node, lambda s: normalize_query_terms([s], self.normalize_cfg)[0]
         )
-        term_meta = self._term_meta(occ)
+        term_meta = self._term_meta(occ, scorer)
+        impact = wand.bm25_impact if scorer == "bm25" else wand.tf_impact
         has_phrase = wand.tree_has(tree, "phrase")
         needs_universe = wand.tree_has(tree, "not")
         # interactive head-cache gate (see DRIVER_WAND_MAX_DF): small-df
@@ -577,13 +480,10 @@ class InvertedIndex:
         lex = self.lexicon_for(all_tokens)
         if int(lex["df"].sum() or 0) <= self.DRIVER_WAND_MAX_DF and (
             not needs_universe
-            or (
-                self.range_shift is not None
-                and int(self.stats.get("n_docs") or 0) <= self.DRIVER_NOT_MAX_DOCS
-            )
+            or int(self.stats.get("n_docs") or 0) <= self.DRIVER_NOT_MAX_DOCS
         ):
             return self._search_kernel_driver_rows(
-                tree, term_meta, all_tokens, k, has_phrase, needs_universe
+                tree, term_meta, all_tokens, k, has_phrase, needs_universe, impact
             )
         blocks = self.blocks_for(all_tokens, with_positions=has_phrase)
         local = wand.boolean_topk(
@@ -595,6 +495,7 @@ class InvertedIndex:
             doclen=self.doclen() if needs_universe else None,
             range_shift=self.range_shift,
             n_buckets=self.kernel_buckets,
+            impact=impact,
         )
         return self._finalize_topk(local.collect(), k)
 
@@ -618,8 +519,9 @@ class InvertedIndex:
         k: int,
         has_phrase: bool,
         needs_universe: bool,
+        impact,
     ) -> list[tuple]:
-        """Driver-local boolean/phrase+BM25: same per-bucket kernel body
+        """Driver-local boolean/phrase+ranking: same per-bucket kernel body
         (wand.boolean_score_bucket) as the distributed path, run
         in-process over cached block frames — bit-identical results,
         none of the 2-stage shuffle job's scheduling floor."""
@@ -657,6 +559,7 @@ class InvertedIndex:
                 self.stats["avgdl"],
                 k,
                 universe=uni_by_bucket.get(b) if needs_universe else None,
+                impact=impact,
             )
             if len(out):
                 outs.append(out)
@@ -669,13 +572,7 @@ class InvertedIndex:
         ]
         return self._finalize_topk(rows, k)
 
-    def _search_wand_rows(
-        self, node: qp.Node, occ: list[tuple[int, str]], k: int, scorer: str
-    ) -> list[tuple]:
-        if scorer != "bm25":
-            return self._search_dataframe_rows(
-                node, occ, sorted({t for _, t in occ}), k, scorer
-            )
+    def _search_wand_rows(self, occ: list[tuple[int, str]], k: int) -> list[tuple]:
         term_meta = self._term_meta(occ)
         # cross-bucket theta key: worker processes reuse certified k-th
         # scores across this query's buckets and across repeats of the
@@ -707,7 +604,7 @@ class InvertedIndex:
         # per-group winners are tiny (<= k x groups): merge on the
         # driver and resolve doc_id strings with one pruned point-lookup —
         # 2 small jobs total instead of join+sort+limit stages. Ties break
-        # on doc_id_int, the engine-wide contract (ranking.top_k).
+        # on doc_id_int, the engine-wide contract (see search()).
         rows = local.collect()
         self.last_prune_stats = {
             "blocks_total": acc_total.value - t0,
@@ -1063,15 +960,6 @@ class InvertedIndex:
                 "hits": hits,
             }
         }
-
-
-def _kinds(node: qp.Node) -> set[str]:
-    kind = node[0]
-    if kind in ("term", "phrase"):
-        return {kind}
-    if kind == "not":
-        return {"not"} | _kinds(node[1])
-    return {kind} | _kinds(node[1]) | _kinds(node[2])
 
 
 def build(

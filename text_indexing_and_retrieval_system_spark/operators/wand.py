@@ -19,7 +19,7 @@ blocks are provably below the threshold of the *k-th best overall* —
 we only skip when θ is a certified lower bound (local top-k so-far).
 
 Scores are accumulated per doc in ascending term order, matching the
-oracle/DataFrame paths bit-for-bit.
+oracle bit-for-bit.
 """
 
 from __future__ import annotations
@@ -37,6 +37,20 @@ B = 0.75
 TOPK_SCHEMA = "doc_id_int long, score double"
 
 KERNEL_COLS = ["term", "range_bucket", "first_doc", "last_doc", "block_max_impact", "payload"]
+
+
+# Per-posting impact functions of the bucket kernel, (float64 tf, dl,
+# avgdl) -> impact. A term occurrence contributes weight * impact, with
+# the weight computed on the driver; each expression is the oracle's, so
+# scores are bit-identical.
+def bm25_impact(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
+    """BM25 tf-normalization; the weight is the lexicon idf."""
+    return tf * (K1 + 1.0) / (tf + K1 * ((1.0 - B) + (B * dl.astype(np.float64)) / avgdl))
+
+
+def tf_impact(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
+    """Raw tf; the weight is ln(N/df) for TFIDF and 1.0 for WORDCOUNT."""
+    return tf
 
 
 def _murmur3_int32(x: int, seed: int = 42) -> int:
@@ -201,9 +215,9 @@ def score_bucket_pruned(
 
     Phase B (exact rescore): contributions re-accumulated over the
     surviving candidates in ascending term-occurrence order — the same
-    float summation order as the oracle and the DataFrame path, so
-    scores stay bit-identical. Skipped blocks provably contain no
-    candidates, so no contribution is missed.
+    float summation order as the oracle, so scores stay bit-identical.
+    Skipped blocks provably contain no candidates, so no contribution is
+    missed.
 
     `theta_seed` is a CERTIFIED lower bound on the global k-th best
     score (e.g. another bucket's exact local k-th, or this query's k-th
@@ -488,10 +502,12 @@ def _unpack_winner_rows(lpdf: pd.DataFrame) -> tuple[np.ndarray, ...]:
 # python assembly (dict lookups + 7k-array concatenate) costs more than
 # the ONE vectorized codec pass it saves. The vectorized decode stays
 # unconditional; scripts/bench_batch_ab.py holds the harness.
-def _decode_terms(pdf: pd.DataFrame, avgdl: float, local: bool = False):
+def _decode_terms(
+    pdf: pd.DataFrame, avgdl: float, local: bool = False, impact=bm25_impact
+):
     """All of a kernel group's blocks -> {term: (sorted doc ids, impacts)} in
     ONE vectorized codec pass (codec.unpack_postings_batch) + one
-    vectorized BM25-impact computation over every row — replaces the
+    vectorized `impact` computation over every row — replaces the
     per-block decode loop (~90us/block of numpy setup overhead, which
     dominated the batch kernel at 300k+ blocks per query batch).
 
@@ -522,12 +538,7 @@ def _decode_terms(pdf: pd.DataFrame, avgdl: float, local: bool = False):
     block_n, docs, tfs, dls = codec.unpack_postings_batch(
         pdf["payload"].to_list(), first_docs=first_docs, base=base
     )
-    tf_f = tfs.astype(np.float64)
-    imp = (
-        tf_f
-        * (K1 + 1.0)
-        / (tf_f + K1 * ((1.0 - B) + (B * dls.astype(np.float64)) / avgdl))
-    )
+    imp = impact(tfs.astype(np.float64), dls, avgdl)
     terms = pdf["term"].to_numpy()
     block_row_ends = np.cumsum(block_n)
     block_row_starts = block_row_ends - block_n
@@ -703,7 +714,7 @@ def normalize_tree(node, norm_fn):
     """Parsed raw node -> token-level tree evaluable inside the kernel:
     ('tok', t) | ('and', a, b) | ('or', a, b) | ('not', a) |
     ('phrase', (t1, .., tn)) | ('empty',). A multi-token TERM becomes the
-    implicit AND of its tokens (BooleanPlanner semantics). The result is
+    implicit AND of its tokens (the oracle's semantics). The result is
     plain nested tuples — picklable into the Arrow kernel closure."""
     kind = node[0]
     if kind == "term":
@@ -826,20 +837,20 @@ def _score_candidates_np(
     term_meta: dict[str, list[tuple[int, float]]],
     k: int,
 ) -> pd.DataFrame:
-    """BM25 over a fixed candidate array, contributions accumulated in
-    term-occurrence order (bit-identical to the DataFrame path / oracle);
-    candidates matching no scoring term keep 0.0."""
+    """Scores a fixed candidate array: each term occurrence adds weight *
+    impact, accumulated in term-occurrence order (bit-identical to the
+    oracle); candidates matching no scoring term keep 0.0."""
     if cands.size == 0:
         return _empty_topk()
     scores = np.zeros(cands.size, dtype=np.float64)
     occs = sorted(
-        (idx, t, idf) for t in per_term for (idx, idf) in term_meta.get(t, [])
+        (idx, t, w) for t in per_term for (idx, w) in term_meta.get(t, [])
     )
-    for _, term, idf in occs:
+    for _, term, w in occs:
         d, imp = per_term[term]
         idx = np.searchsorted(cands, d)
         valid = (idx < cands.size) & (cands[np.minimum(idx, cands.size - 1)] == d)
-        scores[idx[valid]] += idf * imp[valid]
+        scores[idx[valid]] += w * imp[valid]
     if cands.size > k:
         kth = np.partition(-scores, k - 1)[k - 1]
         pool = np.flatnonzero(-scores <= kth)
@@ -856,14 +867,15 @@ def boolean_score_bucket(
     avgdl: float,
     k: int,
     universe=None,
+    impact=bm25_impact,
 ) -> pd.DataFrame:
-    """One range bucket of blocks -> boolean/phrase-filtered BM25 local
-    top-k. The shared per-bucket kernel body: the distributed
-    boolean_topk applies it inside applyInPandas; the engine's
-    driver-local interactive path calls it in-process over cached block
-    frames. `universe` (sorted int64 doc ids of the bucket) is required
-    when the tree contains NOT."""
-    per_term = _decode_terms(pdf, avgdl) if len(pdf) else {}
+    """One range bucket of blocks -> boolean/phrase-filtered local top-k,
+    scored with `term_meta` weights times `impact`. The shared per-bucket
+    kernel body: the distributed boolean_topk applies it inside
+    applyInPandas; the engine's driver-local interactive path calls it
+    in-process over cached block frames. `universe` (sorted int64 doc
+    ids of the bucket) is required when the tree contains NOT."""
+    per_term = _decode_terms(pdf, avgdl, impact=impact) if len(pdf) else {}
     term_docs = {t: d for t, (d, _) in per_term.items()}
     # positions decode only happens if/when a phrase subtree is hit
     phrase_eval = lambda ws: _phrase_eval_factory(pdf, ws)(ws)  # noqa: E731
@@ -880,10 +892,10 @@ def boolean_topk(
     doclen: DataFrame | None = None,
     range_shift: int | None = None,
     n_buckets: int | None = None,
+    impact=bm25_impact,
 ) -> DataFrame:
-    """Arbitrary boolean/phrase query + BM25 ranking in ONE kernel pass —
-    the interactive successor of the DataFrame join plan (same results,
-    bit-identical scores, ~4 Catalyst stages fewer). Per kernel group
+    """Arbitrary boolean/phrase query + ranking (`term_meta` weights times
+    `impact`, so any scorer) in ONE kernel pass. Per kernel group
     (a run of whole range buckets, see _with_slot): decode ->
     set-evaluate the tree -> score candidates -> local top-k; the caller
     merges the tiny per-group winners.
@@ -898,7 +910,7 @@ def boolean_topk(
     needs_universe = tree_has(tree, "not")
 
     def run_one(pdf: pd.DataFrame, universe) -> pd.DataFrame:
-        return boolean_score_bucket(pdf, tree, term_meta, avgdl, k, universe)
+        return boolean_score_bucket(pdf, tree, term_meta, avgdl, k, universe, impact)
 
     if needs_universe:
         if doclen is None or range_shift is None:

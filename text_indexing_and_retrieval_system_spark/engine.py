@@ -16,9 +16,9 @@ query_processing_engine.py:549-651`):
       → top-k (score DESC, doc_id_int ASC) → optional hydration join
 
 Both strategies run driver-local over cached posting blocks below the
-size gates and as one distributed bucket-kernel job above them. All are
-bit-identical in scores and order (golden suite runs them against the
-same oracle). Control crosses driver→executor once per
+size gates and as one distributed bucket-kernel job above them; both
+are bit-identical in scores and order (golden suite runs them against
+the same oracle). Control crosses driver→executor once per
 query on the kernel/wand paths (plus a dict-lookup id resolution from
 the driver-cached convmap), matching SURVEY.md §3.1's target.
 """

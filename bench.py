@@ -142,7 +142,7 @@ def main() -> None:
         extra["query_qps"] = round(len(qs) / query_sec, 2)
         extra["query_hits"] = sum(len(r.docs) for r in res.values())
         # interactive latency: 5 sequential boolean/phrase queries on the
-        # engine's auto strategy (bucket-kernel for non-disjunctions)
+        # engine's shape routing (bucket-kernel for non-disjunctions)
         bool_qs = qs[:5]
         idx.search_collect(bool_qs[0], k=50)  # warm the kernel path
         lat = []
@@ -172,7 +172,7 @@ def main() -> None:
         tot = dec = 0
         t0 = time.time()
         for qtext in wq:
-            idx.search_collect(qtext, k=10, strategy="wand")
+            idx.search_collect(qtext, k=10)
             st = idx.last_prune_stats
             tot += st["blocks_total"]
             dec += st["blocks_decoded"]

@@ -185,7 +185,7 @@ def run_queryphase() -> None:
         t0 = time.time()
         for q in wq:
             t1 = time.time()
-            idx.search_collect(q, k=10, strategy="wand")
+            idx.search_collect(q, k=10)
             lat.append(round(time.time() - t1, 3))
         print(json.dumps({"wand_16_sequential": round(time.time() - t0, 3),
                           "lat": lat}))

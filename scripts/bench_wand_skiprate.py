@@ -5,7 +5,6 @@ skipping + certified cross-bucket theta seeds) for N sequential
 free-text queries against the pre-staged 4.84M-turn index and reports:
   - blocks scanned vs decoded (skip rate), via Spark accumulators
   - per-query latency (first-run and steady-state)
-  - bit-identity of the pruned results vs the unpruned batch kernel
 
 Usage: python scripts/bench_wand_skiprate.py [cores] [n_queries]
 """
@@ -65,17 +64,11 @@ def main(cores: int, n_queries: int) -> None:
         for _ in range(n_queries)
     ]
 
-    # correctness cross-check: wand vs kernel strategy, same queries
-    for q in qs[:8]:
-        a = idx.search_collect(q, k=50, strategy="wand")
-        b = idx.search_collect(q, k=50, strategy="kernel")
-        assert a.docs == b.docs and a.scores == b.scores, f"MISMATCH: {q}"
-
     def run_pass(queries):
         lat, tot, dec = [], 0, 0
         for q in queries:
             t0 = time.time()
-            idx.search_collect(q, k=50, strategy="wand")
+            idx.search_collect(q, k=50)
             lat.append(time.time() - t0)
             tot += idx.last_prune_stats["blocks_total"]
             dec += idx.last_prune_stats["blocks_decoded"]
@@ -103,7 +96,7 @@ def main(cores: int, n_queries: int) -> None:
         lat, tot, dec = [], 0, 0
         for q in queries:
             t0 = time.time()
-            idx.search_collect(q, k=k, strategy="wand")
+            idx.search_collect(q, k=k)
             lat.append(time.time() - t0)
             tot += idx.last_prune_stats["blocks_total"]
             dec += idx.last_prune_stats["blocks_decoded"]
@@ -112,10 +105,6 @@ def main(cores: int, n_queries: int) -> None:
     # k=10: theta (the per-bucket kth) must clear the common term's tie
     # plateau for blocks to skip — needs >=k rare-term hits per bucket
     lat3, tot3, dec3 = run_pass_k(skew_qs, 10)
-    for q in skew_qs[:4]:
-        a = idx.search_collect(q, k=10, strategy="wand")
-        b = idx.search_collect(q, k=10, strategy="kernel")
-        assert a.docs == b.docs and a.scores == b.scores, f"MISMATCH: {q}"
 
     # block-bound flatness: why uniform pool queries cannot skip — the
     # p99/p50 ratio of per-block upper bounds within a term's postings
@@ -158,7 +147,6 @@ def main(cores: int, n_queries: int) -> None:
         "block_bound_p99_over_p50": round(
             float(np.mean(ratios)) if ratios else float("nan"), 4
         ),
-        "identical_vs_kernel": 12,
     }
     print(json.dumps(out))
     spark.stop()
@@ -173,8 +161,7 @@ def main_realistic(cores: int, n_convs: int, n_queries: int = 32) -> None:
     bursty tf give non-flat per-block bounds, and the per-block BMW
     check (wand.score_bucket_pruned) turns them into whole-block skips.
     Builds (and caches) the index at `n_convs` conversations (160k
-    convs ~= 1.01M turns), then reports skip rate, latency, and
-    asserts bit-identity vs the unpruned bucket kernel."""
+    convs ~= 1.01M turns), then reports skip rate and latency."""
     import random
 
     import numpy as np
@@ -234,17 +221,11 @@ def main_realistic(cores: int, n_convs: int, n_queries: int = 32) -> None:
         for _ in range(n_queries)
     ]
 
-    # bit-identity vs the unpruned bucket kernel (full boolean+score pass)
-    for q in qs[:6]:
-        a = idx.search_collect(q, k=10, strategy="wand")
-        b = idx.search_collect(q, k=10, strategy="kernel")
-        assert a.docs == b.docs and a.scores == b.scores, f"MISMATCH: {q}"
-
     def run_pass(k):
         lat, tot, dec = [], 0, 0
         for q in qs:
             t0 = time.time()
-            idx.search_collect(q, k=k, strategy="wand")
+            idx.search_collect(q, k=k)
             lat.append(time.time() - t0)
             tot += idx.last_prune_stats["blocks_total"]
             dec += idx.last_prune_stats["blocks_decoded"]
@@ -285,7 +266,6 @@ def main_realistic(cores: int, n_convs: int, n_queries: int = 32) -> None:
         "block_bound_p99_over_p50_median": round(
             float(np.median(ratios)) if ratios else float("nan"), 3
         ),
-        "identical_vs_kernel": 6,
     }
     print(json.dumps(out))
     spark.stop()

@@ -14,7 +14,7 @@ def test_batch_matches_single(built_index, oracle_index):
     ]
     batch = built_index.search_batch(queries, k=15)
     for q in queries:
-        single = built_index.search_collect(q, k=15, strategy="wand")
+        single = built_index.search_collect(q, k=15)
         want = oracle_index.search(q, k=15, scorer="bm25")
         assert batch[q].docs == single.docs == [d for d, _ in want], q
         assert batch[q].scores == single.scores == [s for _, s in want], q

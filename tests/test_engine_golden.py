@@ -71,8 +71,9 @@ def test_single_term_all_scorers(built_index, oracle_index, scorer):
 def test_query_shapes_all_scorers(
     built_index, distributed_index, oracle_index, corpus_pdf, scorer
 ):
-    """Every scorer x term/AND/OR/NOT/PHRASE/PHRASE OR on the bucket
-    kernel, driver-local and distributed, bit-exact against the oracle."""
+    """Every scorer x term/AND/OR/NOT/PHRASE/PHRASE OR, driver-local and
+    distributed, bit-exact against the oracle (a bm25 OR takes the
+    MaxScore body, everything else the set-evaluation kernel)."""
     by_df = sorted(oracle_index.postings, key=lambda t: -len(oracle_index.postings[t]))
     hot, mid = by_df[0], by_df[20]
     tokens = normalize_to_tokens(corpus_pdf["text"].head(50))
@@ -89,18 +90,18 @@ def test_query_shapes_all_scorers(
     for q in queries:
         want = oracle_index.search(q, k=K, scorer=scorer)
         for where, idx in (("driver", built_index), ("distributed", distributed_index)):
-            got = idx.search_collect(q, k=K, scorer=scorer, strategy="kernel")
-            _assert_match(want, got, f"{q} [{scorer} kernel, {where}]")
+            got = idx.search_collect(q, k=K, scorer=scorer)
+            _assert_match(want, got, f"{q} [{scorer}, {where}]")
 
 
 def test_golden_queries_kernel(built_index, oracle_index, query_set):
-    """The bucket-kernel boolean path (strategy=kernel, the interactive
-    default for non-disjunctive bm25 queries) must be bit-identical to
+    """Shape routing (the set-evaluation kernel for boolean/phrase
+    queries, MaxScore for pure disjunctions) must be bit-identical to
     the oracle on all 15 templates (AND/OR/NOT/phrase mixes)."""
     for q in query_set:
         want = oracle_index.search(q, k=K, scorer="bm25")
-        got = built_index.search_collect(q, k=K, scorer="bm25", strategy="kernel")
-        _assert_match(want, got, q + " [kernel]")
+        got = built_index.search_collect(q, k=K, scorer="bm25")
+        _assert_match(want, got, q)
 
 
 def test_kernel_not_and_phrase(built_index, oracle_index, corpus_pdf):
@@ -119,20 +120,8 @@ def test_kernel_not_and_phrase(built_index, oracle_index, corpus_pdf):
         f'PHRASE "{phrase}" OR "{mid}"',
     ):
         want = oracle_index.search(q, k=K)
-        got = built_index.search_collect(q, k=K, strategy="kernel")
+        got = built_index.search_collect(q, k=K)
         _assert_match(want, got, q + " [kernel]")
-
-
-def test_wand_matches_kernel_on_disjunctions(built_index, oracle_index):
-    terms = sorted(
-        oracle_index.postings, key=lambda t: -len(oracle_index.postings[t])
-    )[:6]
-    q = " OR ".join(f'"{t}"' for t in terms)
-    want = oracle_index.search(q, k=K, scorer="bm25")
-    got_wand = built_index.search_collect(q, k=K, strategy="wand")
-    got_kernel = built_index.search_collect(q, k=K, strategy="kernel")
-    _assert_match(want, got_wand, q + " [wand]")
-    _assert_match(want, got_kernel, q + " [kernel]")
 
 
 def test_phrase_query(built_index, oracle_index, corpus_pdf):

@@ -70,10 +70,10 @@ def _run_all(spark, index_dir, batch, wand_qs, bool_qs):
     for q, res in idx.search_batch(batch, k=K).items():
         out[("batch", q)] = (res.docs, res.scores)
     for q in wand_qs:
-        res = idx.search_collect(q, k=K, strategy="wand")
+        res = idx.search_collect(q, k=K)
         out[("wand", q)] = (res.docs, res.scores)
     for q in bool_qs:
-        res = idx.search_collect(q, k=K, strategy="kernel")
+        res = idx.search_collect(q, k=K)
         out[("kernel", q)] = (res.docs, res.scores)
     return out
 

@@ -18,15 +18,15 @@ CFG = IndexBuildConfig(n_term_buckets=8, n_range_buckets=8, n_segment_chunks=2, 
 
 
 def test_kernel_strategy_respects_scorer(built_index, oracle_index):
-    """strategy='kernel' with a non-bm25 scorer must not silently return
-    BM25 scores (ADVICE r2 medium): the kernel scores tfidf exactly."""
-    q = '"said" OR "index"'  # forced kernel (auto would pick wand)
-    via_kernel = built_index.search_collect(q, k=10, scorer="tfidf", strategy="kernel")
+    """The kernel with a non-bm25 scorer must not silently return BM25
+    scores (ADVICE r2 medium): it scores tfidf exactly."""
+    q = '"said" OR "index"'  # tfidf -> kernel (bm25 would take MaxScore)
+    via_kernel = built_index.search_collect(q, k=10, scorer="tfidf")
     want = oracle_index.search(q, k=10, scorer="tfidf")
     assert via_kernel.docs == [d for d, _ in want]
     assert via_kernel.scores == [s for _, s in want]
-    # and it genuinely differs from the kernel's BM25 ranking scores
-    bm25 = built_index.search_collect(q, k=10, scorer="bm25", strategy="kernel")
+    # and it genuinely differs from the BM25 ranking scores
+    bm25 = built_index.search_collect(q, k=10, scorer="bm25")
     assert bm25.scores != via_kernel.scores
 
 
@@ -69,7 +69,8 @@ def test_deep_conversation_doc_ids(spark, tmp_path):
     tok = f"uniqtok{letters(10020)}"
     res = idx.search_collect(f'"{tok}"', k=3)
     assert res.docs == ["deepconv:10020"]
-    res_kernel = idx.search_collect(f'"{tok}"', k=3, strategy="kernel")
+    # and through the set-evaluation kernel (a one-term AND)
+    res_kernel = idx.search_collect(f'"{tok}" AND "filler"', k=3)
     assert res_kernel.docs == ["deepconv:10020"]
 
 

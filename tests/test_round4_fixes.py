@@ -140,21 +140,21 @@ def test_driver_paths_bit_identical_to_distributed(spark, built_index):
     dist.DRIVER_WAND_MAX_DF = 0  # force the distributed paths
     dist.DRIVER_NOT_MAX_DOCS = 0
     queries = [
-        ('"said" OR "index" OR "the"', "wand"),
-        ('"said" OR "order"', "wand"),
-        ('"said" AND "index"', "auto"),
-        ('"said" AND NOT "index"', "auto"),
-        ('NOT "said"', "auto"),
-        ('PHRASE "it said"', "auto"),
-        ('PHRASE "it said" OR "order"', "auto"),
+        '"said" OR "index" OR "the"',
+        '"said" OR "order"',
+        '"said" AND "index"',
+        '"said" AND NOT "index"',
+        'NOT "said"',
+        'PHRASE "it said"',
+        'PHRASE "it said" OR "order"',
     ]
-    for q, strat in queries:
-        a = built_index.search_collect(q, k=25, strategy=strat)
-        b = dist.search_collect(q, k=25, strategy=strat)
+    for q in queries:
+        a = built_index.search_collect(q, k=25)
+        b = dist.search_collect(q, k=25)
         assert a.docs == b.docs, q
         assert a.scores == b.scores, q
     # the wand driver path keeps reporting prune stats
-    built_index.search_collect('"said" OR "index"', k=5, strategy="wand")
+    built_index.search_collect('"said" OR "index"', k=5)
     st = built_index.last_prune_stats
     assert st["blocks_total"] >= st["blocks_decoded"] >= 0
 
@@ -162,8 +162,8 @@ def test_driver_paths_bit_identical_to_distributed(spark, built_index):
 def test_block_cache_lru_eviction(spark, built_index):
     idx = engine.InvertedIndex(spark, built_index.dir)
     idx.BLOCK_CACHE_MAX_BYTES = 1  # evict after every fetch
-    a = idx.search_collect('"said" OR "index"', k=10, strategy="wand")
-    b = idx.search_collect('"said" OR "index"', k=10, strategy="wand")
+    a = idx.search_collect('"said" OR "index"', k=10)
+    b = idx.search_collect('"said" OR "index"', k=10)
     assert a.docs == b.docs and a.scores == b.scores
     assert len(idx._block_cache) <= 2  # only the latest fetch survives
 

@@ -1,6 +1,6 @@
 """The scorer-generic bucket kernel: exact TFIDF weights, loud rejection
-of unknown strategies/scorers, and refusal of indexes without doc-id
-range bucketing."""
+of unknown scorers and of the removed `strategy` option, and refusal of
+indexes without doc-id range bucketing."""
 
 import json
 import os
@@ -56,14 +56,14 @@ def test_unknown_strategy_or_scorer_raises_before_any_job(spark, built_index):
     group = "test-unknown-strategy"
     sc.setJobGroup(group, "must launch no job")
     try:
-        for kw in (
-            {"strategy": "dataframe"},
-            {"strategy": "bogus"},
-            {"scorer": "bm52"},
+        for kw, err, match in (
+            ({"strategy": "dataframe"}, TypeError, "strategy"),
+            ({"strategy": "bogus"}, TypeError, "strategy"),
+            ({"scorer": "bm52"}, ValueError, "unknown scorer"),
         ):
-            with pytest.raises(ValueError, match="unknown"):
+            with pytest.raises(err, match=match):
                 built_index.search_collect('"said" AND "index"', k=5, **kw)
-            with pytest.raises(ValueError, match="unknown"):
+            with pytest.raises(err, match=match):
                 built_index.search('"said"', k=5, **kw)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)

@@ -94,9 +94,9 @@ def test_theta_seed_engine_repeat_query(built_index, oracle_index):
     )[:4]
     q = " OR ".join(f'"{t}"' for t in terms)
     want = oracle_index.search(q, k=10, scorer="bm25")
-    first = built_index.search_collect(q, k=10, strategy="wand")
+    first = built_index.search_collect(q, k=10)
     s1 = dict(built_index.last_prune_stats)
-    second = built_index.search_collect(q, k=10, strategy="wand")
+    second = built_index.search_collect(q, k=10)
     s2 = dict(built_index.last_prune_stats)
     for got in (first, second):
         assert got.docs == [d for d, _ in want]

@@ -6,7 +6,7 @@
     generate  --out DIR --convs N [--seed S]        synthetic corpus
     build     --input PATH --storage DIR --index ID  build/resume an index
     search    --storage DIR --index ID --query Q [-k K] [--scorer s]
-              [--strategy auto|wand|kernel] [--hydrate]
+              [--hydrate]                        path chosen by query shape
     batch     --storage DIR --index ID --queries FILE [-k K]
     add       --storage DIR --index ID --input PATH  incremental add+refresh
     delete-docs --storage DIR --index ID --doc-ids id1,id2  tombstone+refresh
@@ -54,7 +54,6 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument("--query", required=True)
     s.add_argument("-k", type=int, default=50)
     s.add_argument("--scorer", default="bm25", choices=["bm25", "tfidf", "wordcount"])
-    s.add_argument("--strategy", default="auto", choices=["auto", "wand", "kernel"])
     s.add_argument("--hydrate", action="store_true")
 
     bt = sub.add_parser("batch")
@@ -119,11 +118,7 @@ def main(argv: list[str] | None = None) -> int:
         idx = engine.load(spark, idx_dir)
         if args.cmd == "search":
             res = idx.search(
-                args.query,
-                k=args.k,
-                scorer=args.scorer,
-                strategy=args.strategy,
-                hydrate=args.hydrate,
+                args.query, k=args.k, scorer=args.scorer, hydrate=args.hydrate
             )
             for row in res.collect():
                 d = row.asDict()

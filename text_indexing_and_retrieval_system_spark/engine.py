@@ -4,23 +4,25 @@ Query lifecycle (Spark rebuild of the reference's
 `process_custom_query`, `/root/reference/code/indexes/query_processing/
 query_processing_engine.py:549-651`):
 
-    query string ──(driver)── parse → AST → scoring terms
-      → strategy dispatch (auto):
-        "wand"     bm25 pure disjunctions — block-max bucket scorer with
-                   MaxScore skipping + certified cross-bucket θ seeds
-        "kernel"   every other query and scorer — the whole
-                   boolean/phrase tree set-evaluated in numpy per
-                   doc-range bucket (NOT via doclen cogroup), then scored
-                   exactly as Σ weight × impact (bm25: idf × BM25
-                   tf-normalization; tfidf: ln(N/df) × tf; wordcount: tf)
+    query string ──(driver)── parse → AST → token tree + scoring terms
+      → routing by shape (InvertedIndex._search_rows):
+        bm25 pure disjunction   block-max bucket scorer with MaxScore
+                                skipping + certified cross-bucket θ seeds
+        every other query       the whole boolean/phrase tree
+                                set-evaluated in numpy (NOT against the
+                                doc-id universe), then scored exactly as
+                                Σ weight × impact (bm25: idf × BM25
+                                tf-normalization; tfidf: ln(N/df) × tf;
+                                wordcount: tf)
+      → routing by gate: driver-local over cached posting blocks when the
+        terms' Σdf (and, for NOT, the corpus size) is under the size
+        gates, else one distributed bucket-kernel job
       → top-k (score DESC, doc_id_int ASC) → optional hydration join
 
-Both strategies run driver-local over cached posting blocks below the
-size gates and as one distributed bucket-kernel job above them; both
-are bit-identical in scores and order (golden suite runs them against
-the same oracle). Control crosses driver→executor once per
-query on the kernel/wand paths (plus a dict-lookup id resolution from
-the driver-cached convmap), matching SURVEY.md §3.1's target.
+All four leaves are bit-identical in scores and order (the golden suite
+runs them against the same oracle). Control crosses driver→executor once
+per query on the distributed leaves (plus a dict-lookup id resolution
+from the driver-cached convmap), matching SURVEY.md §3.1's target.
 """
 
 from __future__ import annotations
@@ -46,7 +48,6 @@ from .operators.segments import Manifests, build_index, term_bucket_py
 # distributed merge keeps the collect at ~k x queries rows
 DRIVER_MERGE_MAX_ROWS = 2_000_000
 
-STRATEGIES = ("auto", "wand", "kernel")
 SCORERS = ("bm25", "tfidf", "wordcount")
 
 
@@ -346,50 +347,18 @@ class InvertedIndex:
             all_tokens.update(normalize_query_terms([raw], self.normalize_cfg)[0])
         return occ, sorted(all_tokens)
 
-    def _is_pure_disjunction(self, node: qp.Node) -> bool:
-        kind = node[0]
-        if kind == "term":
-            return len(normalize_query_terms([node[1]], self.normalize_cfg)[0]) == 1
-        if kind == "or":
-            return self._is_pure_disjunction(node[1]) and self._is_pure_disjunction(
-                node[2]
-            )
-        return False
-
-    def _resolve_strategy(self, node: qp.Node, scorer: str, strategy: str) -> str:
-        """wand for bm25 under an explicit "wand" or for an auto pure
-        disjunction (its block-max bounds are BM25 impacts); kernel for
-        everything else (single-pass boolean+score, any scorer). Unknown
-        values raise before any Spark job runs."""
-        if strategy not in STRATEGIES:
-            raise ValueError(
-                f"unknown strategy {strategy!r}; expected one of {STRATEGIES}"
-            )
-        if scorer not in SCORERS:
-            raise ValueError(f"unknown scorer {scorer!r}; expected one of {SCORERS}")
-        if scorer == "bm25" and (
-            strategy == "wand"
-            or (strategy == "auto" and self._is_pure_disjunction(node))
-        ):
-            return "wand"
-        return "kernel"
-
     def search(
         self,
         query: str,
         k: int = 50,
         scorer: str = "bm25",
-        strategy: str = "auto",
         hydrate: bool = False,
     ) -> DataFrame:
         """Returns DataFrame (doc_id, doc_id_int, score[, text...]) of the
         top-k, totally ordered by (score DESC, doc_id_int ASC) — the
         engine-wide tie-break contract: tie-breaking on the doc_id string
         would diverge when one conv_id is a prefix of another."""
-        node = qp.parse(query)
-        occ, all_tokens = self._query_tokens(node)
-        strategy = self._resolve_strategy(node, scorer, strategy)
-        rows = self._search_rows(node, occ, all_tokens, k, scorer, strategy)
+        rows = self._search_rows(query, k, scorer)
         out = self.spark.createDataFrame(
             rows, "doc_id string, doc_id_int long, score double"
         )
@@ -404,16 +373,12 @@ class InvertedIndex:
         return out
 
     def _term_meta(
-        self, occ: list[tuple[int, str]], scorer: str = "bm25"
+        self, occ: list[tuple[int, str]], scorer: str, lex: pd.DataFrame
     ) -> dict[str, list[tuple[int, float]]]:
         """term -> [(occurrence_idx, weight)] for the query's scoring terms
-        found in the lexicon. The weight multiplies the kernel's impact:
-        bm25 the lexicon idf, tfidf ln(N/df) computed here exactly as the
-        oracle does, wordcount 1.0."""
-        tokens = sorted({t for _, t in occ})
-        if not tokens:
-            return {}
-        lex = self.lexicon_for(tokens)
+        found in the lexicon rows `lex`. The weight multiplies the kernel's
+        impact: bm25 the lexicon idf, tfidf ln(N/df) computed here exactly
+        as the oracle does, wordcount 1.0."""
         if scorer == "bm25":
             weights = zip(lex["term"], map(float, lex["idf"]))
         elif scorer == "tfidf":
@@ -430,64 +395,57 @@ class InvertedIndex:
                 meta.setdefault(t, []).append((i, weight_by_term[t]))
         return meta
 
-    def _search_rows(
-        self,
-        node: qp.Node,
-        occ: list[tuple[int, str]],
-        all_tokens: list[str],
-        k: int,
-        scorer: str,
-        strategy: str,
-    ) -> list[tuple]:
-        """Strategy dispatch returning the k winner TUPLES — search()
-        wraps them in a DataFrame; search_collect() consumes them
-        directly (no local-DataFrame round trip, ~0.3 s/query saved)."""
-        if strategy == "wand":
-            return self._search_wand_rows(occ, k)
-        return self._search_kernel_rows(node, occ, all_tokens, k, scorer)
+    def _search_rows(self, query: str, k: int, scorer: str) -> list[tuple]:
+        """Routing by shape + gate, returning the k winner TUPLES —
+        search() wraps them in a DataFrame; search_collect() consumes
+        them directly (no local-DataFrame round trip).
 
-    def _finalize_topk(self, rows: list, k: int) -> list[tuple]:
-        """Per-bucket winners -> global top-k tuples: driver merge on
-        (score DESC, doc_id_int ASC) + one pruned doc_id lookup."""
-        rows = sorted(rows, key=lambda r: (-r["score"], r["doc_id_int"]))[:k]
-        id_map = self._doc_ids_for([r["doc_id_int"] for r in rows])
-        return [(id_map[r["doc_id_int"]], r["doc_id_int"], r["score"]) for r in rows]
-
-    def _search_kernel_rows(
-        self,
-        node: qp.Node,
-        occ: list[tuple[int, str]],
-        all_tokens: list[str],
-        k: int,
-        scorer: str,
-    ) -> list[tuple]:
-        """Full boolean/phrase + ranking in one bucket-kernel pass (see
-        wand.boolean_topk), driver-local or distributed — the path for
-        every query but bm25 pure disjunctions; results bit-identical to
-        the oracle for every scorer."""
+        Shape picks the body: a bm25 pure disjunction runs MaxScore
+        (wand.score_bucket_pruned — its block-max bounds are BM25
+        impacts); every other query set-evaluates its tree and scores the
+        matches (wand.boolean_score_bucket), any scorer. The gate picks
+        where: the interactive head cache (see DRIVER_WAND_MAX_DF) scores
+        small-df queries driver-local over cached block frames; NOT needs
+        the complement universe (every doc id), so it additionally
+        requires a small corpus. Everything else runs as one distributed
+        bucket-kernel job. An unknown scorer raises before any Spark job."""
+        if scorer not in SCORERS:
+            raise ValueError(f"unknown scorer {scorer!r}; expected one of {SCORERS}")
+        node = qp.parse(query)
+        occ, all_tokens = self._query_tokens(node)
         tree = wand.normalize_tree(
             node, lambda s: normalize_query_terms([s], self.normalize_cfg)[0]
         )
-        term_meta = self._term_meta(occ, scorer)
-        impact = wand.bm25_impact if scorer == "bm25" else wand.tf_impact
-        has_phrase = wand.tree_has(tree, "phrase")
-        needs_universe = wand.tree_has(tree, "not")
-        # interactive head-cache gate (see DRIVER_WAND_MAX_DF): small-df
-        # queries score driver-local over cached block frames. NOT needs
-        # the complement universe (every doc id), so it additionally
-        # requires a small corpus — at deployment scale NOT queries stay
-        # on the distributed cogroup path.
         lex = self.lexicon_for(all_tokens)
-        if int(lex["df"].sum() or 0) <= self.DRIVER_WAND_MAX_DF and (
+        term_meta = self._term_meta(occ, scorer, lex)
+        needs_universe = wand.tree_has(tree, "not")
+        driver = int(lex["df"].sum() or 0) <= self.DRIVER_WAND_MAX_DF and (
             not needs_universe
             or int(self.stats.get("n_docs") or 0) <= self.DRIVER_NOT_MAX_DOCS
-        ):
+        )
+        if scorer == "bm25" and wand.is_disjunction(tree):
+            # cross-bucket theta key: worker processes reuse certified k-th
+            # scores across this query's buckets and across repeats of the
+            # query in the session; index_version (stats.json generation
+            # id, bumped by every build/refresh commit) pins the index
+            # generation so a refresh invalidates stale seeds even when
+            # n_docs/avgdl are coincidentally unchanged
+            qkey = (
+                f"{self.dir}|v{self.index_version}|{self.stats['n_docs']}|"
+                f"{self.stats['avgdl']}|k={k}|"
+                + "|".join(f"{t}:{len(m)}" for t, m in sorted(term_meta.items()))
+            )
+            if driver:
+                return self._search_wand_driver_rows(term_meta, k, qkey)
+            return self._search_wand_distributed_rows(term_meta, k, qkey)
+        impact = wand.bm25_impact if scorer == "bm25" else wand.tf_impact
+        has_phrase = wand.tree_has(tree, "phrase")
+        if driver:
             return self._search_kernel_driver_rows(
                 tree, term_meta, all_tokens, k, has_phrase, needs_universe, impact
             )
-        blocks = self.blocks_for(all_tokens, with_positions=has_phrase)
         local = wand.boolean_topk(
-            blocks,
+            self.blocks_for(all_tokens, with_positions=has_phrase),
             tree,
             term_meta,
             self.stats["avgdl"],
@@ -498,6 +456,13 @@ class InvertedIndex:
             impact=impact,
         )
         return self._finalize_topk(local.collect(), k)
+
+    def _finalize_topk(self, rows: list, k: int) -> list[tuple]:
+        """Per-bucket winners -> global top-k tuples: driver merge on
+        (score DESC, doc_id_int ASC) + one pruned doc_id lookup."""
+        rows = sorted(rows, key=lambda r: (-r["score"], r["doc_id_int"]))[:k]
+        id_map = self._doc_ids_for([r["doc_id_int"] for r in rows])
+        return [(id_map[r["doc_id_int"]], r["doc_id_int"], r["score"]) for r in rows]
 
     def _doclen_ids(self) -> "np.ndarray":
         """Sorted int64 doc-id universe, driver-cached (gated by
@@ -521,78 +486,40 @@ class InvertedIndex:
         needs_universe: bool,
         impact,
     ) -> list[tuple]:
-        """Driver-local boolean/phrase+ranking: same per-bucket kernel body
-        (wand.boolean_score_bucket) as the distributed path, run
-        in-process over cached block frames — bit-identical results,
-        none of the 2-stage shuffle job's scheduling floor."""
-        import numpy as np
-
+        """Driver-local boolean/phrase+ranking: the distributed path's
+        kernel body (wand.boolean_score_bucket) called ONCE in-process over
+        the whole cached block frame, with the whole doc-id universe for
+        NOT. Exact by the packing argument of wand._with_slot: a group of
+        whole range buckets scores like one bigger bucket, so the single
+        call is bit-identical to the per-bucket kernels, without the
+        2-stage shuffle job's scheduling floor."""
         pdf = self._blocks_pdf_for(all_tokens, with_positions=has_phrase)
-        empty_cols = list(wand.KERNEL_COLS) + (
-            ["pos_payload"] if has_phrase else []
-        )
-        empty = (
-            pdf.iloc[0:0] if pdf is not None else pd.DataFrame(columns=empty_cols)
-        )
-        groups: dict[int, pd.DataFrame] = (
-            {int(b): g for b, g in pdf.groupby("range_bucket", sort=False)}
-            if pdf is not None
-            else {}
-        )
-        buckets = set(groups)
-        uni_by_bucket: dict[int, "np.ndarray"] = {}
-        if needs_universe:
-            ids = self._doclen_ids()
-            ub = (ids >> np.int64(self.range_shift)).astype(np.int64)
-            # ids are sorted, so each bucket's slice is contiguous
-            edges = np.flatnonzero(np.r_[True, ub[1:] != ub[:-1]])
-            ends = np.r_[edges[1:], ids.size]
-            for s, e in zip(edges, ends):
-                uni_by_bucket[int(ub[s])] = ids[s:e]
-            buckets |= set(uni_by_bucket)
-        outs = []
-        for b in sorted(buckets):
-            out = wand.boolean_score_bucket(
-                groups.get(b, empty),
-                tree,
-                term_meta,
-                self.stats["avgdl"],
-                k,
-                universe=uni_by_bucket.get(b) if needs_universe else None,
-                impact=impact,
+        if pdf is None:
+            pdf = pd.DataFrame(
+                columns=list(wand.KERNEL_COLS) + (["pos_payload"] if has_phrase else [])
             )
-            if len(out):
-                outs.append(out)
-        if not outs:
-            return []
-        merged = pd.concat(outs, ignore_index=True)
+        out = wand.boolean_score_bucket(
+            pdf,
+            tree,
+            term_meta,
+            self.stats["avgdl"],
+            k,
+            universe=self._doclen_ids() if needs_universe else None,
+            impact=impact,
+        )
         rows = [
             {"doc_id_int": int(d), "score": float(s)}
-            for d, s in zip(merged["doc_id_int"], merged["score"])
+            for d, s in zip(out["doc_id_int"], out["score"])
         ]
         return self._finalize_topk(rows, k)
 
-    def _search_wand_rows(self, occ: list[tuple[int, str]], k: int) -> list[tuple]:
-        term_meta = self._term_meta(occ)
-        # cross-bucket theta key: worker processes reuse certified k-th
-        # scores across this query's buckets and across repeats of the
-        # query in the session; index_version (stats.json generation id,
-        # bumped by every build/refresh commit) pins the index generation
-        # so a refresh invalidates stale seeds even when n_docs/avgdl are
-        # coincidentally unchanged
-        qkey = (
-            f"{self.dir}|v{self.index_version}|{self.stats['n_docs']}|"
-            f"{self.stats['avgdl']}|k={k}|"
-            + "|".join(f"{t}:{len(m)}" for t, m in sorted(term_meta.items()))
-        )
-        lex = self.lexicon_for(sorted(term_meta))
-        if int(lex["df"].sum() or 0) <= self.DRIVER_WAND_MAX_DF:
-            return self._search_wand_driver_rows(term_meta, k, qkey)
-        blocks = self.blocks_for(sorted(term_meta))
+    def _search_wand_distributed_rows(
+        self, term_meta: dict, k: int, qkey: str
+    ) -> list[tuple]:
         acc_total, acc_decoded = self._prune_accs()
         t0, d0 = acc_total.value, acc_decoded.value
         local = wand.topk_disjunctive(
-            blocks,
+            self.blocks_for(sorted(term_meta)),
             term_meta,
             self.stats["avgdl"],
             k,
@@ -687,6 +614,12 @@ class InvertedIndex:
             self._bulk_blocks = False
             return False
         pdf = self._blocks_relation(False).select(*wand.KERNEL_COLS).toPandas()
+        # the df gate only estimates size, the LRU charges real bytes: a
+        # preload over BLOCK_CACHE_MAX_BYTES would be evicted piecemeal
+        # and refetched per term on every later query, so drop it
+        if self._block_cache_bytes + self._frame_bytes(pdf) > self.BLOCK_CACHE_MAX_BYTES:
+            self._bulk_blocks = False
+            return False
         self._bulk_empty = pdf.iloc[0:0]
         for t, g in pdf.groupby("term", sort=False):
             old = self._block_cache.get((t, False))
@@ -914,23 +847,18 @@ class InvertedIndex:
                 timings[label] = timings.get(label, 0.0) + (t1 - t0)
         return out
 
-    def search_collect(self, query: str, k: int = 50, **kw) -> SearchResult:
-        if not kw.get("hydrate"):
-            # all strategies produce driver-side tuples — skip the
+    def search_collect(
+        self, query: str, k: int = 50, scorer: str = "bm25", hydrate: bool = False
+    ) -> SearchResult:
+        if hydrate:
+            got = self.search(query, k, scorer=scorer, hydrate=True).collect()
+            rows = [(r["doc_id"], r["doc_id_int"], r["score"]) for r in got]
+        else:
+            # every path produces driver-side tuples — skip the
             # local-DataFrame round trip entirely
-            node = qp.parse(query)
-            occ, all_tokens = self._query_tokens(node)
-            scorer = kw.get("scorer", "bm25")
-            strategy = self._resolve_strategy(node, scorer, kw.get("strategy", "auto"))
-            rows = self._search_rows(node, occ, all_tokens, k, scorer, strategy)
-            return SearchResult(
-                query=query, docs=[r[0] for r in rows], scores=[r[2] for r in rows]
-            )
-        rows = self.search(query, k, **kw).collect()
+            rows = self._search_rows(query, k, scorer)
         return SearchResult(
-            query=query,
-            docs=[r["doc_id"] for r in rows],
-            scores=[r["score"] for r in rows],
+            query=query, docs=[r[0] for r in rows], scores=[r[2] for r in rows]
         )
 
     def search_es_shaped(self, query: str, k: int = 50, index_id: str = "tirs") -> dict:

@@ -108,22 +108,19 @@ def kernel_groups(spark, n_buckets: int) -> int:
     return max(1, min(n_buckets, _core_slots(spark)))
 
 
-def _kernel_frame(df: DataFrame, n_buckets: int | None):
+def _kernel_frame(df: DataFrame, n_buckets: int):
     """`df` repartitioned so each kernel group sits alone on its own
-    shuffle partition -> (frame, grouping column). Without a bucket count
-    (legacy callers) the range buckets hash onto the core slots."""
-    if not n_buckets:
-        return df.repartition(_core_slots(df.sparkSession), "range_bucket"), "range_bucket"
+    shuffle partition -> (frame, grouping column)."""
     slotted, n_groups = _with_slot(df, n_buckets)
     return slotted.repartition(n_groups, "__slot"), "__slot"
 
 
-def _grouped(df: DataFrame, n_buckets: int | None = None):
+def _grouped(df: DataFrame, n_buckets: int):
     frame, key = _kernel_frame(df, n_buckets)
     return frame.groupBy(key)
 
 
-def _bucket_grouped(blocks: DataFrame, n_buckets: int | None = None):
+def _bucket_grouped(blocks: DataFrame, n_buckets: int):
     # slim the kernel shuffle to the columns the kernels read (drops the
     # partition/bucket/stats columns; pos_payload rides along only when
     # the caller selected it for a phrase tree)
@@ -167,32 +164,6 @@ def _empty_topk() -> pd.DataFrame:
     return pd.DataFrame({"doc_id_int": [], "score": []}).astype(
         {"doc_id_int": "int64", "score": "float64"}
     )
-
-
-_DECODE_CACHE: dict[tuple[bytes, float], tuple[np.ndarray, np.ndarray]] = {}
-_DECODE_CACHE_MAX = 200_000  # blocks; ~100-300 MB worst case per executor
-
-
-def _decode_block(payload: bytes, avgdl: float) -> tuple[np.ndarray, np.ndarray]:
-    """Payload → (doc_ids, impacts), memoized per executor process.
-
-    Query batches share Zipfian pool terms, so the same hot blocks decode
-    over and over; executors are long-lived, so an in-process cache keyed
-    by (payload bytes, avgdl) amortizes the decode the way a real engine
-    keeps hot posting lists paged in."""
-    if not isinstance(payload, bytes):
-        payload = bytes(payload)
-    key = (payload, avgdl)
-    got = _DECODE_CACHE.get(key)
-    if got is not None:
-        return got
-    d, tf, dl, _ = codec.unpack_postings(payload)
-    tf_f = tf.astype(np.float64)
-    denom = tf_f + K1 * ((1.0 - B) + (B * dl.astype(np.float64)) / avgdl)
-    out = (d, tf_f * (K1 + 1.0) / denom)
-    if len(_DECODE_CACHE) < _DECODE_CACHE_MAX:
-        _DECODE_CACHE[key] = out
-    return out
 
 
 def score_bucket_pruned(
@@ -283,19 +254,15 @@ def score_bucket_pruned(
                     keep[j] = False
         else:
             keep = np.ones(len(grp), dtype=bool)
-        payloads = grp["payload"].to_numpy()
-        docs_parts, imp_parts = [], []
-        for j in np.flatnonzero(keep):
-            d, imp = _decode_block(payloads[j], avgdl)
-            docs_parts.append(d)
-            imp_parts.append(imp)
+        # the kept blocks in ONE vectorized decode + impact pass
+        _, d_all, tfs, dls = codec.unpack_postings_batch(
+            grp["payload"].to_numpy()[keep]
+        )
         n_decoded += int(keep.sum())
-        if not docs_parts:
-            decoded[term] = (np.empty(0, dtype=np.int64), np.empty(0))
-            continue
-        d_all = np.concatenate(docs_parts)
-        imp_all = np.concatenate(imp_parts)
+        imp_all = bm25_impact(tfs.astype(np.float64), dls, avgdl)
         decoded[term] = (d_all, imp_all)
+        if not d_all.size:
+            continue
         contrib = idf_sum[term] * imp_all
         if restricted:
             idx = np.searchsorted(cands, d_all)
@@ -324,35 +291,8 @@ def score_bucket_pruned(
             if not keep_c.all():
                 cands, part = cands[keep_c], part[keep_c]
 
-    if cands.size == 0:
-        return _empty_topk(), n_total, n_decoded
-
     # phase B: exact rescore of candidates in term-occurrence order
-    occs = sorted(
-        (idx, t, idf)
-        for t in decoded
-        for (idx, idf) in term_meta.get(t, [])
-    )
-    scores = np.zeros(cands.size, dtype=np.float64)
-    for _, term, idf in occs:
-        d, imp = decoded[term]
-        if d.size == 0:
-            continue
-        idx = np.searchsorted(cands, d)
-        valid = (idx < cands.size) & (cands[np.minimum(idx, cands.size - 1)] == d)
-        scores[idx[valid]] += idf * imp[valid]
-
-    if cands.size > k:
-        kth = np.partition(-scores, k - 1)[k - 1]
-        sel_pool = np.flatnonzero(-scores <= kth)
-        sel = sel_pool[np.lexsort((cands[sel_pool], -scores[sel_pool]))[:k]]
-    else:
-        sel = np.lexsort((cands, -scores))
-    return (
-        pd.DataFrame({"doc_id_int": cands[sel], "score": scores[sel]}),
-        n_total,
-        n_decoded,
-    )
+    return _score_candidates_np(cands, decoded, term_meta, k), n_total, n_decoded
 
 
 def score_bucket(
@@ -429,7 +369,8 @@ def topk_disjunctive(
     query_key: str | None = None,
     acc_total=None,
     acc_decoded=None,
-    n_buckets: int | None = None,
+    *,
+    n_buckets: int,
 ) -> DataFrame:
     """blocks(term, range_bucket, first_doc, payload, ...) filtered to the
     query terms → global (doc_id_int, score) top-k candidates.
@@ -566,7 +507,7 @@ def topk_disjunctive_batch(
     queries_meta: dict[int, dict[str, list[tuple[int, float]]]],
     avgdl: float,
     k: int,
-    n_buckets: int | None = None,
+    n_buckets: int,
     batch_key: str | None = None,
 ) -> DataFrame:
     """Many queries in ONE distributed pass (the reference runs its whole
@@ -743,6 +684,14 @@ def tree_has(tree, kind: str) -> bool:
     )
 
 
+def is_disjunction(tree) -> bool:
+    """True for single tokens joined by OR only — the shape the MaxScore
+    body (score_bucket_pruned) scores; every other tree is set-evaluated."""
+    return tree[0] == "tok" or (
+        tree[0] == "or" and is_disjunction(tree[1]) and is_disjunction(tree[2])
+    )
+
+
 def _eval_tree(tree, term_docs, universe, phrase_eval):
     """Set evaluation over sorted unique int64 doc arrays."""
     empty = np.empty(0, dtype=np.int64)
@@ -891,7 +840,8 @@ def boolean_topk(
     k: int,
     doclen: DataFrame | None = None,
     range_shift: int | None = None,
-    n_buckets: int | None = None,
+    *,
+    n_buckets: int,
     impact=bm25_impact,
 ) -> DataFrame:
     """Arbitrary boolean/phrase query + ranking (`term_meta` weights times

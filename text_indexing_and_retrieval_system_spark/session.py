@@ -9,6 +9,7 @@ boundaries, shuffle partitions sized to the parallelism.
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -102,6 +103,13 @@ def warm_python_workers(
         warm_suite_shapes(spark)
 
 
+def _report_warm_failure(what: str, exc: Exception) -> None:
+    """Warming is optional, so a failure never raises — but it must not
+    pass silently either: a run whose warm-up failed measures cold
+    plans. One stderr line per failure, naming what failed."""
+    print(f"warm-up {what} failed: {type(exc).__name__}: {exc}", file=sys.stderr)
+
+
 def warm_suite_shapes(spark: SparkSession) -> None:
     """Compile the operator suite's physical plans once over a tiny
     SYNTHETIC corpus written to a temp dir with the driver-testdata
@@ -113,7 +121,8 @@ def warm_suite_shapes(spark: SparkSession) -> None:
     0.96 s steady at sf0.1). No benchmark input data is read and nothing
     is cached across runs — this only compiles code, the long-running-
     executor steady state the guide says to measure. Failures are
-    swallowed: warming is strictly optional."""
+    reported once each on stderr, never raised: warming is strictly
+    optional."""
     import shutil
     import tempfile
 
@@ -257,10 +266,10 @@ def warm_suite_shapes(spark: SparkSession) -> None:
         ):
             try:
                 queries[name](spark, tmp).count()
-            except Exception:
-                pass
-    except Exception:
-        pass
+            except Exception as exc:
+                _report_warm_failure(f"warm_suite_shapes[{name}]", exc)
+    except Exception as exc:
+        _report_warm_failure("warm_suite_shapes", exc)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -277,8 +286,8 @@ def warm_build_path(spark: SparkSession) -> None:
     never see this cost, so steady state is the honest number. The warm
     corpus must be big enough to trigger tiered compilation of the hot
     loops — 1500 conversations measured: first full-size build 5.5 s
-    (vs 8.5 s after a 100-conversation warm). Failures are swallowed:
-    warming is strictly optional."""
+    (vs 8.5 s after a 100-conversation warm). A failure is reported on
+    stderr and never raised: warming is strictly optional."""
     import shutil
     import tempfile
 
@@ -313,7 +322,7 @@ def warm_build_path(spark: SparkSession) -> None:
             idx.search_batch(
                 [f'"{terms[0]}"', f'"{terms[1]}" OR "{terms[-1]}"'], k=5
             )
-    except Exception:
-        pass
+    except Exception as exc:
+        _report_warm_failure("warm_build_path", exc)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

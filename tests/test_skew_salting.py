@@ -35,6 +35,7 @@ from text_indexing_and_retrieval_system_spark.operators import index_build as ib
 from text_indexing_and_retrieval_system_spark.operators.index_build import (
     IndexBuildConfig,
 )
+from text_indexing_and_retrieval_system_spark.operators.segments import range_shift_for
 
 HOT = "zzhot"  # survives the normalizer unchanged (no stopword, stem-stable)
 
@@ -111,11 +112,8 @@ def test_hot_term_pack_spreads_over_shuffle_partitions(spark, skew_df):
     seg = ib.tokenize_to_doc_postings(
         docs.select("doc_id_int", "text"), IndexBuildConfig().normalize
     )
-    max_doc = docs.agg(F.max("doc_id_int")).collect()[0][0]
     n_range_buckets = 8
-    range_shift = max(
-        int(max_doc / n_range_buckets).bit_length(), ib.TURN_BITS
-    )
+    range_shift = range_shift_for(convmap.count(), n_range_buckets)
     cfg = IndexBuildConfig(n_range_buckets=n_range_buckets)
     blocks = ib.build_blocks(seg, cfg, range_shift, n_partitions=8).withColumn(
         "pid", F.spark_partition_id()

@@ -5,9 +5,13 @@ import json
 import os
 import zipfile
 
+import pandas as pd
 import pytest
 
 from text_indexing_and_retrieval_system_spark import engine
+from text_indexing_and_retrieval_system_spark.functions.normalize import (
+    normalize_to_tokens,
+)
 from text_indexing_and_retrieval_system_spark.operators.index_build import (
     IndexBuildConfig,
 )
@@ -119,6 +123,25 @@ def test_incremental_add_and_delete(spark, corpus_df, tmp_path):
     assert victim not in idx2.search_collect('"said"', k=5).docs
     # deleted docs must no longer be hydratable
     assert idx2.docs().filter(f"doc_id = '{victim}'").count() == 0
+
+    # a turn added since the last refresh can be deleted before the next
+    more = corpus_df.filter(
+        (corpus_df.conv_id >= "conv-00000050") & (corpus_df.conv_id < "conv-00000052")
+    )
+    inc.add_documents(spark, idx_dir, more)
+    fresh = "conv-00000050:0001"
+    assert inc.delete_documents(spark, idx_dir, [fresh]) == 1
+    stats3 = inc.refresh_postings(spark, idx_dir)
+    assert stats3["n_docs"] == stats2["n_docs"] + more.count() - 1
+    idx3 = engine.load(spark, idx_dir)
+    assert idx3.doclen().filter(f"doc_id = '{fresh}'").count() == 0
+    assert idx3.docs().filter(f"doc_id = '{fresh}'").count() == 0
+    assert idx3.docs().filter("conv_id = 'conv-00000050'").count() == 2
+    text = more.filter(
+        "conv_id = 'conv-00000050' and turn_idx = 1"
+    ).collect()[0]["text"]
+    term = normalize_to_tokens(pd.Series([text]))[0][0]
+    assert fresh not in idx3.search_collect(f'"{term}"', k=stats3["n_docs"]).docs
 
 
 def test_provider_contract(spark, tmp_path):

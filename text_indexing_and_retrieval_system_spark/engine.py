@@ -40,8 +40,8 @@ from pyspark.sql import functions as F
 from .functions.normalize import NormalizeConfig, normalize_query_terms
 from .operators import query_parser as qp
 from .operators import wand
-from .operators.index_build import TURN_BITS, IndexBuildConfig
-from .operators.segments import Manifests, build_index, term_bucket_py
+from .operators.index_build import IndexBuildConfig
+from .operators.segments import Manifests, build_index, kernel_buckets_for, term_bucket_py
 
 # search_batch winner-merge crossover: at or below this many estimated
 # per-(query, kernel group) winner rows the driver merges locally; above it the
@@ -107,18 +107,9 @@ class InvertedIndex:
                 f"index at {self.dir} predates doc-id range bucketing — "
                 "rebuild it (no postings manifest records a range_shift)"
             )
-        # number of range buckets the kernels pack into groups
-        # (wand._with_slot: one group per core slot, each group alone on
-        # its own shuffle partition). It follows from the doc-id
-        # geometry: conv ints are dense in [0, n_convs), so every doc id
-        # is below n_convs << TURN_BITS, and the shift is chosen from
-        # n_convs, so the realized count can be below n_range_buckets.
-        # Counting exactly keeps an always-empty bucket from owning a
-        # group; a doc outside the count would still score exactly (the
-        # null overflow group).
-        n_convs = int(self.stats.get("n_convs") or 0)
-        top = max((n_convs << TURN_BITS) - 1, 0)
-        self.kernel_buckets = (top >> self.range_shift) + 1
+        self.kernel_buckets = kernel_buckets_for(
+            int(self.stats.get("n_convs") or 0), self.range_shift
+        )
         norm = cfg.get("normalize", {})
         if norm:
             norm = dict(norm)

@@ -1,4 +1,5 @@
-"""Resumable, manifest-checkpointed index build orchestration.
+"""Resumable, manifest-checkpointed index build orchestration, and the
+one place that knows how each index table is derived and laid out.
 
 The reference's only "update" story is delete + full rebuild
 (`/root/reference/code/indexes/index_custom.py:654-750`). Here every
@@ -8,6 +9,10 @@ lineage (input, config hash, conv range), row counts, and wall time.
 A restarted build skips every manifest-complete unit, so a build killed
 mid-way resumes from the last finished chunk and produces an identical
 index (verified by tests/test_resume.py).
+
+The stage writers (`write_*`) and the doc-id geometry are shared with
+`streaming/incremental.py`, whose updates write segments with stage 1
+and whose refresh runs stages 2-3 over all segments.
 
 On-disk layout (parquet-catalog fallback for Iceberg — see
 sources/catalog.py for the seam):
@@ -20,7 +25,8 @@ sources/catalog.py for the seam):
       stats.json            stage2: n_docs, avgdl, total_tokens, n_convs
       postings/bucket=<b>/  stage3: compressed blocks, term-bucketed,
                             sorted by (term, first_doc) within files
-      lexicon/              stage3: term, df, cf, idf, max_impact
+      lexicon/              stage3: term, df, cf, idf, max_impact,
+                            n_blocks, bucket
       docs/chunk=<i>/       stage4: doc store for hydration (per-chunk,
                             written FIRST in each pipeline; stage 1
                             tokenizes from it, so raw input is scanned
@@ -32,17 +38,18 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
 import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.normalize import NormalizeConfig
+from ..sources.provider import ParquetDirProvider, TableProvider
 from . import index_build as ib
 from .index_build import IndexBuildConfig
-
-N_TERM_BUCKET_EXPR_SUBSTR = 8
 
 # hydration-store column contract (stage 4 / docs/): readers select these
 # explicitly so the inferred `chunk=` partition column never leaks out
@@ -104,6 +111,154 @@ class Manifests:
             return json.load(f)
 
 
+# ---------------- doc-id geometry ----------------
+
+
+def range_shift_for(n_convs: int, n_range_buckets: int) -> int:
+    """Doc-id range bucketing (`range_bucket = doc_id_int >> range_shift`)
+    of every later stage's partitioning. Conv ints are dense in
+    [0, n_convs), so it follows from n_convs alone — no data pass."""
+    max_doc = (n_convs << ib.TURN_BITS) + (1 << ib.TURN_BITS)
+    return max(int(max_doc / max(n_range_buckets, 1)).bit_length(), ib.TURN_BITS)
+
+
+def kernel_buckets_for(n_convs: int, range_shift: int) -> int:
+    """Range buckets the query kernels pack into groups (wand._with_slot).
+    Every doc id is below n_convs << TURN_BITS, so the realized count can
+    be below n_range_buckets; counting exactly keeps an always-empty
+    bucket from owning a group (a doc outside the count would still score
+    exactly, in the null overflow group)."""
+    top = max((n_convs << ib.TURN_BITS) - 1, 0)
+    return (top >> range_shift) + 1
+
+
+def doc_range_col(range_shift: int):
+    """~n_range_buckets/4 contiguous doc-id ranges (2 more bits than the
+    block bucketing): a COMPUTED partitioning column, so the exchange is
+    a plain hash repartition (repartitionByRange would add a sampling
+    pass over the child per write)."""
+    return F.shiftrightunsigned(F.col("doc_id_int"), range_shift + 2)
+
+
+def doc_range_partitioned(df: DataFrame, range_shift: int, n_range_buckets: int) -> DataFrame:
+    return df.repartition(max(n_range_buckets // 4, 1), doc_range_col(range_shift))
+
+
+# ---------------- stage writers ----------------
+# Each writes one table through the TableProvider seam. The build writes
+# per-chunk units (`<table>/chunk=<i>`); refresh writes staged tables
+# over all segments and swaps them in with `commit_staged`.
+
+
+def write_segment(
+    docs: DataFrame, normalize: NormalizeConfig, provider: TableProvider, table: str
+) -> int:
+    """Stage 1: tokenize docs (doc_id_int, text) into per-doc posting
+    rows and write them as one segment. Returns its row count, read from
+    the footers (no Spark job)."""
+    provider.write(ib.tokenize_to_doc_postings(docs, normalize), table)
+    return provider.num_rows(table)
+
+
+def write_doclen(
+    segments: DataFrame,
+    convmap: DataFrame,
+    range_shift: int,
+    n_range_buckets: int,
+    provider: TableProvider,
+    table: str,
+) -> tuple[int, int]:
+    """Stage 2: (doc_id_int, doc_id, dl) per doc of `segments`, doc-id
+    range partitioned and sorted. Returns (n_docs, total_tokens), which
+    ride along with the write via observe()."""
+    doclen = (
+        segments.groupBy("doc_id_int")
+        .agg(F.first("dl").alias("dl"))
+        .withColumn("conv_int", F.shiftrightunsigned("doc_id_int", ib.TURN_BITS))
+        .withColumn(
+            "turn_idx",
+            (F.col("doc_id_int") - F.col("conv_int") * (1 << ib.TURN_BITS)).cast("int"),
+        )
+        .join(convmap, "conv_int")
+        .withColumn(
+            "doc_id",
+            # %04d pads but never truncates (see ib.with_doc_ids)
+            F.concat_ws(":", F.col("conv_id"), F.format_string("%04d", "turn_idx")),
+        )
+        .select("doc_id_int", "doc_id", "dl")
+    )
+    obs = Observation()
+    provider.write(
+        doc_range_partitioned(doclen, range_shift, n_range_buckets)
+        .observe(obs, F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("total_tokens"))
+        .sortWithinPartitions("doc_id_int"),
+        table,
+    )
+    agg = obs.get
+    return agg["n_docs"] or 0, agg["total_tokens"] or 0  # sum is None when empty
+
+
+def index_stats(n_docs: int, total_tokens: int, n_convs: int) -> dict:
+    return {
+        "n_docs": n_docs,
+        # exact-int sum / exact-int count: bit-identical to a global avg
+        "avgdl": total_tokens / n_docs if n_docs else 0.0,
+        "total_tokens": total_tokens,
+        "n_convs": n_convs,
+        # random generation id — keys executor-side theta-seed caches
+        # (engine.reload); mtime alone can collide on coarse-mtime FS
+        "generation": uuid.uuid4().hex,
+    }
+
+
+def write_postings(
+    blocks: DataFrame, n_term_buckets: int, provider: TableProvider, table: str
+) -> None:
+    """Stage 3 postings layout: one dir per term bucket, 4 aligned files
+    per dir, each sorted by (term, first_doc). Small row groups: files
+    are term-sorted, so per-row-group min/max stats make a query's
+    IN(terms) skip everything but the few groups holding its terms."""
+    sub_col = term_bucket_col(F.col("term"), n_term_buckets * 4)
+    provider.write(
+        blocks.withColumn("bucket", term_bucket_col(F.col("term"), n_term_buckets))
+        .repartition(n_term_buckets * 4, sub_col)
+        .sortWithinPartitions("term", "first_doc"),
+        table,
+        partition_by=("bucket",),
+        options={"parquet.block.size": str(1 << 20)},
+    )
+
+
+def write_lexicon(
+    postings: DataFrame, stats: dict, n_term_buckets: int, provider: TableProvider, table: str
+) -> None:
+    """Stage 3 lexicon, from the written (columnar, payload-pruned)
+    postings — cheaper than persisting the block payloads in memory."""
+    lex = (
+        postings.groupBy("term")
+        .agg(
+            F.sum("n").alias("df"),
+            F.sum("sum_tf").alias("cf"),
+            F.max(ib.impact_bound_col(stats["avgdl"])).alias("max_impact"),
+            F.count("*").alias("n_blocks"),
+        )
+        # Lucene/ES BM25 idf: ln(1 + (N - df + 0.5)/(df + 0.5))
+        .withColumn(
+            "idf",
+            F.log(
+                F.lit(1.0)
+                + (F.lit(float(stats["n_docs"])) - F.col("df") + F.lit(0.5))
+                / (F.col("df") + F.lit(0.5))
+            ),
+        )
+        .withColumn("bucket", term_bucket_col(F.col("term"), n_term_buckets))
+    )
+    provider.write(
+        lex.repartition(max(n_term_buckets // 4, 1), "bucket").sortWithinPartitions("term"),
+        table,
+    )
+
+
 def _config_hash(cfg: IndexBuildConfig, input_desc: str) -> str:
     return hashlib.md5(
         json.dumps({"cfg": cfg.lineage(), "input": input_desc}, sort_keys=True).encode()
@@ -131,36 +286,24 @@ def build_index(
 
     t_build0 = time.time()
     lineage = {"config_hash": chash, "input": input_desc, "config": cfg.lineage()}
+    store = ParquetDirProvider(index_dir)
 
     # ---------------- stage 0: conv ids ----------------
-    convmap_path = os.path.join(index_dir, "convmap")
     if not man.done("stage0_convmap"):
         t0 = time.time()
-        n_convs = ib.assign_and_write_convmap(spark, transcripts, convmap_path)
+        n_convs = ib.assign_and_write_convmap(spark, transcripts, store.location("convmap"))
         man.record(
             "stage0_convmap", n_convs=n_convs, seconds=time.time() - t0, **lineage
         )
-    convmap = spark.read.parquet(convmap_path)
+    convmap = store.read(spark, "convmap")
     n_convs = man.read("stage0_convmap")["n_convs"]
 
     docs = ib.with_doc_ids(transcripts, convmap)
 
-    # doc-id range geometry — needed by every later stage's partitioning.
-    # Known from n_convs alone (no data pass).
-    max_doc = (n_convs << ib.TURN_BITS) + (1 << ib.TURN_BITS)
-    range_shift = max(int(max_doc / max(cfg.n_range_buckets, 1)).bit_length(), ib.TURN_BITS)
+    range_shift = range_shift_for(n_convs, cfg.n_range_buckets)
     n_store_parts = max(cfg.n_range_buckets // 4, 1)
-    # shifting 2 more bits than the block bucketing yields ~n_range/4
-    # contiguous ranges — a COMPUTED partitioning column, so the exchange
-    # is a plain hash repartition (repartitionByRange would add a
-    # sampling pass over the child per write)
-    store_part_col = F.shiftrightunsigned(F.col("doc_id_int"), range_shift + 2)
 
-    seg_root = os.path.join(index_dir, "segments")
-    doclen_path = os.path.join(index_dir, "doclen")
     postings_path = os.path.join(index_dir, "postings")
-    lexicon_path = os.path.join(index_dir, "lexicon")
-    stats_path = os.path.join(index_dir, "stats.json")
     docs_path = os.path.join(index_dir, "docs")
     n_chunks = cfg.n_segment_chunks
     if n_convs < cfg.chunk_min_convs:
@@ -206,14 +349,12 @@ def build_index(
         # docs/chunk=<i>/ beside them would mix leaf depths and break
         # Spark partition discovery. No manifest means the flat write
         # never committed — remove the strays before the first chunk.
-        import shutil as _shutil
-
         for entry in os.listdir(docs_path):
             if entry.startswith("chunk="):
                 continue
             full = os.path.join(docs_path, entry)
             if os.path.isdir(full):
-                _shutil.rmtree(full)
+                shutil.rmtree(full)
             else:
                 os.remove(full)
 
@@ -231,8 +372,8 @@ def build_index(
         input_materialized = False
 
     def run_chunk(chunk: int) -> None:
-        chunk_seg = os.path.join(seg_root, f"chunk={chunk}")
-        chunk_docs = os.path.join(docs_path, f"chunk={chunk}")
+        chunk_seg = f"segments/chunk={chunk}"
+        chunk_docs = f"docs/chunk={chunk}"
         lo = chunk * n_convs // n_chunks
         hi = (chunk + 1) * n_convs // n_chunks
 
@@ -242,18 +383,17 @@ def build_index(
                 return
             t0 = time.time()
             part = docs.filter((F.col("conv_int") >= lo) & (F.col("conv_int") < hi))
-            (
+            store.write(
                 part.select(*DOC_COLS)
-                # hash on doc_id_int: store_part_col has too few distinct
-                # values INSIDE one chunk to fan out. Files then cover
-                # scattered ids, but sortWithinPartitions still makes
+                # hash on doc_id_int: the doc-range column has too few
+                # distinct values INSIDE one chunk to fan out. Files then
+                # cover scattered ids, but sortWithinPartitions still makes
                 # every row group a near-contiguous id quantile — the
                 # row-group min/max pruning hydration relies on is kept
                 .repartition(docs_parts_per_chunk, F.col("doc_id_int"))
-                .sortWithinPartitions("doc_id_int")
-                .write.mode("overwrite")
-                .option("parquet.block.size", str(8 << 20))
-                .parquet(chunk_docs)
+                .sortWithinPartitions("doc_id_int"),
+                chunk_docs,
+                options={"parquet.block.size": str(8 << 20)},
             )
             man.record(unit4, conv_range=[lo, hi], seconds=time.time() - t0, **lineage)
 
@@ -269,15 +409,10 @@ def build_index(
             else:
                 # tokenize from the chunk's own doc store — column-pruned
                 # to (doc_id_int, text); the raw input is not re-scanned
-                part = spark.read.parquet(chunk_docs)
-            seg = ib.tokenize_to_doc_postings(part, cfg.normalize)
-            seg.write.mode("overwrite").parquet(chunk_seg)
+                part = store.read(spark, chunk_docs)
+            rows = write_segment(part, cfg.normalize, store, chunk_seg)
             man.record(
-                unit1,
-                conv_range=[lo, hi],
-                rows=parquet_num_rows(chunk_seg),
-                seconds=time.time() - t0,
-                **lineage,
+                unit1, conv_range=[lo, hi], rows=rows, seconds=time.time() - t0, **lineage
             )
 
         if input_materialized and not legacy_docs:
@@ -295,45 +430,12 @@ def build_index(
             if man.done(unit2):
                 return
             t0 = time.time()
-            from pyspark.sql import Observation
-
-            seg_c = spark.read.parquet(chunk_seg)
-            doclen_c = (
-                seg_c.groupBy("doc_id_int")
-                .agg(F.first("dl").alias("dl"))
-                .withColumn("conv_int", F.shiftrightunsigned("doc_id_int", ib.TURN_BITS))
-                .withColumn(
-                    "turn_idx",
-                    (F.col("doc_id_int") - F.col("conv_int") * (1 << ib.TURN_BITS)).cast("int"),
-                )
-                .join(convmap, "conv_int")
-                .withColumn(
-                    "doc_id",
-                    # %04d pads but never truncates (see ib.with_doc_ids)
-                    F.concat_ws(":", F.col("conv_id"), F.format_string("%04d", "turn_idx")),
-                )
-                .select("doc_id_int", "doc_id", "dl")
+            seg = store.read(spark, chunk_seg)
+            n_docs, total_tokens = write_doclen(
+                seg, convmap, range_shift, cfg.n_range_buckets, store, f"doclen/chunk={chunk}"
             )
-            # chunk stats ride along with the write via observe()
-            obs = Observation(f"doclen_stats_{chunk}")
-            (
-                doclen_c.repartition(n_store_parts, store_part_col)
-                .observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n_docs"),
-                    F.sum("dl").alias("total_tokens"),
-                )
-                .sortWithinPartitions("doc_id_int")
-                .write.mode("overwrite")
-                .parquet(os.path.join(doclen_path, f"chunk={chunk}"))
-            )
-            agg = obs.get
             man.record(
-                unit2,
-                n_docs=agg["n_docs"],
-                total_tokens=agg["total_tokens"],
-                seconds=time.time() - t0,
-                **lineage,
+                unit2, n_docs=n_docs, total_tokens=total_tokens, seconds=time.time() - t0, **lineage
             )
 
         def do_stage3() -> None:
@@ -347,22 +449,8 @@ def build_index(
             # files per bucket dir (a single term-keyed shuffle writing
             # directly was ~40% slower: the dynamic-partition writer
             # re-sorts each task's payload rows by dir)
-            seg_c = spark.read.parquet(chunk_seg)
-            blocks = ib.build_blocks(seg_c, cfg, range_shift).withColumn(
-                "bucket", term_bucket_col(F.col("term"), cfg.n_term_buckets)
-            )
-            sub_col = term_bucket_col(F.col("term"), cfg.n_term_buckets * 4)
-            (
-                blocks.repartition(cfg.n_term_buckets * 4, sub_col)
-                .sortWithinPartitions("term", "first_doc")
-                .write.mode("overwrite")
-                # small row groups: files are term-sorted, so per-row-group
-                # min/max stats make a query's IN(terms) skip everything
-                # but the few groups holding its terms
-                .option("parquet.block.size", str(1 << 20))
-                .partitionBy("bucket")
-                .parquet(os.path.join(postings_path, f"chunk={chunk}"))
-            )
+            blocks = ib.build_blocks(store.read(spark, chunk_seg), cfg, range_shift)
+            write_postings(blocks, cfg.n_term_buckets, store, f"postings/chunk={chunk}")
             man.record(unit3, seconds=time.time() - t0, **lineage)
 
         # doclen (stage 2) and block packing (stage 3) both read ONLY the
@@ -414,61 +502,22 @@ def build_index(
             spark.conf.set(SPLIT_CONF, prev_split)
 
     # ---------------- stats fold + global lexicon ----------------
-    n_docs = 0
-    total_tokens = 0
-    for chunk in range(n_chunks):
-        info = man.read(f"stage2_chunk_{chunk:03d}")
-        n_docs += info["n_docs"] or 0
-        total_tokens += info["total_tokens"] or 0  # None on an empty chunk
-    stats = {
-        "n_docs": n_docs,
-        # exact-int sum / exact-int count: bit-identical to a global avg
-        "avgdl": total_tokens / n_docs if n_docs else 0.0,
-        "total_tokens": total_tokens,
-        "n_convs": n_convs,
-        # random generation id — keys executor-side theta-seed caches
-        # (engine.reload); mtime alone can collide on coarse-mtime FS
-        "generation": uuid.uuid4().hex,
-    }
-    with open(stats_path, "w") as f:
+    chunk_stats = [man.read(f"stage2_chunk_{chunk:03d}") for chunk in range(n_chunks)]
+    stats = index_stats(
+        # `or 0`: older manifests record None for an empty chunk
+        sum(info["n_docs"] or 0 for info in chunk_stats),
+        sum(info["total_tokens"] or 0 for info in chunk_stats),
+        n_convs,
+    )
+    with open(os.path.join(index_dir, "stats.json"), "w") as f:
         json.dump(stats, f, indent=2)
 
     if not man.done("stage3_postings"):
         t0 = time.time()
-        # lexicon from the written (columnar, payload-pruned) postings —
-        # cheaper than persisting the block payloads in memory
-        blocks_r = spark.read.parquet(postings_path).select(
-            "term", "n", "sum_tf", "max_tf", "min_dl"
-        )
-        n = stats["n_docs"]
-        lex = (
-            blocks_r.groupBy("term")
-            .agg(
-                F.sum("n").alias("df"),
-                F.sum("sum_tf").alias("cf"),
-                F.max(ib.impact_bound_col(stats["avgdl"])).alias("max_impact"),
-                F.count("*").alias("n_blocks"),
-            )
-            # Lucene/ES BM25 idf: ln(1 + (N - df + 0.5)/(df + 0.5))
-            .withColumn(
-                "idf",
-                F.log(
-                    F.lit(1.0)
-                    + (F.lit(float(n)) - F.col("df") + F.lit(0.5))
-                    / (F.col("df") + F.lit(0.5))
-                ),
-            )
-            .withColumn("bucket", term_bucket_col(F.col("term"), cfg.n_term_buckets))
-        )
-        (
-            lex.repartition(max(cfg.n_term_buckets // 4, 1), "bucket")
-            .sortWithinPartitions("term")
-            .write.mode("overwrite")
-            .parquet(lexicon_path)
-        )
+        write_lexicon(store.read(spark, "postings"), stats, cfg.n_term_buckets, store, "lexicon")
         man.record(
             "stage3_postings",
-            n_terms=parquet_num_rows(lexicon_path),
+            n_terms=store.num_rows("lexicon"),
             range_shift=range_shift,
             seconds=time.time() - t0,
             **lineage,
@@ -503,32 +552,18 @@ def build_index(
                 else:  # pragma: no cover - impossible under this protocol
                     os.rename(old_path, postings_path)
             if os.path.isdir(old_path) and os.path.isdir(postings_path):
-                import shutil as _shutil
-
-                _shutil.rmtree(old_path)
+                shutil.rmtree(old_path)
         else:
-            import shutil as _shutil
-
             if os.path.isdir(merged_tmp):
                 # no postings_old -> the merge write never committed its
                 # swap; the tmp dir may be partial, so redo it from the
                 # (still intact) chunked source
-                _shutil.rmtree(merged_tmp)
-            blocks_all = spark.read.parquet(postings_path)
-            if "chunk" in blocks_all.columns:
-                blocks_all = blocks_all.drop("chunk")
-            sub_col = term_bucket_col(F.col("term"), cfg.n_term_buckets * 4)
-            (
-                blocks_all.repartition(cfg.n_term_buckets * 4, sub_col)
-                .sortWithinPartitions("term", "first_doc")
-                .write.mode("overwrite")
-                .option("parquet.block.size", str(1 << 20))
-                .partitionBy("bucket")
-                .parquet(merged_tmp)
-            )
+                shutil.rmtree(merged_tmp)
+            blocks = store.read(spark, "postings").drop("chunk")
+            write_postings(blocks, cfg.n_term_buckets, store, os.path.basename(merged_tmp))
             os.rename(postings_path, old_path)
             os.rename(merged_tmp, postings_path)
-            _shutil.rmtree(old_path)
+            shutil.rmtree(old_path)
         man.record("stage5_compact", seconds=time.time() - t0, **lineage)
 
     man.record(

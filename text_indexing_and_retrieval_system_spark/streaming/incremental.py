@@ -1,14 +1,14 @@
-"""Incremental index ingest via Structured Streaming.
+"""Incremental index updates: batch adds, deletes, streaming ingest.
 
 The reference's only update path is a full rebuild
 (`/root/reference/code/indexes/index_custom.py:654-750`). Here new
-transcript turns stream in (file source / Kafka in prod), and each
-micro-batch is tokenized and appended as a new *segment* directory with
-its own manifest — exactly the unit the batch builder checkpoints — so
-the streaming and batch paths share one storage format and one resume
-story. `refresh_postings` then folds all accumulated segments into fresh
-postings blocks + lexicon (cheap relative to ingest; a production setup
-runs it on a schedule, like any LSM-ish two-level design).
+turns arrive as a batch (`add_documents`) or a stream (`ingest_stream`,
+file source / Kafka in prod), and the build's stage-1 writer turns each
+into a new *segment* directory with its own manifest — the unit the
+batch builder checkpoints. `refresh_postings` then runs the build's
+stages 2-3 (`operators/segments.py`, which holds every table plan) over
+all live segments, so a refreshed index is the index a build of the
+same live documents writes (run on a schedule, LSM-style).
 
 Doc ids: streaming turns get conv ids beyond the batch-assigned dense
 range via a deterministic hash-partitioned extension map (new convs
@@ -21,14 +21,15 @@ from __future__ import annotations
 import json
 import os
 import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..operators import index_build as ib
+from ..operators import segments
 from ..operators.index_build import IndexBuildConfig
-from ..operators.segments import Manifests, term_bucket_col
+from ..operators.segments import DOC_COLS, Manifests
 from ..sources.provider import ParquetDirProvider
 
 
@@ -39,23 +40,18 @@ def extend_convmap(
     dense ints appended after the existing range (sorted lexicographically
     within the extension — deterministic for a given extension set).
     Returns the full updated convmap DataFrame (also persisted)."""
-    convmap_path = os.path.join(index_dir, "convmap")
-    existing = spark.read.parquet(convmap_path)
-    base = existing.agg(F.max("conv_int")).collect()[0][0]
-    base = -1 if base is None else base
+    store = ParquetDirProvider(index_dir)
     new = (
         new_transcripts.select("conv_id")
         .distinct()
-        .join(existing, "conv_id", "left_anti")
+        .join(store.read(spark, "convmap"), "conv_id", "left_anti")
     )
-    from ..operators.index_build import assign_conv_ids
-
-    fresh = assign_conv_ids(spark, new).withColumn(
-        "conv_int", F.col("conv_int") + F.lit(base + 1)
+    # conv ints are dense in [0, n_convs): the next one is the row count
+    fresh = ib.assign_conv_ids(spark, new).withColumn(
+        "conv_int", F.col("conv_int") + F.lit(store.num_rows("convmap"))
     )
-    if fresh.limit(1).count() > 0:
-        fresh.write.mode("append").parquet(convmap_path)
-    return spark.read.parquet(convmap_path)
+    store.append(fresh, "convmap")  # no-op when every conv is known
+    return store.read(spark, "convmap")
 
 
 def ingest_stream(
@@ -74,7 +70,7 @@ def ingest_stream(
     Returns the StreamingQuery.
     """
     man = Manifests(index_dir)
-    seg_root = os.path.join(index_dir, "segments")
+    store = ParquetDirProvider(index_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int):
         unit = f"stream_batch_{batch_id:06d}"
@@ -82,11 +78,9 @@ def ingest_stream(
             return  # replayed micro-batch after restart: idempotent skip
         t0 = time.time()
         docs = ib.with_doc_ids(batch_df, convmap)
-        seg = ib.tokenize_to_doc_postings(docs, cfg.normalize)
-        path = os.path.join(seg_root, f"chunk=stream{batch_id:06d}")
-        seg.write.mode("overwrite").parquet(path)
-        n = batch_df.sparkSession.read.parquet(path).count()
-        man.record(unit, rows=n, seconds=time.time() - t0, batch_id=batch_id)
+        table = f"segments/chunk=stream{batch_id:06d}"
+        rows = segments.write_segment(docs, cfg.normalize, store, table)
+        man.record(unit, rows=rows, seconds=time.time() - t0, batch_id=batch_id)
 
     writer = stream_df.writeStream.foreachBatch(process_batch).outputMode("append")
     if checkpoint_dir:
@@ -136,13 +130,9 @@ def add_documents(
     unit = f"update_add_{len(existing):06d}"
     t0 = time.time()
     docs = ib.with_doc_ids(new_transcripts, convmap)
-    seg = ib.tokenize_to_doc_postings(docs, cfg.normalize)
-    path = os.path.join(index_dir, "segments", f"chunk={unit}")
-    seg.write.mode("overwrite").parquet(path)
     provider = ParquetDirProvider(index_dir)
-    doc_cols = docs.select(
-        "doc_id_int", "doc_id", "conv_id", "turn_idx", "role", "text", "tool", "ts"
-    )
+    rows = segments.write_segment(docs, cfg.normalize, provider, f"segments/chunk={unit}")
+    doc_cols = docs.select(*DOC_COLS)
     if provider.exists("docs"):
         # idempotent append: a replayed/resumed add (crash between the
         # docs append and the manifest record) must not duplicate
@@ -166,17 +156,20 @@ def add_documents(
             )
             doc_cols = doc_cols.join(already, "doc_id_int", "left_anti")
     provider.append(doc_cols, "docs")
-    n = spark.read.parquet(path).count()
-    man.record(unit, rows=n, seconds=time.time() - t0)
+    man.record(unit, rows=rows, seconds=time.time() - t0)
     return unit
 
 
 def delete_documents(spark: SparkSession, index_dir: str, doc_ids: list[str]) -> int:
     """Tombstone doc ids (string form conv:turn); refresh_postings
-    excludes tombstoned docs from every rebuilt table."""
-    doclen = spark.read.parquet(os.path.join(index_dir, "doclen"))
-    hits = doclen.filter(F.col("doc_id").isin(doc_ids)).select("doc_id_int", "doc_id")
-    n = hits.count()
+    excludes tombstoned docs from every rebuilt table. Ids resolve
+    against the docs store, which add_documents appends to at once, so a
+    turn added since the last refresh can be deleted too. Returns the
+    number of distinct docs matched (a replayed add can leave duplicate
+    docs rows until the next refresh)."""
+    docs = ParquetDirProvider(index_dir).read(spark, "docs")
+    hits = docs.filter(F.col("doc_id").isin(doc_ids)).select("doc_id_int", "doc_id")
+    n = hits.select("doc_id_int").distinct().count()
     if n:
         hits.write.mode("append").parquet(os.path.join(index_dir, "tombstones"))
     return n
@@ -193,116 +186,55 @@ def _apply_tombstones(spark: SparkSession, index_dir: str, seg: DataFrame) -> Da
 def refresh_postings(
     spark: SparkSession, index_dir: str, cfg: IndexBuildConfig | None = None
 ) -> dict:
-    """Fold ALL segments (batch + streamed) into fresh doclen/stats/
-    postings/lexicon/docs — the two-level merge reapplied over the grown
-    segment set. Writes to versioned dirs then swaps, so readers never
-    see a partial index. Config defaults to the build manifest's (see
-    `_resolve_cfg`). An `InvertedIndex` handle held across a refresh
-    serves stale stats/lexicon — call its `reload()` afterwards."""
+    """Rebuild doclen/stats/postings/lexicon/docs from ALL segments
+    (batch, added and streamed) minus tombstoned docs: the build's stages
+    2-3 run over the grown segment set, with the build's doc-id geometry
+    (n_convs from the convmap's footers), so the tables equal those a
+    one-shot build of the same live documents writes. Writes staged
+    tables then swaps them in, so readers never see a partial index.
+    Config defaults to the build manifest's (see `_resolve_cfg`). An
+    `InvertedIndex` handle held across a refresh serves stale
+    stats/lexicon — call its `reload()` afterwards."""
     cfg = _resolve_cfg(index_dir, cfg)
     man = Manifests(index_dir)
     provider = ParquetDirProvider(index_dir)  # the TableProvider seam:
     # point this at an IcebergProvider and the staged-write + commit
     # below become catalog transactions (sources/provider.py)
-    seg = spark.read.parquet(os.path.join(index_dir, "segments", "chunk=*"))
-    seg = _apply_tombstones(spark, index_dir, seg)
-    convmap = spark.read.parquet(os.path.join(index_dir, "convmap"))
-
-    doclen = (
-        seg.groupBy("doc_id_int")
-        .agg(F.first("dl").alias("dl"))
-        .withColumn("conv_int", F.shiftrightunsigned("doc_id_int", ib.TURN_BITS))
-        .withColumn(
-            "turn_idx",
-            (F.col("doc_id_int") - F.col("conv_int") * (1 << ib.TURN_BITS)).cast("int"),
-        )
-        .join(convmap, "conv_int")
-        .withColumn(
-            "doc_id",
-            # %04d pads but never truncates (see ib.with_doc_ids)
-            F.concat_ws(":", F.col("conv_id"), F.format_string("%04d", "turn_idx")),
-        )
-        .select("doc_id_int", "doc_id", "dl")
+    stage = provider.stage_name
+    seg = _apply_tombstones(spark, index_dir, provider.read(spark, "segments").drop("chunk"))
+    n_convs = provider.num_rows("convmap")
+    range_shift = segments.range_shift_for(n_convs, cfg.n_range_buckets)
+    convmap = provider.read(spark, "convmap")
+    n_docs, total_tokens = segments.write_doclen(
+        seg, convmap, range_shift, cfg.n_range_buckets, provider, stage("doclen")
     )
-    provider.write_staged(
-        doclen.repartitionByRange(max(cfg.n_range_buckets // 4, 1), "doc_id_int"),
-        "doclen",
-    )
-    agg = (
-        provider.read(spark, provider.stage_name("doclen"))
-        .agg(F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"), F.sum("dl").alias("tt"))
-        .collect()[0]
-    )
-    stats = {
-        "n_docs": agg["n_docs"],
-        "avgdl": float(agg["avgdl"]),
-        "total_tokens": agg["tt"],
-        "n_convs": convmap.count(),
-        # fresh generation id: keys executor theta-seed caches (see
-        # engine.reload) — mtime alone can collide on coarse-mtime FS
-        "generation": uuid.uuid4().hex,
-    }
-
-    max_doc = seg.agg(F.max("doc_id_int")).collect()[0][0] or 0
-    range_shift = max(
-        int(max_doc / max(cfg.n_range_buckets, 1)).bit_length(), ib.TURN_BITS
-    )
-    blocks = ib.build_blocks(seg, cfg, range_shift).withColumn(
-        "bucket", term_bucket_col(F.col("term"), cfg.n_term_buckets)
-    )
-    provider.write_staged(
-        blocks.repartition(
-            cfg.n_term_buckets * 4, term_bucket_col(F.col("term"), cfg.n_term_buckets * 4)
-        ).sortWithinPartitions("term", "first_doc"),
-        "postings",
-        partition_by=("bucket",),
-        options={"parquet.block.size": str(1 << 20)},
-    )
-    n = stats["n_docs"]
-    lex = (
-        provider.read(spark, provider.stage_name("postings"))
-        .groupBy("term")
-        .agg(
-            F.sum("n").alias("df"),
-            F.sum("sum_tf").alias("cf"),
-            F.max(ib.impact_bound_col(stats["avgdl"])).alias("max_impact"),
-            F.count("*").alias("n_blocks"),
-        )
-        .withColumn(
-            "idf",
-            F.log(
-                F.lit(1.0)
-                + (F.lit(float(n)) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-            ),
-        )
-        .withColumn("bucket", term_bucket_col(F.col("term"), cfg.n_term_buckets))
-    )
-    provider.write_staged(lex, "lexicon")
+    stats = segments.index_stats(n_docs, total_tokens, n_convs)
+    blocks = ib.build_blocks(seg, cfg, range_shift)
+    segments.write_postings(blocks, cfg.n_term_buckets, provider, stage("postings"))
+    postings = provider.read(spark, stage("postings"))
+    segments.write_lexicon(postings, stats, cfg.n_term_buckets, provider, stage("lexicon"))
 
     # docs/ hydration store: drop tombstoned docs (and self-heal duplicate
     # doc_id_int rows a replayed add_documents append may have left —
     # keeper is the min doc_id, matching the reference's first-wins dedup)
     if provider.exists("docs"):
-        from ..operators.segments import DOC_COLS
-
         # select the contract columns: a chunked (per-chunk build) store
         # carries an inferred `chunk` partition column that must not leak
         # into the refreshed flat rewrite
         docs_df = _apply_tombstones(
             spark, index_dir, provider.read(spark, "docs").select(*DOC_COLS)
         )
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("doc_id_int").orderBy("doc_id")
-        docs_df = (
-            docs_df.withColumn("__rn", F.row_number().over(w))
+        # the window keys include the doc-range column, so the range
+        # exchange is the rewrite's only shuffle
+        first = Window.partitionBy(
+            segments.doc_range_col(range_shift), "doc_id_int"
+        ).orderBy("doc_id")
+        provider.write_staged(
+            segments.doc_range_partitioned(docs_df, range_shift, cfg.n_range_buckets)
+            .withColumn("__rn", F.row_number().over(first))
             .filter(F.col("__rn") == 1)
             .drop("__rn")
-        )
-        provider.write_staged(
-            docs_df.repartitionByRange(
-                max(cfg.n_range_buckets // 4, 1), "doc_id_int"
-            ).sortWithinPartitions("doc_id_int"),
+            .sortWithinPartitions("doc_id_int"),
             "docs",
         )
 

@@ -1,8 +1,9 @@
 """Streaming and batch incremental ingest: batch-built index over convs
 [0,60) + streamed ingestion of convs [60,80) + refresh must equal a
 one-shot batch build over all 80 conversations (doc ids, lexicon, search
-results); replayed micro-batches are skipped; build + add + refresh
-writes the same tables as a one-shot build."""
+results), and a streamed turn can then be deleted; replayed
+micro-batches are skipped; a single-chunk build + add + refresh writes
+the same tables as a one-shot build."""
 
 import os
 
@@ -36,7 +37,7 @@ def split_corpus(spark, corpus_df):
 
 
 def test_stream_ingest_equals_batch_build(
-    spark, corpus_df, split_corpus, built_index, tmp_path
+    spark, corpus_df, corpus_pdf, split_corpus, built_index, tmp_path
 ):
     first, rest = split_corpus
     idx_dir = str(tmp_path / "inc_idx")
@@ -68,6 +69,21 @@ def test_stream_ingest_equals_batch_build(
         b = inc_idx.search_collect(qtext, k=10)
         assert a.docs == b.docs, qtext
         assert a.scores == b.scores, qtext
+
+    # a streamed turn reached the docs store, so it can be deleted
+    streamed = corpus_pdf[corpus_pdf.conv_id >= "conv-00000060"]
+    victim, term = next(
+        (d, toks[0])
+        for d, toks in zip(streamed.doc_id, normalize_to_tokens(streamed.text))
+        if toks
+    )
+    n = stats["n_docs"]
+    assert victim in inc_idx.search_collect(f'"{term}"', k=n).docs
+    assert inc.delete_documents(spark, idx_dir, [victim]) == 1
+    assert inc.refresh_postings(spark, idx_dir, CFG)["n_docs"] == n - 1
+    inc_idx = engine.load(spark, idx_dir)
+    assert victim not in inc_idx.search_collect(f'"{term}"', k=n).docs
+    assert inc_idx.docs().filter(f"doc_id = '{victim}'").count() == 0
 
 
 def test_stream_batch_manifests(tmp_path, spark, split_corpus):

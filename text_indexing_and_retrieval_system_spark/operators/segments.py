@@ -140,8 +140,13 @@ def doc_range_col(range_shift: int):
     return F.shiftrightunsigned(F.col("doc_id_int"), range_shift + 2)
 
 
+def doc_range_parts(n_range_buckets: int) -> int:
+    """Partition count of the doc-range layout (doclen, docs)."""
+    return max(n_range_buckets // 4, 1)
+
+
 def doc_range_partitioned(df: DataFrame, range_shift: int, n_range_buckets: int) -> DataFrame:
-    return df.repartition(max(n_range_buckets // 4, 1), doc_range_col(range_shift))
+    return df.repartition(doc_range_parts(n_range_buckets), doc_range_col(range_shift))
 
 
 # ---------------- stage writers ----------------
@@ -301,7 +306,6 @@ def build_index(
     docs = ib.with_doc_ids(transcripts, convmap)
 
     range_shift = range_shift_for(n_convs, cfg.n_range_buckets)
-    n_store_parts = max(cfg.n_range_buckets // 4, 1)
 
     postings_path = os.path.join(index_dir, "postings")
     docs_path = os.path.join(index_dir, "docs")
@@ -340,7 +344,8 @@ def build_index(
     # ~1.0). Small row groups also sharpen doc_id_int row-group pruning
     # for hydration point-lookups on the sorted store.
     docs_parts_per_chunk = max(
-        -(-n_store_parts // n_chunks), spark.sparkContext.defaultParallelism
+        -(-doc_range_parts(cfg.n_range_buckets) // n_chunks),
+        spark.sparkContext.defaultParallelism,
     )
     legacy_docs = man.done("stage4_docs")  # pre-round-4 flat doc store
     if not legacy_docs and os.path.isdir(docs_path):

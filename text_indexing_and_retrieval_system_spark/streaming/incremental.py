@@ -5,10 +5,15 @@ The reference's only update path is a full rebuild
 turns arrive as a batch (`add_documents`) or a stream (`ingest_stream`,
 file source / Kafka in prod), and the build's stage-1 writer turns each
 into a new *segment* directory with its own manifest — the unit the
-batch builder checkpoints. `refresh_postings` then runs the build's
-stages 2-3 (`operators/segments.py`, which holds every table plan) over
-all live segments, so a refreshed index is the index a build of the
-same live documents writes (run on a schedule, LSM-style).
+batch builder checkpoints — and appends the turns to the docs/ store,
+where `delete_documents` resolves ids. `refresh_postings` then runs the
+build's stages 2-3 (`operators/segments.py`, which holds every table
+plan) over all live segments with the build's doc-id geometry (run on a
+schedule, LSM-style). The refreshed index has the doc-id geometry,
+stats and query results of a one-shot build of the same live
+documents; its tables are row-identical to that build's when the build
+is one segment chunk and nothing was deleted (a multi-chunk build packs
+blocks per chunk, and deleted convs keep their conv ints).
 
 Doc ids: streaming turns get conv ids beyond the batch-assigned dense
 range via a deterministic hash-partitioned extension map (new convs
@@ -54,6 +59,35 @@ def extend_convmap(
     return store.read(spark, "convmap")
 
 
+def _append_docs(spark: SparkSession, provider: ParquetDirProvider, docs: DataFrame) -> None:
+    """Append new turns to the docs/ hydration store, which is also
+    where delete_documents resolves ids. Idempotent: a replayed/resumed
+    add or micro-batch (crash between this append and the manifest
+    record) must not duplicate hydration rows."""
+    doc_cols = docs.select(*DOC_COLS)
+    if provider.exists("docs"):
+        # anti-join against the id range these docs cover — the docs
+        # store is doc_id_int-sorted within partitions, so the range
+        # predicate prunes to ~nothing on a fresh add (new convs land
+        # past the existing range); on a replay it matches the chunk's
+        # own rows and the append becomes a no-op.
+        # bounds from the DOCS frame, not the tokenized segment: zero-token
+        # docs produce no segment rows, and ids outside a segment-derived
+        # range would be re-appended on replay. No forced broadcast — on a
+        # replay `already` is a full chunk's ids; let Spark (AQE) pick.
+        bounds = docs.agg(
+            F.min("doc_id_int").alias("lo"), F.max("doc_id_int").alias("hi")
+        ).collect()[0]
+        if bounds["lo"] is not None:
+            already = (
+                provider.read(spark, "docs")
+                .filter(F.col("doc_id_int").between(bounds["lo"], bounds["hi"]))
+                .select("doc_id_int")
+            )
+            doc_cols = doc_cols.join(already, "doc_id_int", "left_anti")
+    provider.append(doc_cols, "docs")
+
+
 def ingest_stream(
     stream_df: DataFrame,
     index_dir: str,
@@ -62,7 +96,9 @@ def ingest_stream(
     checkpoint_dir: str | None = None,
     trigger_once: bool = True,
 ):
-    """stream of transcript turns → per-micro-batch segment dirs.
+    """stream of transcript turns → per-micro-batch segment dirs, plus
+    the turns appended to the docs/ store (hydration, and where
+    delete_documents finds them).
 
     `stream_df` must carry the transcript schema; conv ids are resolved
     against `convmap` (new conversations must be pre-registered — the
@@ -80,6 +116,7 @@ def ingest_stream(
         docs = ib.with_doc_ids(batch_df, convmap)
         table = f"segments/chunk=stream{batch_id:06d}"
         rows = segments.write_segment(docs, cfg.normalize, store, table)
+        _append_docs(batch_df.sparkSession, store, docs)
         man.record(unit, rows=rows, seconds=time.time() - t0, batch_id=batch_id)
 
     writer = stream_df.writeStream.foreachBatch(process_batch).outputMode("append")
@@ -132,30 +169,7 @@ def add_documents(
     docs = ib.with_doc_ids(new_transcripts, convmap)
     provider = ParquetDirProvider(index_dir)
     rows = segments.write_segment(docs, cfg.normalize, provider, f"segments/chunk={unit}")
-    doc_cols = docs.select(*DOC_COLS)
-    if provider.exists("docs"):
-        # idempotent append: a replayed/resumed add (crash between the
-        # docs append and the manifest record) must not duplicate
-        # hydration rows. Anti-join against the id range this chunk
-        # covers — the docs store is doc_id_int-sorted within partitions,
-        # so the range predicate prunes to ~nothing on a fresh add (new
-        # convs land past the existing range); on a replay it matches the
-        # chunk's own rows and the append becomes a no-op.
-        # bounds from the DOCS frame, not the tokenized segment: zero-token
-        # docs produce no segment rows, and ids outside a segment-derived
-        # range would be re-appended on replay. No forced broadcast — on a
-        # replay `already` is a full chunk's ids; let Spark (AQE) pick.
-        bounds = docs.agg(
-            F.min("doc_id_int").alias("lo"), F.max("doc_id_int").alias("hi")
-        ).collect()[0]
-        if bounds["lo"] is not None:
-            already = (
-                provider.read(spark, "docs")
-                .filter(F.col("doc_id_int").between(bounds["lo"], bounds["hi"]))
-                .select("doc_id_int")
-            )
-            doc_cols = doc_cols.join(already, "doc_id_int", "left_anti")
-    provider.append(doc_cols, "docs")
+    _append_docs(spark, provider, docs)
     man.record(unit, rows=rows, seconds=time.time() - t0)
     return unit
 
@@ -163,8 +177,9 @@ def add_documents(
 def delete_documents(spark: SparkSession, index_dir: str, doc_ids: list[str]) -> int:
     """Tombstone doc ids (string form conv:turn); refresh_postings
     excludes tombstoned docs from every rebuilt table. Ids resolve
-    against the docs store, which add_documents appends to at once, so a
-    turn added since the last refresh can be deleted too. Returns the
+    against the docs store, which add_documents and ingest_stream append
+    to at once, so a turn added since the last refresh can be deleted
+    too. Returns the
     number of distinct docs matched (a replayed add can leave duplicate
     docs rows until the next refresh)."""
     docs = ParquetDirProvider(index_dir).read(spark, "docs")
@@ -189,8 +204,8 @@ def refresh_postings(
     """Rebuild doclen/stats/postings/lexicon/docs from ALL segments
     (batch, added and streamed) minus tombstoned docs: the build's stages
     2-3 run over the grown segment set, with the build's doc-id geometry
-    (n_convs from the convmap's footers), so the tables equal those a
-    one-shot build of the same live documents writes. Writes staged
+    (n_convs from the convmap's footers); see the module docstring for
+    how the result compares with a one-shot build. Writes staged
     tables then swaps them in, so readers never see a partial index.
     Config defaults to the build manifest's (see `_resolve_cfg`). An
     `InvertedIndex` handle held across a refresh serves stale

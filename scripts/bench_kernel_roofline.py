@@ -82,9 +82,7 @@ def _kernel_worker(args):
     touched = 0
     while time.time() < t_end:
         for grp in buckets:
-            per_term = wand._decode_terms(grp, avgdl, local=True)
-            if isinstance(per_term, tuple):
-                per_term = per_term[0]
+            per_term = wand._decode_terms(grp, avgdl)[0]
             payload = int(grp["payload"].map(len).sum())
             n_post = sum(int(d.size) for d, _ in per_term.values())
             # payload read + (doc,tf) int32 writes + impact f64 write+read

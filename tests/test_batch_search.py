@@ -1,6 +1,8 @@
 """Batched query pass must equal per-query ranked retrieval for
 free-text (disjunctive) queries."""
 
+from text_indexing_and_retrieval_system_spark.operators import query_parser as qp
+
 
 def test_batch_matches_single(built_index, oracle_index):
     terms = sorted(
@@ -20,29 +22,34 @@ def test_batch_matches_single(built_index, oracle_index):
         assert batch[q].scores == single.scores == [s for _, s in want], q
 
 
-def test_batch_distributed_merge_matches_driver_merge(
-    built_index, oracle_index, monkeypatch
-):
-    """Forcing the distributed merge path (the large-cluster branch) must
-    give results identical to the driver merge and the oracle — including
-    the re-sort + truncate of per-Arrow-batch top-k supersets."""
-    from text_indexing_and_retrieval_system_spark import engine as eng
+def _ranked_equivalent(query: str) -> str:
+    """search_batch's ranked semantics: the OR of the query's scoring
+    terms (perfbench/oracle_check.py's rule), with a phrase split into
+    its words — the oracle reads a multi-word TERM as an implicit AND."""
+    raw = qp.scoring_terms(qp.parse(query))
+    return " OR ".join(f'"{w}"' for r in raw for w in r.split())
 
-    terms = sorted(
-        oracle_index.postings, key=lambda t: -len(oracle_index.postings[t])
+
+def test_batch_answers_non_or_queries_as_disjunctions(
+    built_index, oracle_index, corpus_pdf
+):
+    """AND, AND NOT and PHRASE queries in one batch are each answered as
+    the disjunction of their scoring terms, bit-exact against the oracle."""
+    from text_indexing_and_retrieval_system_spark.functions.normalize import (
+        normalize_to_tokens,
     )
-    queries = [
-        f'"{terms[0]}"',
-        f'"{terms[1]}" OR "{terms[4]}"',
-        f'"{terms[2]}" OR "{terms[7]}" OR "{terms[9]}"',
-    ]
-    driver = built_index.search_batch(queries, k=12)
-    monkeypatch.setattr(eng, "DRIVER_MERGE_MAX_ROWS", 0)
-    dist = built_index.search_batch(queries, k=12)
+
+    by_df = sorted(oracle_index.postings, key=lambda t: (-len(oracle_index.postings[t]), t))
+    a, b, c = by_df[0], by_df[20], by_df[1]
+    tokens = normalize_to_tokens(corpus_pdf["text"].head(50))
+    phrase = next(f"{lst[0]} {lst[1]}" for lst in tokens if len(lst) >= 2 and lst[0] != lst[1])
+    queries = [f'"{a}" AND "{b}"', f'"{a}" AND NOT "{c}"', f'PHRASE "{phrase}"']
+    got = built_index.search_batch(queries, k=15)
     for q in queries:
-        want = oracle_index.search(q, k=12, scorer="bm25")
-        assert dist[q].docs == driver[q].docs == [d for d, _ in want], q
-        assert dist[q].scores == driver[q].scores == [s for _, s in want], q
+        want = oracle_index.search(_ranked_equivalent(q), k=15, scorer="bm25")
+        assert want, q
+        assert got[q].docs == [d for d, _ in want], q
+        assert got[q].scores == [s for _, s in want], q
 
 
 def test_batch_duplicate_queries(built_index, oracle_index):

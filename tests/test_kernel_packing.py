@@ -118,21 +118,6 @@ def test_kernel_frame_has_one_nonempty_partition_per_core(spark, built_index, te
         assert len({r[key] for r in rows}) == want
 
 
-def test_merge_gate_counts_realized_groups(built_index, terms, monkeypatch):
-    """DRIVER_MERGE_MAX_ROWS compares the winner volume of the groups the
-    kernel actually runs, not the configured range-bucket count."""
-    from text_indexing_and_retrieval_system_spark import engine as eng
-
-    _force_groups(monkeypatch, 2)
-    queries = [f'"{terms[0]}"', f'"{terms[1]}" OR "{terms[3]}"']
-    cap = K * len(queries) * 2
-    for limit, path in ((cap, "driver_merge"), (cap - 1, "distributed_merge")):
-        monkeypatch.setattr(eng, "DRIVER_MERGE_MAX_ROWS", limit)
-        timings: dict = {}
-        built_index.search_batch(queries, k=K, timings=timings)
-        assert path in timings, (limit, sorted(timings))
-
-
 def _synthetic_blocks(rng, bucket_bases, terms, block_rows=64):
     """Codec-packed posting blocks: every term has postings in every
     bucket; docs of bucket b start at bucket_bases[b]."""
@@ -170,9 +155,9 @@ def test_packed_group_wider_than_int32_scores_like_per_bucket(spark, monkeypatch
     pdf = _synthetic_blocks(rng, bucket_bases, terms)
     avgdl = 40.0
     # the fallback engages for the packed group, not for one bucket
-    assert wand._decode_terms(pdf, avgdl, local=True)[1] == 0
+    assert wand._decode_terms(pdf, avgdl)[1] == 0
     one = pdf[pdf["range_bucket"] == 1]
-    assert wand._decode_terms(one, avgdl, local=True)[1] == int(one["first_doc"].min())
+    assert wand._decode_terms(one, avgdl)[1] == int(one["first_doc"].min())
     blocks = spark.createDataFrame(
         pdf,
         "term string, range_bucket int, first_doc long, last_doc long, "
@@ -183,17 +168,18 @@ def test_packed_group_wider_than_int32_scores_like_per_bucket(spark, monkeypatch
         1: {"beta": [(0, 0.7)], "gamma": [(1, 2.1)]},
         2: {"alpha": [(0, 1.1), (2, 1.1)], "delta": [(1, 0.3)]},
     }
+    queries = {qid: (wand.disjunction(sorted(m)), m) for qid, m in metas.items()}
+    # a set-evaluated tree in the same batch: docs of alpha AND beta
+    queries[3] = (("and", ("tok", "alpha"), ("tok", "beta")), metas[1])
 
     def run(n_groups):
         _force_groups(monkeypatch, n_groups)
-        local = wand.topk_disjunctive_batch(
-            blocks, metas, avgdl, K, n_buckets=len(bucket_bases)
-        )
+        local = wand.boolean_topk(blocks, queries, avgdl, K, n_buckets=len(bucket_bases))
         return wand.merge_query_topk_driver(local.toPandas(), K)
 
     per_bucket = run(None)
     packed = run(1)
-    assert set(per_bucket) == set(metas)
+    assert set(per_bucket) == set(queries)
     assert packed == per_bucket
     # winners come from more than one bucket, so the merge is exercised
     assert len({d >> shift for rows in packed.values() for d, _ in rows}) > 1

@@ -1,0 +1,46 @@
+"""The traced benchmark run (`perfbench/run.py --trace 1`) wraps engine
+functions by name (`perfbench/tracing.py`, Tracer.install_engine_spans);
+a renamed hook makes it fail at install. Every query leaf runs here under
+the installed spans, which must record the path and kernel spans and
+uninstall cleanly."""
+
+import os
+import sys
+
+from text_indexing_and_retrieval_system_spark import engine
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "perfbench"))
+
+from tracing import Tracer  # noqa: E402
+
+
+def test_engine_spans_install_record_and_uninstall(spark, built_index, oracle_index):
+    by_df = sorted(oracle_index.postings, key=lambda t: (-len(oracle_index.postings[t]), t))
+    hot, mid = by_df[0], by_df[20]
+    tracer = Tracer("t")
+    tracer.install_engine_spans()
+    patches = list(tracer._patches)
+    try:
+        assert patches
+        for owner, attr, orig in patches:
+            assert getattr(owner, attr) is not orig, attr
+        built_index.search_collect(f'"{hot}" OR "{mid}"', k=10)  # driver MaxScore
+        built_index.search_collect(f'"{hot}" AND "{mid}"', k=10)  # driver kernel
+        distributed = engine.InvertedIndex(spark, built_index.dir)
+        distributed.DRIVER_WAND_MAX_DF = 0
+        distributed.DRIVER_NOT_MAX_DOCS = 0
+        distributed.search_collect(f'"{hot}" AND "{mid}"', k=10)
+        built_index.search_batch([f'"{hot}"', f'"{mid}" OR "{by_df[5]}"'], k=10)
+    finally:
+        tracer.uninstall()
+    names = {sp.name for sp in tracer.spans}
+    for name in (
+        "engine.path.driver_wand",
+        "engine.path.driver_kernel",
+        "engine.path.distributed",
+        "wand.kernel",
+    ):
+        assert name in names, (name, sorted(names))
+    assert sum(sp.name == "engine.path.distributed" for sp in tracer.spans) == 2
+    for owner, attr, orig in patches:
+        assert getattr(owner, attr) is orig, attr

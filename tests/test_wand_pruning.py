@@ -53,13 +53,21 @@ def _mk_case():
     return pdf, term_meta
 
 
+def _full_scoring(pdf, term_meta, k):
+    """Exact unpruned top-k: the set-evaluation body on the OR tree."""
+    tree = wand.disjunction(sorted(term_meta))
+    out = wand.boolean_score_bucket(pdf, {0: (tree, term_meta)}, AVGDL, k)
+    rows = wand.merge_query_topk_driver(out, k)[0]
+    return [d for d, _ in rows], [s for _, s in rows]
+
+
 def test_pruning_skips_blocks_and_is_exact():
     pdf, term_meta = _mk_case()
     pruned, n_total, n_decoded = wand.score_bucket_pruned(pdf, term_meta, AVGDL, k=3)
     assert n_decoded < n_total, "expected some blocks to be skipped"
-    full = wand.score_bucket(pdf, term_meta, AVGDL, k=3)
-    assert list(pruned["doc_id_int"]) == list(full["doc_id_int"])
-    assert list(pruned["score"]) == list(full["score"])
+    docs, scores = _full_scoring(pdf, term_meta, k=3)
+    assert list(pruned["doc_id_int"]) == docs
+    assert list(pruned["score"]) == scores
 
 
 def test_no_candidates_all_terms_unknown():
@@ -108,6 +116,6 @@ def test_theta_seed_engine_repeat_query(built_index, oracle_index):
 def test_k_larger_than_candidates():
     pdf, term_meta = _mk_case()
     pruned, _, _ = wand.score_bucket_pruned(pdf, term_meta, AVGDL, k=10_000)
-    full = wand.score_bucket(pdf, term_meta, AVGDL, k=10_000)
-    assert list(pruned["doc_id_int"]) == list(full["doc_id_int"])
-    assert list(pruned["score"]) == list(full["score"])
+    docs, scores = _full_scoring(pdf, term_meta, k=10_000)
+    assert list(pruned["doc_id_int"]) == docs
+    assert list(pruned["score"]) == scores

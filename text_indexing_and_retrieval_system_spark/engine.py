@@ -19,10 +19,18 @@ query_processing_engine.py:549-651`):
         gates, else one distributed bucket-kernel job
       → top-k (score DESC, doc_id_int ASC) → optional hydration join
 
-All four leaves are bit-identical in scores and order (the golden suite
-runs them against the same oracle). Control crosses driver→executor once
-per query on the distributed leaves (plus a dict-lookup id resolution
-from the driver-cached convmap), matching SURVEY.md §3.1's target.
+That gives four leaves: driver MaxScore (_search_wand_driver_rows),
+distributed MaxScore (wand.topk_disjunctive), driver set evaluation
+(_search_kernel_driver_rows) and distributed set evaluation
+(wand.boolean_topk). Both set-evaluation leaves run the one kernel body,
+wand.boolean_score_bucket, on a batch of query trees: a single query is
+a batch of one, and search_batch sends its whole batch, each query as
+the disjunction of its scoring terms, through the distributed leaf. All
+four are bit-identical in scores and order (the golden suite runs them
+against the same oracle). Control crosses driver→executor once per
+query or batch on the distributed leaves (plus a dict-lookup id
+resolution from the driver-cached convmap), matching SURVEY.md §3.1's
+target.
 """
 
 from __future__ import annotations
@@ -30,7 +38,6 @@ from __future__ import annotations
 import json
 import math
 import os
-import uuid
 from dataclasses import dataclass
 
 import pandas as pd
@@ -42,11 +49,6 @@ from .operators import query_parser as qp
 from .operators import wand
 from .operators.index_build import IndexBuildConfig
 from .operators.segments import Manifests, build_index, kernel_buckets_for, term_bucket_py
-
-# search_batch winner-merge crossover: at or below this many estimated
-# per-(query, kernel group) winner rows the driver merges locally; above it the
-# distributed merge keeps the collect at ~k x queries rows
-DRIVER_MERGE_MAX_ROWS = 2_000_000
 
 SCORERS = ("bm25", "tfidf", "wordcount")
 
@@ -363,27 +365,29 @@ class InvertedIndex:
             ).orderBy(F.desc("score"), F.asc("doc_id_int"))
         return out
 
+    def _term_weights(self, scorer: str, lex: pd.DataFrame) -> dict[str, float]:
+        """term -> scorer weight for the lexicon rows `lex`. The weight
+        multiplies the kernel's impact: bm25 the lexicon idf, tfidf
+        ln(N/df) computed here exactly as the oracle does, wordcount 1.0."""
+        if scorer == "bm25":
+            return dict(zip(lex["term"], map(float, lex["idf"])))
+        if scorer == "tfidf":
+            n_docs = int(self.stats["n_docs"])
+            return {
+                t: math.log(n_docs / int(df)) for t, df in zip(lex["term"], lex["df"])
+            }
+        return dict.fromkeys(lex["term"], 1.0)
+
+    @staticmethod
     def _term_meta(
-        self, occ: list[tuple[int, str]], scorer: str, lex: pd.DataFrame
+        occ: list[tuple[int, str]], weights: dict[str, float]
     ) -> dict[str, list[tuple[int, float]]]:
         """term -> [(occurrence_idx, weight)] for the query's scoring terms
-        found in the lexicon rows `lex`. The weight multiplies the kernel's
-        impact: bm25 the lexicon idf, tfidf ln(N/df) computed here exactly
-        as the oracle does, wordcount 1.0."""
-        if scorer == "bm25":
-            weights = zip(lex["term"], map(float, lex["idf"]))
-        elif scorer == "tfidf":
-            n_docs = int(self.stats["n_docs"])
-            weights = (
-                (t, math.log(n_docs / int(df))) for t, df in zip(lex["term"], lex["df"])
-            )
-        else:
-            weights = ((t, 1.0) for t in lex["term"])
-        weight_by_term = dict(weights)
+        that have a weight (see _term_weights)."""
         meta: dict[str, list[tuple[int, float]]] = {}
         for i, t in occ:
-            if t in weight_by_term:
-                meta.setdefault(t, []).append((i, weight_by_term[t]))
+            if t in weights:
+                meta.setdefault(t, []).append((i, weights[t]))
         return meta
 
     def _search_rows(self, query: str, k: int, scorer: str) -> list[tuple]:
@@ -408,7 +412,7 @@ class InvertedIndex:
             node, lambda s: normalize_query_terms([s], self.normalize_cfg)[0]
         )
         lex = self.lexicon_for(all_tokens)
-        term_meta = self._term_meta(occ, scorer, lex)
+        term_meta = self._term_meta(occ, self._term_weights(scorer, lex))
         needs_universe = wand.tree_has(tree, "not")
         driver = int(lex["df"].sum() or 0) <= self.DRIVER_WAND_MAX_DF and (
             not needs_universe
@@ -435,25 +439,59 @@ class InvertedIndex:
             return self._search_kernel_driver_rows(
                 tree, term_meta, all_tokens, k, has_phrase, needs_universe, impact
             )
-        local = wand.boolean_topk(
-            self.blocks_for(all_tokens, with_positions=has_phrase),
-            tree,
-            term_meta,
-            self.stats["avgdl"],
-            k,
-            doclen=self.doclen() if needs_universe else None,
-            range_shift=self.range_shift,
-            n_buckets=self.kernel_buckets,
-            impact=impact,
-        )
-        return self._finalize_topk(local.collect(), k)
+        winners = self._boolean_topk_winners({0: (tree, term_meta)}, all_tokens, k, impact)
+        return self._resolve(winners.get(0, []))
 
     def _finalize_topk(self, rows: list, k: int) -> list[tuple]:
         """Per-bucket winners -> global top-k tuples: driver merge on
         (score DESC, doc_id_int ASC) + one pruned doc_id lookup."""
         rows = sorted(rows, key=lambda r: (-r["score"], r["doc_id_int"]))[:k]
-        id_map = self._doc_ids_for([r["doc_id_int"] for r in rows])
-        return [(id_map[r["doc_id_int"]], r["doc_id_int"], r["score"]) for r in rows]
+        return self._resolve([(r["doc_id_int"], r["score"]) for r in rows])
+
+    def _resolve(self, winners: list[tuple[int, float]]) -> list[tuple]:
+        """Ranked (doc_id_int, score) winners -> (doc_id, doc_id_int, score)."""
+        id_map = self._doc_ids_for([d for d, _ in winners])
+        return [(id_map[d], d, s) for d, s in winners]
+
+    def _boolean_topk_winners(
+        self,
+        queries: dict[int, tuple],
+        tokens: list[str],
+        k: int,
+        impact=wand.bm25_impact,
+        mark=lambda label: None,
+    ) -> dict[int, list[tuple[int, float]]]:
+        """The distributed set-evaluation leaf: ONE wand.boolean_topk job
+        over a batch {query_id: (tree, term_meta)} whose trees use
+        `tokens`, then the driver winner merge -> per-query ranked
+        (doc_id_int, score) lists. The batch travels as a broadcast: as a
+        plain closure capture it would be re-unpickled by every kernel
+        task (grows with batch size); as a broadcast it is fetched once
+        per worker process. `mark(label)` closes search_batch's timed
+        phases."""
+        trees = [tree for tree, _ in queries.values()]
+        needs_universe = any(wand.tree_has(t, "not") for t in trees)
+        with_positions = any(wand.tree_has(t, "phrase") for t in trees)
+        bc = self.spark.sparkContext.broadcast(queries)
+        try:
+            local = wand.boolean_topk(
+                self.blocks_for(tokens, with_positions=with_positions),
+                bc,
+                self.stats["avgdl"],
+                k,
+                doclen=self.doclen() if needs_universe else None,
+                range_shift=self.range_shift,
+                n_buckets=self.kernel_buckets,
+                impact=impact,
+            )
+            mark("plan")
+            lpdf = local.toPandas()
+            mark("kernel_and_collect")
+        finally:
+            bc.unpersist(blocking=False)
+        winners = wand.merge_query_topk_driver(lpdf, k)
+        mark("driver_merge")
+        return winners
 
     def _doclen_ids(self) -> "np.ndarray":
         """Sorted int64 doc-id universe, driver-cached (gated by
@@ -478,12 +516,13 @@ class InvertedIndex:
         impact,
     ) -> list[tuple]:
         """Driver-local boolean/phrase+ranking: the distributed path's
-        kernel body (wand.boolean_score_bucket) called ONCE in-process over
-        the whole cached block frame, with the whole doc-id universe for
-        NOT. Exact by the packing argument of wand._with_slot: a group of
-        whole range buckets scores like one bigger bucket, so the single
-        call is bit-identical to the per-bucket kernels, without the
-        2-stage shuffle job's scheduling floor."""
+        kernel body (wand.boolean_score_bucket) called ONCE in-process on a
+        batch of one over the whole cached block frame, with the whole
+        doc-id universe for NOT. Exact by the packing argument of
+        wand._with_slot: a group of whole range buckets scores like one
+        bigger bucket, so the single call is bit-identical to the
+        per-bucket kernels, without the 2-stage shuffle job's scheduling
+        floor."""
         pdf = self._blocks_pdf_for(all_tokens, with_positions=has_phrase)
         if pdf is None:
             pdf = pd.DataFrame(
@@ -491,18 +530,13 @@ class InvertedIndex:
             )
         out = wand.boolean_score_bucket(
             pdf,
-            tree,
-            term_meta,
+            {0: (tree, term_meta)},
             self.stats["avgdl"],
             k,
             universe=self._doclen_ids() if needs_universe else None,
             impact=impact,
         )
-        rows = [
-            {"doc_id_int": int(d), "score": float(s)}
-            for d, s in zip(out["doc_id_int"], out["score"])
-        ]
-        return self._finalize_topk(rows, k)
+        return self._resolve(wand.merge_query_topk_driver(out, k).get(0, []))
 
     def _search_wand_distributed_rows(
         self, term_meta: dict, k: int, qkey: str
@@ -728,10 +762,11 @@ class InvertedIndex:
     def search_batch(
         self, queries: list[str], k: int = 50, timings: dict | None = None
     ) -> dict[str, SearchResult]:
-        """Batched free-text BM25 top-k: ONE distributed pass for all
-        queries (shared block scan + decode). Each query's scoring terms
-        are its normalized TERM occurrences (NOT-subtrees excluded) —
-        ranked-retrieval semantics; boolean filtering uses search().
+        """Batched free-text BM25 top-k: ONE distributed set-evaluation
+        pass for all queries (shared block scan + decode). Each query is
+        answered as the disjunction of its scoring terms, its normalized
+        TERM occurrences (NOT-subtrees excluded) — ranked-retrieval
+        semantics; boolean filtering uses search().
         Duplicate query strings are answered once (the result dict is
         keyed by query string). `timings`, when passed, is filled with
         per-phase wall seconds (driver-tail attribution for the scaling
@@ -756,71 +791,22 @@ class InvertedIndex:
         prime_query_norm_cache(raw_terms, self.normalize_cfg)
         mark("parse_normalize")
 
-        metas: dict[int, dict[str, list[tuple[int, float]]]] = {}
-        all_tokens: set[str] = set()
-        occ_by_q: list[list[tuple[int, str]]] = []
-        for node in nodes:
-            occ, _ = self._query_tokens(node)
-            occ_by_q.append(occ)
-            all_tokens.update(t for _, t in occ)
+        occ_by_q = [self._query_tokens(node)[0] for node in nodes]
+        all_tokens = sorted({t for occ in occ_by_q for _, t in occ})
         if not all_tokens:
             return {q: SearchResult(q, [], []) for q in queries}
         mark("tokens")
-        lex = self.lexicon_for(sorted(all_tokens))
+        lex = self.lexicon_for(all_tokens)
         mark("lexicon")
-        idf_by_term = dict(zip(lex["term"], lex["idf"]))
+        weights = self._term_weights("bm25", lex)
+        batch: dict[int, tuple] = {}
         for qid, occ in enumerate(occ_by_q):
-            meta: dict[str, list[tuple[int, float]]] = {}
-            for i, t in occ:
-                if t in idf_by_term:
-                    meta.setdefault(t, []).append((i, float(idf_by_term[t])))
-            metas[qid] = meta
-        known = sorted({t for m in metas.values() for t in m})
-        blocks = self.blocks_for(known)
-        # broadcast the per-query metadata: as a plain closure capture it
-        # would be re-unpickled by every kernel task (grows with batch
-        # size); as a broadcast it's fetched once per worker process
-        bc_metas = self.spark.sparkContext.broadcast(metas)
-        local = wand.topk_disjunctive_batch(
-            blocks,
-            bc_metas,
-            self.stats["avgdl"],
-            k,
-            n_buckets=self.kernel_buckets,
-            # unique per batch: worker-process theta stores never leak
-            # across batches (or index generations)
-            batch_key=uuid.uuid4().hex,
-        )
-        mark("plan")
-        # merge the per-(query, group) winners to per-query top-k:
-        # small batches (k x queries x groups winners fit the driver)
-        # merge in numpy on the driver — one Spark stage less; beyond the
-        # threshold, the distributed merge keeps the driver collect at
-        # k x queries rows (the 1000-executor path).
-        # measured at 2.4M-turn scale: the driver merge (Arrow toPandas +
-        # one lexsort) beats the distributed merge (an extra stage with a
-        # python pass per query group) up to at least 1.6M winner rows
-        est_rows = k * len(queries) * wand.kernel_groups(
-            self.spark, self.kernel_buckets
-        )
-        if est_rows <= DRIVER_MERGE_MAX_ROWS:
-            lpdf = local.toPandas()
-            mark("kernel_and_collect")
-            per_q_np = wand.merge_query_topk_driver(lpdf, k)
-            mark("driver_merge")
-        else:
-            # distributed merge: one query_id shuffle folds the winner
-            # volume down to ~k rows per query BEFORE the driver collect
-            # (merge_query_topk emits per-Arrow-batch top-ks — a small
-            # superset, since a query's rows share a partition but may
-            # span batches); the final exact cut reuses the vectorized
-            # driver merge on that superset
-            merged = wand.merge_query_topk(local, k)
-            lpdf = merged.toPandas()
-            mark("kernel_and_collect")
-            per_q_np = wand.merge_query_topk_driver(lpdf, k)
-            mark("distributed_merge")
-        bc_metas.unpersist(blocking=False)
+            meta = self._term_meta(occ, weights)
+            if meta:
+                # ranked semantics: the OR of the scoring terms
+                batch[qid] = (wand.disjunction(sorted(meta)), meta)
+        known = sorted({t for _, meta in batch.values() for t in meta})
+        per_q_np = self._boolean_topk_winners(batch, known, k, mark=mark)
         need_ids: set[int] = set()
         for rows in per_q_np.values():
             need_ids.update(d for d, _ in rows)

@@ -17,9 +17,16 @@ PROBE_STOPWORDS = (
 )
 
 
-def _toks(col):
+def sql_tokens(col):
+    """The SQL-parity tokenizer as one array expression: runs of ASCII
+    letters and digits, lower-cased — the Spark twin of the DuckDB
+    oracles' `list_filter(string_split_regex(lower(regexp_replace(text,
+    '[^a-zA-Z0-9]+', ' ', 'g')), ' '), x -> x <> '')`. Delimiters are
+    decided BEFORE lower-casing, as there: lower-casing first would turn
+    U+212A KELVIN SIGN into `k` and U+0130 into `i` + a combining dot,
+    tokens the oracle never sees."""
     return F.filter(
-        F.split(F.lower(col), "[^a-zA-Z0-9]+"),
+        F.split(F.lower(F.regexp_replace(col, "[^a-zA-Z0-9]+", " ")), " "),
         lambda x: x != "",
     )
 
@@ -29,7 +36,7 @@ def token_counts(docs: DataFrame) -> DataFrame:
     character count of the raw text."""
     return docs.select(
         "doc_id",
-        F.size(_toks(F.col("text"))).alias("n_tokens"),
+        F.size(sql_tokens(F.col("text"))).alias("n_tokens"),
         F.length("text").alias("n_chars"),
     )
 
@@ -47,7 +54,7 @@ def quality_scores(docs: DataFrame) -> DataFrame:
     length/punctuation/stopword quality heuristic in integer basis
     points (0..10000) — exact integer arithmetic so any SQL engine
     reproduces it bit-for-bit (no float rounding at grid boundaries)."""
-    toks = _toks(F.col("text"))
+    toks = sql_tokens(F.col("text"))
     n_tok = F.size(toks).cast("long")
     n_chars = F.length("text").cast("long")
     n_alnum = F.length(F.regexp_replace("text", "[^a-zA-Z0-9 ]", "")).cast("long")
@@ -97,7 +104,7 @@ def langid(docs: DataFrame, threshold_bp: int = 800) -> DataFrame:
     English-stopword hit rate in basis points; >= threshold_bp → 'en'.
     (A real pipeline swaps in fastText etc.; the Spark plumbing is
     identical.) Integer arithmetic for exact SQL parity."""
-    toks = _toks(F.col("text"))
+    toks = sql_tokens(F.col("text"))
     stops = F.array([F.lit(w) for w in PROBE_STOPWORDS])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stops, t))).cast("long")
     bp = F.floor((n_stop * 10000) / F.greatest(F.size(toks).cast("long"), F.lit(1))).cast(
@@ -130,7 +137,7 @@ def content_fingerprint(docs: DataFrame) -> DataFrame:
     whitespace/punctuation-insensitive exact-content identity (the
     hash-based cousin of a rolling-hash fingerprint; see
     rolling_fingerprint for the windowed variant)."""
-    norm = F.concat_ws(" ", _toks(F.col("text")))
+    norm = F.concat_ws(" ", sql_tokens(F.col("text")))
     return docs.select("doc_id", F.md5(norm).alias("fingerprint"))
 
 
@@ -148,7 +155,7 @@ def rolling_fingerprints(docs: DataFrame, window: int = 8) -> DataFrame:
     Docs shorter than the window get n_windows=0 / min_fp=null."""
     from ..operators.dedup import _shingle_array
 
-    base = docs.select("doc_id", _toks(F.col("text")).alias("__toks"))
+    base = docs.select("doc_id", sql_tokens(F.col("text")).alias("__toks"))
     fps = F.transform(_shingle_array(F.col("__toks"), window), F.md5)
     return base.select(
         "doc_id",

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.textstats import sql_tokens
 from .docquery import SQL_TOKS
 
 # ----------------------------- exact dedup -----------------------------
@@ -54,13 +55,6 @@ def sql_exact_dedup_groups(min_group: int = 1) -> str:
 # ----------------------------- shingles -----------------------------
 
 
-def _toks_array(docs: DataFrame):
-    return F.filter(
-        F.split(F.lower(F.col("text")), "[^a-zA-Z0-9]+"),
-        lambda x: x != "",
-    )
-
-
 def _shingle_array(toks_col, n: int):
     """Word n-grams from a *materialized* token array column via
     zip_with over n shifted slices. Two things matter here:
@@ -79,7 +73,7 @@ def _shingle_array(toks_col, n: int):
 
 def shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, shingle) distinct word n-grams, all JVM-side."""
-    base = docs.select("doc_id", _toks_array(docs).alias("__toks"))
+    base = docs.select("doc_id", sql_tokens(F.col("text")).alias("__toks"))
     return (
         base.select("doc_id", F.explode(_shingle_array(F.col("__toks"), n)).alias("shingle"))
         .distinct()
@@ -209,7 +203,7 @@ def minhash_signatures(docs: DataFrame, n: int = 3, n_hashes: int = 8) -> DataFr
     seed — one shuffle over the shingle rows, no 8x explode (duplicate
     shingles don't change a min, so no distinct pass either). 8x less
     hashing than the md5-per-seed formulation at identical semantics."""
-    base = docs.select("doc_id", _toks_array(docs).alias("__toks"))
+    base = docs.select("doc_id", sql_tokens(F.col("text")).alias("__toks"))
     hashed = base.select(
         "doc_id", F.explode(_shingle_array(F.col("__toks"), n)).alias("shingle")
     ).withColumn(
@@ -323,7 +317,7 @@ def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
     higher-order lambdas and measured 1.6x slower at sf0.1 and at 10x
     sf0.1 (10.9 s vs 7.0 s); a fused single-aggregate traversal measured
     worse still (12.9 s)."""
-    base = docs.select("doc_id", _toks_array(docs).alias("__toks"))
+    base = docs.select("doc_id", sql_tokens(F.col("text")).alias("__toks"))
     tok = base.select("doc_id", F.explode("__toks").alias("__t")).withColumn(
         "__h", F.conv(F.substring(F.md5("__t"), 1, 8), 16, 10).cast("long")
     )

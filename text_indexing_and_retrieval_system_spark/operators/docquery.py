@@ -8,9 +8,10 @@ parquet. The indexed path (compressed blocks + WAND) is exercised by the
 pytest golden suite on the transcript corpus; both paths share identical
 scoring math.
 
-Tokenizer here is the SQL-parity one (lowercase, non-alphanumeric runs →
-space, split) so the oracle can reproduce it exactly; the full reference
-pipeline (stopwords/stemming) lives in functions/normalize.py.
+Tokenizer here is the SQL-parity one (non-alphanumeric runs → space,
+lowercase, split: textstats.sql_tokens) so the oracle can reproduce it
+exactly; the full reference pipeline (stopwords/stemming) lives in
+functions/normalize.py.
 
 BM25/TFIDF per SURVEY.md §2.6; scores rounded to 4 decimals on both
 sides to absorb last-ulp differences between JVM and C log()
@@ -21,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..functions.textstats import sql_tokens
 
 K1 = 1.2
 B = 0.75
@@ -37,10 +40,7 @@ SQL_TOKS = (
 def simple_tokens(docs: DataFrame) -> DataFrame:
     """(doc_id, text) → (doc_id, term, pos) — JVM-side only (split +
     posexplode stay inside whole-stage codegen; no Python)."""
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), "[^a-zA-Z0-9]+"),
-        lambda x: x != "",
-    )
+    toks = sql_tokens(F.col("text"))
     return docs.select("doc_id", F.posexplode(toks).alias("pos", "term")).select(
         "doc_id", "term", "pos"
     )
@@ -62,21 +62,14 @@ def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 # join formulation (and the DuckDB oracles) for ANY input.
 
 
-def _toks_col():
-    return F.filter(
-        F.split(F.lower(F.col("text")), "[^a-zA-Z0-9]+"),
-        lambda x: x != "",
-    )
-
-
 def term_postings(docs: DataFrame, term: str) -> DataFrame:
     return (
-        docs.filter(F.array_contains(_toks_col(), term)).select("doc_id").distinct()
+        docs.filter(F.array_contains(sql_tokens(F.col("text")), term)).select("doc_id").distinct()
     )
 
 
 def bool_and(docs: DataFrame, t1: str, t2: str) -> DataFrame:
-    toks = _toks_col()
+    toks = sql_tokens(F.col("text"))
     flags = docs.select(
         "doc_id",
         F.array_contains(toks, t1).alias("__h1"),
@@ -92,7 +85,7 @@ def bool_and(docs: DataFrame, t1: str, t2: str) -> DataFrame:
 
 def bool_or_not(docs: DataFrame, t1: str, t2: str, t3: str) -> DataFrame:
     """(t1 OR t2) AND NOT t3."""
-    toks = _toks_col()
+    toks = sql_tokens(F.col("text"))
     flags = docs.select(
         "doc_id",
         F.array_contains(toks, t1).alias("__h1"),
@@ -128,7 +121,7 @@ def phrase_match(docs: DataFrame, w1: str, w2: str) -> DataFrame:
             lambda v: v > 0,
         )
 
-    base = docs.select("doc_id", _toks_col().alias("__toks")).select(
+    base = docs.select("doc_id", sql_tokens(F.col("text")).alias("__toks")).select(
         "doc_id",
         positions_of(w1).alias("__pa"),
         positions_of(w2).alias("__pb"),
@@ -196,11 +189,7 @@ def _tf_dl_projection(docs: DataFrame, terms: list[str]) -> DataFrame:
     `filter` sizes over the bound token array (no explode, no shuffle).
     Zero-token docs are dropped (they are outside the oracle's doclen
     universe)."""
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), "[^a-zA-Z0-9]+"),
-        lambda x: x != "",
-    )
-    base = docs.select("doc_id", toks.alias("__toks"))
+    base = docs.select("doc_id", sql_tokens(F.col("text")).alias("__toks"))
 
     def tf_col(term: str):
         # NB: a single-arg lambda — F.filter interprets a second lambda

@@ -18,11 +18,17 @@ seeded from a previous batch or estimated; with θ=0 all blocks decode
 blocks are provably below the threshold of the *k-th best overall* —
 we only skip when θ is a certified lower bound (local top-k so-far).
 
-Scores are accumulated per doc in ascending term order, matching the
-oracle bit-for-bit.
+Two group bodies share one scorer (`_score`) and one top-k cut:
+score_bucket_pruned (MaxScore, a single BM25 disjunction) and
+boolean_score_bucket (set evaluation of a batch of query trees: every
+other single query, and search_batch's disjunctions). Scores are
+accumulated per doc in ascending term order, matching the oracle
+bit-for-bit.
 """
 
 from __future__ import annotations
+
+import uuid
 
 import numpy as np
 import pandas as pd
@@ -292,69 +298,8 @@ def score_bucket_pruned(
                 cands, part = cands[keep_c], part[keep_c]
 
     # phase B: exact rescore of candidates in term-occurrence order
-    return _score_candidates_np(cands, decoded, term_meta, k), n_total, n_decoded
-
-
-def score_bucket(
-    pdf: pd.DataFrame,
-    term_meta: dict[str, tuple[int, float]],
-    avgdl: float,
-    k: int,
-) -> pd.DataFrame:
-    """Score one range bucket's blocks. term_meta: term -> (term_idx, idf).
-
-    Exact top-k within the bucket with MaxScore-style block skipping:
-    process terms in descending upper bound; once the running certified
-    threshold θ exceeds the sum of remaining terms' upper bounds, the
-    remaining terms can only re-rank docs already seen, so their blocks
-    whose doc range misses all current candidates are skipped.
-    """
-    if pdf.empty:
-        return pd.DataFrame({"doc_id_int": [], "score": []}).astype(
-            {"doc_id_int": "int64", "score": "float64"}
-        )
-
-    # decode per term: map term -> (docs, impacts) arrays
-    per_term: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-    for term, grp in pdf.groupby("term", sort=False):
-        docs_parts, imp_parts = [], []
-        for payload in grp.sort_values("first_doc")["payload"]:
-            d, tf, dl, _ = codec.unpack_postings(bytes(payload))
-            tf_f = tf.astype(np.float64)
-            denom = tf_f + K1 * ((1.0 - B) + (B * dl.astype(np.float64)) / avgdl)
-            imp_parts.append(tf_f * (K1 + 1.0) / denom)
-            docs_parts.append(d)
-        per_term[term] = (np.concatenate(docs_parts), np.concatenate(imp_parts))
-
-    # accumulate in ascending term_idx order (determinism contract);
-    # a term occurring twice in the query is scored once per occurrence
-    # (`query_processing_engine.py:141-170` keeps duplicates)
-    items = sorted(
-        (idx, t, idf)
-        for t in per_term
-        for (idx, idf) in term_meta.get(t, [])
-    )
-    if not items:
-        return pd.DataFrame({"doc_id_int": [], "score": []}).astype(
-            {"doc_id_int": "int64", "score": "float64"}
-        )
-    all_docs = np.unique(np.concatenate([per_term[t][0] for _, t, _ in items]))
-    scores = np.zeros(all_docs.size, dtype=np.float64)
-    for _, term, idf in items:
-        d, imp = per_term[term]
-        idxs = np.searchsorted(all_docs, d)
-        scores[idxs] += idf * imp
-    if all_docs.size > k:
-        # exact top-k with (score desc, doc asc) tie-break: select every
-        # doc scoring >= the k-th score, then lexsort and cut
-        kth = np.partition(-scores, k - 1)[k - 1]
-        cand = np.flatnonzero(-scores <= kth)
-        order = np.lexsort((all_docs[cand], -scores[cand]))[:k]
-        sel = cand[order]
-    else:
-        order = np.lexsort((all_docs, -scores))
-        sel = order
-    return pd.DataFrame({"doc_id_int": all_docs[sel], "score": scores[sel]})
+    docs, scores = _score(decoded, term_meta, k, matches=cands)
+    return pd.DataFrame({"doc_id_int": docs, "score": scores}), n_total, n_decoded
 
 
 _THETA_SEEDS: dict[str, float] = {}  # per-worker-process certified seeds
@@ -426,15 +371,6 @@ def topk_disjunctive(
 BATCH_TOPK_SCHEMA = "query_id int, doc_ids binary, scores binary"
 
 
-def _unpack_winner_rows(lpdf: pd.DataFrame) -> tuple[np.ndarray, ...]:
-    """Packed winner rows -> flat (qids, docs, scores) numpy arrays."""
-    counts = lpdf["doc_ids"].map(len).to_numpy(dtype=np.int64) // 8
-    qids = np.repeat(lpdf["query_id"].to_numpy(dtype=np.int64), counts)
-    docs = np.frombuffer(b"".join(lpdf["doc_ids"]), dtype=np.int64)
-    scores = np.frombuffer(b"".join(lpdf["scores"]), dtype=np.float64)
-    return qids, docs, scores
-
-
 # NOTE (round-5 falsified experiment): a per-process decoded-block cache
 # for the batch kernel (payload -> block-relative offsets + impacts,
 # misses batch-decoded with first_docs pinned to 0) was implemented and
@@ -442,42 +378,35 @@ def _unpack_winner_rows(lpdf: pd.DataFrame) -> tuple[np.ndarray, ...]:
 # min 2.05s cached vs 1.75s uncached per 256-query batch — the per-block
 # python assembly (dict lookups + 7k-array concatenate) costs more than
 # the ONE vectorized codec pass it saves. The vectorized decode stays
-# unconditional; scripts/bench_batch_ab.py holds the harness.
-def _decode_terms(
-    pdf: pd.DataFrame, avgdl: float, local: bool = False, impact=bm25_impact
-):
-    """All of a kernel group's blocks -> {term: (sorted doc ids, impacts)} in
-    ONE vectorized codec pass (codec.unpack_postings_batch) + one
-    vectorized `impact` computation over every row — replaces the
-    per-block decode loop (~90us/block of numpy setup overhead, which
-    dominated the batch kernel at 300k+ blocks per query batch).
+# unconditional.
+def _decode_terms(pdf: pd.DataFrame, avgdl: float, impact=bm25_impact, universe=None):
+    """All of a kernel group's blocks -> (per_term, base, id_dtype):
+    per_term maps term -> (sorted doc ids, impacts), decoded in ONE
+    vectorized codec pass (codec.unpack_postings_batch) + one vectorized
+    `impact` computation over every row — replaces the per-block decode
+    loop (~90us/block of numpy setup overhead, which dominated the batch
+    kernel at 300k+ blocks per query batch).
 
-    With `local=True` returns (per_term, base) where doc ids are int32
-    offsets from `base` — valid whenever the group's doc span fits 31
-    bits. One range bucket always does; a group packing several buckets
-    (few cores over a very large doc-id space) or the null overflow
-    group may not, and falls back to global int64 with base=0 — slower,
-    same scores. The batch scoring path runs entirely in the int32
-    space: ~half the memory traffic on a kernel that is bandwidth-bound,
-    identical scores."""
-    want_local = local
+    Doc ids are offsets from `base`: int32 whenever the group's doc span
+    (the sorted int64 NOT `universe` included) fits 31 bits. One range
+    bucket always does; a group packing several buckets (few cores over
+    a very large doc-id space) or the null overflow group may not, and
+    falls back to global int64 with base=0 — slower, same scores. The
+    kernel runs entirely in this id space: int32 is ~half the memory
+    traffic on a kernel that is bandwidth-bound, identical scores."""
     per_term: dict[str, tuple[np.ndarray, np.ndarray]] = {}
     if not len(pdf):
-        return (per_term, 0) if want_local else per_term
+        return per_term, 0, np.int64
     pdf = pdf.sort_values(["term", "first_doc"], kind="stable")
-    base = 0
-    use_local32 = False
-    if local:
-        base = int(pdf["first_doc"].min())
-        if int(pdf["last_doc"].max()) - base < (1 << 31):
-            use_local32 = True
-        else:
-            base = 0  # span too wide (packed or overflow group): global mode
-    first_docs = (
-        pdf["first_doc"].to_numpy(dtype=np.int64) if use_local32 else None
-    )
+    lo, hi = int(pdf["first_doc"].min()), int(pdf["last_doc"].max())
+    if universe is not None and universe.size:
+        lo, hi = min(lo, int(universe[0])), max(hi, int(universe[-1]))
+    local32 = hi - lo < (1 << 31)
+    base = lo if local32 else 0
     block_n, docs, tfs, dls = codec.unpack_postings_batch(
-        pdf["payload"].to_list(), first_docs=first_docs, base=base
+        pdf["payload"].to_list(),
+        first_docs=pdf["first_doc"].to_numpy(dtype=np.int64) if local32 else None,
+        base=base,
     )
     imp = impact(tfs.astype(np.float64), dls, avgdl)
     terms = pdf["term"].to_numpy()
@@ -489,161 +418,90 @@ def _decode_terms(
         b0, b1 = bounds[i], bounds[i + 1]
         r0, r1 = block_row_starts[b0], block_row_ends[b1 - 1]
         per_term[terms[b0]] = (docs[r0:r1], imp[r0:r1])
-    return (per_term, base) if want_local else per_term
+    return per_term, base, np.int32 if local32 else np.int64
 
 
-# process-local per-batch theta store: {batch_key: {qid: kth-best score
-# seen so far}}. Kernel groups hold DISJOINT doc-id ranges, so the
-# kth-best score within any already-scored group is a lower bound on the
-# global kth-best — later groups in the same worker process can drop emission
-# rows below it without affecting the merged top-k (same certified-seed
-# argument as _THETA_SEEDS on the wand path). Only the CURRENT batch's
-# thetas are kept (replaced when a new batch_key arrives).
-_BATCH_THETA: dict[str, dict[int, float]] = {}
-
-
-def topk_disjunctive_batch(
-    blocks: DataFrame,
-    queries_meta: dict[int, dict[str, list[tuple[int, float]]]],
-    avgdl: float,
+def _score(
+    per_term: dict[str, tuple[np.ndarray, np.ndarray]],
+    term_meta: dict[str, list[tuple[int, float]]],
     k: int,
-    n_buckets: int,
-    batch_key: str | None = None,
-) -> DataFrame:
-    """Many queries in ONE distributed pass (the reference runs its whole
-    200-query benchmark sequentially, `performance_metrics.py:521-559`;
-    here the batch shares a single scan + decode of the union of posting
-    lists per kernel group, and per-query scoring is a numpy loop).
+    matches: np.ndarray | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The one scorer and top-k cut: Σ weight × impact per doc over the
+    scoring-term occurrences (term_meta: term -> [(occurrence_idx,
+    weight)]) -> the top-k (docs, scores) under (score desc, doc asc).
+    Without `matches` every doc of a scoring term is scored (a
+    disjunction); with it exactly the `matches` are, and a match with no
+    scoring term scores 0.0.
 
-    Returns packed (query_id, doc_ids, scores) rows — per-group local
-    top-k per query; caller does the tiny global merge.
-
-    Cost model: each kernel group is one Python task with ~0.2 s of
-    fixed overhead, plus one pass of the per-query loop over the group's
-    decoded terms. Both scale with the number of GROUPS, not buckets, so
-    the range buckets are packed into one group per core slot
-    (_with_slot): at 4 cores a 32-bucket index runs 4 kernel tasks,
-    each looping the batch once over 8 buckets' postings.
-
-    `queries_meta` may be a plain dict or a pyspark Broadcast of one.
-    Pass a Broadcast for big batches: a plain dict is pickled into the
-    UDF closure and re-deserialized by EVERY task, while a broadcast
-    value is fetched and cached once per executor worker process
-    (measured ~0.2 s/task at 8k queries — a pseudo-constant that grew
-    with batch size).
-    """
-
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        qmetas = (
-            queries_meta.value if hasattr(queries_meta, "value") else queries_meta
-        )
-        empty = pd.DataFrame({"query_id": [], "doc_ids": [], "scores": []}).astype(
-            {"query_id": "int32", "doc_ids": "object", "scores": "object"}
-        )
-        if pdf.empty:
-            return empty
-        # per-batch emission thetas shared across this worker process's
-        # groups (see _BATCH_THETA): the first group a worker scores
-        # emits its full local top-k; later groups drop rows strictly
-        # below the best kth score seen — the merged global top-k is
-        # bit-identical, with ~60% fewer winner rows through Arrow,
-        # collect, and the driver merge (a corpus-independent tail)
-        thetas: dict[int, tuple[float, int]] = {}
-        if batch_key is not None:
-            # live-module store (see topk_disjunctive.run): a bare global
-            # would be a per-task copy and never share state
-            from text_indexing_and_retrieval_system_spark.operators import (
-                wand as _w,
-            )
-
-            if batch_key not in _w._BATCH_THETA:
-                _w._BATCH_THETA.clear()
-                _w._BATCH_THETA[batch_key] = {}
-            thetas = _w._BATCH_THETA[batch_key]
-        # int32 group-local doc space (see _decode_terms): scoring is
-        # bandwidth-bound, so halving the doc-array traffic is wall time
-        per_term, doc_base = _decode_terms(pdf, avgdl, local=True)
-        # numpy accumulation + ONE output frame: a pandas DataFrame per
-        # query + concat measured ~1s/group of pure allocator overhead
-        # at 1024 queries. (A group-level dense-score-buffer variant
-        # with per-term index maps was tried and measured 1.6x SLOWER —
-        # scattered writes into a group-wide float buffer lose to the
-        # per-query contiguous unique+searchsorted arrays.)
-        qid_list: list[int] = []
-        doc_blobs: list[bytes] = []
-        score_blobs: list[bytes] = []
-        for qid, term_meta in qmetas.items():
-            items = sorted(
-                (idx, t, idf)
-                for t in per_term
-                for (idx, idf) in term_meta.get(t, [])
-            )
-            if not items:
-                continue
-            # one-pass accumulation: unique(return_inverse) + bincount
-            # replaces T searchsorted passes (T * df_t * log(U) binary
-            # searches). Bit-identical to the per-term loop: bincount
-            # adds element-by-element in input order, and the concat
-            # order below is the same sorted-items order the loop added
-            # in, so every doc's partial sums happen in the identical
-            # floating-point sequence (scripts/bench_score_accum.py
-            # asserts this; 1.2-1.6x on mid/hot-df queries)
-            all_docs = np.concatenate([per_term[t][0] for _, t, _ in items])
-            all_imps = np.concatenate(
-                [idf * per_term[t][1] for _, t, idf in items]
-            )
-            q_docs, inv = np.unique(all_docs, return_inverse=True)
-            scores = np.bincount(inv, weights=all_imps, minlength=q_docs.size)
-            if q_docs.size > k:
-                kth = np.partition(-scores, k - 1)[k - 1]
-                cand = np.flatnonzero(-scores <= kth)
-                order = np.lexsort((q_docs[cand], -scores[cand]))[:k]
-                sel = cand[order]
-            else:
-                sel = np.lexsort((q_docs, -scores))
-            sel_scores = scores[sel]
-            docs_g = q_docs[sel].astype(np.int64) + np.int64(doc_base)
-            # theta = full rank key (kth score, kth GLOBAL doc id): with
-            # the synthetic corpus's heavy BM25 score ties, a score-only
-            # bound keeps whole tie plateaus — the (score desc, doc asc)
-            # rank key the merge actually uses cuts them exactly
-            own_kth = (
-                (float(sel_scores[-1]), int(docs_g[-1]))
-                if sel.size == k
-                else None
-            )
-            prior = thetas.get(qid)
-            if prior is not None:
-                ps, pd_ = prior
-                # drop rows ranking strictly below the certified kth:
-                # >=k docs already outrank them, so they cannot reach
-                # the global top-k
-                keep = (sel_scores > ps) | ((sel_scores == ps) & (docs_g < pd_))
-                sel_scores = sel_scores[keep]
-                docs_g = docs_g[keep]
-            if own_kth is not None and (
-                prior is None
-                or own_kth[0] > prior[0]
-                or (own_kth[0] == prior[0] and own_kth[1] < prior[1])
-            ):
-                thetas[qid] = own_kth
-            if docs_g.size:
-                qid_list.append(qid)
-                doc_blobs.append(docs_g.tobytes())
-                score_blobs.append(sel_scores.tobytes())
-        if not qid_list:
-            return empty
-        return pd.DataFrame(
-            {
-                "query_id": np.asarray(qid_list, dtype=np.int32),
-                "doc_ids": doc_blobs,
-                "scores": score_blobs,
-            }
-        )
-
-    return _bucket_grouped(blocks, n_buckets).applyInPandas(
-        run, schema=BATCH_TOPK_SCHEMA
+    One-pass accumulation: unique(return_inverse) + bincount instead of
+    one searchsorted pass per occurrence (1.2-1.6x on mid/hot-df
+    queries). bincount adds element by element in input order from 0.0,
+    and the occurrences are concatenated in ascending occurrence order,
+    so every doc's partial sums happen in the oracle's floating-point
+    sequence — bit-identical. The matches are seeded with weight 0.0
+    first, which changes no sum (0.0 + x == x)."""
+    occs = sorted(
+        (idx, t, w) for t, ws in term_meta.items() if t in per_term for idx, w in ws
     )
+    docs = [per_term[t][0] for _, t, _ in occs]
+    contrib = [w * per_term[t][1] for _, t, w in occs]
+    if matches is not None:
+        docs.insert(0, matches)
+        contrib.insert(0, np.zeros(matches.size))
+    if not docs:
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
+    q_docs, inv = np.unique(np.concatenate(docs), return_inverse=True)
+    scores = np.bincount(inv, weights=np.concatenate(contrib), minlength=q_docs.size)
+    if matches is not None:
+        keep = np.zeros(q_docs.size, dtype=bool)
+        keep[inv[: matches.size]] = True
+        q_docs, scores = q_docs[keep], scores[keep]
+    # exact top-k with (score desc, doc asc) tie-break: select every doc
+    # scoring >= the k-th score, then lexsort and cut
+    if q_docs.size > k:
+        kth = np.partition(-scores, k - 1)[k - 1]
+        pool = np.flatnonzero(-scores <= kth)
+        sel = pool[np.lexsort((q_docs[pool], -scores[pool]))[:k]]
+    else:
+        sel = np.lexsort((q_docs, -scores))
+    return q_docs[sel], scores[sel]
+
+
+# process-local per-batch theta store: {batch_key: {qid: rank key (-kth
+# score, kth doc) of the best kth seen so far}}. Kernel groups hold
+# DISJOINT doc-id ranges, so the kth-best winner within any already-scored
+# group is a lower bound on the global kth-best — later groups in the
+# same worker process can drop emission rows ranking below it without
+# affecting the merged top-k (same certified-seed argument as
+# _THETA_SEEDS on the MaxScore path). Only the CURRENT batch's thetas are
+# kept (replaced when a new batch_key arrives).
+_BATCH_THETA: dict[str, dict[int, tuple[float, int]]] = {}
+
+
+def _batch_thetas(batch_key: str) -> dict[int, tuple[float, int]]:
+    if batch_key not in _BATCH_THETA:
+        _BATCH_THETA.clear()
+        _BATCH_THETA[batch_key] = {}
+    return _BATCH_THETA[batch_key]
+
+
+def _emission_cut(thetas, qid: int, docs: np.ndarray, scores: np.ndarray, k: int):
+    """One group's winners of query `qid` minus the rows ranking strictly
+    below the certified kth in `thetas` (>= k docs already outrank them,
+    so they cannot reach the global top-k); a full local top-k then
+    tightens the query's theta. The theta is the full rank key (kth
+    score, kth GLOBAL doc id): with heavy BM25 score ties a score-only
+    bound keeps whole tie plateaus, while the (score desc, doc asc) key
+    the merge uses cuts them exactly."""
+    own = (-float(scores[-1]), int(docs[-1])) if docs.size == k else None
+    prior = thetas.get(qid)
+    if prior is not None:
+        keep = (-scores < prior[0]) | ((-scores == prior[0]) & (docs < prior[1]))
+        docs, scores = docs[keep], scores[keep]
+    if own is not None and (prior is None or own < prior):
+        thetas[qid] = own
+    return docs, scores
 
 
 # --------------------------------------------------------------------------
@@ -686,14 +544,23 @@ def tree_has(tree, kind: str) -> bool:
 
 def is_disjunction(tree) -> bool:
     """True for single tokens joined by OR only — the shape the MaxScore
-    body (score_bucket_pruned) scores; every other tree is set-evaluated."""
+    body (score_bucket_pruned) scores, and that boolean_score_bucket
+    matches as the union of its terms' docs without evaluating the tree."""
     return tree[0] == "tok" or (
         tree[0] == "or" and is_disjunction(tree[1]) and is_disjunction(tree[2])
     )
 
 
+def disjunction(tokens) -> tuple:
+    """The OR of single tokens — search_batch's ranked query tree."""
+    tree = ("tok", tokens[0])
+    for t in tokens[1:]:
+        tree = ("or", tree, ("tok", t))
+    return tree
+
+
 def _eval_tree(tree, term_docs, universe, phrase_eval):
-    """Set evaluation over sorted unique int64 doc arrays."""
+    """Set evaluation over sorted unique doc-id arrays."""
     empty = np.empty(0, dtype=np.int64)
     kind = tree[0]
     if kind == "empty":
@@ -780,62 +647,65 @@ def _phrase_eval_factory(pdf: pd.DataFrame, words: tuple[str, ...]):
     return ev
 
 
-def _score_candidates_np(
-    cands: np.ndarray,
-    per_term: dict[str, tuple[np.ndarray, np.ndarray]],
-    term_meta: dict[str, list[tuple[int, float]]],
-    k: int,
-) -> pd.DataFrame:
-    """Scores a fixed candidate array: each term occurrence adds weight *
-    impact, accumulated in term-occurrence order (bit-identical to the
-    oracle); candidates matching no scoring term keep 0.0."""
-    if cands.size == 0:
-        return _empty_topk()
-    scores = np.zeros(cands.size, dtype=np.float64)
-    occs = sorted(
-        (idx, t, w) for t in per_term for (idx, w) in term_meta.get(t, [])
-    )
-    for _, term, w in occs:
-        d, imp = per_term[term]
-        idx = np.searchsorted(cands, d)
-        valid = (idx < cands.size) & (cands[np.minimum(idx, cands.size - 1)] == d)
-        scores[idx[valid]] += w * imp[valid]
-    if cands.size > k:
-        kth = np.partition(-scores, k - 1)[k - 1]
-        pool = np.flatnonzero(-scores <= kth)
-        sel = pool[np.lexsort((cands[pool], -scores[pool]))[:k]]
-    else:
-        sel = np.lexsort((cands, -scores))
-    return pd.DataFrame({"doc_id_int": cands[sel], "score": scores[sel]})
-
-
 def boolean_score_bucket(
     pdf: pd.DataFrame,
-    tree,
-    term_meta: dict[str, list[tuple[int, float]]],
+    queries: dict[int, tuple],
     avgdl: float,
     k: int,
     universe=None,
     impact=bm25_impact,
+    thetas: dict | None = None,
 ) -> pd.DataFrame:
-    """One range bucket of blocks -> boolean/phrase-filtered local top-k,
-    scored with `term_meta` weights times `impact`. The shared per-bucket
-    kernel body: the distributed boolean_topk applies it inside
-    applyInPandas; the engine's driver-local interactive path calls it
-    in-process over cached block frames. `universe` (sorted int64 doc
-    ids of the bucket) is required when the tree contains NOT."""
-    per_term = _decode_terms(pdf, avgdl, impact=impact) if len(pdf) else {}
+    """The set-evaluation kernel body: one kernel group's blocks and a
+    batch {query_id: (tree, term_meta)} -> packed per-query winners
+    (BATCH_TOPK_SCHEMA rows, global doc ids), scored with `term_meta`
+    weights times `impact`. The distributed boolean_topk applies it per
+    group inside applyInPandas; the engine's driver-local leaf calls it
+    in-process over the whole cached block frame.
+
+    The group is decoded once for the whole batch. A pure disjunction
+    matches the union of its scoring terms' docs (no tree evaluation);
+    any other tree is set-evaluated. `universe` (sorted int64 doc ids of
+    the group) is required when a tree contains NOT. `thetas` (see
+    _BATCH_THETA) drops winners that cannot reach the merged top-k."""
+    per_term, base, id_dtype = _decode_terms(pdf, avgdl, impact, universe)
     term_docs = {t: d for t, (d, _) in per_term.items()}
-    # positions decode only happens if/when a phrase subtree is hit
-    phrase_eval = lambda ws: _phrase_eval_factory(pdf, ws)(ws)  # noqa: E731
-    cands = _eval_tree(tree, term_docs, universe, phrase_eval)
-    return _score_candidates_np(cands, per_term, term_meta, k)
+    if universe is not None:
+        universe = (universe - base).astype(id_dtype)
+
+    def phrase_eval(ws):
+        # positions decode only happens if/when a phrase subtree is hit
+        return (_phrase_eval_factory(pdf, ws)(ws) - base).astype(id_dtype)
+
+    qids: list[int] = []
+    doc_blobs: list[bytes] = []
+    score_blobs: list[bytes] = []
+    for qid, (tree, term_meta) in queries.items():
+        matches = (
+            None
+            if is_disjunction(tree)
+            else _eval_tree(tree, term_docs, universe, phrase_eval)
+        )
+        docs, scores = _score(per_term, term_meta, k, matches)
+        docs = docs.astype(np.int64) + np.int64(base)
+        if thetas is not None and docs.size:
+            docs, scores = _emission_cut(thetas, qid, docs, scores, k)
+        if docs.size:
+            qids.append(qid)
+            doc_blobs.append(docs.tobytes())
+            score_blobs.append(scores.tobytes())
+    return pd.DataFrame(
+        {
+            "query_id": np.asarray(qids, dtype=np.int32),
+            "doc_ids": pd.Series(doc_blobs, dtype=object),
+            "scores": pd.Series(score_blobs, dtype=object),
+        }
+    )
 
 
 def boolean_topk(
     blocks: DataFrame,
-    tree,
-    term_meta: dict[str, list[tuple[int, float]]],
+    queries,
     avgdl: float,
     k: int,
     doclen: DataFrame | None = None,
@@ -844,27 +714,58 @@ def boolean_topk(
     n_buckets: int,
     impact=bm25_impact,
 ) -> DataFrame:
-    """Arbitrary boolean/phrase query + ranking (`term_meta` weights times
-    `impact`, so any scorer) in ONE kernel pass. Per kernel group
-    (a run of whole range buckets, see _with_slot): decode ->
-    set-evaluate the tree -> score candidates -> local top-k; the caller
-    merges the tiny per-group winners.
+    """A batch {query_id: (tree, term_meta)} of boolean/phrase queries +
+    ranking (`term_meta` weights times `impact`, so any scorer) in ONE
+    distributed pass: per kernel group (a run of whole range buckets, see
+    _with_slot) one boolean_score_bucket call over a single shared scan
+    and decode. Returns packed (query_id, doc_ids, scores) rows — each
+    group's local top-k per query under the per-process emission theta;
+    the caller merges them (merge_query_topk_driver). A single query is
+    a batch of one.
 
-    NOT needs the complement universe, so when the tree contains one the
-    blocks are COGROUPed with the doclen table (bucketed by the same
-    doc-id range shift and slotted with the same group mapping, so a
-    group's universe is exactly its buckets' docs) — this also covers
-    buckets where the query's
-    tokens have no blocks at all but whose docs still match the
+    Cost model: each kernel group is one Python task with ~0.2 s of
+    fixed overhead, plus one pass of the per-query loop over the group's
+    decoded terms. Both scale with the number of GROUPS, not buckets, so
+    the range buckets are packed into one group per core slot: at 4
+    cores a 32-bucket index runs 4 kernel tasks, each looping the batch
+    once over 8 buckets' postings.
+
+    `queries` may be a plain dict or a pyspark Broadcast of one. Pass a
+    Broadcast for big batches: a plain dict is pickled into the UDF
+    closure and re-deserialized by EVERY task, while a broadcast value
+    is fetched and cached once per executor worker process (measured
+    ~0.2 s/task at 8k queries — a pseudo-constant that grew with batch
+    size).
+
+    NOT needs the complement universe, so when a tree contains one the
+    caller passes `doclen` and `range_shift`, and the blocks are
+    COGROUPed with the doclen table (bucketed by the same doc-id range
+    shift and slotted with the same group mapping, so a group's universe
+    is exactly its buckets' docs) — this also covers groups where the
+    queries' tokens have no blocks at all but whose docs still match the
     complement."""
-    needs_universe = tree_has(tree, "not")
+    # unique per call: worker-process theta stores never leak across
+    # batches (or index generations)
+    batch_key = uuid.uuid4().hex
 
-    def run_one(pdf: pd.DataFrame, universe) -> pd.DataFrame:
-        return boolean_score_bucket(pdf, tree, term_meta, avgdl, k, universe, impact)
+    def run_group(pdf: pd.DataFrame, universe) -> pd.DataFrame:
+        # live-module theta store (see topk_disjunctive.run): a bare
+        # global would be a per-task copy and never share state
+        from text_indexing_and_retrieval_system_spark.operators import (
+            wand as _w,
+        )
 
-    if needs_universe:
-        if doclen is None or range_shift is None:
-            raise ValueError("NOT queries need doclen + range_shift")
+        return boolean_score_bucket(
+            pdf,
+            queries.value if hasattr(queries, "value") else queries,
+            avgdl,
+            k,
+            universe,
+            impact,
+            thetas=_w._batch_thetas(batch_key),
+        )
+
+    if doclen is not None:
         dl_b = doclen.select(
             F.shiftrightunsigned("doc_id_int", range_shift)
             .cast("int")
@@ -874,18 +775,20 @@ def boolean_topk(
 
         def run_co(key, blocks_pdf: pd.DataFrame, dl_pdf: pd.DataFrame) -> pd.DataFrame:
             universe = np.sort(dl_pdf["doc_id_int"].to_numpy(dtype=np.int64))
-            return run_one(blocks_pdf, universe)
+            return run_group(blocks_pdf, universe)
 
         return (
             _bucket_grouped(blocks, n_buckets)
             .cogroup(_grouped(dl_b, n_buckets))
-            .applyInPandas(run_co, schema=TOPK_SCHEMA)
+            .applyInPandas(run_co, schema=BATCH_TOPK_SCHEMA)
         )
 
     def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        return run_one(pdf, None)
+        return run_group(pdf, None)
 
-    return _bucket_grouped(blocks, n_buckets).applyInPandas(run, schema=TOPK_SCHEMA)
+    return _bucket_grouped(blocks, n_buckets).applyInPandas(
+        run, schema=BATCH_TOPK_SCHEMA
+    )
 
 
 def merge_query_topk_driver(
@@ -901,8 +804,10 @@ def merge_query_topk_driver(
     group cut runs on the ~buckets-times-smaller candidate set. At 1024
     queries x 24 buckets x k=50 (1.04M winners) this is 0.31 -> 0.09 s
     of driver tail per batch — a flat constant that was capping the
-    N-vs-4N query scaling pair. The distributed merge_query_topk is the
-    large-cluster path."""
+    N-vs-4N query scaling pair. The merge stays on the driver at every
+    size: the driver holds k x queries result rows anyway, so a
+    distributed merge would save at most a factor of the group count
+    (and measured slower up to at least 1.6M winner rows)."""
     if lpdf.empty:
         return {}
     counts = lpdf["doc_ids"].map(len).to_numpy(dtype=np.int64) // 8
@@ -941,38 +846,3 @@ def merge_query_topk_driver(
         e = min(e, s + k)
         out[int(qids[s])] = list(zip(docs[s:e].tolist(), scores[s:e].tolist()))
     return out
-
-
-def merge_query_topk(local: DataFrame, k: int) -> DataFrame:
-    """Merge per-(query, group) winners to a global per-query top-k
-    inside Spark (one small shuffle on query_id) so the driver collects
-    only k rows per query. One vectorized pandas pass per PARTITION —
-    not per query group (applyInPandas with thousands of tiny groups
-    pays a pandas round trip each)."""
-
-    def run(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            qids, docs, scores = _unpack_winner_rows(pdf)
-            order = np.lexsort((docs, -scores, qids))
-            qids, docs, scores = qids[order], docs[order], scores[order]
-            starts = np.flatnonzero(np.r_[True, qids[1:] != qids[:-1]])
-            ends = np.r_[starts[1:], qids.size]
-            out_q, out_d, out_s = [], [], []
-            for s, e in zip(starts, ends):
-                e = min(e, s + k)
-                out_q.append(int(qids[s]))
-                out_d.append(docs[s:e].tobytes())
-                out_s.append(scores[s:e].tobytes())
-            yield pd.DataFrame(
-                {
-                    "query_id": np.asarray(out_q, dtype=np.int32),
-                    "doc_ids": out_d,
-                    "scores": out_s,
-                }
-            )
-
-    return local.repartition(
-        _core_slots(local.sparkSession), "query_id"
-    ).mapInPandas(run, schema=BATCH_TOPK_SCHEMA)

@@ -153,3 +153,24 @@ def test_missing_term_empty(built_index, oracle_index):
     q = '"zzzznonexistentzzz"'
     assert oracle_index.search(q, k=K) == []
     assert built_index.search_collect(q, k=K).docs == []
+
+
+def test_lexicon_fallback_per_term_scan(spark, built_index, oracle_index, query_set):
+    """A vocabulary over LEX_DRIVER_CACHE_MAX skips the driver lexicon and
+    the whole-index block preload: every lookup is a per-term lexicon scan
+    with a negative cache, every block fetch per term. Golden queries, an
+    absent term and a batch stay bit-exact against the oracle."""
+    idx = engine.InvertedIndex(spark, built_index.dir)
+    idx.LEX_DRIVER_CACHE_MAX = 0
+    absent = '"zzzznonexistentzzz"'
+    for q in [*query_set, absent]:
+        want = oracle_index.search(q, k=K, scorer="bm25")
+        _assert_match(want, idx.search_collect(q, k=K, scorer="bm25"), q + " [fallback]")
+    assert None in idx._lex_cache.values()  # the absent term, negatively cached
+    terms = sorted(oracle_index.postings, key=lambda t: (-len(oracle_index.postings[t]), t))
+    batch = [f'"{terms[0]}"', f'"{terms[1]}" OR "{terms[5]}"', f'"{terms[2]}" OR "{terms[30]}"', absent]
+    got = idx.search_batch(batch, k=K)
+    for q in batch:
+        _assert_match(oracle_index.search(q, k=K, scorer="bm25"), got[q], q + " [fallback batch]")
+    assert idx._full_lex is None
+    assert idx._bulk_blocks is not True

@@ -307,8 +307,8 @@ def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
     token hashes; bit b set iff sum over tokens of (+1 if bit set else
     -1) > 0 — equivalently iff 2 * count(tokens with bit set) > n_tokens.
 
-    Formulation chosen by measurement (scripts/bench_simhash.py): explode
-    tokens -> ONE groupBy(doc_id) with 32 conditional-sum aggregates.
+    Formulation chosen by measurement: explode tokens -> ONE
+    groupBy(doc_id) with 32 conditional-sum aggregates.
     The explode does NOT blow up the shuffle — the hash aggregate's
     map-side partial combine folds each partition's tokens down to one
     33-column row per doc before the exchange, and the whole pipeline

@@ -356,17 +356,12 @@ def build_blocks(
     cfg: IndexBuildConfig,
     range_shift: int,
     n_partitions: int | None = None,
-    partition_cols: list | None = None,
 ) -> DataFrame:
     """segments → doc-id-sorted compressed blocks, one shuffle.
 
-    Default shuffle key (term, range_bucket): contiguous doc-id ranges
-    per bucket so a hot term splits across buckets without overlapping
-    block ranges. `partition_cols` overrides the shuffle key — the index
-    writer passes the term-hash sub-bucket so the pack output lands
-    already in its final file layout (one shuffle end-to-end instead of
-    pack-shuffle + write-shuffle); blocks are still cut per
-    (term, range_bucket) by the sort order either way.
+    Shuffle key (term, range_bucket): contiguous doc-id ranges per
+    bucket so a hot term splits across buckets without overlapping
+    block ranges.
 
     Physical shape: repartition + sortWithinPartitions + mapInPandas with
     a cross-batch carry buffer — NOT groupBy().applyInPandas(), which
@@ -471,9 +466,8 @@ def build_blocks(
     with_bucket = segments.filter(F.col("term") != "").withColumn(
         "range_bucket", F.shiftrightunsigned(F.col("doc_id_int"), range_shift).cast("int")
     )
-    keys = partition_cols if partition_cols is not None else ["term", "range_bucket"]
     return (
-        with_bucket.repartition(n_partitions, *keys)
+        with_bucket.repartition(n_partitions, "term", "range_bucket")
         .sortWithinPartitions("term", "range_bucket", "doc_id_int")
         .mapInPandas(pack_partition, schema=BLOCKS_SCHEMA)
     )

@@ -13,14 +13,17 @@ from text_indexing_and_retrieval_system_spark.operators.index_build import (
 )
 
 
-def _lexicon_map(spark, index_dir):
-    rows = spark.read.parquet(os.path.join(index_dir, "lexicon")).collect()
-    return {r["term"]: (r["df"], r["cf"], round(r["idf"], 10)) for r in rows}
+def _rows(spark, index_dir, table, cols):
+    path = os.path.join(index_dir, table)
+    return spark.read.parquet(path).select(*cols).orderBy(*cols[:3]).collect()
 
 
-def _doclen_map(spark, index_dir):
-    rows = spark.read.parquet(os.path.join(index_dir, "doclen")).collect()
-    return {r["doc_id"]: r["dl"] for r in rows}
+LEX_COLS = ["term", "df", "cf", "idf", "max_impact", "n_blocks"]
+POST_COLS = [
+    "term", "range_bucket", "first_doc", "last_doc", "n", "max_tf", "min_dl", "sum_tf",
+    "payload", "pos_payload",
+]
+DOCLEN_COLS = ["doc_id_int", "doc_id", "dl"]
 
 
 def test_crash_resume_identical(spark, corpus_df, built_index, tmp_path):
@@ -43,10 +46,11 @@ def test_crash_resume_identical(spark, corpus_df, built_index, tmp_path):
         spark, corpus_df, crash_dir, cfg, input_desc="resume-test"
     )
 
-    # identical to the independently-built reference index
+    # row-identical to the independently built 2-chunk reference index:
+    # stages 2-3 run once over all segments, whatever the chunk count
     ref_dir = built_index.dir
-    assert _doclen_map(spark, crash_dir) == _doclen_map(spark, ref_dir)
-    assert _lexicon_map(spark, crash_dir) == _lexicon_map(spark, ref_dir)
+    for table, cols in (("doclen", DOCLEN_COLS), ("lexicon", LEX_COLS), ("postings", POST_COLS)):
+        assert _rows(spark, crash_dir, table, cols) == _rows(spark, ref_dir, table, cols), table
     with open(os.path.join(crash_dir, "stats.json")) as f:
         stats_b = json.load(f)
     # `generation` is a random per-build id (theta-seed cache key) —

@@ -203,87 +203,3 @@ def test_realistic_spread_distributed_matches_pandas(spark):
     sdf = sdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     pdf = pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     assert (sdf["text"] == pdf["text"]).all()
-
-
-def test_compaction_merges_chunked_postings(spark, corpus_df, tmp_path):
-    """stage 5: per-chunk posting segments merge into one file set per
-    bucket; query results identical; resumable + crash-recoverable."""
-    import glob
-    import shutil
-
-    d_nc = str(tmp_path / "nocompact")
-    d_c = str(tmp_path / "compact")
-    cfg_nc = IndexBuildConfig(
-        n_term_buckets=4, n_range_buckets=4, n_segment_chunks=2, compact=False,
-        chunk_min_convs=0,
-    )
-    cfg_c = IndexBuildConfig(
-        n_term_buckets=4, n_range_buckets=4, n_segment_chunks=2, compact=True,
-        chunk_min_convs=0,
-    )
-    a = engine.build(spark, corpus_df, d_nc, cfg_nc, input_desc="nc")
-    b = engine.build(spark, corpus_df, d_c, cfg_c, input_desc="c")
-    # chunked layout has chunk= dirs; compacted does not
-    assert glob.glob(os.path.join(d_nc, "postings", "chunk=*"))
-    assert not glob.glob(os.path.join(d_c, "postings", "chunk=*"))
-    assert glob.glob(os.path.join(d_c, "postings", "bucket=*"))
-    n_nc = len(glob.glob(os.path.join(d_nc, "postings", "**", "*.parquet"),
-                         recursive=True))
-    n_c = len(glob.glob(os.path.join(d_c, "postings", "**", "*.parquet"),
-                        recursive=True))
-    assert n_c < n_nc
-    for q in ['"said" OR "index"', '"said" AND NOT "index"', 'PHRASE "it said"']:
-        ra = a.search_collect(q, k=20)
-        rb = b.search_collect(q, k=20)
-        assert ra.docs == rb.docs and ra.scores == rb.scores, q
-    # crash recovery under the rename-first swap protocol (write tmp ->
-    # rename postings->old -> rename tmp->postings -> rmtree old); each
-    # scenario is a state the protocol can actually die in
-    post = os.path.join(d_c, "postings")
-    old = post + "_old"
-    tmp = post + "_compact"
-
-    def _uncommit():
-        os.remove(os.path.join(d_c, "_manifests", "stage5_compact.json"))
-        os.remove(os.path.join(d_c, "_manifests", "build.json"))
-
-    def _check(label):
-        assert os.path.isdir(post), label
-        assert not os.path.isdir(old) and not os.path.isdir(tmp), label
-        rb2 = engine.InvertedIndex(spark, d_c).search_collect(
-            '"said" OR "index"', k=20
-        )
-        ra2 = a.search_collect('"said" OR "index"', k=20)
-        assert rb2.docs == ra2.docs and rb2.scores == ra2.scores, label
-
-    # (1) died between the two renames: old complete, tmp complete,
-    # postings missing
-    os.rename(post, tmp)  # tmp == the completed merge output
-    shutil.copytree(tmp, old)  # old == the pre-merge source
-    _uncommit()
-    engine.build(spark, corpus_df, d_c, cfg_c, input_desc="c")
-    _check("between renames")
-
-    # (2) died after both renames but before rmtree(old)
-    shutil.copytree(post, old)
-    _uncommit()
-    engine.build(spark, corpus_df, d_c, cfg_c, input_desc="c")
-    _check("before rmtree old")
-
-    # (3) died MID-rmtree(old): old exists but is partially deleted —
-    # the advisor's scenario; recovery must never read it as a source
-    shutil.copytree(post, old)
-    for leaf in sorted(d for d in os.listdir(old) if d.startswith("bucket="))[:1]:
-        shutil.rmtree(os.path.join(old, leaf))
-    _uncommit()
-    engine.build(spark, corpus_df, d_c, cfg_c, input_desc="c")
-    _check("mid rmtree old")
-
-    # (4) died mid-merge-write: tmp partial, postings intact, no old —
-    # the partial tmp must be discarded and the merge redone
-    shutil.copytree(post, tmp)
-    for leaf in sorted(d for d in os.listdir(tmp) if d.startswith("bucket="))[:1]:
-        shutil.rmtree(os.path.join(tmp, leaf))
-    _uncommit()
-    engine.build(spark, corpus_df, d_c, cfg_c, input_desc="c")
-    _check("partial tmp")

@@ -2,10 +2,14 @@
 [0,60) + streamed ingestion of convs [60,80) + refresh must equal a
 one-shot batch build over all 80 conversations (doc ids, lexicon, search
 results), and a streamed turn can then be deleted; replayed
-micro-batches are skipped; a single-chunk build + add + refresh writes
-the same tables as a one-shot build."""
+micro-batches are skipped; a build + add + refresh writes the same
+tables as a one-shot build, for one or several segment chunks; a failed
+stats write leaves the previous stats.json loadable."""
 
+import dataclasses
+import json
 import os
+import shutil
 
 import pytest
 
@@ -127,22 +131,25 @@ def _rows(spark, index_dir, table, cols, order):
     return spark.read.parquet(path).select(*cols).orderBy(*order).collect()
 
 
-def test_refresh_equals_rebuild(spark, corpus_df, corpus_pdf, tmp_path):
+@pytest.mark.parametrize("n_chunks", [1, 3])
+def test_refresh_equals_rebuild(spark, corpus_df, corpus_pdf, tmp_path, n_chunks):
     """build(48 convs) + add_documents(16) + refresh writes the tables a
     one-shot build of the same 64 convs writes: same doc-id geometry,
     stats, lexicon and posting blocks, so every query shape answers
-    bit-identically."""
+    bit-identically. Both builds run n_chunks segment chunks; posting
+    rows must not depend on the chunk count."""
+    cfg = dataclasses.replace(EQ_CFG, n_segment_chunks=n_chunks)
     base = corpus_df.filter(corpus_df.conv_id < "conv-00000048")
     added = corpus_df.filter(
         (corpus_df.conv_id >= "conv-00000048") & (corpus_df.conv_id < "conv-00000064")
     )
     inc_dir = str(tmp_path / "inc")
-    engine.build(spark, base, inc_dir, EQ_CFG, input_desc="eq")
+    engine.build(spark, base, inc_dir, cfg, input_desc="eq")
     inc.add_documents(spark, inc_dir, added)
     inc.refresh_postings(spark, inc_dir)
     got = engine.load(spark, inc_dir)
     want = engine.build(
-        spark, base.unionByName(added), str(tmp_path / "ref"), EQ_CFG, input_desc="eq"
+        spark, base.unionByName(added), str(tmp_path / "ref"), cfg, input_desc="eq"
     )
 
     assert (got.range_shift, got.kernel_buckets) == (want.range_shift, want.kernel_buckets)
@@ -176,3 +183,23 @@ def test_refresh_equals_rebuild(spark, corpus_df, corpus_pdf, tmp_path):
         b = want.search_collect(q, k=20)
         assert a.docs, q
         assert (a.docs, a.scores) == (b.docs, b.scores), q
+
+
+def test_failed_stats_write_keeps_previous_stats(spark, built_index, tmp_path, monkeypatch):
+    """stats.json is replaced atomically: a refresh whose stats write
+    fails part-way leaves the previous stats.json, and the index loads."""
+    idx_dir = str(tmp_path / "idx")
+    shutil.copytree(built_index.dir, idx_dir)
+    real_dump = json.dump
+
+    def failing_dump(obj, fp, *args, **kwargs):
+        if "generation" in obj:  # the stats payload
+            fp.write("{")
+            raise OSError("disk full")
+        return real_dump(obj, fp, *args, **kwargs)
+
+    monkeypatch.setattr(json, "dump", failing_dump)
+    with pytest.raises(OSError, match="disk full"):
+        inc.refresh_postings(spark, idx_dir)
+    monkeypatch.undo()
+    assert engine.load(spark, idx_dir).stats == built_index.stats

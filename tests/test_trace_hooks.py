@@ -2,7 +2,9 @@
 functions by name (`perfbench/tracing.py`, Tracer.install_engine_spans);
 a renamed hook makes it fail at install. Every query leaf runs here under
 the installed spans, which must record the path and kernel spans and
-uninstall cleanly."""
+uninstall cleanly. The traced run also reads build layer walls from the
+build's manifest-unit names (`layers.BUILD_UNITS`); a renamed unit
+drops its layer's wall."""
 
 import os
 import sys
@@ -11,6 +13,7 @@ from text_indexing_and_retrieval_system_spark import engine
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "perfbench"))
 
+import layers  # noqa: E402
 from tracing import Tracer  # noqa: E402
 
 
@@ -44,3 +47,16 @@ def test_engine_spans_install_record_and_uninstall(spark, built_index, oracle_in
     assert sum(sp.name == "engine.path.distributed" for sp in tracer.spans) == 2
     for owner, attr, orig in patches:
         assert getattr(owner, attr) is orig, attr
+
+
+def test_build_manifest_walls_cover_every_layer(built_index):
+    walls = layers._manifest_walls(built_index.dir)
+    for layer in (
+        "segments.convmap",
+        "index_build.tokenize",
+        "segments.doclen",
+        "index_build.pack",
+        "segments.docstore",
+        "segments.lexicon",
+    ):
+        assert layer in walls, (layer, sorted(walls))

@@ -304,9 +304,9 @@ class InvertedIndex:
         if self._doclen_df is None:
             self._doclen_df = (
                 self.spark.read.parquet(os.path.join(self.dir, "doclen"))
-                # a fresh build writes doclen/chunk=<i>/ (per-chunk
-                # pipeline); drop the inferred partition column so the
-                # relation is shape-identical to a refreshed (flat) one
+                # the contract columns: doclen/ is flat (build and
+                # refresh write it once over all segments), but indexes
+                # built before that hold doclen/chunk=<i>/ partitions
                 .select("doc_id_int", "doc_id", "dl")
                 .persist()
             )

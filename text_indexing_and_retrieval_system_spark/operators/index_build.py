@@ -9,8 +9,8 @@ scale:
            (doc-level pre-aggregation: emits (doc, term, tf, positions)
            instead of a token stream → the only big shuffle moves
            pre-combined rows); written as chunked *segments* (resumable)
-  stage 2  doclen + collection stats (N, avgdl) from segments
-  stage 3  shuffle segments to (term, doc-range bucket) → applyInPandas
+  stage 2  doclen + collection stats (N, avgdl) from all segments
+  stage 3  shuffle all segments to (term, doc-range bucket) → mapInPandas
            packs doc-id-sorted blocks (delta-gap+varint payloads,
            per-block max BM25 impact) + lexicon (term, df, cf, idf)
   stage 4  doc store (hydration table)
@@ -58,20 +58,16 @@ class IndexBuildConfig:
     n_term_buckets: int = 16
     n_range_buckets: int = 32
     store_positions: bool = True
-    n_segment_chunks: int = 4  # resumable stage-1 granularity
-    # scale-aware clamp: chunked pipelining + compaction pay off above
-    # ~10^5 convs (resume granularity, bounded shuffle state); below
-    # chunk_min_convs the build runs as ONE chunk and skips compaction
-    # (the single-chunk layout is already one file set per bucket),
-    # saving ~2 s of per-job constants at sf0.1. Set 0 to force the
-    # configured chunk count at any size (tests do).
+    # resume granularity of the doc store and tokenize (stages 4 and 1);
+    # stages 2-3 run once over all chunks' segments, so no index table's
+    # rows depend on it
+    n_segment_chunks: int = 4
+    # scale-aware clamp: chunks pay off above ~10^5 convs (resume
+    # granularity, bounded per-chunk shuffle state); below
+    # chunk_min_convs the build runs as ONE chunk, saving per-job
+    # constants. Set 0 to force the configured chunk count at any size
+    # (tests do).
     chunk_min_convs: int = 32_000
-    # two-level merge (north_star): chunk pipelines write per-chunk
-    # posting segments for build pipelining; a final compaction merges
-    # them into ONE term-sorted file set per bucket — measured 6x fewer
-    # files and 15-35% faster query batches at 4.84M turns. Disable for
-    # build-latency-critical paths that accept the chunked layout.
-    compact: bool = True
 
     def lineage(self) -> dict:
         d = asdict(self)
@@ -84,6 +80,7 @@ class IndexBuildConfig:
         round-trip) — incremental updates must tokenize and bucket with
         the SAME config the index was built with."""
         d = dict(d)
+        d.pop("compact", None)  # a removed option older manifests record
         norm = dict(d.pop("normalize", {}))
         if "stopword_languages" in norm:
             norm["stopword_languages"] = tuple(norm["stopword_languages"])
@@ -340,8 +337,8 @@ def impact_bound_col(avgdl: float):
     pair: impact is monotone increasing in tf and decreasing in dl, so
     impact(max_tf, min_dl) >= impact(tf_i, dl_i) for every posting in the
     block. Computed at READ time (blocks_for) so block packing needs no
-    global avgdl — that's what lets stage 3 run per chunk, pipelined with
-    tokenize, instead of behind a global-stats barrier. WAND/MaxScore
+    global avgdl — that's what lets stage 3 run concurrently with stage
+    2 instead of behind a global-stats barrier. WAND/MaxScore
     pruning stays exact under any valid upper bound (wand.py phase A)."""
     tf = F.col("max_tf").cast("double")
     return (

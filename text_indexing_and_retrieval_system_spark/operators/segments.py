@@ -10,9 +10,12 @@ A restarted build skips every manifest-complete unit, so a build killed
 mid-way resumes from the last finished chunk and produces an identical
 index (verified by tests/test_resume.py).
 
-The stage writers (`write_*`) and the doc-id geometry are shared with
-`streaming/incremental.py`, whose updates write segments with stage 1
-and whose refresh runs stages 2-3 over all segments.
+Stages 2-3 (doclen, stats, postings, lexicon) have one derivation,
+`derive_tables`, run once over all segments: the build calls it after
+its chunk loop, and `streaming/incremental.py`'s refresh calls it over
+the grown, tombstone-filtered segment set. Posting rows therefore never
+depend on the chunk count, and a refresh rewrites what a build of the
+same live docs writes.
 
 On-disk layout (parquet-catalog fallback for Iceberg — see
 sources/catalog.py for the seam):
@@ -41,6 +44,7 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -81,6 +85,15 @@ def parquet_num_rows(path: str) -> int:
     return total
 
 
+def write_json(path: str, payload: dict) -> None:
+    """Replace a JSON file atomically (tmp file + rename): a write that
+    fails part-way leaves the previous version readable."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(payload, f, indent=2, default=str)
+    os.replace(tmp, path)
+
+
 class Manifests:
     def __init__(self, index_dir: str):
         self.dir = os.path.join(index_dir, "_manifests")
@@ -97,11 +110,7 @@ class Manifests:
             return json.load(f).get("status") == "complete"
 
     def record(self, unit: str, **info):
-        payload = {"unit": unit, "status": "complete", **info}
-        tmp = self.path(unit) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(payload, f, indent=2, default=str)
-        os.replace(tmp, self.path(unit))
+        write_json(self.path(unit), {"unit": unit, "status": "complete", **info})
 
     def read(self, unit: str) -> dict | None:
         p = self.path(unit)
@@ -151,8 +160,9 @@ def doc_range_partitioned(df: DataFrame, range_shift: int, n_range_buckets: int)
 
 # ---------------- stage writers ----------------
 # Each writes one table through the TableProvider seam. The build writes
-# per-chunk units (`<table>/chunk=<i>`); refresh writes staged tables
-# over all segments and swaps them in with `commit_staged`.
+# per-chunk docs/segments units (`<table>/chunk=<i>`) and live stage 2-3
+# tables; refresh writes staged stage 2-3 tables and swaps them in with
+# `commit_staged`.
 
 
 def write_segment(
@@ -264,6 +274,84 @@ def write_lexicon(
     )
 
 
+# Manifest units of the build's stages 2-3. perfbench/layers.py
+# (BUILD_UNITS) reads build layer walls by unit-name prefix:
+# `stage2_chunk_` is doclen, `stage3_chunk_` is pack, `stage3_postings`
+# is the lexicon. engine.reload and incremental._resolve_cfg also read
+# `stage3_postings` (range_shift, n_terms, config).
+DOCLEN_UNIT = "stage2_chunk_all"
+PACK_UNIT = "stage3_chunk_all"
+LEXICON_UNIT = "stage3_postings"
+
+
+def derive_tables(
+    segments: DataFrame,
+    convmap: DataFrame,
+    n_convs: int,
+    cfg: IndexBuildConfig,
+    provider: TableProvider,
+    table: Callable[[str], str] = lambda name: name,
+    man: Manifests | None = None,
+    lineage: dict | None = None,
+) -> dict:
+    """Stages 2-3 over a segments frame: doclen + stats, postings, then
+    the lexicon; returns the stats. Build and refresh both derive their
+    tables here. `table` maps a table name to the one written (refresh
+    passes the provider's staged names). With `man`, each step is a
+    manifest unit that a resumed build skips; the doclen unit records
+    n_docs/total_tokens, so the stats survive a resume."""
+    range_shift = range_shift_for(n_convs, cfg.n_range_buckets)
+
+    def unit(name: str, step: Callable[[], dict]) -> dict:
+        if man is not None and man.done(name):
+            return man.read(name)
+        t0 = time.time()
+        info = step()
+        if man is not None:
+            man.record(name, seconds=time.time() - t0, **info, **(lineage or {}))
+        return info
+
+    def doclen() -> dict:
+        n_docs, total_tokens = write_doclen(
+            segments, convmap, range_shift, cfg.n_range_buckets, provider, table("doclen")
+        )
+        return {"n_docs": n_docs, "total_tokens": total_tokens}
+
+    def pack() -> dict:
+        # two shuffles by measurement: pack on (term, range_bucket) —
+        # fine-grained, skew-free partitions for the big sort+pack — then
+        # re-key the (much smaller) packed blocks to 4 aligned files per
+        # bucket dir (a single term-keyed shuffle writing directly was
+        # ~40% slower: the dynamic-partition writer re-sorts each task's
+        # payload rows by dir)
+        blocks = ib.build_blocks(segments, cfg, range_shift)
+        write_postings(blocks, cfg.n_term_buckets, provider, table("postings"))
+        return {}
+
+    # doclen and block packing both read only the segments — independent
+    # jobs, overlapped (guide §2.6): the small doclen write back-fills
+    # executors the pack stage's shuffle tail leaves idle
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        doclen_job = pool.submit(unit, DOCLEN_UNIT, doclen)
+        pack_job = pool.submit(unit, PACK_UNIT, pack)
+        counts = doclen_job.result()
+        pack_job.result()
+    stats = index_stats(counts["n_docs"], counts["total_tokens"], n_convs)
+
+    def lexicon() -> dict:
+        write_lexicon(
+            provider.read(segments.sparkSession, table("postings")),
+            stats,
+            cfg.n_term_buckets,
+            provider,
+            table("lexicon"),
+        )
+        return {"n_terms": provider.num_rows(table("lexicon")), "range_shift": range_shift}
+
+    unit(LEXICON_UNIT, lexicon)
+    return stats
+
+
 def _config_hash(cfg: IndexBuildConfig, input_desc: str) -> str:
     return hashlib.md5(
         json.dumps({"cfg": cfg.lineage(), "input": input_desc}, sort_keys=True).encode()
@@ -305,9 +393,6 @@ def build_index(
 
     docs = ib.with_doc_ids(transcripts, convmap)
 
-    range_shift = range_shift_for(n_convs, cfg.n_range_buckets)
-
-    postings_path = os.path.join(index_dir, "postings")
     docs_path = os.path.join(index_dir, "docs")
     n_chunks = cfg.n_segment_chunks
     if n_convs < cfg.chunk_min_convs:
@@ -315,18 +400,12 @@ def build_index(
         # so resumes re-derive the same chunk geometry
         n_chunks = 1
 
-    # ---------------- stages 1-4: per-chunk pipelines ----------------
+    # ---------------- stages 4 and 1: per-chunk pipelines ----------------
     # Chunks are contiguous conversation ranges, so their doc-id sets are
-    # disjoint: docs-store write -> tokenize -> doclen -> pack+write
-    # postings runs per chunk with NO global barrier. Block packing no
-    # longer needs global avgdl (blocks carry (max_tf, min_dl); the
-    # impact bound folds in at read time — ib.impact_bound_col), which is
-    # what unlocks the pipeline: chunk i's pack/write (the one phase
-    # bounded by the write path, not cores) overlaps chunk i+1's
-    # CPU-bound tokenize instead of serializing behind all of stage 1.
-    # Per-(term, range_bucket) blocks from different chunks cover
-    # disjoint ordered doc ranges, so queries traverse them exactly like
-    # same-shuffle blocks.
+    # disjoint: docs-store write -> tokenize runs per chunk with no global
+    # barrier, and a chunk is the resume unit of both. Stages 2-3 then
+    # run once over all segments (derive_tables, as refresh does), so the
+    # posting rows do not depend on the chunk count.
     #
     # The doc store (stage 4, reference S5 `index_custom.py:203-211`) is
     # folded INTO the chunk pipeline rather than run as a separate
@@ -430,48 +509,11 @@ def build_index(
             do_stage4()
             do_stage1(False)
 
-        def do_stage2() -> None:
-            unit2 = f"stage2_chunk_{chunk:03d}"
-            if man.done(unit2):
-                return
-            t0 = time.time()
-            seg = store.read(spark, chunk_seg)
-            n_docs, total_tokens = write_doclen(
-                seg, convmap, range_shift, cfg.n_range_buckets, store, f"doclen/chunk={chunk}"
-            )
-            man.record(
-                unit2, n_docs=n_docs, total_tokens=total_tokens, seconds=time.time() - t0, **lineage
-            )
-
-        def do_stage3() -> None:
-            unit3 = f"stage3_chunk_{chunk:03d}"
-            if man.done(unit3):
-                return
-            t0 = time.time()
-            # two shuffles by measurement: pack on (term, range_bucket) —
-            # fine-grained, skew-free partitions for the big sort+pack —
-            # then re-key the (much smaller) packed blocks to 4 aligned
-            # files per bucket dir (a single term-keyed shuffle writing
-            # directly was ~40% slower: the dynamic-partition writer
-            # re-sorts each task's payload rows by dir)
-            blocks = ib.build_blocks(store.read(spark, chunk_seg), cfg, range_shift)
-            write_postings(blocks, cfg.n_term_buckets, store, f"postings/chunk={chunk}")
-            man.record(unit3, seconds=time.time() - t0, **lineage)
-
-        # doclen (stage 2) and block packing (stage 3) both read ONLY the
-        # chunk's segments — independent jobs, overlapped (guide §2.6):
-        # the small doclen write back-fills executors the pack stage's
-        # shuffle tail leaves idle
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f2 = pool.submit(do_stage2)
-            f3 = pool.submit(do_stage3)
-            f2.result()
-            f3.result()
-
     # finer scan splits for the build's own reads: the docs chunks are
     # written with 8 MB row groups, and a 16 MB split bin stops Spark
     # from packing them into a couple of fat tokenize tasks (the split
-    # count is stage 1's parallelism ceiling). Restored afterwards.
+    # count is stage 1's parallelism ceiling). Stages 2-3 run inside the
+    # same window. Restored afterwards.
     SPLIT_CONF = "spark.sql.files.maxPartitionBytes"
     prev_split = spark.conf.get(SPLIT_CONF, None)
     spark.conf.set(SPLIT_CONF, str(16 << 20))
@@ -500,77 +542,24 @@ def build_index(
             )
             with ThreadPoolExecutor(max_workers=width) as pool:
                 list(pool.map(run_chunk, range(n_chunks)))
+
+        # ---------------- stages 2-3: doclen, stats, postings, lexicon ----------------
+        stats = derive_tables(
+            store.read(spark, "segments").drop("chunk"),
+            convmap,
+            n_convs,
+            cfg,
+            store,
+            man=man,
+            lineage=lineage,
+        )
     finally:
         if prev_split is None:
             spark.conf.unset(SPLIT_CONF)
         else:
             spark.conf.set(SPLIT_CONF, prev_split)
 
-    # ---------------- stats fold + global lexicon ----------------
-    chunk_stats = [man.read(f"stage2_chunk_{chunk:03d}") for chunk in range(n_chunks)]
-    stats = index_stats(
-        # `or 0`: older manifests record None for an empty chunk
-        sum(info["n_docs"] or 0 for info in chunk_stats),
-        sum(info["total_tokens"] or 0 for info in chunk_stats),
-        n_convs,
-    )
-    with open(os.path.join(index_dir, "stats.json"), "w") as f:
-        json.dump(stats, f, indent=2)
-
-    if not man.done("stage3_postings"):
-        t0 = time.time()
-        write_lexicon(store.read(spark, "postings"), stats, cfg.n_term_buckets, store, "lexicon")
-        man.record(
-            "stage3_postings",
-            n_terms=store.num_rows("lexicon"),
-            range_shift=range_shift,
-            seconds=time.time() - t0,
-            **lineage,
-        )
-
-    # ---------------- stage 5: two-level merge (compaction) ----------------
-    # Per-chunk posting segments are the BUILD-side layout (pipelining);
-    # queries prefer one term-sorted file set per bucket: 6 chunks meant
-    # 6x the files/footers/row-group runs per term (measured 15-35%
-    # slower 1024-query batches at 4.84M turns). The merge is a single
-    # scalable shuffle+write; same columns, same blocks — blocks from
-    # different chunks cover disjoint doc ranges and coexist unchanged.
-    # Skipped entirely for single-chunk builds: with one chunk the layout
-    # is already one term-sorted file set per bucket (under chunk=0/), so
-    # the merge would only strip a partition level the readers already
-    # handle — pure cost at small scale.
-    if cfg.compact and n_chunks > 1 and not man.done("stage5_compact"):
-        t0 = time.time()
-        merged_tmp = postings_path + "_compact"
-        old_path = postings_path + "_old"
-        # Crash-atomic swap: rename FIRST, delete LAST, and key recovery
-        # on the presence of postings_old (renames are atomic; rmtree is
-        # not — a half-deleted postings dir must never be re-read as a
-        # compaction source).
-        if os.path.isdir(old_path):
-            # a previous run completed the merge write (the rename away
-            # from postings_path only ever happens after the write
-            # finished) and died somewhere in the swap — finish it
-            if not os.path.isdir(postings_path):
-                if os.path.isdir(merged_tmp):
-                    os.rename(merged_tmp, postings_path)
-                else:  # pragma: no cover - impossible under this protocol
-                    os.rename(old_path, postings_path)
-            if os.path.isdir(old_path) and os.path.isdir(postings_path):
-                shutil.rmtree(old_path)
-        else:
-            if os.path.isdir(merged_tmp):
-                # no postings_old -> the merge write never committed its
-                # swap; the tmp dir may be partial, so redo it from the
-                # (still intact) chunked source
-                shutil.rmtree(merged_tmp)
-            blocks = store.read(spark, "postings").drop("chunk")
-            write_postings(blocks, cfg.n_term_buckets, store, os.path.basename(merged_tmp))
-            os.rename(postings_path, old_path)
-            os.rename(merged_tmp, postings_path)
-            shutil.rmtree(old_path)
-        man.record("stage5_compact", seconds=time.time() - t0, **lineage)
-
+    write_json(os.path.join(index_dir, "stats.json"), stats)
     man.record(
         "build",
         seconds_total=time.time() - t_build0,

@@ -6,14 +6,13 @@ turns arrive as a batch (`add_documents`) or a stream (`ingest_stream`,
 file source / Kafka in prod), and the build's stage-1 writer turns each
 into a new *segment* directory with its own manifest — the unit the
 batch builder checkpoints — and appends the turns to the docs/ store,
-where `delete_documents` resolves ids. `refresh_postings` then runs the
-build's stages 2-3 (`operators/segments.py`, which holds every table
-plan) over all live segments with the build's doc-id geometry (run on a
-schedule, LSM-style). The refreshed index has the doc-id geometry,
-stats and query results of a one-shot build of the same live
-documents; its tables are row-identical to that build's when the build
-is one segment chunk and nothing was deleted (a multi-chunk build packs
-blocks per chunk, and deleted convs keep their conv ints).
+where `delete_documents` resolves ids. `refresh_postings` then calls
+`segments.derive_tables`, the build's own stages 2-3, over all live
+segments with the build's doc-id geometry (run on a schedule,
+LSM-style). The refreshed index has the doc-id geometry, stats and
+query results of a one-shot build of the same live documents; its
+tables are row-identical to that build's, for any segment chunk count,
+when nothing was deleted (deleted convs keep their conv ints).
 
 Doc ids: streaming turns get conv ids beyond the batch-assigned dense
 range via a deterministic hash-partitioned extension map (new convs
@@ -23,7 +22,6 @@ For the sandbox tests, stream input re-uses pre-assigned conv ints.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
@@ -203,10 +201,11 @@ def refresh_postings(
 ) -> dict:
     """Rebuild doclen/stats/postings/lexicon/docs from ALL segments
     (batch, added and streamed) minus tombstoned docs: the build's stages
-    2-3 run over the grown segment set, with the build's doc-id geometry
-    (n_convs from the convmap's footers); see the module docstring for
-    how the result compares with a one-shot build. Writes staged
-    tables then swaps them in, so readers never see a partial index.
+    2-3 (`segments.derive_tables`) run over the grown segment set, with
+    the build's doc-id geometry (n_convs from the convmap's footers); see
+    the module docstring for how the result compares with a one-shot
+    build. Writes staged tables then swaps them in, so readers never see
+    a partial index.
     Config defaults to the build manifest's (see `_resolve_cfg`). An
     `InvertedIndex` handle held across a refresh serves stale
     stats/lexicon — call its `reload()` afterwards."""
@@ -215,19 +214,12 @@ def refresh_postings(
     provider = ParquetDirProvider(index_dir)  # the TableProvider seam:
     # point this at an IcebergProvider and the staged-write + commit
     # below become catalog transactions (sources/provider.py)
-    stage = provider.stage_name
     seg = _apply_tombstones(spark, index_dir, provider.read(spark, "segments").drop("chunk"))
     n_convs = provider.num_rows("convmap")
-    range_shift = segments.range_shift_for(n_convs, cfg.n_range_buckets)
-    convmap = provider.read(spark, "convmap")
-    n_docs, total_tokens = segments.write_doclen(
-        seg, convmap, range_shift, cfg.n_range_buckets, provider, stage("doclen")
+    stats = segments.derive_tables(
+        seg, provider.read(spark, "convmap"), n_convs, cfg, provider, table=provider.stage_name
     )
-    stats = segments.index_stats(n_docs, total_tokens, n_convs)
-    blocks = ib.build_blocks(seg, cfg, range_shift)
-    segments.write_postings(blocks, cfg.n_term_buckets, provider, stage("postings"))
-    postings = provider.read(spark, stage("postings"))
-    segments.write_lexicon(postings, stats, cfg.n_term_buckets, provider, stage("lexicon"))
+    range_shift = segments.range_shift_for(n_convs, cfg.n_range_buckets)
 
     # docs/ hydration store: drop tombstoned docs (and self-heal duplicate
     # doc_id_int rows a replayed add_documents append may have left —
@@ -256,8 +248,7 @@ def refresh_postings(
     # swap the staged tables in (rename per table on the parquet backend;
     # catalog transactions on Iceberg) + stats/manifest update
     provider.commit_staged(["doclen", "postings", "lexicon", "docs"])
-    with open(os.path.join(index_dir, "stats.json"), "w") as f:
-        json.dump(stats, f, indent=2)
+    segments.write_json(os.path.join(index_dir, "stats.json"), stats)
     man.record(
         "refresh_postings",
         range_shift=range_shift,

@@ -72,8 +72,8 @@ def test_query_shapes_all_scorers(
     built_index, distributed_index, oracle_index, corpus_pdf, scorer
 ):
     """Every scorer x term/AND/OR/NOT/PHRASE/PHRASE OR, driver-local and
-    distributed, bit-exact against the oracle (a bm25 OR takes the
-    MaxScore body, everything else the set-evaluation kernel)."""
+    distributed, bit-exact against the oracle (every shape takes the
+    set-evaluation kernel)."""
     by_df = sorted(oracle_index.postings, key=lambda t: -len(oracle_index.postings[t]))
     hot, mid = by_df[0], by_df[20]
     tokens = normalize_to_tokens(corpus_pdf["text"].head(50))
@@ -95,9 +95,8 @@ def test_query_shapes_all_scorers(
 
 
 def test_golden_queries_kernel(built_index, oracle_index, query_set):
-    """Shape routing (the set-evaluation kernel for boolean/phrase
-    queries, MaxScore for pure disjunctions) must be bit-identical to
-    the oracle on all 15 templates (AND/OR/NOT/phrase mixes)."""
+    """The set-evaluation kernel must be bit-identical to the oracle on
+    all 15 templates (AND/OR/NOT/phrase mixes)."""
     for q in query_set:
         want = oracle_index.search(q, k=K, scorer="bm25")
         got = built_index.search_collect(q, k=K, scorer="bm25")

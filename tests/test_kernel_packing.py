@@ -135,7 +135,6 @@ def _synthetic_blocks(rng, bucket_bases, terms, block_rows=64):
                         "range_bucket": b,
                         "first_doc": int(d[0]),
                         "last_doc": int(d[-1]),
-                        "block_max_impact": 1.0,
                         "payload": codec.pack_postings(
                             d, tfs[s : s + block_rows], dls[s : s + block_rows]
                         ),
@@ -160,8 +159,7 @@ def test_packed_group_wider_than_int32_scores_like_per_bucket(spark, monkeypatch
     assert wand._decode_terms(one, avgdl)[1] == int(one["first_doc"].min())
     blocks = spark.createDataFrame(
         pdf,
-        "term string, range_bucket int, first_doc long, last_doc long, "
-        "block_max_impact double, payload binary",
+        "term string, range_bucket int, first_doc long, last_doc long, payload binary",
     )
     metas = {
         0: {"alpha": [(0, 1.5)]},

@@ -1,8 +1,7 @@
-"""Round-3 regression tests: ADVICE fixes (kernel scorer dispatch, theta
-seed index-version pinning, ranked_topk duplicate terms, idempotent docs
-append) + the >4-digit turn_idx doc_id collision fix."""
+"""Round-3 regression tests: ADVICE fixes (kernel scorer dispatch,
+ranked_topk duplicate terms, idempotent docs append) + the >4-digit
+turn_idx doc_id collision fix."""
 
-import json
 import os
 
 import pandas as pd
@@ -20,7 +19,7 @@ CFG = IndexBuildConfig(n_term_buckets=8, n_range_buckets=8, n_segment_chunks=2, 
 def test_kernel_strategy_respects_scorer(built_index, oracle_index):
     """The kernel with a non-bm25 scorer must not silently return BM25
     scores (ADVICE r2 medium): it scores tfidf exactly."""
-    q = '"said" OR "index"'  # tfidf -> kernel (bm25 would take MaxScore)
+    q = '"said" OR "index"'
     via_kernel = built_index.search_collect(q, k=10, scorer="tfidf")
     want = oracle_index.search(q, k=10, scorer="tfidf")
     assert via_kernel.docs == [d for d, _ in want]
@@ -152,31 +151,3 @@ def test_murmur3_matches_spark_hash(spark):
     for nb in (8, 16, 32, 33, 64):
         vals = _slot_values(nb)
         assert [(_murmur3_int32(v) % nb) for v in vals] == list(range(nb))
-
-
-def test_index_version_changes_on_stats_rewrite(spark, corpus_df, tmp_path):
-    """The wand theta-seed key pins the index generation via an explicit
-    random generation id in stats.json (ADVICE r3: st_mtime_ns can
-    collide on coarse-mtime filesystems). Every build/refresh commit
-    writes a fresh id; indexes without one fall back to mtime."""
-    import uuid
-
-    idx_dir = str(tmp_path / "ver_idx")
-    idx = engine.build(spark, corpus_df, idx_dir, CFG, input_desc="ver")
-    v1 = idx.index_version
-    stats_path = os.path.join(idx_dir, "stats.json")
-    with open(stats_path) as f:
-        stats = json.load(f)
-    assert v1 == stats["generation"]  # not mtime-derived
-    # a refresh commit with identical corpus stats still bumps the version
-    stats["generation"] = uuid.uuid4().hex
-    with open(stats_path, "w") as f:
-        json.dump(stats, f, indent=2)
-    idx.reload()
-    assert idx.index_version != v1
-    # legacy stats.json (pre-round-4, no generation key) -> mtime fallback
-    del stats["generation"]
-    with open(stats_path, "w") as f:
-        json.dump(stats, f, indent=2)
-    idx.reload()
-    assert idx.index_version == os.stat(stats_path).st_mtime_ns

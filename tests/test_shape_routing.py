@@ -1,7 +1,7 @@
-"""Routing by query shape alone: the removed `strategy` option and
-misspelled keywords raise, boolean queries are evaluated as boolean
-queries, the driver-local kernel scores the whole cached frame as one
-group, and a block preload over the cache budget falls back to per-term
+"""Routing: the removed `strategy` option and misspelled keywords raise,
+boolean queries are evaluated as boolean queries, the driver-local
+kernel scores the whole cached frame as one group for every query shape,
+and a block preload over the cache budget falls back to per-term
 fetches."""
 
 import pytest
@@ -33,9 +33,10 @@ def test_stale_or_misspelled_keywords_raise(built_index, oracle_index):
 
 
 def test_driver_kernel_scores_one_group(built_index, oracle_index, corpus_pdf, monkeypatch):
-    """One boolean_score_bucket call per NOT, PHRASE or AND query over the
-    whole cached frame (a group of whole range buckets scores like one
-    bucket), bit-exact against the oracle."""
+    """One boolean_score_bucket call per query over the whole cached
+    frame, every shape including BM25 disjunctions and single terms (a
+    group of whole range buckets scores like one bucket), bit-exact
+    against the oracle."""
     from text_indexing_and_retrieval_system_spark.functions.normalize import (
         normalize_to_tokens,
     )
@@ -59,6 +60,8 @@ def test_driver_kernel_scores_one_group(built_index, oracle_index, corpus_pdf, m
         f'PHRASE "{phrase}"',
         f'"{hot}" AND "{mid}"',
         AND_Q,
+        f'"{hot}" OR "{mid}"',
+        f'"{mid}"',
     ):
         calls.clear()
         got = built_index.search_collect(q, k=20)

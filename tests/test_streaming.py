@@ -155,7 +155,7 @@ def test_refresh_equals_rebuild(spark, corpus_df, corpus_pdf, tmp_path, n_chunks
     assert (got.range_shift, got.kernel_buckets) == (want.range_shift, want.kernel_buckets)
     for key in ("n_docs", "avgdl", "total_tokens", "n_convs"):
         assert got.stats[key] == want.stats[key], key
-    lex_cols = ["term", "df", "cf", "idf", "max_impact", "n_blocks"]
+    lex_cols = ["term", "df", "cf", "idf", "n_blocks"]
     lex = _rows(spark, want.dir, "lexicon", lex_cols, ["term"])
     assert _rows(spark, got.dir, "lexicon", lex_cols, ["term"]) == lex
     post_cols = ["term", "range_bucket", "first_doc", "last_doc", "payload"]
@@ -193,7 +193,7 @@ def test_failed_stats_write_keeps_previous_stats(spark, built_index, tmp_path, m
     real_dump = json.dump
 
     def failing_dump(obj, fp, *args, **kwargs):
-        if "generation" in obj:  # the stats payload
+        if "avgdl" in obj:  # the stats payload
             fp.write("{")
             raise OSError("disk full")
         return real_dump(obj, fp, *args, **kwargs)

@@ -27,7 +27,7 @@ def test_engine_spans_install_record_and_uninstall(spark, built_index, oracle_in
         assert patches
         for owner, attr, orig in patches:
             assert getattr(owner, attr) is not orig, attr
-        built_index.search_collect(f'"{hot}" OR "{mid}"', k=10)  # driver MaxScore
+        built_index.search_collect(f'"{hot}" OR "{mid}"', k=10)  # driver kernel
         built_index.search_collect(f'"{hot}" AND "{mid}"', k=10)  # driver kernel
         distributed = engine.InvertedIndex(spark, built_index.dir)
         distributed.DRIVER_WAND_MAX_DF = 0
@@ -37,13 +37,11 @@ def test_engine_spans_install_record_and_uninstall(spark, built_index, oracle_in
     finally:
         tracer.uninstall()
     names = {sp.name for sp in tracer.spans}
-    for name in (
-        "engine.path.driver_wand",
-        "engine.path.driver_kernel",
-        "engine.path.distributed",
-        "wand.kernel",
-    ):
+    for name in ("engine.path.driver_kernel", "engine.path.distributed", "wand.kernel"):
         assert name in names, (name, sorted(names))
+    # the former MaxScore names are wrapped but never called
+    assert "engine.path.driver_wand" not in names
+    assert sum(sp.name == "engine.path.driver_kernel" for sp in tracer.spans) == 2
     assert sum(sp.name == "engine.path.distributed" for sp in tracer.spans) == 2
     for owner, attr, orig in patches:
         assert getattr(owner, attr) is orig, attr

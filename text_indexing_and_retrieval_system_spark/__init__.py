@@ -6,11 +6,11 @@ capabilities of the reference `Vinit2244/Text-Indexing-and-Retrieval-System`
 
 - tokenize/normalize via vectorized Arrow (pandas) UDFs
 - inverted index as columnar tables (postings / doclen / stats), postings
-  delta-gap + varint packed into binary payloads with per-block max scores
+  delta-gap + varint packed into binary payloads
 - boolean query algebra (AND/OR/NOT, phrase via positional
   intersection) and BM25 (k1=1.2, b=0.75) / TF-IDF / word-count ranking
   in one vectorized numpy kernel per doc-range bucket, driver-local or
-  distributed; BM25 pure disjunctions take a block-max WAND scorer
+  distributed
 - skew-aware (salted two-level merge), resumable (segment manifests)
 
 No code is copied from the reference; reference file:line citations in

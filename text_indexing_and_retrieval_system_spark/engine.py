@@ -5,30 +5,25 @@ Query lifecycle (Spark rebuild of the reference's
 query_processing_engine.py:549-651`):
 
     query string ──(driver)── parse → AST → token tree + scoring terms
-      → routing by shape (InvertedIndex._search_rows):
-        bm25 pure disjunction   block-max bucket scorer with MaxScore
-                                skipping + certified cross-bucket θ seeds
-        every other query       the whole boolean/phrase tree
-                                set-evaluated in numpy (NOT against the
-                                doc-id universe), then scored exactly as
-                                Σ weight × impact (bm25: idf × BM25
-                                tf-normalization; tfidf: ln(N/df) × tf;
-                                wordcount: tf)
-      → routing by gate: driver-local over cached posting blocks when the
-        terms' Σdf (and, for NOT, the corpus size) is under the size
-        gates, else one distributed bucket-kernel job
+      → set evaluation, every shape and scorer: a pure disjunction
+        matches the union of its terms' docs, any other tree is
+        set-evaluated in numpy (NOT against the doc-id universe); the
+        matches are scored exactly as Σ weight × impact (bm25: idf ×
+        BM25 tf-normalization; tfidf: ln(N/df) × tf; wordcount: tf)
+      → routing by gate (InvertedIndex._search_rows): driver-local over
+        cached posting blocks when the terms' Σdf (and, for NOT, the
+        corpus size) is under the size gates, else one distributed
+        bucket-kernel job
       → top-k (score DESC, doc_id_int ASC) → optional hydration join
 
-That gives four leaves: driver MaxScore (_search_wand_driver_rows),
-distributed MaxScore (wand.topk_disjunctive), driver set evaluation
-(_search_kernel_driver_rows) and distributed set evaluation
-(wand.boolean_topk). Both set-evaluation leaves run the one kernel body,
+That gives two leaves: driver (_search_kernel_driver_rows) and
+distributed (wand.boolean_topk). Both run the one kernel body,
 wand.boolean_score_bucket, on a batch of query trees: a single query is
 a batch of one, and search_batch sends its whole batch, each query as
-the disjunction of its scoring terms, through the distributed leaf. All
-four are bit-identical in scores and order (the golden suite runs them
+the disjunction of its scoring terms, through the distributed leaf. The
+two are bit-identical in scores and order (the golden suite runs both
 against the same oracle). Control crosses driver→executor once per
-query or batch on the distributed leaves (plus a dict-lookup id
+query or batch on the distributed leaf (plus a dict-lookup id
 resolution from the driver-cached convmap), matching SURVEY.md §3.1's
 target.
 """
@@ -81,17 +76,6 @@ class InvertedIndex:
             )
         with open(stats_path) as f:
             self.stats = json.load(f)
-        # index version: every build / refresh_postings commit writes a
-        # fresh random generation id into stats.json, distinguishing index
-        # generations even when n_docs/avgdl happen to be unchanged (e.g.
-        # tombstone + re-add of same-length docs). Folded into the wand
-        # theta-seed key so executor-cached seeds from a previous
-        # generation can never prune against the new postings. mtime_ns is
-        # only the fallback for pre-round-4 indexes — coarse-mtime
-        # filesystems can give two generations the same tick.
-        self.index_version = self.stats.get("generation") or os.stat(
-            stats_path
-        ).st_mtime_ns
         man = Manifests(self.dir)
         build_info = man.read("build") or man.read("stage3_postings")
         cfg = (build_info or {}).get("config", {})
@@ -145,7 +129,6 @@ class InvertedIndex:
         self._bulk_blocks: bool | None = None
         self._bulk_empty: pd.DataFrame | None = None
         self._total_df: int | None = None
-        self._driver_theta: dict[str, float] = {}
         self._doclen_ids_cache = None
         for unit in ("refresh_postings", "stage3_postings"):
             info = man.read(unit)
@@ -171,27 +154,30 @@ class InvertedIndex:
                 "phrase queries require positions — rebuild with "
                 "store_positions=True"
             )
-        buckets = sorted({term_bucket_py(t, self.n_term_buckets) for t in tokens})
         df = self._blocks_relation(with_positions)
-        # one-shot SQL IN expression: Column.isin(tokens) costs a py4j
-        # round trip PER literal (~1.5 s at 2k terms, pure driver time);
-        # expr() ships one string and parses JVM-side. Same plan, same
-        # parquet row-group pushdown.
         if not tokens:
             return df.filter(F.lit(False))
+        return df.filter(self._bucket_term_filter(tokens))
+
+    def _bucket_term_filter(self, tokens: list[str]):
+        """`bucket IN (...) AND term IN (...)` over the tokens' term
+        buckets, as ONE SQL expression: Column.isin costs a py4j round
+        trip PER literal (~1.5 s at 2k terms, pure driver time); expr()
+        ships one string and parses JVM-side. Same plan: bucket-dir
+        partition pruning plus parquet row-group pushdown on term."""
+        buckets = sorted({term_bucket_py(t, self.n_term_buckets) for t in tokens})
         # backslash FIRST, then quote: a term ending in '\' (reachable
         # with remove_punctuation=False) must not escape the closing quote
         quoted = ",".join(
             "'" + t.replace("\\", "\\\\").replace("'", "\\'") + "'" for t in tokens
         )
-        return df.filter(F.col("bucket").isin(buckets)).filter(
-            F.expr(f"term IN ({quoted})")
+        return F.expr(
+            f"bucket IN ({','.join(map(str, buckets))}) AND term IN ({quoted})"
         )
 
     def _blocks_relation(self, with_positions: bool) -> DataFrame:
-        """The postings block relation (built once per handle) with the
-        read-time impact bound folded in; position payload dropped before
-        any downstream operator unless requested."""
+        """The postings block relation (built once per handle), position
+        payload dropped before any downstream operator unless requested."""
         if self._postings_df is None:
             self._postings_df = self.spark.read.parquet(
                 os.path.join(self.dir, "postings")
@@ -203,19 +189,11 @@ class InvertedIndex:
                     "`payload` before round 3)"
                 )
         df = self._postings_df
-        if "block_max_impact" not in df.columns:
-            # round-3 block format stores (max_tf, min_dl); the impact
-            # upper bound is folded in here with the index's avgdl (an
-            # exact-pruning bound — see ib.impact_bound_col)
-            from .operators.index_build import impact_bound_col
-
-            df = df.withColumn(
-                "block_max_impact", impact_bound_col(self.stats["avgdl"])
-            )
         if not with_positions:
             df = df.drop("pos_payload")
         return df
 
+    LEX_COLS = ["term", "df", "cf", "idf", "n_blocks"]
     LEX_DRIVER_CACHE_MAX = 5_000_000  # terms; ~0.5 GB driver budget
     # interactive head-cache gate: queries whose terms' total df is under
     # this run driver-local (one single-stage pruned fetch + in-process
@@ -269,21 +247,18 @@ class InvertedIndex:
         ):
             pdf = self.spark.read.parquet(
                 os.path.join(self.dir, "lexicon")
-            ).select("term", "df", "cf", "idf", "max_impact", "n_blocks").toPandas()
+            ).select(*self.LEX_COLS).toPandas()
             self._full_lex = {r["term"]: r for r in pdf.to_dict("records")}
             self._total_df = int(pdf["df"].sum() or 0)
         if self._full_lex is not None:
             rows = [self._full_lex[t] for t in tokens if t in self._full_lex]
-            return pd.DataFrame(
-                rows, columns=["term", "df", "cf", "idf", "max_impact", "n_blocks"]
-            )
+            return pd.DataFrame(rows, columns=self.LEX_COLS)
         missing = [t for t in tokens if t not in self._lex_cache]
         if missing:
-            buckets = sorted({term_bucket_py(t, self.n_term_buckets) for t in missing})
             df = self.spark.read.parquet(os.path.join(self.dir, "lexicon"))
             got = (
-                df.filter(F.col("bucket").isin(buckets) & F.col("term").isin(missing))
-                .select("term", "df", "cf", "idf", "max_impact", "n_blocks")
+                df.filter(self._bucket_term_filter(missing))
+                .select(*self.LEX_COLS)
                 .toPandas()
             )
             for rec in got.to_dict("records"):
@@ -291,9 +266,7 @@ class InvertedIndex:
             for t in missing:
                 self._lex_cache.setdefault(t, None)  # negative cache
         rows = [self._lex_cache[t] for t in tokens if self._lex_cache.get(t)]
-        return pd.DataFrame(
-            rows, columns=["term", "df", "cf", "idf", "max_impact", "n_blocks"]
-        )
+        return pd.DataFrame(rows, columns=self.LEX_COLS)
 
     def doclen(self) -> DataFrame:
         """doclen table, persisted for the handle's lifetime — the NOT
@@ -391,14 +364,12 @@ class InvertedIndex:
         return meta
 
     def _search_rows(self, query: str, k: int, scorer: str) -> list[tuple]:
-        """Routing by shape + gate, returning the k winner TUPLES —
-        search() wraps them in a DataFrame; search_collect() consumes
-        them directly (no local-DataFrame round trip).
+        """Routing by gate, returning the k winner TUPLES — search()
+        wraps them in a DataFrame; search_collect() consumes them
+        directly (no local-DataFrame round trip).
 
-        Shape picks the body: a bm25 pure disjunction runs MaxScore
-        (wand.score_bucket_pruned — its block-max bounds are BM25
-        impacts); every other query set-evaluates its tree and scores the
-        matches (wand.boolean_score_bucket), any scorer. The gate picks
+        Every query set-evaluates its tree and scores the matches
+        (wand.boolean_score_bucket), any shape and scorer. The gate picks
         where: the interactive head cache (see DRIVER_WAND_MAX_DF) scores
         small-df queries driver-local over cached block frames; NOT needs
         the complement universe (every doc id), so it additionally
@@ -418,21 +389,6 @@ class InvertedIndex:
             not needs_universe
             or int(self.stats.get("n_docs") or 0) <= self.DRIVER_NOT_MAX_DOCS
         )
-        if scorer == "bm25" and wand.is_disjunction(tree):
-            # cross-bucket theta key: worker processes reuse certified k-th
-            # scores across this query's buckets and across repeats of the
-            # query in the session; index_version (stats.json generation
-            # id, bumped by every build/refresh commit) pins the index
-            # generation so a refresh invalidates stale seeds even when
-            # n_docs/avgdl are coincidentally unchanged
-            qkey = (
-                f"{self.dir}|v{self.index_version}|{self.stats['n_docs']}|"
-                f"{self.stats['avgdl']}|k={k}|"
-                + "|".join(f"{t}:{len(m)}" for t, m in sorted(term_meta.items()))
-            )
-            if driver:
-                return self._search_wand_driver_rows(term_meta, k, qkey)
-            return self._search_wand_distributed_rows(term_meta, k, qkey)
         impact = wand.bm25_impact if scorer == "bm25" else wand.tf_impact
         has_phrase = wand.tree_has(tree, "phrase")
         if driver:
@@ -441,12 +397,6 @@ class InvertedIndex:
             )
         winners = self._boolean_topk_winners({0: (tree, term_meta)}, all_tokens, k, impact)
         return self._resolve(winners.get(0, []))
-
-    def _finalize_topk(self, rows: list, k: int) -> list[tuple]:
-        """Per-bucket winners -> global top-k tuples: driver merge on
-        (score DESC, doc_id_int ASC) + one pruned doc_id lookup."""
-        rows = sorted(rows, key=lambda r: (-r["score"], r["doc_id_int"]))[:k]
-        return self._resolve([(r["doc_id_int"], r["score"]) for r in rows])
 
     def _resolve(self, winners: list[tuple[int, float]]) -> list[tuple]:
         """Ranked (doc_id_int, score) winners -> (doc_id, doc_id_int, score)."""
@@ -515,7 +465,7 @@ class InvertedIndex:
         needs_universe: bool,
         impact,
     ) -> list[tuple]:
-        """Driver-local boolean/phrase+ranking: the distributed path's
+        """The driver leaf, every query shape: the distributed path's
         kernel body (wand.boolean_score_bucket) called ONCE in-process on a
         batch of one over the whole cached block frame, with the whole
         doc-id universe for NOT. Exact by the packing argument of
@@ -538,31 +488,9 @@ class InvertedIndex:
         )
         return self._resolve(wand.merge_query_topk_driver(out, k).get(0, []))
 
-    def _search_wand_distributed_rows(
-        self, term_meta: dict, k: int, qkey: str
-    ) -> list[tuple]:
-        acc_total, acc_decoded = self._prune_accs()
-        t0, d0 = acc_total.value, acc_decoded.value
-        local = wand.topk_disjunctive(
-            self.blocks_for(sorted(term_meta)),
-            term_meta,
-            self.stats["avgdl"],
-            k,
-            query_key=qkey,
-            acc_total=acc_total,
-            acc_decoded=acc_decoded,
-            n_buckets=self.kernel_buckets,
-        )
-        # per-group winners are tiny (<= k x groups): merge on the
-        # driver and resolve doc_id strings with one pruned point-lookup —
-        # 2 small jobs total instead of join+sort+limit stages. Ties break
-        # on doc_id_int, the engine-wide contract (see search()).
-        rows = local.collect()
-        self.last_prune_stats = {
-            "blocks_total": acc_total.value - t0,
-            "blocks_decoded": acc_decoded.value - d0,
-        }
-        return self._finalize_topk(rows, k)
+    # Former driver MaxScore leaf, kept by name only for
+    # perfbench/tracing.py, which wraps it at install; nothing calls it.
+    _search_wand_driver_rows = _search_kernel_driver_rows
 
     def _blocks_pdf_for(
         self, tokens: list[str], with_positions: bool = False
@@ -654,56 +582,6 @@ class InvertedIndex:
             self._block_cache_bytes += self._frame_bytes(g)
         self._bulk_blocks = True
         return True
-
-    def _search_wand_driver_rows(
-        self, term_meta: dict, k: int, qkey: str
-    ) -> list[tuple]:
-        """Driver-local exact WAND: buckets scored sequentially in one
-        process with a rising merged-kth theta (a certified lower bound
-        on the global k-th — same exactness argument as the distributed
-        cross-bucket seeds; skipping is strict, so plateau ties are
-        never dropped). Results bit-identical to the distributed path
-        (asserted in test_wand_pruning.py)."""
-        import numpy as np
-
-        pdf = self._blocks_pdf_for(sorted(term_meta))
-        theta = self._driver_theta.get(qkey, -np.inf)
-        n_total = n_decoded = 0
-        scores_parts: list[np.ndarray] = []
-        docs_parts: list[np.ndarray] = []
-        if pdf is not None:
-            for _, grp in pdf.groupby("range_bucket", sort=True):
-                out, t, d = wand.score_bucket_pruned(
-                    grp, term_meta, self.stats["avgdl"], k, theta_seed=theta
-                )
-                n_total += t
-                n_decoded += d
-                if len(out):
-                    scores_parts.append(out["score"].to_numpy())
-                    docs_parts.append(out["doc_id_int"].to_numpy())
-                    sc = np.concatenate(scores_parts)
-                    if sc.size >= k:
-                        theta = max(theta, float(np.partition(sc, -k)[-k]))
-        self.last_prune_stats = {
-            "blocks_total": n_total,
-            "blocks_decoded": n_decoded,
-        }
-        if np.isfinite(theta):
-            self._driver_theta[qkey] = theta
-        if not docs_parts:
-            return []
-        rows = [
-            {"doc_id_int": int(d), "score": float(s)}
-            for d, s in zip(np.concatenate(docs_parts), np.concatenate(scores_parts))
-        ]
-        return self._finalize_topk(rows, k)
-
-    def _prune_accs(self):
-        if getattr(self, "_acc_total", None) is None:
-            sc = self.spark.sparkContext
-            self._acc_total = sc.accumulator(0)
-            self._acc_decoded = sc.accumulator(0)
-        return self._acc_total, self._acc_decoded
 
     def _doc_ids_for(self, ids: list[int]) -> dict[int, str]:
         if not ids:

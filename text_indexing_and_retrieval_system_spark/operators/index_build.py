@@ -11,15 +11,15 @@ scale:
            pre-combined rows); written as chunked *segments* (resumable)
   stage 2  doclen + collection stats (N, avgdl) from all segments
   stage 3  shuffle all segments to (term, doc-range bucket) → mapInPandas
-           packs doc-id-sorted blocks (delta-gap+varint payloads,
-           per-block max BM25 impact) + lexicon (term, df, cf, idf)
+           packs doc-id-sorted blocks (delta-gap+varint payloads)
+           + lexicon (term, df, cf, idf)
   stage 4  doc store (hydration table)
 
 Skew: high-df terms are split by **contiguous doc-id ranges**
 (`range_bucket = doc_id >> range_shift`) — the salted two-level split the
 north_rule asks for, with the property that a term's blocks across
-buckets are disjoint ordered doc ranges, so block-max WAND can traverse
-them globally without a merge pass.
+buckets are disjoint ordered doc ranges, so whole buckets score
+independently and their top-k winners merge exactly.
 
 Resumability: each stage (and each stage-1 chunk) writes to its own
 directory with a JSON manifest (lineage, row counts, timings); a
@@ -46,8 +46,6 @@ from pyspark.sql.window import Window
 from ..functions import codec
 from ..functions.normalize import DEFAULT_CONFIG, NormalizeConfig, normalize_to_tokens
 
-K1 = 1.2
-B = 0.75
 TURN_BITS = 16  # turn_idx < 65536 per conversation
 
 
@@ -314,7 +312,7 @@ def tokenize_to_doc_postings(docs: DataFrame, cfg: NormalizeConfig) -> DataFrame
 
 BLOCKS_SCHEMA = (
     "term string, range_bucket int, first_doc long, last_doc long, n int, "
-    "max_tf int, min_dl int, sum_tf long, payload binary, pos_payload binary"
+    "sum_tf long, payload binary, pos_payload binary"
 )
 
 
@@ -324,28 +322,10 @@ _BLOCK_COLS = [
     "first_doc",
     "last_doc",
     "n",
-    "max_tf",
-    "min_dl",
     "sum_tf",
     "payload",
     "pos_payload",
 ]
-
-
-def impact_bound_col(avgdl: float):
-    """Per-block BM25 impact upper bound from the stored (max_tf, min_dl)
-    pair: impact is monotone increasing in tf and decreasing in dl, so
-    impact(max_tf, min_dl) >= impact(tf_i, dl_i) for every posting in the
-    block. Computed at READ time (blocks_for) so block packing needs no
-    global avgdl — that's what lets stage 3 run concurrently with stage
-    2 instead of behind a global-stats barrier. WAND/MaxScore
-    pruning stays exact under any valid upper bound (wand.py phase A)."""
-    tf = F.col("max_tf").cast("double")
-    return (
-        tf
-        * (K1 + 1.0)
-        / (tf + K1 * ((1.0 - B) + (B * F.col("min_dl").cast("double")) / float(avgdl)))
-    )
 
 
 def build_blocks(
@@ -414,8 +394,6 @@ def build_blocks(
                 ]
             else:
                 pos_payloads = [None] * len(payloads)
-            # (max_tf, min_dl) give a read-time BM25 impact upper bound
-            # (see impact_bound_col) — no avgdl needed at pack time
             return pd.DataFrame(
                 {
                     "term": terms[block_starts],
@@ -423,8 +401,6 @@ def build_blocks(
                     "first_doc": doc_ids[block_starts],
                     "last_doc": doc_ids[block_ends - 1],
                     "n": (block_ends - block_starts).astype("int32"),
-                    "max_tf": np.maximum.reduceat(tfs, block_starts).astype("int32"),
-                    "min_dl": np.minimum.reduceat(dls, block_starts).astype("int32"),
                     "sum_tf": np.add.reduceat(tfs, block_starts),
                     "payload": payloads,
                     "pos_payload": pos_payloads,

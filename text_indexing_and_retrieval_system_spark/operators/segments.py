@@ -28,8 +28,7 @@ sources/catalog.py for the seam):
       stats.json            stage2: n_docs, avgdl, total_tokens, n_convs
       postings/bucket=<b>/  stage3: compressed blocks, term-bucketed,
                             sorted by (term, first_doc) within files
-      lexicon/              stage3: term, df, cf, idf, max_impact,
-                            n_blocks, bucket
+      lexicon/              stage3: term, df, cf, idf, n_blocks, bucket
       docs/chunk=<i>/       stage4: doc store for hydration (per-chunk,
                             written FIRST in each pipeline; stage 1
                             tokenizes from it, so raw input is scanned
@@ -43,7 +42,6 @@ import json
 import os
 import shutil
 import time
-import uuid
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
@@ -220,9 +218,6 @@ def index_stats(n_docs: int, total_tokens: int, n_convs: int) -> dict:
         "avgdl": total_tokens / n_docs if n_docs else 0.0,
         "total_tokens": total_tokens,
         "n_convs": n_convs,
-        # random generation id — keys executor-side theta-seed caches
-        # (engine.reload); mtime alone can collide on coarse-mtime FS
-        "generation": uuid.uuid4().hex,
     }
 
 
@@ -254,7 +249,6 @@ def write_lexicon(
         .agg(
             F.sum("n").alias("df"),
             F.sum("sum_tf").alias("cf"),
-            F.max(ib.impact_bound_col(stats["avgdl"])).alias("max_impact"),
             F.count("*").alias("n_blocks"),
         )
         # Lucene/ES BM25 idf: ln(1 + (N - df + 0.5)/(df + 0.5))

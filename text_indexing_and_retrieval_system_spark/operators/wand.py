@@ -1,4 +1,4 @@
-"""Block-max top-k scorer over the compressed postings blocks.
+"""Top-k scorer over the compressed postings blocks.
 
 Spark-shaped successor of the reference's DAAT + thresholding + early
 stopping (`/root/reference/code/indexes/query_processing/
@@ -10,20 +10,15 @@ vectorized (numpy) and emits a local top-k; the global top-k is the
 merge of the per-group winners — the distributed analogue of the
 reference's single min-heap (`:407-450`).
 
-Block-level pruning (the block-max part): a block cannot contribute to
-the top-k unless `idf_t * block_max_impact + Σ_{u≠t} ub_u > θ`, where
-ub_u is term u's global max score and θ a score threshold. θ can be
-seeded from a previous batch or estimated; with θ=0 all blocks decode
-(exact full scoring). Pruning never changes results because skipped
-blocks are provably below the threshold of the *k-th best overall* —
-we only skip when θ is a certified lower bound (local top-k so-far).
-
-Two group bodies share one scorer (`_score`) and one top-k cut:
-score_bucket_pruned (MaxScore, a single BM25 disjunction) and
-boolean_score_bucket (set evaluation of a batch of query trees: every
-other single query, and search_batch's disjunctions). Scores are
-accumulated per doc in ascending term order, matching the oracle
-bit-for-bit.
+There is one group body, boolean_score_bucket: set evaluation of a
+batch of query trees, every query shape and every scorer. A group's
+blocks are decoded whole, in one vectorized pass (posting lists as
+vectors, as in a columnar inverted index); at the sizes this engine
+serves that pass is all the work there is, so no block is skipped. The
+thresholding survives as the certified per-batch emission theta
+(_BATCH_THETA) and the driver merge's k-th-score cut, both exact.
+Scores are accumulated per doc in ascending term order, matching the
+oracle bit-for-bit.
 """
 
 from __future__ import annotations
@@ -40,9 +35,7 @@ from ..functions import codec
 K1 = 1.2
 B = 0.75
 
-TOPK_SCHEMA = "doc_id_int long, score double"
-
-KERNEL_COLS = ["term", "range_bucket", "first_doc", "last_doc", "block_max_impact", "payload"]
+KERNEL_COLS = ["term", "range_bucket", "first_doc", "last_doc", "payload"]
 
 
 # Per-posting impact functions of the bucket kernel, (float64 tf, dl,
@@ -166,202 +159,6 @@ def _with_slot(df: DataFrame, n_buckets: int):
     return df.withColumn("__slot", mapping[F.col("range_bucket")]), n_groups
 
 
-def _empty_topk() -> pd.DataFrame:
-    return pd.DataFrame({"doc_id_int": [], "score": []}).astype(
-        {"doc_id_int": "int64", "score": "float64"}
-    )
-
-
-def score_bucket_pruned(
-    pdf: pd.DataFrame,
-    term_meta: dict[str, list[tuple[int, float]]],
-    avgdl: float,
-    k: int,
-    theta_seed: float = -np.inf,
-) -> tuple[pd.DataFrame, int, int]:
-    """Exact top-k with MaxScore-style block skipping (the reference's
-    thresholding/early-stopping, R5/R6, rebuilt for block granularity).
-
-    Phase A (candidate discovery): terms processed in descending upper
-    bound (ub = Σ occurrence idfs × bucket-max impact). Once the
-    certified k-th partial score θ strictly exceeds the sum of remaining
-    terms' ubs, later terms cannot introduce new top-k docs, so only
-    their blocks whose doc-id range overlaps existing candidates are
-    decoded — whole blocks are skipped using the block-max/first/last
-    metadata without touching payload bytes.
-
-    Phase B (exact rescore): contributions re-accumulated over the
-    surviving candidates in ascending term-occurrence order — the same
-    float summation order as the oracle, so scores stay bit-identical.
-    Skipped blocks provably contain no candidates, so no contribution is
-    missed.
-
-    `theta_seed` is a CERTIFIED lower bound on the global k-th best
-    score (e.g. another bucket's exact local k-th, or this query's k-th
-    from a previous run) — with it, skipping fires before the bucket
-    accumulates k candidates of its own (cross-bucket theta, R6). A doc
-    excluded under the seed scores STRICTLY below k other docs, so
-    results (ties included) are unchanged.
-
-    Returns (top-k frame, n_blocks_total, n_blocks_decoded).
-    """
-    if pdf.empty:
-        return _empty_topk(), 0, 0
-
-    per_term_blocks: dict[str, pd.DataFrame] = {
-        t: grp.sort_values("first_doc")
-        for t, grp in pdf.groupby("term", sort=False)
-        if t in term_meta
-    }
-    if not per_term_blocks:
-        return _empty_topk(), int(len(pdf)), 0
-
-    idf_sum = {t: sum(idf for _, idf in term_meta[t]) for t in per_term_blocks}
-    ub = {
-        t: idf_sum[t] * float(grp["block_max_impact"].max())
-        for t, grp in per_term_blocks.items()
-    }
-    order = sorted(per_term_blocks, key=lambda t: -ub[t])
-    suffix = np.cumsum([ub[t] for t in order][::-1])[::-1]
-
-    n_total = int(len(pdf))
-    n_decoded = 0
-    decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-    cands = np.empty(0, dtype=np.int64)
-    part = np.empty(0, dtype=np.float64)
-
-    for i, term in enumerate(order):
-        grp = per_term_blocks[term]
-        theta_local = (
-            np.partition(part, part.size - k)[part.size - k]
-            if part.size >= k
-            else -np.inf
-        )
-        theta = max(theta_local, theta_seed)
-        restricted = suffix[i] < theta
-        firsts = grp["first_doc"].to_numpy(dtype=np.int64)
-        lasts = grp["last_doc"].to_numpy(dtype=np.int64)
-        if restricted:
-            lo = np.searchsorted(cands, firsts, side="left")
-            hi = np.searchsorted(cands, lasts, side="right")
-            keep = lo < hi  # block range contains >= 1 candidate
-            # block-max refinement (the BMW check proper): even a block
-            # WITH candidates skips when its own bound cannot lift any
-            # of them to theta — every candidate c in the block scores
-            # at most part[c] + idf*block_max + Σ remaining ubs, and a
-            # candidate appears in at most one block of this term. This
-            # is where non-flat per-block bounds (long-doc / low-tf
-            # regions) pay off; strict `<` preserves plateau ties.
-            bmax = grp["block_max_impact"].to_numpy(dtype=np.float64)
-            rem = suffix[i + 1] if i + 1 < len(order) else 0.0
-            for j in np.flatnonzero(keep):
-                seg_max = part[lo[j] : hi[j]].max()
-                if seg_max + idf_sum[term] * bmax[j] + rem < theta:
-                    keep[j] = False
-        else:
-            keep = np.ones(len(grp), dtype=bool)
-        # the kept blocks in ONE vectorized decode + impact pass
-        _, d_all, tfs, dls = codec.unpack_postings_batch(
-            grp["payload"].to_numpy()[keep]
-        )
-        n_decoded += int(keep.sum())
-        imp_all = bm25_impact(tfs.astype(np.float64), dls, avgdl)
-        decoded[term] = (d_all, imp_all)
-        if not d_all.size:
-            continue
-        contrib = idf_sum[term] * imp_all
-        if restricted:
-            idx = np.searchsorted(cands, d_all)
-            valid = (idx < cands.size) & (cands[np.minimum(idx, cands.size - 1)] == d_all)
-            part[idx[valid]] += contrib[valid]
-        else:
-            merged = np.union1d(cands, d_all)
-            new_part = np.zeros(merged.size, dtype=np.float64)
-            new_part[np.searchsorted(merged, cands)] = part
-            np.add.at(new_part, np.searchsorted(merged, d_all), contrib)
-            cands, part = merged, new_part
-        # BMW-style candidate pruning (exact): a candidate that cannot
-        # reach theta even with every REMAINING term's maximum
-        # contribution scores strictly below k certified docs — drop it
-        # now, shrinking the overlap set later restricted terms' blocks
-        # are tested against (this is what turns restriction into actual
-        # whole-block skips: fewer candidates -> sparser overlap).
-        # `>=` keeps exact-bound candidates, so plateau ties survive;
-        # the k best PARTIALS always survive (their part >= theta), so
-        # the next iteration's theta_local is unchanged.
-        if i + 1 < len(order) and part.size > k:
-            theta_now = max(
-                np.partition(part, part.size - k)[part.size - k], theta_seed
-            )
-            keep_c = part + suffix[i + 1] >= theta_now
-            if not keep_c.all():
-                cands, part = cands[keep_c], part[keep_c]
-
-    # phase B: exact rescore of candidates in term-occurrence order
-    docs, scores = _score(decoded, term_meta, k, matches=cands)
-    return pd.DataFrame({"doc_id_int": docs, "score": scores}), n_total, n_decoded
-
-
-_THETA_SEEDS: dict[str, float] = {}  # per-worker-process certified seeds
-_THETA_SEEDS_MAX = 10_000
-
-
-def topk_disjunctive(
-    blocks: DataFrame,
-    term_meta: dict[str, list[tuple[int, float]]],
-    avgdl: float,
-    k: int,
-    query_key: str | None = None,
-    acc_total=None,
-    acc_decoded=None,
-    *,
-    n_buckets: int,
-) -> DataFrame:
-    """blocks(term, range_bucket, first_doc, payload, ...) filtered to the
-    query terms → global (doc_id_int, score) top-k candidates.
-
-    `query_key` enables cross-bucket theta: each worker process keeps the
-    best certified k-th score it has produced for that key, so buckets it
-    processes later (same job, or a repeat of the query in the session)
-    start skipping immediately instead of from theta = -inf. Seeds are
-    exact local k-th scores — always valid global lower bounds — so
-    results stay bit-identical (asserted by test_wand_pruning).
-
-    `acc_total` / `acc_decoded` (Spark accumulators) report block-level
-    pruning effectiveness: blocks decoded vs blocks scanned.
-
-    Caller applies the final orderBy/limit after joining doc_id strings.
-    """
-
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        # resolve the LIVE module's seed store: a bare global reference
-        # would be re-pickled by value into every task's deserialized
-        # closure (fresh dict each task — no cross-task state at all);
-        # importing inside the UDF hits the worker process's real module
-        # singleton, which persists across tasks and jobs under
-        # spark.python.worker.reuse
-        from text_indexing_and_retrieval_system_spark.operators import (
-            wand as _w,
-        )
-
-        seeds = _w._THETA_SEEDS
-        seed = seeds.get(query_key, -np.inf) if query_key else -np.inf
-        out, n_total, n_decoded = score_bucket_pruned(
-            pdf, term_meta, avgdl, k, theta_seed=seed
-        )
-        if query_key and len(out) >= k:
-            kth = float(out["score"].iloc[k - 1])
-            if len(seeds) < _THETA_SEEDS_MAX or query_key in seeds:
-                seeds[query_key] = max(seeds.get(query_key, -np.inf), kth)
-        if acc_total is not None:
-            acc_total.add(n_total)
-        if acc_decoded is not None:
-            acc_decoded.add(n_decoded)
-        return out
-
-    return _bucket_grouped(blocks, n_buckets).applyInPandas(run, schema=TOPK_SCHEMA)
-
-
 # packed winner rows: ONE row per (query, kernel group) with the winners
 # as raw int64/float64 arrays. At 1k+ queries x dozens of groups the
 # row-per-winner format put ~1M rows through Arrow serialization, the
@@ -473,9 +270,9 @@ def _score(
 # DISJOINT doc-id ranges, so the kth-best winner within any already-scored
 # group is a lower bound on the global kth-best — later groups in the
 # same worker process can drop emission rows ranking below it without
-# affecting the merged top-k (same certified-seed argument as
-# _THETA_SEEDS on the MaxScore path). Only the CURRENT batch's thetas are
-# kept (replaced when a new batch_key arrives).
+# affecting the merged top-k: a dropped row scores strictly below k
+# certified docs. Only the CURRENT batch's thetas are kept (replaced when
+# a new batch_key arrives).
 _BATCH_THETA: dict[str, dict[int, tuple[float, int]]] = {}
 
 
@@ -543,9 +340,9 @@ def tree_has(tree, kind: str) -> bool:
 
 
 def is_disjunction(tree) -> bool:
-    """True for single tokens joined by OR only — the shape the MaxScore
-    body (score_bucket_pruned) scores, and that boolean_score_bucket
-    matches as the union of its terms' docs without evaluating the tree."""
+    """True for single tokens joined by OR only — the shape that
+    boolean_score_bucket matches as the union of its terms' docs without
+    evaluating the tree."""
     return tree[0] == "tok" or (
         tree[0] == "or" and is_disjunction(tree[1]) and is_disjunction(tree[2])
     )
@@ -749,8 +546,11 @@ def boolean_topk(
     batch_key = uuid.uuid4().hex
 
     def run_group(pdf: pd.DataFrame, universe) -> pd.DataFrame:
-        # live-module theta store (see topk_disjunctive.run): a bare
-        # global would be a per-task copy and never share state
+        # resolve the LIVE module's theta store: a bare global reference
+        # would be re-pickled by value into every task's closure (a fresh
+        # dict per task, no shared state); importing inside the UDF hits
+        # the worker process's module singleton, which persists across
+        # tasks under spark.python.worker.reuse
         from text_indexing_and_retrieval_system_spark.operators import (
             wand as _w,
         )
@@ -846,3 +646,9 @@ def merge_query_topk_driver(
         e = min(e, s + k)
         out[int(qids[s])] = list(zip(docs[s:e].tolist(), scores[s:e].tolist()))
     return out
+
+
+# Former MaxScore entry points, kept by name only for perfbench/tracing.py,
+# which wraps them at install; nothing in the package calls them.
+topk_disjunctive = boolean_topk
+score_bucket_pruned = boolean_score_bucket

@@ -154,11 +154,48 @@ def test_missing_term_empty(built_index, oracle_index):
     assert built_index.search_collect(q, k=K).docs == []
 
 
+def test_driver_leaf_launches_no_spark_job(spark, built_index, oracle_index, corpus_pdf, query_set):
+    """A fresh handle answers OR, AND, AND NOT and PHRASE on the driver
+    leaf bit-exact without one Spark job: lexicon, convmap, NOT universe
+    and blocks are read with pyarrow. With the block budget at 0 (the
+    per-query filtered read) the golden queries stay bit-exact too."""
+    by_df = sorted(oracle_index.postings, key=lambda t: (-len(oracle_index.postings[t]), t))
+    hot, mid = by_df[0], by_df[20]
+    tokens = normalize_to_tokens(corpus_pdf["text"].head(50))
+    phrase = next(f"{lst[0]} {lst[1]}" for lst in tokens if len(lst) >= 2)
+    queries = [
+        f'"{hot}" OR "{mid}"',
+        f'"{hot}" AND "{mid}"',
+        f'"{mid}" AND NOT "{hot}"',
+        f'PHRASE "{phrase}"',
+    ]
+    sc = spark.sparkContext
+    group = "test-driver-leaf-no-job"
+    idx = engine.InvertedIndex(spark, built_index.dir)
+    sc.setJobGroup(group, "must launch no job")
+    try:
+        got = {q: idx.search_collect(q, k=K) for q in queries}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert idx._bulk_blocks is True
+    for q in queries:
+        _assert_match(oracle_index.search(q, k=K), got[q], q)
+
+    filtered = engine.InvertedIndex(spark, built_index.dir)
+    filtered.BLOCK_CACHE_MAX_BYTES = 0
+    for q in [*query_set, *queries]:
+        _assert_match(oracle_index.search(q, k=K), filtered.search_collect(q, k=K), q + " [filtered]")
+    assert filtered._bulk_blocks is False
+
+
 def test_lexicon_fallback_per_term_scan(spark, built_index, oracle_index, query_set):
     """A vocabulary over LEX_DRIVER_CACHE_MAX skips the driver lexicon and
-    the whole-index block preload: every lookup is a per-term lexicon scan
-    with a negative cache, every block fetch per term. Golden queries, an
-    absent term and a batch stay bit-exact against the oracle."""
+    the resident block table: every lookup is a per-term lexicon scan
+    with a negative cache, every block read filtered to the query's
+    terms. Golden queries, an absent term and a batch stay bit-exact
+    against the oracle."""
     idx = engine.InvertedIndex(spark, built_index.dir)
     idx.LEX_DRIVER_CACHE_MAX = 0
     absent = '"zzzznonexistentzzz"'

@@ -147,15 +147,6 @@ def test_driver_paths_bit_identical_to_distributed(spark, built_index):
         assert a.scores == b.scores, q
 
 
-def test_block_cache_lru_eviction(spark, built_index):
-    idx = engine.InvertedIndex(spark, built_index.dir)
-    idx.BLOCK_CACHE_MAX_BYTES = 1  # evict after every fetch
-    a = idx.search_collect('"said" OR "index"', k=10)
-    b = idx.search_collect('"said" OR "index"', k=10)
-    assert a.docs == b.docs and a.scores == b.scores
-    assert len(idx._block_cache) <= 2  # only the latest fetch survives
-
-
 def test_realistic_spread_generator_deterministic():
     from text_indexing_and_retrieval_system_spark.sources.transcripts import (
         generate_conversation,

@@ -1,6 +1,6 @@
 """Round-5 fixes from ADVICE.md: docs/ stray-flat-file cleanup before the
-first per-chunk write, provider.append empty-frame skip + numeric
-partition dirs, and pos_payload-aware block-cache accounting."""
+first per-chunk write, and provider.append empty-frame skip + numeric
+partition dirs."""
 
 import glob
 import os
@@ -69,27 +69,3 @@ def test_provider_append_skips_empty_and_keeps_int_partitions(spark, tmp_path):
     # appending again continues the numeric sequence
     p.append(df, "docs")
     assert sorted(os.listdir(loc)) == ["chunk=0", "chunk=1", "chunk=2"]
-
-
-def test_block_cache_accounts_pos_payload(spark, built_index):
-    """Frames cached with with_positions=True carry pos_payload (usually
-    larger than payload); the LRU budget must charge for both."""
-    idx = built_index
-    idx._block_cache.clear()
-    idx._block_cache_bytes = 0
-    # a phrase query pulls position-bearing blocks through the driver path
-    res = idx.search_collect('PHRASE "it said"', k=5)
-    assert idx._block_cache, "driver path did not populate the cache"
-    expect = 0
-    has_pos = False
-    for g in idx._block_cache.values():
-        expect += engine.InvertedIndex._frame_bytes(g)
-        if len(g) and "pos_payload" in g.columns:
-            has_pos = True
-    assert idx._block_cache_bytes == expect
-    assert has_pos, "expected at least one position-bearing cached frame"
-    # and the charge is strictly larger than payload alone for pos frames
-    payload_only = sum(
-        int(g["payload"].map(len).sum()) for g in idx._block_cache.values() if len(g)
-    )
-    assert expect > payload_only

@@ -1,7 +1,6 @@
-"""Round-6 optimization regression tests: the whole-index driver block
-preload must be result-invariant (on vs off) and respect its df gate."""
-
-import pandas as pd
+"""The driver block store must be result-invariant: the resident Arrow
+table and the per-query filtered read (the budget at 0) answer alike,
+and positions never enter the resident table."""
 
 from text_indexing_and_retrieval_system_spark import engine
 
@@ -15,47 +14,40 @@ def _run_queries(idx, queries):
 
 
 def test_bulk_preload_bit_identical(built_index, spark):
-    """Same queries, preload forced OFF vs ON: identical docs + scores
-    (the preload only changes HOW frames reach the driver cache)."""
+    """Same queries, filtered reads vs the resident table: identical docs
+    + scores (the store only changes HOW blocks reach the driver
+    kernel)."""
     queries = [
         '"said" OR "time"',
         '"the" AND "of"',
         '"people" OR "government" OR "the"',
         '"missingterm12345"',
     ]
-    # fresh handles so cache state cannot leak between the two modes
+    # fresh handles so store state cannot leak between the two modes
     off = engine.load(spark, built_index.dir)
-    off.BULK_PRELOAD_MAX_DF = 0
+    off.BLOCK_CACHE_MAX_BYTES = 0
     res_off = _run_queries(off, queries)
-    assert off._bulk_blocks is False  # gate refused, per-term path used
+    assert off._bulk_blocks is False and off._blocks is None  # filtered reads
 
     on = engine.load(spark, built_index.dir)
-    assert on.BULK_PRELOAD_MAX_DF > 0
     res_on = _run_queries(on, queries)
-    assert on._bulk_blocks is True  # whole index preloaded
+    assert on._bulk_blocks is True  # whole index resident
     assert res_on == res_off
 
-    # preloaded frames cover the whole vocabulary: a later new term is a
-    # cache hit (negative or positive), not a Spark fetch
-    assert ("zzz_never_seen", False) not in on._block_cache
-    on._blocks_pdf_for(["zzz_never_seen"])
-    assert len(on._block_cache[("zzz_never_seen", False)]) == 0
-
-
-def test_bulk_preload_counts_cache_bytes(built_index, spark):
-    on = engine.load(spark, built_index.dir)
-    on.search_collect('"said"', k=5)
-    if on._bulk_blocks:
-        assert on._block_cache_bytes > 0
-        total = sum(on._frame_bytes(g) for g in on._block_cache.values())
-        assert on._block_cache_bytes == total
+    # the row index covers the whole vocabulary, so an absent term is a
+    # miss in it, not a read
+    assert set(on._term_rows) == set(on._full_lex)
+    assert on._blocks_pdf_for(["zzz_never_seen"]) is None
+    assert on._block_cache_bytes == on._blocks.nbytes > 0
 
 
 def test_positions_stay_per_term(built_index, spark):
-    """Phrase queries (pos_payload) keep the per-term fetch path: the
-    preload only covers the no-positions variant."""
+    """Phrase queries (pos_payload) read their terms' blocks with a
+    filtered read: the resident table holds the kernel columns only."""
     on = engine.load(spark, built_index.dir)
-    on.search_collect('"said" OR "time"', k=5)  # triggers preload
+    on.search_collect('"said" OR "time"', k=5)  # loads the resident table
     assert on._bulk_blocks is True
+    assert "pos_payload" not in on._blocks.column_names
     pdf = on._blocks_pdf_for(["said"], with_positions=True)
     assert pdf is not None and "pos_payload" in pdf.columns
+    assert set(pdf["term"]) == {"said"}

@@ -1,4 +1,4 @@
-"""The scorer-generic bucket kernel: exact TFIDF weights, loud rejection
+"""The scorer-generic bucket kernel: exact TFIDF and BM25 weights, loud rejection
 of unknown scorers and of the removed `strategy` option, and refusal of
 indexes without doc-id range bucketing."""
 
@@ -7,9 +7,11 @@ import os
 import shutil
 
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 
 from text_indexing_and_retrieval_system_spark import engine
+from text_indexing_and_retrieval_system_spark.operators import wand
 from text_indexing_and_retrieval_system_spark.operators.index_build import (
     IndexBuildConfig,
 )
@@ -49,6 +51,24 @@ def test_tfidf_bit_identical_to_oracle(spark, tiny):
             got = handle.search_collect(q, k=10, scorer="tfidf")
             assert got.docs == [d for d, _ in want], q
             assert got.scores == [s for _, s in want], q
+
+
+def test_bm25_idf_bit_identical_to_oracle(spark, tiny):
+    """BM25 weights are computed from df with wand.bm25_idf (math.log, as
+    the oracle): Spark's `log` put "alpha" one ulp off at N=3, df=1. The
+    lexicon's `idf` column holds the same values."""
+    idx, oracle = tiny
+    dist = engine.InvertedIndex(spark, idx.dir)
+    dist.DRIVER_WAND_MAX_DF = 0  # force the distributed kernel
+    for q in ('"alpha"', '"alpha" AND "beta"'):
+        want = oracle.search(q, k=10, scorer="bm25")
+        assert want
+        for handle in (idx, dist):
+            got = handle.search_collect(q, k=10, scorer="bm25")
+            assert got.docs == [d for d, _ in want], q
+            assert got.scores == [s for _, s in want], q
+    lex = pq.read_table(os.path.join(idx.dir, "lexicon"), columns=["df", "idf"]).to_pylist()
+    assert [r["idf"] for r in lex] == [wand.bm25_idf(3, r["df"]) for r in lex]
 
 
 def test_unknown_strategy_or_scorer_raises_before_any_job(spark, built_index):

@@ -1,8 +1,8 @@
 """Routing: the removed `strategy` option and misspelled keywords raise,
 boolean queries are evaluated as boolean queries, the driver-local
-kernel scores the whole cached frame as one group for every query shape,
-and a block preload over the cache budget falls back to per-term
-fetches."""
+kernel scores all of a query's blocks as one group for every query
+shape, and an index over the driver block budget is read per query,
+filtered to the query's terms."""
 
 import pytest
 
@@ -33,8 +33,8 @@ def test_stale_or_misspelled_keywords_raise(built_index, oracle_index):
 
 
 def test_driver_kernel_scores_one_group(built_index, oracle_index, corpus_pdf, monkeypatch):
-    """One boolean_score_bucket call per query over the whole cached
-    frame, every shape including BM25 disjunctions and single terms (a
+    """One boolean_score_bucket call per query over all its blocks,
+    every shape including BM25 disjunctions and single terms (a
     group of whole range buckets scores like one bucket), bit-exact
     against the oracle."""
     from text_indexing_and_retrieval_system_spark.functions.normalize import (
@@ -70,14 +70,14 @@ def test_driver_kernel_scores_one_group(built_index, oracle_index, corpus_pdf, m
 
 
 def test_preload_over_cache_budget_stays_per_term(spark, built_index, oracle_index):
-    """The preload gate estimates size from df; the LRU charges real
-    bytes. A preload that does not fit BLOCK_CACHE_MAX_BYTES is dropped
-    instead of being evicted piecemeal and refetched per term."""
+    """An index whose kernel columns (summed from the parquet footers)
+    exceed BLOCK_CACHE_MAX_BYTES never becomes resident: every
+    driver-leaf query reads only its own terms' blocks."""
     idx = engine.InvertedIndex(spark, built_index.dir)
     idx.BLOCK_CACHE_MAX_BYTES = 4096
+    assert idx._kernel_bytes() > idx.BLOCK_CACHE_MAX_BYTES
     for q in ('"said" OR "index"', '"said" AND "order"'):
         got = idx.search_collect(q, k=10)
-        assert idx._total_df <= idx.BULK_PRELOAD_MAX_DF  # the df gate admits it
         assert idx._bulk_blocks is False
-        assert idx._block_cache_bytes <= idx.BLOCK_CACHE_MAX_BYTES
+        assert idx._blocks is None and idx._block_cache_bytes == 0
         _assert_oracle(oracle_index, got, q, 10)

@@ -47,6 +47,25 @@ def test_engine_spans_install_record_and_uninstall(spark, built_index, oracle_in
         assert getattr(owner, attr) is orig, attr
 
 
+def test_one_preload_per_handle_and_one_block_fetch_per_query(spark, built_index, oracle_index):
+    """`engine.cold.preload_ms` and the block-fetch layer read these spans:
+    a fresh handle decides its block store once, on its first driver-leaf
+    query, and each driver query fetches its blocks once."""
+    by_df = sorted(oracle_index.postings, key=lambda t: (-len(oracle_index.postings[t]), t))
+    queries = [f'"{by_df[0]}" OR "{by_df[20]}"', f'"{by_df[1]}" AND "{by_df[5]}"', f'"{by_df[30]}"']
+    tracer = Tracer("t")
+    tracer.install_engine_spans()
+    try:
+        fresh = engine.InvertedIndex(spark, built_index.dir)
+        for q in queries:
+            fresh.search_collect(q, k=10)
+    finally:
+        tracer.uninstall()
+    preloads = [sp for sp in tracer.spans if sp.name == "engine.preload"]
+    assert len(preloads) == 1 and preloads[0].attrs["cold"] is True
+    assert sum(sp.name == "engine.block_fetch" for sp in tracer.spans) == len(queries)
+
+
 def test_build_manifest_walls_cover_every_layer(built_index):
     walls = layers._manifest_walls(built_index.dir)
     for layer in (

@@ -10,10 +10,9 @@ query_processing_engine.py:549-651`):
         set-evaluated in numpy (NOT against the doc-id universe); the
         matches are scored exactly as Σ weight × impact (bm25: idf ×
         BM25 tf-normalization; tfidf: ln(N/df) × tf; wordcount: tf)
-      → routing by gate (InvertedIndex._search_rows): driver-local over
-        cached posting blocks when the terms' Σdf (and, for NOT, the
-        corpus size) is under the size gates, else one distributed
-        bucket-kernel job
+      → routing by gate (InvertedIndex._search_rows): driver-local when
+        the terms' Σdf (and, for NOT, the corpus size) is under the size
+        gates, else one distributed bucket-kernel job
       → top-k (score DESC, doc_id_int ASC) → optional hydration join
 
 That gives two leaves: driver (_search_kernel_driver_rows) and
@@ -26,6 +25,13 @@ against the same oracle). Control crosses driver→executor once per
 query or batch on the distributed leaf (plus a dict-lookup id
 resolution from the driver-cached convmap), matching SURVEY.md §3.1's
 target.
+
+The driver leaf launches no Spark job: it reads the index with pyarrow
+(lexicon, convmap and NOT doc-id universe once per handle). Its posting
+blocks come from one store: the whole index's kernel columns as one
+resident Arrow table, sliced per query, when they fit
+BLOCK_CACHE_MAX_BYTES; otherwise, and for phrase positions, a pyarrow
+read filtered to the query's terms (_blocks_pdf_for).
 """
 
 from __future__ import annotations
@@ -35,7 +41,10 @@ import math
 import os
 from dataclasses import dataclass
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -115,20 +124,19 @@ class InvertedIndex:
         self._convmap: dict[int, str] | None = None
         self._turn_strs: list[str] | None = None
         self._postings_df = None
+        self._postings_ds = None
         self._n_terms = None
-        # driver-local posting-block cache (the interactive head cache):
-        # term -> its block frame, LRU-bounded by payload bytes. Cleared
-        # here so a refresh can never serve stale blocks.
-        from collections import OrderedDict
-
-        self._block_cache: OrderedDict[tuple, pd.DataFrame] = OrderedDict()
-        self._block_cache_bytes = 0
-        # one-shot whole-index block preload state (see
-        # _maybe_bulk_load_blocks): None = not yet decided, False =
-        # over-budget (stay per-term), True = preloaded
+        # the driver leaf's block store (see _maybe_bulk_load_blocks):
+        # None = not yet decided, False = over budget (filtered reads),
+        # True = resident. Cleared here so a refresh can never serve
+        # stale blocks.
         self._bulk_blocks: bool | None = None
-        self._bulk_empty: pd.DataFrame | None = None
-        self._total_df: int | None = None
+        self._blocks = None  # resident pa.Table of wand.KERNEL_COLS
+        self._term_rows: dict[str, tuple[int, int]] = {}
+        # read by perfbench/tracing.py only (its block-cache spans): no
+        # per-term cache exists; the bytes are the resident table's
+        self._block_cache: dict = {}
+        self._block_cache_bytes = 0
         self._doclen_ids_cache = None
         for unit in ("refresh_postings", "stage3_postings"):
             info = man.read(unit)
@@ -148,16 +156,20 @@ class InvertedIndex:
         `pos_payload` column BEFORE any shuffle, so parquet column
         pruning keeps position bytes entirely off the hot path — only
         phrase queries pay for them."""
-        if with_positions and not self.store_positions:
+        if with_positions:
+            self._require_positions()
+        df = self._blocks_relation(with_positions)
+        if not tokens:
+            return df.filter(F.lit(False))
+        return df.filter(self._bucket_term_filter(tokens))
+
+    def _require_positions(self) -> None:
+        if not self.store_positions:
             raise ValueError(
                 f"index at {self.dir} was built with store_positions=False; "
                 "phrase queries require positions — rebuild with "
                 "store_positions=True"
             )
-        df = self._blocks_relation(with_positions)
-        if not tokens:
-            return df.filter(F.lit(False))
-        return df.filter(self._bucket_term_filter(tokens))
 
     def _bucket_term_filter(self, tokens: list[str]):
         """`bucket IN (...) AND term IN (...)` over the tokens' term
@@ -193,63 +205,51 @@ class InvertedIndex:
             df = df.drop("pos_payload")
         return df
 
-    LEX_COLS = ["term", "df", "cf", "idf", "n_blocks"]
+    LEX_COLS = ["term", "df", "cf", "n_blocks"]
     LEX_DRIVER_CACHE_MAX = 5_000_000  # terms; ~0.5 GB driver budget
-    # interactive head-cache gate: queries whose terms' total df is under
-    # this run driver-local (one single-stage pruned fetch + in-process
-    # scoring) instead of paying a 2-stage shuffle job (~0.4 s of
+    # interactive driver-leaf gate: queries whose terms' total df is under
+    # this run driver-local (in-process scoring over the driver block
+    # store) instead of paying a 2-stage shuffle job (~0.4 s of
     # scheduling for microseconds of math at low df). ~8 payload
-    # bytes/posting -> <=~32 MB fetched worst-case; on a 10^12-doc
+    # bytes/posting -> <=~32 MB read worst-case; on a 10^12-doc
     # deployment hot terms blow past the cap and take the distributed
     # kernel automatically.
     DRIVER_WAND_MAX_DF = 4_000_000
-    BLOCK_CACHE_MAX_BYTES = 256 << 20  # driver posting-block LRU budget
-    # interactive whole-index preload gate: when the ENTIRE postings
-    # table's df total is under this cap (~12 payload bytes/posting ->
-    # ~200 MB, inside the block-cache budget), the first driver-local
-    # query fetches every block in ONE pruned collect instead of paying
-    # a per-query Spark fetch job for each new term (measured
-    # ~0.15-0.25 s of scheduling per sequential interactive query at
-    # sf0.1 — the dominant cost of the wand_16 suite entry). Big
-    # deployments blow past the cap (the 4.84M-turn scaling corpus is
-    # ~110M df) and keep per-term fetches + the distributed kernel;
-    # gate value is df-based (lexicon stats), not filesystem probing,
-    # so it is storage-agnostic.
-    BULK_PRELOAD_MAX_DF = 16_000_000
+    # the driver block store's one budget: an index whose kernel columns
+    # (parquet footers' uncompressed bytes) fit it is read whole into the
+    # resident table; a bigger one is read per query, filtered to the
+    # query's terms
+    BLOCK_CACHE_MAX_BYTES = 256 << 20
     DRIVER_NOT_MAX_DOCS = 2_000_000  # NOT complement needs the universe
     CONVMAP_DRIVER_CACHE_MAX = 5_000_000  # convs
 
-    @staticmethod
-    def _frame_bytes(g: pd.DataFrame) -> int:
-        """LRU budget charge for one cached block frame: payload PLUS
-        pos_payload when present — position blobs are typically several
-        times the doc/tf payload, so counting payload alone let
-        phrase-heavy workloads overshoot BLOCK_CACHE_MAX_BYTES."""
-        if not len(g):
-            return 0
-        n = int(g["payload"].map(len).sum())
-        if "pos_payload" in g.columns:
-            n += int(g["pos_payload"].map(len).sum())
-        return n
+    def _dataset(self, table: str) -> pads.Dataset:
+        """An index table (hive-partitioned parquet) for a driver-side
+        pyarrow read: no Spark job, no pandas bookkeeping."""
+        return pads.dataset(
+            os.path.join(self.dir, table), format="parquet", partitioning="hive"
+        )
+
+    def _postings(self) -> pads.Dataset:
+        if self._postings_ds is None:  # lists the files once per handle
+            self._postings_ds = self._dataset("postings")
+        return self._postings_ds
 
     def lexicon_for(self, tokens: list[str]) -> pd.DataFrame:
         """Pruned lexicon lookup with a per-instance driver cache
         (vocabulary is Zipfian — repeated query terms hit the cache;
         unknown terms are negatively cached). When the whole vocabulary
         fits the driver (manifest n_terms under the cap — true far beyond
-        this sandbox), it is loaded ONCE and every later lookup is a dict
-        hit instead of a Spark job; bigger vocabularies keep the pruned
-        per-term scan."""
+        this sandbox), it is read ONCE with pyarrow and every later lookup
+        is a dict hit; bigger vocabularies keep the pruned per-term Spark
+        scan."""
         if (
             self._full_lex is None
             and self._n_terms is not None
             and self._n_terms <= self.LEX_DRIVER_CACHE_MAX
         ):
-            pdf = self.spark.read.parquet(
-                os.path.join(self.dir, "lexicon")
-            ).select(*self.LEX_COLS).toPandas()
-            self._full_lex = {r["term"]: r for r in pdf.to_dict("records")}
-            self._total_df = int(pdf["df"].sum() or 0)
+            rows = self._dataset("lexicon").to_table(columns=self.LEX_COLS).to_pylist()
+            self._full_lex = {r["term"]: r for r in rows}
         if self._full_lex is not None:
             rows = [self._full_lex[t] for t in tokens if t in self._full_lex]
             return pd.DataFrame(rows, columns=self.LEX_COLS)
@@ -340,16 +340,15 @@ class InvertedIndex:
 
     def _term_weights(self, scorer: str, lex: pd.DataFrame) -> dict[str, float]:
         """term -> scorer weight for the lexicon rows `lex`. The weight
-        multiplies the kernel's impact: bm25 the lexicon idf, tfidf
-        ln(N/df) computed here exactly as the oracle does, wordcount 1.0."""
+        multiplies the kernel's impact: bm25 wand.bm25_idf, tfidf
+        ln(N/df), both computed here from df exactly as the oracle does;
+        wordcount 1.0."""
+        if scorer == "wordcount":
+            return dict.fromkeys(lex["term"], 1.0)
+        n_docs = int(self.stats["n_docs"])
         if scorer == "bm25":
-            return dict(zip(lex["term"], map(float, lex["idf"])))
-        if scorer == "tfidf":
-            n_docs = int(self.stats["n_docs"])
-            return {
-                t: math.log(n_docs / int(df)) for t, df in zip(lex["term"], lex["df"])
-            }
-        return dict.fromkeys(lex["term"], 1.0)
+            return {t: wand.bm25_idf(n_docs, int(df)) for t, df in zip(lex["term"], lex["df"])}
+        return {t: math.log(n_docs / int(df)) for t, df in zip(lex["term"], lex["df"])}
 
     @staticmethod
     def _term_meta(
@@ -370,8 +369,8 @@ class InvertedIndex:
 
         Every query set-evaluates its tree and scores the matches
         (wand.boolean_score_bucket), any shape and scorer. The gate picks
-        where: the interactive head cache (see DRIVER_WAND_MAX_DF) scores
-        small-df queries driver-local over cached block frames; NOT needs
+        where: the interactive driver leaf (see DRIVER_WAND_MAX_DF) scores
+        small-df queries in-process over the driver block store; NOT needs
         the complement universe (every doc id), so it additionally
         requires a small corpus. Everything else runs as one distributed
         bucket-kernel job. An unknown scorer raises before any Spark job."""
@@ -443,16 +442,12 @@ class InvertedIndex:
         mark("driver_merge")
         return winners
 
-    def _doclen_ids(self) -> "np.ndarray":
+    def _doclen_ids(self) -> np.ndarray:
         """Sorted int64 doc-id universe, driver-cached (gated by
         DRIVER_NOT_MAX_DOCS at the call site)."""
         if self._doclen_ids_cache is None:
-            import numpy as np
-
-            pdf = self.doclen().select("doc_id_int").toPandas()
-            self._doclen_ids_cache = np.sort(
-                pdf["doc_id_int"].to_numpy(dtype="int64")
-            )
+            ids = self._dataset("doclen").to_table(columns=["doc_id_int"]).column(0)
+            self._doclen_ids_cache = np.sort(ids.to_numpy().astype(np.int64))
         return self._doclen_ids_cache
 
     def _search_kernel_driver_rows(
@@ -467,7 +462,7 @@ class InvertedIndex:
     ) -> list[tuple]:
         """The driver leaf, every query shape: the distributed path's
         kernel body (wand.boolean_score_bucket) called ONCE in-process on a
-        batch of one over the whole cached block frame, with the whole
+        batch of one over all the query's blocks, with the whole
         doc-id universe for NOT. Exact by the packing argument of
         wand._with_slot: a group of whole range buckets scores like one
         bigger bucket, so the single call is bit-identical to the
@@ -495,93 +490,68 @@ class InvertedIndex:
     def _blocks_pdf_for(
         self, tokens: list[str], with_positions: bool = False
     ) -> pd.DataFrame | None:
-        """Per-term block frames through the driver LRU cache; missing
-        terms fetched in ONE single-stage pruned collect (parquet bucket
-        dirs + row-group IN pruning; no shuffle, no python workers).
-        Position-bearing frames are cached under a separate key so the
-        ranked path never carries position bytes. Returns None when no
-        token has postings."""
-        cols = list(wand.KERNEL_COLS) + (["pos_payload"] if with_positions else [])
-        keys = [(t, with_positions) for t in tokens]
-        missing = [t for t in tokens if (t, with_positions) not in self._block_cache]
-        if missing and not with_positions and self._maybe_bulk_load_blocks():
-            # whole index preloaded: a missing term that is absent from
-            # the (driver-cached) lexicon has no postings — negative-
-            # cache the shared empty frame. A missing term that IS in
-            # the lexicon was LRU-EVICTED after the preload and must be
-            # re-fetched per-term (treating it as empty would silently
-            # drop its postings — caught by test_block_cache_lru_eviction)
-            refetch = []
-            for t in missing:
-                if (t, False) in self._block_cache:
-                    continue  # just preloaded
-                if t in self._full_lex:
-                    refetch.append(t)
-                else:
-                    self._block_cache[(t, False)] = self._bulk_empty
-            missing = refetch
-        if missing:
-            pdf = (
-                self.blocks_for(missing, with_positions=with_positions)
-                .select(*cols)
-                .toPandas()
-            )
-            groups = {t: g for t, g in pdf.groupby("term", sort=False)}
-            empty = pdf.iloc[0:0]
-            for t in missing:
-                g = groups.get(t, empty)
-                self._block_cache[(t, with_positions)] = g
-                self._block_cache_bytes += self._frame_bytes(g)
-        frames = []
-        for key in keys:
-            g = self._block_cache[key]
-            self._block_cache.move_to_end(key)  # LRU touch
-            if len(g):
-                frames.append(g)
-        # evict AFTER the lookups: this call's keys were just touched, so
-        # the cold end goes first; references held in `frames` stay valid
-        # even if an over-budget fetch immediately evicts its own keys
-        while (
-            self._block_cache_bytes > self.BLOCK_CACHE_MAX_BYTES
-            and self._block_cache
-        ):
-            _, old = self._block_cache.popitem(last=False)
-            self._block_cache_bytes -= self._frame_bytes(old)
-        if not frames:
+        """The tokens' posting blocks for the driver leaf, never through
+        Spark: row slices of the resident table, or, for positions
+        (phrase queries) and over the budget, one pyarrow read filtered
+        on `bucket IN (...) AND term IN (...)` (bucket-dir pruning plus
+        row-group statistics on term). Returns None when no token has
+        postings."""
+        if self._bulk_blocks is None:
+            self._maybe_bulk_load_blocks()
+        if self._bulk_blocks and not with_positions:
+            rows = [self._term_rows[t] for t in tokens if t in self._term_rows]
+            if not rows:
+                return None
+            return pa.concat_tables([self._blocks.slice(a, b - a) for a, b in rows]).to_pandas()
+        if with_positions:
+            self._require_positions()
+        if not tokens:
             return None
-        return pd.concat(frames, ignore_index=True)
+        buckets = sorted({term_bucket_py(t, self.n_term_buckets) for t in tokens})
+        table = self._postings().to_table(
+            columns=wand.KERNEL_COLS + (["pos_payload"] if with_positions else []),
+            filter=pads.field("bucket").isin(buckets) & pads.field("term").isin(tokens),
+        )
+        return table.to_pandas() if table.num_rows else None
 
-    def _maybe_bulk_load_blocks(self) -> bool:
-        """One-shot driver preload of ALL posting blocks (no positions)
-        into the per-term block cache. Returns True when the cache holds
-        the whole index. Gated on the driver-cached lexicon's total df
-        (BULK_PRELOAD_MAX_DF) so the decision needs no extra Spark job
-        and no filesystem probing; decided once per handle. Positions
-        stay per-term — phrase queries are the rare consumer and their
-        payloads are several times larger."""
-        if self._bulk_blocks is not None:
-            return self._bulk_blocks
-        if self._full_lex is None or self._total_df is None:
-            return False  # lexicon not driver-cached: stay per-term
-        if self._total_df > self.BULK_PRELOAD_MAX_DF:
-            self._bulk_blocks = False
-            return False
-        pdf = self._blocks_relation(False).select(*wand.KERNEL_COLS).toPandas()
-        # the df gate only estimates size, the LRU charges real bytes: a
-        # preload over BLOCK_CACHE_MAX_BYTES would be evicted piecemeal
-        # and refetched per term on every later query, so drop it
-        if self._block_cache_bytes + self._frame_bytes(pdf) > self.BLOCK_CACHE_MAX_BYTES:
-            self._bulk_blocks = False
-            return False
-        self._bulk_empty = pdf.iloc[0:0]
-        for t, g in pdf.groupby("term", sort=False):
-            old = self._block_cache.get((t, False))
-            if old is not None:  # fetched per-term before the lexicon cached
-                self._block_cache_bytes -= self._frame_bytes(old)
-            self._block_cache[(t, False)] = g
-            self._block_cache_bytes += self._frame_bytes(g)
-        self._bulk_blocks = True
-        return True
+    def _maybe_bulk_load_blocks(self) -> None:
+        """Decide the driver block store (_blocks_pdf_for calls this once
+        per handle, on its first driver-leaf query): when the postings'
+        kernel columns fit BLOCK_CACHE_MAX_BYTES (summed from the parquet
+        footers, no full read) and the lexicon is driver-cached, read them
+        whole with pyarrow into one table sorted by (term, range_bucket,
+        first_doc) with a term -> (start, stop) row index; otherwise the
+        driver leaf reads per query."""
+        self._bulk_blocks = (
+            self._full_lex is not None
+            and self._kernel_bytes() <= self.BLOCK_CACHE_MAX_BYTES
+        )
+        if self._bulk_blocks:
+            table = self._postings().to_table(columns=wand.KERNEL_COLS).sort_by(
+                [("term", "ascending"), ("range_bucket", "ascending"), ("first_doc", "ascending")]
+            )
+            terms = table.column("term").to_numpy(zero_copy_only=False)
+            bounds = [0, *(np.flatnonzero(terms[1:] != terms[:-1]) + 1).tolist(), len(terms)]
+            self._term_rows = {
+                terms[a]: (a, b) for a, b in zip(bounds, bounds[1:]) if b > a
+            }
+            self._blocks = table
+            self._block_cache_bytes = table.nbytes
+
+    def _kernel_bytes(self) -> int:
+        """Uncompressed bytes of the postings' kernel columns, from the
+        parquet footers alone."""
+        cols = set(wand.KERNEL_COLS)
+        total = 0
+        for frag in self._postings().get_fragments():
+            meta = frag.metadata
+            for i in range(meta.num_row_groups):
+                rg = meta.row_group(i)
+                for j in range(rg.num_columns):
+                    col = rg.column(j)
+                    if col.path_in_schema in cols:
+                        total += col.total_uncompressed_size
+        return total
 
     def _doc_ids_for(self, ids: list[int]) -> dict[int, str]:
         if not ids:
@@ -595,15 +565,14 @@ class InvertedIndex:
             and n_convs is not None
             and n_convs <= self.CONVMAP_DRIVER_CACHE_MAX
         ):
-            pdf = self.spark.read.parquet(
-                os.path.join(self.dir, "convmap")
-            ).toPandas()
+            cm = self._dataset("convmap").to_table(columns=["conv_int", "conv_id"])
             # stored colon-suffixed: resolution below is one dict lookup
             # + one table index + one concat per id (the f-string loop
             # was ~1.6 us/id — a visible driver-tail constant at 45k ids
             # per 1024-query batch)
             self._convmap = {
-                int(c): s + ":" for c, s in zip(pdf["conv_int"], pdf["conv_id"])
+                int(c): s + ":"
+                for c, s in zip(cm.column("conv_int").to_pylist(), cm.column("conv_id").to_pylist())
             }
         if self._convmap is not None:
             from .operators.index_build import TURN_BITS

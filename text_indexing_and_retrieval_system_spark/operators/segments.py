@@ -45,12 +45,14 @@ import time
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
+import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.normalize import NormalizeConfig
 from ..sources.provider import ParquetDirProvider, TableProvider
 from . import index_build as ib
+from . import wand
 from .index_build import IndexBuildConfig
 
 # hydration-store column contract (stage 4 / docs/): readers select these
@@ -243,7 +245,17 @@ def write_lexicon(
     postings: DataFrame, stats: dict, n_term_buckets: int, provider: TableProvider, table: str
 ) -> None:
     """Stage 3 lexicon, from the written (columnar, payload-pruned)
-    postings — cheaper than persisting the block payloads in memory."""
+    postings — cheaper than persisting the block payloads in memory.
+
+    The engine computes BM25 weights from df (wand.bm25_idf) and reads no
+    `idf`; the column stays for external readers, written with the same
+    function, because Spark's `log` rounds some arguments one ulp away."""
+    n_docs = int(stats["n_docs"])
+
+    @F.pandas_udf("double")
+    def bm25_idf(df: pd.Series) -> pd.Series:
+        return pd.Series([wand.bm25_idf(n_docs, d) for d in df.tolist()], dtype="float64")
+
     lex = (
         postings.groupBy("term")
         .agg(
@@ -251,15 +263,7 @@ def write_lexicon(
             F.sum("sum_tf").alias("cf"),
             F.count("*").alias("n_blocks"),
         )
-        # Lucene/ES BM25 idf: ln(1 + (N - df + 0.5)/(df + 0.5))
-        .withColumn(
-            "idf",
-            F.log(
-                F.lit(1.0)
-                + (F.lit(float(stats["n_docs"])) - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-            ),
-        )
+        .withColumn("idf", bm25_idf("df"))
         .withColumn("bucket", term_bucket_col(F.col("term"), n_term_buckets))
     )
     provider.write(

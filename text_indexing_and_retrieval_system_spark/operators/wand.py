@@ -23,6 +23,7 @@ oracle bit-for-bit.
 
 from __future__ import annotations
 
+import math
 import uuid
 
 import numpy as np
@@ -43,8 +44,15 @@ KERNEL_COLS = ["term", "range_bucket", "first_doc", "last_doc", "payload"]
 # the weight computed on the driver; each expression is the oracle's, so
 # scores are bit-identical.
 def bm25_impact(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
-    """BM25 tf-normalization; the weight is the lexicon idf."""
+    """BM25 tf-normalization; the weight is bm25_idf."""
     return tf * (K1 + 1.0) / (tf + K1 * ((1.0 - B) + (B * dl.astype(np.float64)) / avgdl))
+
+
+def bm25_idf(n_docs: int, df: int) -> float:
+    """Lucene/ES BM25 idf ln(1 + (N - df + 0.5)/(df + 0.5)), with
+    math.log as the oracle computes it: Spark's `log` and numpy's `log`
+    round some arguments one ulp apart from it."""
+    return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
 def tf_impact(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:

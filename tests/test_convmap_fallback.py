@@ -1,53 +1,49 @@
-"""Convmap driver-cache fallback (engine._doc_ids_for).
+"""Doc-id resolution over the resident budget (engine._doc_ids_for).
 
-When `n_convs > CONVMAP_DRIVER_CACHE_MAX` the driver must NOT load the
-convmap; doc-id resolution instead scans `doclen()` — a literal IN-list
-for small id sets (parquet min/max pruning) or a broadcast-joined id
-relation for large ones. Both fallback branches must return exactly the
-cached-path mapping, end-to-end through `search()` hydration.
+A convmap whose `conv_int`/`conv_id` columns (summed from the parquet
+footers) exceed `DRIVER_RESIDENT_MAX_BYTES` never becomes resident: each
+resolution reads only the conv ints its ids name, with one filtered
+pyarrow read and no Spark job. Small and large (>256) id sets must map
+exactly as the resident convmap does, end-to-end through `search()`
+hydration too.
 
 Reference parity: doc-id hydration per SURVEY.md S8 (reference
-`indexer.py` doc-store lookup); the cap exists because a 10^12-doc
+`indexer.py` doc-store lookup); the budget exists because a 10^12-doc
 deployment cannot hold the conv map on the driver.
 """
 
-import pandas as pd
+from text_indexing_and_retrieval_system_spark import engine
 
 
-def _force_fallback(idx):
-    idx._convmap = None
-    idx.CONVMAP_DRIVER_CACHE_MAX = 0  # instance attr shadows the class
+def _over_budget(spark, idx):
+    """A fresh handle on `idx`'s index with nothing driver-resident."""
+    filtered = engine.InvertedIndex(spark, idx.dir)
+    filtered.DRIVER_RESIDENT_MAX_BYTES = 0
+    return filtered
 
 
-def _restore(idx):
-    idx._convmap = None
+def test_doc_ids_for_fallback_small_and_large(spark, built_index):
+    resident = engine.InvertedIndex(spark, built_index.dir)
+    all_ids = resident._doclen_ids()[:300].tolist()
+    small, large = all_ids[:17], all_ids
+    assert len(large) > 256
+    want_small = resident._doc_ids_for(small)
+    want_large = resident._doc_ids_for(large)
+    assert resident._convmap is not None  # resident path really ran
+
+    idx = _over_budget(spark, built_index)
+    sc = spark.sparkContext
+    group = "test-convmap-over-budget"
+    sc.setJobGroup(group, "must launch no job")
     try:
-        del idx.CONVMAP_DRIVER_CACHE_MAX
-    except AttributeError:
-        pass
-
-
-def test_doc_ids_for_fallback_small_and_large(built_index):
-    idx = built_index
-    all_ids = [
-        int(r["doc_id_int"])
-        for r in idx.doclen().select("doc_id_int").limit(300).collect()
-    ]
-    small, large = all_ids[:17], all_ids  # IN-list branch / broadcast branch
-    assert len(large) > 256, "need >256 ids to exercise the join branch"
-
-    _restore(idx)  # ensure the cached path is actually cached
-    want_small = idx._doc_ids_for(small)
-    want_large = idx._doc_ids_for(large)
-    assert idx._convmap is not None  # cached path really ran
-
-    _force_fallback(idx)
-    try:
-        assert idx._doc_ids_for(small) == want_small
+        got_small = idx._doc_ids_for(small)
         got_large = idx._doc_ids_for(large)
-        assert idx._convmap is None  # fallback never loaded the map
     finally:
-        _restore(idx)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert idx._convmap is None  # the filtered read never made it resident
+    assert got_small == want_small
     assert got_large == want_large
     # sanity: mapping is the build-side format conv-XXXXXXXX:NNNN
     any_id = want_small[small[0]]
@@ -55,14 +51,13 @@ def test_doc_ids_for_fallback_small_and_large(built_index):
     assert conv.startswith("conv-") and len(turn) == 4
 
 
-def test_search_hydration_under_fallback(built_index):
-    idx = built_index
-    _restore(idx)
-    want = idx.search_collect('"the" OR "conversation"', k=20, scorer="bm25")
-    _force_fallback(idx)
-    try:
-        got = idx.search_collect('"the" OR "conversation"', k=20, scorer="bm25")
-    finally:
-        _restore(idx)
+def test_search_hydration_under_fallback(spark, built_index, oracle_index):
+    by_df = sorted(oracle_index.postings, key=lambda t: (-len(oracle_index.postings[t]), t))
+    q = f'"{by_df[0]}" OR "{by_df[20]}"'
+    want = built_index.search_collect(q, k=20, scorer="bm25")
+    idx = _over_budget(spark, built_index)
+    got = idx.search_collect(q, k=20, scorer="bm25")
+    assert idx._convmap is None
+    assert len(want.docs) == 20
     assert want.docs == got.docs
     assert [round(s, 9) for s in want.scores] == [round(s, 9) for s in got.scores]

@@ -154,11 +154,25 @@ def test_missing_term_empty(built_index, oracle_index):
     assert built_index.search_collect(q, k=K).docs == []
 
 
+def _jobs_in_group(spark, group, fn):
+    """(fn(), the ids of the Spark jobs it launched), per statusTracker."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "must launch no job")
+    try:
+        got = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return got, sc.statusTracker().getJobIdsForGroup(group)
+
+
 def test_driver_leaf_launches_no_spark_job(spark, built_index, oracle_index, corpus_pdf, query_set):
     """A fresh handle answers OR, AND, AND NOT and PHRASE on the driver
     leaf bit-exact without one Spark job: lexicon, convmap, NOT universe
-    and blocks are read with pyarrow. With the block budget at 0 (the
-    per-query filtered read) the golden queries stay bit-exact too."""
+    and blocks are read with pyarrow. With the resident budget at 0 no
+    table becomes resident: every lexicon lookup, id resolution and
+    block read is a filtered pyarrow read, still with no Spark job, and
+    the golden queries, an absent term and a search_batch stay bit-exact."""
     by_df = sorted(oracle_index.postings, key=lambda t: (-len(oracle_index.postings[t]), t))
     hot, mid = by_df[0], by_df[20]
     tokens = normalize_to_tokens(corpus_pdf["text"].head(50))
@@ -169,44 +183,41 @@ def test_driver_leaf_launches_no_spark_job(spark, built_index, oracle_index, cor
         f'"{mid}" AND NOT "{hot}"',
         f'PHRASE "{phrase}"',
     ]
-    sc = spark.sparkContext
-    group = "test-driver-leaf-no-job"
     idx = engine.InvertedIndex(spark, built_index.dir)
-    sc.setJobGroup(group, "must launch no job")
-    try:
-        got = {q: idx.search_collect(q, k=K) for q in queries}
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    got, jobs = _jobs_in_group(
+        spark, "test-driver-leaf-no-job", lambda: {q: idx.search_collect(q, k=K) for q in queries}
+    )
+    assert jobs == []
     assert idx._bulk_blocks is True
     for q in queries:
         _assert_match(oracle_index.search(q, k=K), got[q], q)
 
     filtered = engine.InvertedIndex(spark, built_index.dir)
-    filtered.BLOCK_CACHE_MAX_BYTES = 0
-    for q in [*query_set, *queries]:
-        _assert_match(oracle_index.search(q, k=K), filtered.search_collect(q, k=K), q + " [filtered]")
-    assert filtered._bulk_blocks is False
-
-
-def test_lexicon_fallback_per_term_scan(spark, built_index, oracle_index, query_set):
-    """A vocabulary over LEX_DRIVER_CACHE_MAX skips the driver lexicon and
-    the resident block table: every lookup is a per-term lexicon scan
-    with a negative cache, every block read filtered to the query's
-    terms. Golden queries, an absent term and a batch stay bit-exact
-    against the oracle."""
-    idx = engine.InvertedIndex(spark, built_index.dir)
-    idx.LEX_DRIVER_CACHE_MAX = 0
+    filtered.DRIVER_RESIDENT_MAX_BYTES = 0
     absent = '"zzzznonexistentzzz"'
-    for q in [*query_set, absent]:
-        want = oracle_index.search(q, k=K, scorer="bm25")
-        _assert_match(want, idx.search_collect(q, k=K, scorer="bm25"), q + " [fallback]")
-    assert None in idx._lex_cache.values()  # the absent term, negatively cached
-    terms = sorted(oracle_index.postings, key=lambda t: (-len(oracle_index.postings[t]), t))
-    batch = [f'"{terms[0]}"', f'"{terms[1]}" OR "{terms[5]}"', f'"{terms[2]}" OR "{terms[30]}"', absent]
-    got = idx.search_batch(batch, k=K)
+    golden = [*query_set, *queries, absent]
+    got, jobs = _jobs_in_group(
+        spark,
+        "test-driver-leaf-no-job-filtered",
+        lambda: {q: filtered.search_collect(q, k=K) for q in golden},
+    )
+    assert jobs == []
+    for q in golden:
+        _assert_match(oracle_index.search(q, k=K), got[q], q + " [filtered]")
+    batch = [f'"{by_df[0]}"', f'"{by_df[1]}" OR "{by_df[5]}"', f'"{by_df[2]}" OR "{by_df[30]}"', absent]
+    got = filtered.search_batch(batch, k=K)
     for q in batch:
-        _assert_match(oracle_index.search(q, k=K, scorer="bm25"), got[q], q + " [fallback batch]")
-    assert idx._full_lex is None
-    assert idx._bulk_blocks is not True
+        _assert_match(oracle_index.search(q, k=K), got[q], q + " [filtered batch]")
+    assert filtered._bulk_blocks is False
+    assert filtered._full_lex is None and filtered._convmap is None and filtered._blocks is None
+
+
+def test_batch_of_unknown_terms_launches_no_spark_job(spark, built_index):
+    """A search_batch in which no query has a term in the lexicon has
+    nothing to score: empty results, and no kernel job over no blocks."""
+    batch = ['"zzzznonexistentzzz"', '"qqqqunknownqqqq" OR "xxxxnothingxxxx"']
+    got, jobs = _jobs_in_group(
+        spark, "test-unknown-batch-no-job", lambda: built_index.search_batch(batch, k=K)
+    )
+    assert jobs == []
+    assert {q: (r.docs, r.scores) for q, r in got.items()} == {q: ([], []) for q in batch}

@@ -25,7 +25,7 @@ def test_bulk_preload_bit_identical(built_index, spark):
     ]
     # fresh handles so store state cannot leak between the two modes
     off = engine.load(spark, built_index.dir)
-    off.BLOCK_CACHE_MAX_BYTES = 0
+    off.DRIVER_RESIDENT_MAX_BYTES = 0
     res_off = _run_queries(off, queries)
     assert off._bulk_blocks is False and off._blocks is None  # filtered reads
 

@@ -71,11 +71,11 @@ def test_driver_kernel_scores_one_group(built_index, oracle_index, corpus_pdf, m
 
 def test_preload_over_cache_budget_stays_per_term(spark, built_index, oracle_index):
     """An index whose kernel columns (summed from the parquet footers)
-    exceed BLOCK_CACHE_MAX_BYTES never becomes resident: every
+    exceed DRIVER_RESIDENT_MAX_BYTES never becomes resident: every
     driver-leaf query reads only its own terms' blocks."""
     idx = engine.InvertedIndex(spark, built_index.dir)
-    idx.BLOCK_CACHE_MAX_BYTES = 4096
-    assert idx._kernel_bytes() > idx.BLOCK_CACHE_MAX_BYTES
+    idx.DRIVER_RESIDENT_MAX_BYTES = 4096
+    assert idx._footer_bytes("postings", wand.KERNEL_COLS) > idx.DRIVER_RESIDENT_MAX_BYTES
     for q in ('"said" OR "index"', '"said" AND "order"'):
         got = idx.search_collect(q, k=10)
         assert idx._bulk_blocks is False

@@ -66,6 +66,26 @@ def test_one_preload_per_handle_and_one_block_fetch_per_query(spark, built_index
     assert sum(sp.name == "engine.block_fetch" for sp in tracer.spans) == len(queries)
 
 
+def test_lexicon_and_id_resolution_spans_mark_the_cold_call(spark, built_index, oracle_index):
+    """`engine.cold.lexicon_load_ms` and `engine.cold.convmap_load_ms`
+    sum the `engine.lexicon` and `engine.id_resolution` spans whose
+    `cold` attr is set: on a fresh handle only the first call of each is
+    cold, the one that makes its table resident."""
+    by_df = sorted(oracle_index.postings, key=lambda t: (-len(oracle_index.postings[t]), t))
+    queries = [f'"{by_df[0]}" OR "{by_df[20]}"', f'"{by_df[1]}" AND "{by_df[5]}"', f'"{by_df[30]}"']
+    tracer = Tracer("t")
+    tracer.install_engine_spans()
+    try:
+        fresh = engine.InvertedIndex(spark, built_index.dir)
+        for q in queries:
+            assert fresh.search_collect(q, k=10).docs, q
+    finally:
+        tracer.uninstall()
+    for name in ("engine.lexicon", "engine.id_resolution"):
+        colds = [sp.attrs["cold"] for sp in tracer.spans if sp.name == name]
+        assert colds == [True] + [False] * (len(queries) - 1), (name, colds)
+
+
 def test_build_manifest_walls_cover_every_layer(built_index):
     walls = layers._manifest_walls(built_index.dir)
     for layer in (

@@ -26,12 +26,15 @@ query or batch on the distributed leaf (plus a dict-lookup id
 resolution from the driver-cached convmap), matching SURVEY.md §3.1's
 target.
 
-The driver leaf launches no Spark job: it reads the index with pyarrow
-(lexicon, convmap and NOT doc-id universe once per handle). Its posting
-blocks come from one store: the whole index's kernel columns as one
-resident Arrow table, sliced per query, when they fit
-BLOCK_CACHE_MAX_BYTES; otherwise, and for phrase positions, a pyarrow
-read filtered to the query's terms (_blocks_pdf_for).
+The driver reads its index tables with pyarrow and never through Spark:
+lexicon lookup and id resolution on every path, and the whole driver
+leaf. One rule covers the postings' kernel columns, the lexicon and the
+convmap: a table whose read columns (summed from the parquet footers)
+fit DRIVER_RESIDENT_MAX_BYTES is read whole once per handle (the blocks
+as one Arrow table sorted by term, sliced per query); a bigger one takes
+one read per call, filtered to the call's terms or conv ints. Phrase
+positions always take the filtered read; the NOT doc-id universe is
+read once per handle.
 """
 
 from __future__ import annotations
@@ -73,10 +76,12 @@ class InvertedIndex:
         self.reload()
 
     def reload(self) -> None:
-        """(Re-)read stats.json + the build manifest and drop the lexicon
-        cache. Call after `streaming.incremental.refresh_postings` /
-        `add_documents` — a handle held across a refresh otherwise serves
-        stale n_docs/avgdl/idf and keeps negative-caching new terms."""
+        """(Re-)read stats.json + the build manifest and drop every
+        driver-resident table. Call after
+        `streaming.incremental.refresh_postings` / `add_documents` — a
+        handle held across a refresh otherwise serves stale
+        n_docs/avgdl/idf, misses new terms and cannot resolve new doc
+        ids."""
         stats_path = os.path.join(self.dir, "stats.json")
         if not os.path.exists(stats_path):
             raise FileNotFoundError(
@@ -112,20 +117,20 @@ class InvertedIndex:
             self.normalize_cfg = NormalizeConfig(**norm)
         else:
             self.normalize_cfg = NormalizeConfig()
-        self._lex_cache: dict[str, dict | None] = {}
         doclen_df = getattr(self, "_doclen_df", None)
         if doclen_df is not None:
             doclen_df.unpersist()
         self._doclen_df = None
-        # session-lifetime driver caches (loaded lazily, size-gated): the
-        # full lexicon and the convmap turn two per-batch Spark jobs
-        # (lexicon lookup, doc_id resolution join) into dict lookups
+        # the driver-side index tables, each resident once it fits
+        # DRIVER_RESIDENT_MAX_BYTES, else read filtered per call; None =
+        # not (yet) resident. The lexicon and convmap turn the lexicon
+        # lookup and the doc_id resolution into dict lookups.
         self._full_lex: dict | None = None
         self._convmap: dict[int, str] | None = None
         self._turn_strs: list[str] | None = None
         self._postings_df = None
-        self._postings_ds = None
-        self._n_terms = None
+        self._datasets: dict[str, pads.Dataset] = {}
+        self._footer_sizes: dict[tuple, int] = {}
         # the driver leaf's block store (see _maybe_bulk_load_blocks):
         # None = not yet decided, False = over budget (filtered reads),
         # True = resident. Cleared here so a refresh can never serve
@@ -138,11 +143,6 @@ class InvertedIndex:
         self._block_cache: dict = {}
         self._block_cache_bytes = 0
         self._doclen_ids_cache = None
-        for unit in ("refresh_postings", "stage3_postings"):
-            info = man.read(unit)
-            if info and info.get("n_terms") is not None:
-                self._n_terms = int(info["n_terms"])
-                break
 
     # ------------------------------ scans ------------------------------
 
@@ -206,7 +206,7 @@ class InvertedIndex:
         return df
 
     LEX_COLS = ["term", "df", "cf", "n_blocks"]
-    LEX_DRIVER_CACHE_MAX = 5_000_000  # terms; ~0.5 GB driver budget
+    CONVMAP_COLS = ["conv_int", "conv_id"]
     # interactive driver-leaf gate: queries whose terms' total df is under
     # this run driver-local (in-process scoring over the driver block
     # store) instead of paying a 2-stage shuffle job (~0.4 s of
@@ -215,63 +215,78 @@ class InvertedIndex:
     # deployment hot terms blow past the cap and take the distributed
     # kernel automatically.
     DRIVER_WAND_MAX_DF = 4_000_000
-    # the driver block store's one budget: an index whose kernel columns
-    # (parquet footers' uncompressed bytes) fit it is read whole into the
-    # resident table; a bigger one is read per query, filtered to the
-    # query's terms
-    BLOCK_CACHE_MAX_BYTES = 256 << 20
+    # the one budget of the driver-side index tables (postings kernel
+    # columns, lexicon, convmap): a table whose read columns (parquet
+    # footers' uncompressed bytes) fit it is read whole once per handle;
+    # a bigger one is read per call, filtered to what the call needs
+    DRIVER_RESIDENT_MAX_BYTES = 256 << 20
     DRIVER_NOT_MAX_DOCS = 2_000_000  # NOT complement needs the universe
-    CONVMAP_DRIVER_CACHE_MAX = 5_000_000  # convs
 
     def _dataset(self, table: str) -> pads.Dataset:
         """An index table (hive-partitioned parquet) for a driver-side
-        pyarrow read: no Spark job, no pandas bookkeeping."""
-        return pads.dataset(
-            os.path.join(self.dir, table), format="parquet", partitioning="hive"
+        pyarrow read: no Spark job, no pandas bookkeeping. Lists the
+        table's files once per handle."""
+        if table not in self._datasets:
+            self._datasets[table] = pads.dataset(
+                os.path.join(self.dir, table), format="parquet", partitioning="hive"
+            )
+        return self._datasets[table]
+
+    def _footer_bytes(self, table: str, cols: list[str]) -> int:
+        """Uncompressed bytes of `table`'s columns `cols`, from the parquet
+        footers alone, summed once per handle."""
+        key = (table, *cols)
+        if key not in self._footer_sizes:
+            wanted, total = set(cols), 0
+            for frag in self._dataset(table).get_fragments():
+                meta = frag.metadata
+                for i in range(meta.num_row_groups):
+                    rg = meta.row_group(i)
+                    for j in range(rg.num_columns):
+                        col = rg.column(j)
+                        if col.path_in_schema in wanted:
+                            total += col.total_uncompressed_size
+            self._footer_sizes[key] = total
+        return self._footer_sizes[key]
+
+    def _fits(self, table: str, cols: list[str]) -> bool:
+        return self._footer_bytes(table, cols) <= self.DRIVER_RESIDENT_MAX_BYTES
+
+    def _term_read(self, table: str, cols: list[str], tokens: list[str]) -> pa.Table:
+        """One pyarrow read of `table` (postings or lexicon) filtered on
+        `bucket IN (...) AND term IN (...)`: bucket-dir pruning plus
+        row-group statistics on term."""
+        buckets = sorted({term_bucket_py(t, self.n_term_buckets) for t in tokens})
+        return self._dataset(table).to_table(
+            columns=cols,
+            # typed, so that no tokens is an empty read, not a type error
+            filter=pads.field("bucket").isin(buckets)
+            & pads.field("term").isin(pa.array(tokens, pa.string())),
         )
 
-    def _postings(self) -> pads.Dataset:
-        if self._postings_ds is None:  # lists the files once per handle
-            self._postings_ds = self._dataset("postings")
-        return self._postings_ds
-
     def lexicon_for(self, tokens: list[str]) -> pd.DataFrame:
-        """Pruned lexicon lookup with a per-instance driver cache
-        (vocabulary is Zipfian — repeated query terms hit the cache;
-        unknown terms are negatively cached). When the whole vocabulary
-        fits the driver (manifest n_terms under the cap — true far beyond
-        this sandbox), it is read ONCE with pyarrow and every later lookup
-        is a dict hit; bigger vocabularies keep the pruned per-term Spark
-        scan."""
-        if (
-            self._full_lex is None
-            and self._n_terms is not None
-            and self._n_terms <= self.LEX_DRIVER_CACHE_MAX
-        ):
-            rows = self._dataset("lexicon").to_table(columns=self.LEX_COLS).to_pylist()
-            self._full_lex = {r["term"]: r for r in rows}
-        if self._full_lex is not None:
-            rows = [self._full_lex[t] for t in tokens if t in self._full_lex]
-            return pd.DataFrame(rows, columns=self.LEX_COLS)
-        missing = [t for t in tokens if t not in self._lex_cache]
-        if missing:
-            df = self.spark.read.parquet(os.path.join(self.dir, "lexicon"))
-            got = (
-                df.filter(self._bucket_term_filter(missing))
-                .select(*self.LEX_COLS)
-                .toPandas()
-            )
-            for rec in got.to_dict("records"):
-                self._lex_cache[rec["term"]] = rec
-            for t in missing:
-                self._lex_cache.setdefault(t, None)  # negative cache
-        rows = [self._lex_cache[t] for t in tokens if self._lex_cache.get(t)]
+        """The tokens' lexicon rows (LEX_COLS), in token order, unknown
+        tokens dropped. A lexicon that fits the budget is read once per
+        handle into a term -> (df, cf, n_blocks) dict; a bigger one takes
+        one filtered read per call."""
+        lex = self._full_lex
+        if lex is None:
+            resident = self._fits("lexicon", self.LEX_COLS)
+            if resident:
+                table = self._dataset("lexicon").to_table(columns=self.LEX_COLS)
+            else:
+                table = self._term_read("lexicon", self.LEX_COLS, tokens)
+            pdf = table.to_pandas()
+            lex = dict(zip(pdf["term"], zip(pdf["df"], pdf["cf"], pdf["n_blocks"])))
+            if resident:
+                self._full_lex = lex
+        rows = [(t, *lex[t]) for t in tokens if t in lex]
         return pd.DataFrame(rows, columns=self.LEX_COLS)
 
     def doclen(self) -> DataFrame:
         """doclen table, persisted for the handle's lifetime — the NOT
-        universe of the distributed kernel and the id-resolution fallback
-        read it, and interactive serving re-reads it per query otherwise.
+        universe of the distributed kernel reads it, and interactive
+        serving re-reads it per query otherwise.
         reload() drops the cached relation. (On a 10^12-doc deployment the
         executors' storage tier holds it the same way.)"""
         if self._doclen_df is None:
@@ -492,10 +507,8 @@ class InvertedIndex:
     ) -> pd.DataFrame | None:
         """The tokens' posting blocks for the driver leaf, never through
         Spark: row slices of the resident table, or, for positions
-        (phrase queries) and over the budget, one pyarrow read filtered
-        on `bucket IN (...) AND term IN (...)` (bucket-dir pruning plus
-        row-group statistics on term). Returns None when no token has
-        postings."""
+        (phrase queries) and over the budget, one filtered read
+        (_term_read). Returns None when no token has postings."""
         if self._bulk_blocks is None:
             self._maybe_bulk_load_blocks()
         if self._bulk_blocks and not with_positions:
@@ -507,27 +520,21 @@ class InvertedIndex:
             self._require_positions()
         if not tokens:
             return None
-        buckets = sorted({term_bucket_py(t, self.n_term_buckets) for t in tokens})
-        table = self._postings().to_table(
-            columns=wand.KERNEL_COLS + (["pos_payload"] if with_positions else []),
-            filter=pads.field("bucket").isin(buckets) & pads.field("term").isin(tokens),
+        table = self._term_read(
+            "postings", wand.KERNEL_COLS + (["pos_payload"] if with_positions else []), tokens
         )
         return table.to_pandas() if table.num_rows else None
 
     def _maybe_bulk_load_blocks(self) -> None:
         """Decide the driver block store (_blocks_pdf_for calls this once
         per handle, on its first driver-leaf query): when the postings'
-        kernel columns fit BLOCK_CACHE_MAX_BYTES (summed from the parquet
-        footers, no full read) and the lexicon is driver-cached, read them
-        whole with pyarrow into one table sorted by (term, range_bucket,
-        first_doc) with a term -> (start, stop) row index; otherwise the
-        driver leaf reads per query."""
-        self._bulk_blocks = (
-            self._full_lex is not None
-            and self._kernel_bytes() <= self.BLOCK_CACHE_MAX_BYTES
-        )
+        kernel columns fit DRIVER_RESIDENT_MAX_BYTES, read them whole with
+        pyarrow into one table sorted by (term, range_bucket, first_doc)
+        with a term -> (start, stop) row index; otherwise the driver leaf
+        reads per query."""
+        self._bulk_blocks = self._fits("postings", wand.KERNEL_COLS)
         if self._bulk_blocks:
-            table = self._postings().to_table(columns=wand.KERNEL_COLS).sort_by(
+            table = self._dataset("postings").to_table(columns=wand.KERNEL_COLS).sort_by(
                 [("term", "ascending"), ("range_bucket", "ascending"), ("first_doc", "ascending")]
             )
             terms = table.column("term").to_numpy(zero_copy_only=False)
@@ -538,73 +545,49 @@ class InvertedIndex:
             self._blocks = table
             self._block_cache_bytes = table.nbytes
 
-    def _kernel_bytes(self) -> int:
-        """Uncompressed bytes of the postings' kernel columns, from the
-        parquet footers alone."""
-        cols = set(wand.KERNEL_COLS)
-        total = 0
-        for frag in self._postings().get_fragments():
-            meta = frag.metadata
-            for i in range(meta.num_row_groups):
-                rg = meta.row_group(i)
-                for j in range(rg.num_columns):
-                    col = rg.column(j)
-                    if col.path_in_schema in cols:
-                        total += col.total_uncompressed_size
-        return total
-
     def _doc_ids_for(self, ids: list[int]) -> dict[int, str]:
+        """doc_id_int -> doc_id string, never through Spark: the string
+        is the conv_id of conv_int = id >> TURN_BITS plus the zero-padded
+        turn. A convmap that fits the budget is read once per handle;
+        a bigger one takes one read filtered to the ids' conv_ints."""
         if not ids:
             return {}
-        # doc_id strings are derivable from doc_id_int + the convmap
-        # (conv_int = id >> TURN_BITS); when the convmap fits the driver
-        # it is loaded once and resolution is pure python — no Spark job.
-        n_convs = self.stats.get("n_convs")
-        if (
-            self._convmap is None
-            and n_convs is not None
-            and n_convs <= self.CONVMAP_DRIVER_CACHE_MAX
-        ):
-            cm = self._dataset("convmap").to_table(columns=["conv_int", "conv_id"])
+        from .operators.index_build import TURN_BITS
+
+        ids = [int(i) for i in ids]
+        cm = self._convmap
+        if cm is None:
+            resident = self._fits("convmap", self.CONVMAP_COLS)
+            convs = sorted({i >> TURN_BITS for i in ids})
+            table = self._dataset("convmap").to_table(
+                columns=self.CONVMAP_COLS,
+                filter=None if resident else pads.field("conv_int").isin(convs),
+            )
             # stored colon-suffixed: resolution below is one dict lookup
             # + one table index + one concat per id (the f-string loop
             # was ~1.6 us/id — a visible driver-tail constant at 45k ids
             # per 1024-query batch)
-            self._convmap = {
+            cm = {
                 int(c): s + ":"
-                for c, s in zip(cm.column("conv_int").to_pylist(), cm.column("conv_id").to_pylist())
+                for c, s in zip(
+                    table.column("conv_int").to_pylist(), table.column("conv_id").to_pylist()
+                )
             }
-        if self._convmap is not None:
-            from .operators.index_build import TURN_BITS
-
-            cm = self._convmap
-            tt = self._turn_strs
-            if tt is None:
-                # %04d: zero-pad to 4 but NEVER truncate — mirrors the
-                # build side's format_string("%04d") so conversations with
-                # >9,999 turns keep collision-free doc_id strings; the
-                # table covers the common low turn indexes, rare higher
-                # ones fall back to the formatter
-                tt = self._turn_strs = [f"{i:04d}" for i in range(4096)]
-            mask = (1 << TURN_BITS) - 1
-            return {
-                i: cm[i >> TURN_BITS]
-                + (tt[t] if (t := i & mask) < 4096 else f"{t:04d}")
-                for i in map(int, ids)
-            }
-        if len(ids) <= 256:
-            # small: literal IN-list gets parquet min/max pruning
-            scan = self.doclen().filter(F.col("doc_id_int").isin(ids))
-        else:
-            # large: an IN-list of thousands of literals makes Catalyst
-            # plan compilation itself the bottleneck (measured ~9 s at
-            # 12k ids); broadcast-join a one-column id relation instead
-            ids_df = self.spark.createDataFrame(
-                [(int(i),) for i in ids], "doc_id_int long"
-            )
-            scan = self.doclen().join(F.broadcast(ids_df), "doc_id_int")
-        got = scan.select("doc_id_int", "doc_id").collect()
-        return {r["doc_id_int"]: r["doc_id"] for r in got}
+            if resident:
+                self._convmap = cm
+        tt = self._turn_strs
+        if tt is None:
+            # %04d: zero-pad to 4 but NEVER truncate — mirrors the
+            # build side's format_string("%04d") so conversations with
+            # >9,999 turns keep collision-free doc_id strings; the
+            # table covers the common low turn indexes, rare higher
+            # ones fall back to the formatter
+            tt = self._turn_strs = [f"{i:04d}" for i in range(4096)]
+        mask = (1 << TURN_BITS) - 1
+        return {
+            i: cm[i >> TURN_BITS] + (tt[t] if (t := i & mask) < 4096 else f"{t:04d}")
+            for i in ids
+        }
 
     def search_batch(
         self, queries: list[str], k: int = 50, timings: dict | None = None
@@ -640,8 +623,6 @@ class InvertedIndex:
 
         occ_by_q = [self._query_tokens(node)[0] for node in nodes]
         all_tokens = sorted({t for occ in occ_by_q for _, t in occ})
-        if not all_tokens:
-            return {q: SearchResult(q, [], []) for q in queries}
         mark("tokens")
         lex = self.lexicon_for(all_tokens)
         mark("lexicon")
@@ -652,6 +633,9 @@ class InvertedIndex:
             if meta:
                 # ranked semantics: the OR of the scoring terms
                 batch[qid] = (wand.disjunction(sorted(meta)), meta)
+        out = {q: SearchResult(q, [], []) for q in queries}
+        if not batch:  # no known term in any query: nothing to score
+            return out
         known = sorted({t for _, meta in batch.values() for t in meta})
         per_q_np = self._boolean_topk_winners(batch, known, k, mark=mark)
         need_ids: set[int] = set()
@@ -659,7 +643,6 @@ class InvertedIndex:
             need_ids.update(d for d, _ in rows)
         id_map = self._doc_ids_for(sorted(need_ids))
         mark("id_resolution")
-        out = {q: SearchResult(q, [], []) for q in queries}
         for qid, rows in per_q_np.items():
             res = out[queries[qid]]
             for d, s in rows:

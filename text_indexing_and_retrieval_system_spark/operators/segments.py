@@ -276,7 +276,7 @@ def write_lexicon(
 # (BUILD_UNITS) reads build layer walls by unit-name prefix:
 # `stage2_chunk_` is doclen, `stage3_chunk_` is pack, `stage3_postings`
 # is the lexicon. engine.reload and incremental._resolve_cfg also read
-# `stage3_postings` (range_shift, n_terms, config).
+# `stage3_postings` (range_shift, config).
 DOCLEN_UNIT = "stage2_chunk_all"
 PACK_UNIT = "stage3_chunk_all"
 LEXICON_UNIT = "stage3_postings"

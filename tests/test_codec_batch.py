@@ -1,6 +1,10 @@
-"""pack_postings_batch must be wire-identical to per-block pack_postings."""
+"""The batch codecs against their per-block references and their
+inverses: pack_postings_batch is wire-identical to per-block
+pack_postings, and the `pos_payload` rows round-trip through
+encode_position_rows / decode_position_rows."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -22,12 +26,10 @@ from text_indexing_and_retrieval_system_spark.functions import codec
         min_size=1,
         max_size=10,
     ),
-    st.booleans(),
 )
 @settings(max_examples=60, deadline=None)
-def test_batch_equals_per_block(blocks, with_pos):
-    rng = np.random.RandomState(7)
-    doc_ids, tfs, dls, pos_rows = [], [], [], []
+def test_batch_equals_per_block(blocks):
+    doc_ids, tfs, dls = [], [], []
     block_starts = []
     for blk in blocks:
         blk = sorted(blk)
@@ -36,45 +38,53 @@ def test_batch_equals_per_block(blocks, with_pos):
             doc_ids.append(d)
             tfs.append(tf)
             dls.append(dl)
-            pos_rows.append(np.sort(rng.choice(100000, size=tf, replace=False)))
     doc_ids = np.array(doc_ids)
     tfs = np.array(tfs)
     dls = np.array(dls)
     starts = np.array(block_starts)
-    flat = np.concatenate(pos_rows) if with_pos else None
 
-    got = codec.pack_postings_batch(doc_ids, tfs, dls, starts, flat)
+    got = codec.pack_postings_batch(doc_ids, tfs, dls, starts)
 
     ends = list(starts[1:]) + [len(doc_ids)]
     for b, (s, e) in enumerate(zip(starts, ends)):
-        want = codec.pack_postings(
-            doc_ids[s:e],
-            tfs[s:e],
-            dls[s:e],
-            pos_rows[s:e] if with_pos else None,
-        )
-        assert got[b] == want, f"block {b} differs"
-        d, t, l, p = codec.unpack_postings(got[b], with_positions=with_pos)
+        assert got[b] == codec.pack_postings(doc_ids[s:e], tfs[s:e], dls[s:e]), f"block {b} differs"
+        d, t, l = codec.unpack_postings(got[b])
         assert list(d) == list(doc_ids[s:e])
 
-    if not with_pos:
-        # batch unpack must invert batch pack (core payloads)
-        bn, d_all, t_all, l_all = codec.unpack_postings_batch(got)
-        assert list(bn) == [e - s for s, e in zip(starts, ends)]
-        assert list(d_all) == list(doc_ids)
-        assert list(t_all) == list(tfs)
-        assert list(l_all) == list(dls)
-    else:
-        # the positions column layout: concatenated per-row [len]+gaps
-        from text_indexing_and_retrieval_system_spark.operators.index_build import (
-            _encode_position_rows,
-        )
+    # batch unpack must invert batch pack
+    bn, d_all, t_all, l_all = codec.unpack_postings_batch(got)
+    assert list(bn) == [e - s for s, e in zip(starts, ends)]
+    assert list(d_all) == list(doc_ids)
+    assert list(t_all) == list(tfs)
+    assert list(l_all) == list(dls)
 
-        for b, (s, e) in enumerate(zip(starts, ends)):
-            pos_bytes = b"".join(_encode_position_rows(list(pos_rows[s:e])))
-            decoded = codec.unpack_positions(pos_bytes, e - s)
-            for want_row, got_row in zip(pos_rows[s:e], decoded):
-                assert list(want_row) == list(got_row)
+
+@given(
+    st.lists(  # rows: each a set of token positions, tf = its size
+        st.sets(st.integers(min_value=0, max_value=70000), min_size=1, max_size=40),
+        min_size=1,
+        max_size=60,
+    ),
+    st.lists(st.integers(min_value=1, max_value=16), min_size=1, max_size=60),
+)
+@settings(max_examples=100, deadline=None)
+def test_position_rows_round_trip(rows, block_rows):
+    """Random position rows, split into blocks whose `pos_payload` is the
+    concatenation of the rows' encodings, decode back unchanged in one
+    pass; a tf that disagrees with a row's stored len is refused."""
+    rows = [np.array(sorted(r), dtype=np.int64) for r in rows]
+    tfs = np.array([r.size for r in rows])
+    encoded = codec.encode_position_rows(rows)
+    assert len(encoded) == len(rows)
+    cuts = np.cumsum(block_rows)
+    cuts = [0, *cuts[cuts < len(rows)].tolist(), len(rows)]
+    pos_payloads = [b"".join(encoded[s:e]) for s, e in zip(cuts, cuts[1:])]
+    flat = codec.decode_position_rows(pos_payloads, tfs)
+    assert flat.tolist() == np.concatenate(rows).tolist()
+    bad = tfs.copy()
+    bad[-1] += 1
+    with pytest.raises(ValueError, match="corrupt"):
+        codec.decode_position_rows(pos_payloads, bad)
 
 
 @given(
@@ -109,7 +119,7 @@ def test_batch_local32_mode(base, blocks):
             tfs.append(tf)
             dls.append(dl)
     doc_ids, tfs, dls = np.array(doc_ids), np.array(tfs), np.array(dls)
-    payloads = codec.pack_postings_batch(doc_ids, tfs, dls, np.array(starts), None)
+    payloads = codec.pack_postings_batch(doc_ids, tfs, dls, np.array(starts))
     bn, d_loc, t_loc, l_loc = codec.unpack_postings_batch(
         payloads, first_docs=np.array(first_docs, dtype=np.int64), base=base
     )

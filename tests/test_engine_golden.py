@@ -5,6 +5,7 @@ float expression tree and summation order) on generated boolean queries
 covering all 15 reference templates (`generate_queries.py:24-40`).
 """
 
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -13,6 +14,8 @@ from text_indexing_and_retrieval_system_spark.functions.normalize import (
     normalize_to_tokens,
 )
 from text_indexing_and_retrieval_system_spark.operators import query_parser as qp
+from text_indexing_and_retrieval_system_spark.operators.index_build import IndexBuildConfig
+from text_indexing_and_retrieval_system_spark.oracle import OracleIndex
 
 K = 20
 
@@ -47,14 +50,19 @@ def _assert_match(oracle_hits, engine_result, query):
 SCORERS = ["bm25", "tfidf", "wordcount"]
 
 
+def _gates_closed(idx):
+    """`idx` with both driver-leaf gates closed: every kernel query runs
+    as a distributed Spark job."""
+    idx.DRIVER_WAND_MAX_DF = 0
+    idx.DRIVER_NOT_MAX_DOCS = 0
+    return idx
+
+
 @pytest.fixture(scope="module")
 def distributed_index(spark, built_index):
     """A second handle on the same index with both driver-local gates
     closed, so every kernel query runs as a distributed Spark job."""
-    idx = engine.InvertedIndex(spark, built_index.dir)
-    idx.DRIVER_WAND_MAX_DF = 0
-    idx.DRIVER_NOT_MAX_DOCS = 0
-    return idx
+    return _gates_closed(engine.InvertedIndex(spark, built_index.dir))
 
 
 @pytest.mark.parametrize("scorer", SCORERS)
@@ -103,14 +111,16 @@ def test_golden_queries_kernel(built_index, oracle_index, query_set):
         _assert_match(want, got, q)
 
 
-def test_kernel_not_and_phrase(built_index, oracle_index, corpus_pdf):
-    from text_indexing_and_retrieval_system_spark.functions.normalize import (
-        normalize_to_tokens as _ntt,
-    )
-
+def test_kernel_not_and_phrase(
+    spark, built_index, distributed_index, oracle_index, corpus_pdf, tmp_path
+):
+    """NOT and PHRASE on both leaves, bit-exact. The last input is a
+    phrase of two hot adjacent tokens: each has more postings than a
+    block holds, so a word's positions span several blocks, and every
+    row has tf 2; the phrase holds in two docs of three."""
     term = max(oracle_index.postings, key=lambda t: len(oracle_index.postings[t]))
     mid = sorted(oracle_index.postings, key=lambda t: -len(oracle_index.postings[t]))[20]
-    tokens = _ntt(corpus_pdf["text"].head(50))
+    tokens = normalize_to_tokens(corpus_pdf["text"].head(50))
     phrase = next(f"{lst[0]} {lst[1]}" for lst in tokens if len(lst) >= 2)
     for q in (
         f'NOT "{term}"',  # top-level complement: universe cogroup path
@@ -119,8 +129,34 @@ def test_kernel_not_and_phrase(built_index, oracle_index, corpus_pdf):
         f'PHRASE "{phrase}" OR "{mid}"',
     ):
         want = oracle_index.search(q, k=K)
-        got = built_index.search_collect(q, k=K)
-        _assert_match(want, got, q + " [kernel]")
+        for where, idx in (("driver", built_index), ("distributed", distributed_index)):
+            _assert_match(want, idx.search_collect(q, k=K), f"{q} [{where}]")
+
+    a, b = "zzhot", "zzpair"  # normalizer-stable tokens
+    hot = corpus_pdf.copy()
+    third = pd.Series(np.arange(len(hot)) % 3, index=hot.index)
+    head = third.map({0: f"{a} {b} ", 1: f"{b} {a} ", 2: f"{b} {a} "})
+    tail = third.map({0: f" {b} {a}", 1: f" {a} {b}", 2: f" {b} {a}"})
+    hot["text"] = head + hot["text"] + tail
+    hot_oracle = OracleIndex.build(hot, id_col="doc_id", text_col="text")
+    for t in (a, b):
+        rows = hot_oracle.postings[t]
+        assert len(rows) > IndexBuildConfig().block_size
+        assert all(len(p) == 2 for p in rows.values())
+    cfg = IndexBuildConfig(n_term_buckets=8, n_range_buckets=8, n_segment_chunks=1, chunk_min_convs=0)
+    driver = engine.build(
+        spark,
+        spark.createDataFrame(hot[["conv_id", "turn_idx", "role", "text", "tool", "ts"]]),
+        str(tmp_path / "hot_pair"),
+        cfg,
+        input_desc="hot-pair",
+    )
+    q = f'PHRASE "{a} {b}"'
+    want = hot_oracle.search(q, k=K)
+    assert len(want) == K
+    distributed = _gates_closed(engine.InvertedIndex(spark, driver.dir))
+    for where, idx in (("driver", driver), ("distributed", distributed)):
+        _assert_match(want, idx.search_collect(q, k=K), f"{q} [{where}]")
 
 
 def test_phrase_query(built_index, oracle_index, corpus_pdf):

@@ -119,14 +119,19 @@ def test_kernel_frame_has_one_nonempty_partition_per_core(spark, built_index, te
 
 
 def _synthetic_blocks(rng, bucket_bases, terms, block_rows=64):
-    """Codec-packed posting blocks: every term has postings in every
-    bucket; docs of bucket b start at bucket_bases[b]."""
-    rows = []
+    """Codec-packed posting blocks with positions: every term has
+    postings in every bucket; docs of bucket b start at bucket_bases[b].
+    Positions are drawn from the first 12 token offsets, so adjacent
+    pairs are common. Returns (blocks, {(term, doc): positions})."""
+    rows, positions = [], {}
     for b, base in enumerate(bucket_bases):
         for t in terms:
             docs = base + np.sort(rng.choice(5_000, 300, replace=False)).astype(np.int64)
             tfs = rng.integers(1, 6, docs.size)
             dls = rng.integers(5, 90, docs.size)
+            pos = [np.sort(rng.choice(12, tf, replace=False)) for tf in tfs]
+            positions.update({(t, int(d)): set(p.tolist()) for d, p in zip(docs, pos)})
+            pos_rows = codec.encode_position_rows(pos)
             for s in range(0, docs.size, block_rows):
                 d = docs[s : s + block_rows]
                 rows.append(
@@ -138,20 +143,22 @@ def _synthetic_blocks(rng, bucket_bases, terms, block_rows=64):
                         "payload": codec.pack_postings(
                             d, tfs[s : s + block_rows], dls[s : s + block_rows]
                         ),
+                        "pos_payload": b"".join(pos_rows[s : s + block_rows]),
                     }
                 )
-    return pd.DataFrame(rows)
+    return pd.DataFrame(rows), positions
 
 
 def test_packed_group_wider_than_int32_scores_like_per_bucket(spark, monkeypatch):
     """A packed group whose doc span exceeds 2^31 decodes in global int64
     (the int32 group-local fast path cannot hold it); its scores must be
-    bit-identical to scoring each bucket on its own."""
+    bit-identical to scoring each bucket on its own — a phrase included,
+    which the fallback group evaluates in global ids."""
     rng = np.random.default_rng(11)
     shift = 33
     bucket_bases = [0, 1 << shift, 2 << shift]
     terms = ["alpha", "beta", "gamma", "delta"]
-    pdf = _synthetic_blocks(rng, bucket_bases, terms)
+    pdf, positions = _synthetic_blocks(rng, bucket_bases, terms)
     avgdl = 40.0
     # the fallback engages for the packed group, not for one bucket
     assert wand._decode_terms(pdf, avgdl)[1] == 0
@@ -159,7 +166,8 @@ def test_packed_group_wider_than_int32_scores_like_per_bucket(spark, monkeypatch
     assert wand._decode_terms(one, avgdl)[1] == int(one["first_doc"].min())
     blocks = spark.createDataFrame(
         pdf,
-        "term string, range_bucket int, first_doc long, last_doc long, payload binary",
+        "term string, range_bucket int, first_doc long, last_doc long, payload binary, "
+        "pos_payload binary",
     )
     metas = {
         0: {"alpha": [(0, 1.5)]},
@@ -169,6 +177,7 @@ def test_packed_group_wider_than_int32_scores_like_per_bucket(spark, monkeypatch
     queries = {qid: (wand.disjunction(sorted(m)), m) for qid, m in metas.items()}
     # a set-evaluated tree in the same batch: docs of alpha AND beta
     queries[3] = (("and", ("tok", "alpha"), ("tok", "beta")), metas[1])
+    queries[4] = (("phrase", ("alpha", "beta")), metas[1])
 
     def run(n_groups):
         _force_groups(monkeypatch, n_groups)
@@ -181,3 +190,12 @@ def test_packed_group_wider_than_int32_scores_like_per_bucket(spark, monkeypatch
     assert packed == per_bucket
     # winners come from more than one bucket, so the merge is exercised
     assert len({d >> shift for rows in packed.values() for d, _ in rows}) > 1
+    # the phrase winners hold "alpha beta" adjacently, and there are
+    # more such docs than K
+    adjacent = {
+        d
+        for (t, d), ps in positions.items()
+        if t == "alpha" and any(p + 1 in positions.get(("beta", d), ()) for p in ps)
+    }
+    assert len(adjacent) > K
+    assert len(packed[4]) == K and {d for d, _ in packed[4]} <= adjacent

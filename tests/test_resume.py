@@ -11,6 +11,9 @@ from text_indexing_and_retrieval_system_spark import engine
 from text_indexing_and_retrieval_system_spark.operators.index_build import (
     IndexBuildConfig,
 )
+from text_indexing_and_retrieval_system_spark.sources.transcripts import (
+    generate_transcripts_pandas,
+)
 
 
 def _rows(spark, index_dir, table, cols):
@@ -59,6 +62,25 @@ def test_crash_resume_identical(spark, corpus_df, built_index, tmp_path):
     a = built_index.search_collect(q, k=10)
     b = resumed.search_collect(q, k=10)
     assert a.docs == b.docs and a.scores == b.scores
+
+
+def test_resume_under_another_config_raises(spark, tmp_path):
+    """A crashed build resumed with a different chunk count must not
+    reuse the old chunks: chunk 0 of 3 covers conversations [0, 13) and
+    chunk 1 of 2 starts at 20, so reusing it would leave conversations
+    13-19 unindexed. Every unit a resume would skip is checked."""
+    crash_dir = str(tmp_path / "crash_idx")
+    df = spark.createDataFrame(generate_transcripts_pandas(40, seed=42))
+
+    def cfg(n_chunks):
+        return IndexBuildConfig(
+            n_term_buckets=4, n_range_buckets=4, n_segment_chunks=n_chunks, chunk_min_convs=0
+        )
+
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        engine.build(spark, df, crash_dir, cfg(3), input_desc="reconfig", fail_after_chunk=0)
+    with pytest.raises(ValueError, match="built with different config"):
+        engine.build(spark, df, crash_dir, cfg(2), input_desc="reconfig")
 
 
 def test_manifest_lineage_and_metrics(built_index):

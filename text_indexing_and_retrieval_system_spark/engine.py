@@ -485,9 +485,7 @@ class InvertedIndex:
         floor."""
         pdf = self._blocks_pdf_for(all_tokens, with_positions=has_phrase)
         if pdf is None:
-            pdf = pd.DataFrame(
-                columns=list(wand.KERNEL_COLS) + (["pos_payload"] if has_phrase else [])
-            )
+            pdf = pd.DataFrame(columns=wand.KERNEL_COLS)
         out = wand.boolean_score_bucket(
             pdf,
             {0: (tree, term_meta)},

@@ -10,6 +10,13 @@ Unlike the reference (per-int Python loops), everything here is
 numpy-vectorized so it can run inside Arrow-batched pandas UDFs at
 full speed — one call encodes/decodes a whole posting list (or a whole
 batch of concatenated lists) without per-row Python.
+
+This module owns both block columns' layouts: `payload` (doc ids, tfs,
+doc lengths; pack_postings_batch / unpack_postings_batch) and
+`pos_payload` (per-row positions; encode_position_rows /
+decode_position_rows). Each has one batch encoder and one batch decoder;
+pack_postings / unpack_postings are the per-block reference of the
+`payload` pair.
 """
 
 from __future__ import annotations
@@ -111,36 +118,27 @@ def decode_sorted(stream: bytes) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Posting-block payload:
+# Posting-block payload (the `payload` column):
 #   header  : varint [n_docs]
 #   doc ids : varint gaps (sorted, first absolute)
 #   tfs     : varint (tf per doc, aligned with doc ids)
 #   doclens : varint (token length of each doc — lets BM25 score a block
 #             without a doclen join)
-#   positions (optional): per doc, varint [n_positions] + position gaps
+# Positions live in their own `pos_payload` column, so ranked queries
+# never scan, shuffle or decode them: per row varint [len] + position
+# gaps, len == the row's tf (encode_position_rows / decode_position_rows).
 # ---------------------------------------------------------------------------
 
 
-def pack_postings(
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    doclens: np.ndarray,
-    positions: list[np.ndarray] | None = None,
-) -> bytes:
+def pack_postings(doc_ids: np.ndarray, tfs: np.ndarray, doclens: np.ndarray) -> bytes:
+    """One block's payload — the per-block reference of
+    :func:`pack_postings_batch`."""
     doc_ids = np.asarray(doc_ids, dtype=np.int64)
     n = doc_ids.size
     parts = [varbyte_encode(np.array([n], dtype=np.int64))]
     parts.append(encode_sorted(doc_ids))
     parts.append(varbyte_encode(np.asarray(tfs, dtype=np.int64)))
     parts.append(varbyte_encode(np.asarray(doclens, dtype=np.int64)))
-    if positions is not None:
-        # concatenate [len, gaps...] per doc then one vectorized encode
-        chunks = []
-        for pos in positions:
-            pos = np.asarray(pos, dtype=np.int64)
-            chunks.append(np.array([pos.size], dtype=np.int64))
-            chunks.append(gap_encode(pos))
-        parts.append(varbyte_encode(np.concatenate(chunks) if chunks else np.empty(0)))
     return b"".join(parts)
 
 
@@ -149,7 +147,6 @@ def pack_postings_batch(
     tfs: np.ndarray,
     dls: np.ndarray,
     block_starts: np.ndarray,
-    positions_flat: np.ndarray | None = None,
 ) -> list[bytes]:
     """Pack MANY blocks in one vectorized pass; wire-identical to calling
     :func:`pack_postings` per block.
@@ -157,12 +154,10 @@ def pack_postings_batch(
     doc_ids/tfs/dls: flat row arrays (doc-id-sorted within each block).
     block_starts: int array of B block start row-indices (ascending,
     first = 0); block b covers rows [block_starts[b], block_starts[b+1]).
-    positions_flat: all rows' position lists concatenated (row r owns
-    tfs[r] entries), or None to omit positions.
 
-    The per-block int sequence [n][doc gaps][tfs][dls][(len,gaps)*] is
-    assembled for all blocks into one flat array with index arithmetic,
-    varbyte-encoded once, and sliced at per-block byte offsets.
+    The per-block int sequence [n][doc gaps][tfs][dls] is assembled for
+    all blocks into one flat array with index arithmetic, varbyte-encoded
+    once, and sliced at per-block byte offsets.
     """
     doc_ids = np.asarray(doc_ids, dtype=np.int64)
     tfs = np.asarray(tfs, dtype=np.int64)
@@ -187,25 +182,7 @@ def pack_postings_batch(
     if n_rows > 1 and np.any(gaps < 0):
         raise ValueError("doc ids must be sorted ascending within each block")
 
-    with_pos = positions_flat is not None
-    if with_pos:
-        positions_flat = np.asarray(positions_flat, dtype=np.int64)
-        n_pos = positions_flat.size
-        # per-row start offsets into positions_flat
-        prow_ends = np.cumsum(tfs)
-        prow_starts = prow_ends - tfs
-        pgaps = positions_flat.copy()
-        if n_pos:
-            pgaps[1:] -= positions_flat[:-1]
-            pgaps[prow_starts[tfs > 0]] = positions_flat[prow_starts[tfs > 0]]
-        # per-row pos-int counts (len prefix + gaps)
-        row_pos_ints = 1 + tfs
-        pos_ints_per_block = np.add.reduceat(row_pos_ints, block_starts)
-    else:
-        row_pos_ints = np.zeros(n_rows, dtype=np.int64)
-        pos_ints_per_block = np.zeros(n_blocks, dtype=np.int64)
-
-    ints_per_block = 1 + 3 * nb_rows + pos_ints_per_block
+    ints_per_block = 1 + 3 * nb_rows
     block_int_ends = np.cumsum(ints_per_block)
     base = block_int_ends - ints_per_block  # first int index of each block
     total_ints = int(block_int_ends[-1])
@@ -217,18 +194,6 @@ def pack_postings_batch(
     S[idx_gap] = gaps
     S[idx_gap + nbr] = tfs
     S[idx_gap + 2 * nbr] = dls
-    if with_pos:
-        # per-row pos-int start within block (exclusive cumsum reset per block)
-        cum = np.cumsum(row_pos_ints)
-        row_sec_start_global = cum - row_pos_ints  # exclusive global cumsum
-        block_first_row_cumsum = row_sec_start_global[block_starts]
-        pstart_rel = row_sec_start_global - block_first_row_cumsum[row_block]
-        row_sec_idx = base[row_block] + 1 + 3 * nbr + pstart_rel
-        S[row_sec_idx] = tfs  # [len] prefix per row
-        if n_pos:
-            pos_row = np.repeat(np.arange(n_rows), tfs)  # row id per position
-            within = np.arange(n_pos) - prow_starts[pos_row]
-            S[row_sec_idx[pos_row] + 1 + within] = pgaps
 
     stream, nb_bytes = varbyte_encode_with_sizes(S)
     byte_ends = np.cumsum(nb_bytes)
@@ -239,6 +204,70 @@ def pack_postings_batch(
     blk_byte_start[1:] = blk_byte_end[:-1]
     mv = memoryview(stream)
     return [bytes(mv[int(s) : int(e)]) for s, e in zip(blk_byte_start, blk_byte_end)]
+
+
+def encode_position_rows(pos_lists: list) -> list[bytes]:
+    """Per row: varbyte([len] + position gaps). The build encodes each
+    (doc, term) row ONCE, at tokenize time, so the big pack shuffle moves
+    compact binary instead of Arrow int lists, and a block's
+    `pos_payload` is the concatenation of its rows' encodings."""
+    if not pos_lists:
+        return []
+    lens = np.fromiter((len(p) for p in pos_lists), dtype=np.int64, count=len(pos_lists))
+    total = int(lens.sum())
+    if total == 0:
+        return [b""] * len(pos_lists)
+    flat = np.concatenate([np.asarray(p, dtype=np.int64) for p in pos_lists if len(p)])
+    row_ends = np.cumsum(lens)
+    row_starts = row_ends - lens
+    gaps = flat.copy()
+    gaps[1:] -= flat[:-1]
+    nz = lens > 0
+    gaps[row_starts[nz]] = flat[row_starts[nz]]
+    # interleave [len, gaps...] per row
+    n_rows = len(pos_lists)
+    out_ints = np.empty(n_rows + total, dtype=np.int64)
+    len_idx = row_starts + np.arange(n_rows)
+    out_ints[len_idx] = lens
+    mask = np.ones(n_rows + total, dtype=bool)
+    mask[len_idx] = False
+    out_ints[mask] = gaps
+    stream, nb = varbyte_encode_with_sizes(out_ints)
+    ints_per_row = 1 + lens
+    row_int_ends = np.cumsum(ints_per_row)
+    byte_ends = np.cumsum(nb)
+    row_byte_end = byte_ends[row_int_ends - 1]
+    row_byte_start = np.empty(n_rows, dtype=np.int64)
+    row_byte_start[0] = 0
+    row_byte_start[1:] = row_byte_end[:-1]
+    mv = memoryview(stream)
+    return [bytes(mv[int(s) : int(e)]) for s, e in zip(row_byte_start, row_byte_end)]
+
+
+def decode_position_rows(pos_payloads, tfs: np.ndarray) -> np.ndarray:
+    """Inverse of :func:`encode_position_rows` over MANY blocks in one
+    varbyte pass: `pos_payloads` (one per block) concatenated cover rows
+    whose tfs are `tfs`, in order. Returns every row's absolute positions
+    concatenated (row r owns the tfs[r] entries after sum(tfs[:r])).
+
+    Row boundaries are a cumsum of tf + 1 and the per-row gap reset a
+    vectorized cumsum. A row whose stored len differs from its tf is a
+    corrupt block, and raises ValueError."""
+    tfs = np.asarray(tfs, dtype=np.int64)
+    S = varbyte_decode(b"".join(pos_payloads))
+    row_ends = np.cumsum(tfs + 1)
+    row_starts = row_ends - (tfs + 1)
+    if S.size != (int(row_ends[-1]) if tfs.size else 0) or np.any(S[row_starts] != tfs):
+        raise ValueError("pos_payload rows do not match their tfs: corrupt block")
+    is_gap = np.ones(S.size, dtype=bool)
+    is_gap[row_starts] = False
+    tot = np.cumsum(S[is_gap])
+    # gap decode with per-row reset: subtract the running total carried
+    # in from the rows before
+    pos_starts = row_starts - np.arange(tfs.size)
+    carry = np.zeros(tfs.size, dtype=np.int64)
+    carry[pos_starts > 0] = tot[pos_starts[pos_starts > 0] - 1]
+    return tot - np.repeat(carry, tfs)
 
 
 def _varbyte_decode_raw_u32(b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -271,10 +300,10 @@ def _varbyte_decode_raw_u32(b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 def unpack_postings_batch(
     payloads, first_docs: np.ndarray | None = None, base: int = 0
 ) -> tuple[np.ndarray, ...]:
-    """Decode MANY core-payload blocks in one vectorized pass.
+    """Decode MANY blocks in one vectorized pass.
 
-    `payloads` is a sequence of CORE payloads (no positions section:
-    varint [n] + doc gaps + tfs + dls — the `payload` column layout).
+    `payloads` is a sequence of `payload` column values (varint [n] +
+    doc gaps + tfs + dls).
     Returns (block_n, doc_ids, tfs, dls): `block_n[b]` rows per block,
     and the per-row arrays concatenated in block order (doc ids already
     gap-decoded with per-block reset).
@@ -345,39 +374,9 @@ def unpack_postings_batch(
     return block_n, doc_ids, tfs, dls
 
 
-def unpack_positions(pos_payload: bytes, n_rows: int) -> list[np.ndarray]:
-    """Decode a block's positions column: per row varint [len] + position
-    gaps (the byte layout `_encode_position_rows` emits, stored in the
-    separate `pos_payload` parquet column so ranked queries never scan,
-    shuffle, or decode position bytes)."""
-    S = varbyte_decode(pos_payload)
-    out: list[np.ndarray] = []
-    idx = 0
-    for _ in range(n_rows):
-        plen = int(S[idx])
-        idx += 1
-        out.append(gap_decode(S[idx : idx + plen]))
-        idx += plen
-    return out
-
-
-def unpack_postings(payload: bytes, with_positions: bool = False):
-    """Returns (doc_ids, tfs, doclens, positions|None)."""
-    all_ints_pos = varbyte_decode(payload)  # decode everything in one pass
-    n = int(all_ints_pos[0])
-    idx = 1
-    doc_ids = gap_decode(all_ints_pos[idx : idx + n])
-    idx += n
-    tfs = all_ints_pos[idx : idx + n]
-    idx += n
-    doclens = all_ints_pos[idx : idx + n]
-    idx += n
-    positions = None
-    if with_positions:
-        positions = []
-        for _ in range(n):
-            plen = int(all_ints_pos[idx])
-            idx += 1
-            positions.append(gap_decode(all_ints_pos[idx : idx + plen]))
-            idx += plen
-    return doc_ids, tfs, doclens, positions
+def unpack_postings(payload: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One block's payload -> (doc_ids, tfs, doclens) — the per-block
+    reference of :func:`unpack_postings_batch`."""
+    ints = varbyte_decode(payload)  # decode everything in one pass
+    n = int(ints[0])
+    return gap_decode(ints[1 : 1 + n]), ints[1 + n : 1 + 2 * n], ints[1 + 2 * n : 1 + 3 * n]

@@ -204,51 +204,13 @@ SEGMENT_SCHEMA = (
 )
 
 
-def _encode_position_rows(pos_lists: list) -> list[bytes]:
-    """Per row: varbyte([len] + position gaps) — encoded ONCE here so the
-    big stage-3 shuffle moves compact binary instead of Arrow int lists,
-    and block packing is a byte concatenation (the payload positions
-    section is exactly the concatenation of these row encodings)."""
-    if not pos_lists:
-        return []
-    lens = np.fromiter((len(p) for p in pos_lists), dtype=np.int64, count=len(pos_lists))
-    total = int(lens.sum())
-    if total == 0:
-        return [b""] * len(pos_lists)
-    flat = np.concatenate([np.asarray(p, dtype=np.int64) for p in pos_lists if len(p)])
-    row_ends = np.cumsum(lens)
-    row_starts = row_ends - lens
-    gaps = flat.copy()
-    gaps[1:] -= flat[:-1]
-    nz = lens > 0
-    gaps[row_starts[nz]] = flat[row_starts[nz]]
-    # interleave [len, gaps...] per row
-    n_rows = len(pos_lists)
-    out_ints = np.empty(n_rows + total, dtype=np.int64)
-    len_idx = row_starts + np.arange(n_rows)
-    out_ints[len_idx] = lens
-    mask = np.ones(n_rows + total, dtype=bool)
-    mask[len_idx] = False
-    out_ints[mask] = gaps
-    stream, nb = codec.varbyte_encode_with_sizes(out_ints)
-    ints_per_row = 1 + lens
-    row_int_ends = np.cumsum(ints_per_row)
-    byte_ends = np.cumsum(nb)
-    row_byte_end = byte_ends[row_int_ends - 1]
-    row_byte_start = np.empty(n_rows, dtype=np.int64)
-    row_byte_start[0] = 0
-    row_byte_start[1:] = row_byte_end[:-1]
-    mv = memoryview(stream)
-    return [bytes(mv[int(s) : int(e)]) for s, e in zip(row_byte_start, row_byte_end)]
-
-
 def tokenize_to_doc_postings(docs: DataFrame, cfg: NormalizeConfig) -> DataFrame:
     """(doc_id_int, text) → (doc_id_int, term, tf, dl, positions binary).
 
     Pre-aggregates (term, doc) inside the pandas batch so the shuffle in
     stage 3 moves one row per (doc, distinct term), not per token; the
     row's position list is already varint-encoded (see
-    :func:`_encode_position_rows`). Docs with zero tokens emit a sentinel
+    :func:`codec.encode_position_rows`). Docs with zero tokens emit a sentinel
     row (term = "", tf = 0) so dl=0 documents still reach doclen.
     """
 
@@ -282,7 +244,7 @@ def tokenize_to_doc_postings(docs: DataFrame, cfg: NormalizeConfig) -> DataFrame
                         "term": grouped["term"],
                         "tf": grouped["pos"].map(len).astype("int32"),
                         "dl": grouped["dl"].astype("int32"),
-                        "positions": _encode_position_rows(grouped["pos"].to_list()),
+                        "positions": codec.encode_position_rows(grouped["pos"].to_list()),
                     }
                 )
             else:
@@ -377,7 +339,7 @@ def build_blocks(
             # to their OWN column (concatenation of the rows' pre-encoded
             # bytes) so ranked queries never scan/shuffle/decode them —
             # parquet column pruning halves the hot read path
-            payloads = codec.pack_postings_batch(doc_ids, tfs, dls, block_starts, None)
+            payloads = codec.pack_postings_batch(doc_ids, tfs, dls, block_starts)
             if store_pos:
                 row_bytes = pdf["positions"].to_list()
                 row_lens = np.fromiter(

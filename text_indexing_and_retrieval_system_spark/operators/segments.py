@@ -6,9 +6,10 @@ The reference's only "update" story is delete + full rebuild
 build stage — and every stage-1 *chunk* (a contiguous conversation
 range) — writes to its own directory and records a JSON manifest with
 lineage (input, config hash, conv range), row counts, and wall time.
-A restarted build skips every manifest-complete unit, so a build killed
-mid-way resumes from the last finished chunk and produces an identical
-index (verified by tests/test_resume.py).
+A restarted build skips every manifest-complete unit recorded under its
+own config hash (and refuses one recorded under another), so a build
+killed mid-way resumes from the last finished chunk and produces an
+identical index (verified by tests/test_resume.py).
 
 Stages 2-3 (doclen, stats, postings, lexicon) have one derivation,
 `derive_tables`, run once over all segments: the build calls it after
@@ -40,7 +41,6 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import shutil
 import time
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
@@ -102,12 +102,22 @@ class Manifests:
     def path(self, unit: str) -> str:
         return os.path.join(self.dir, f"{unit}.json")
 
-    def done(self, unit: str) -> bool:
-        p = self.path(unit)
-        if not os.path.exists(p):
+    def done(self, unit: str, config_hash: str | None = None) -> bool:
+        """Whether `unit` completed. With `config_hash` (a build's), a
+        completed unit recorded under another config, or under none,
+        raises: a resumed build reuses only its own config's units (a
+        different chunk count, say, would leave conversations between
+        the old and new chunk ranges unindexed)."""
+        info = self.read(unit)
+        if info is None or info.get("status") != "complete":
             return False
-        with open(p) as f:
-            return json.load(f).get("status") == "complete"
+        if config_hash is not None and info.get("config_hash") != config_hash:
+            raise ValueError(
+                f"index at {os.path.dirname(self.dir)} was built with different config "
+                f"({info.get('config_hash')} != {config_hash} in unit {unit}); "
+                "delete it or use a new dir"
+            )
+        return True
 
     def record(self, unit: str, **info):
         write_json(self.path(unit), {"unit": unit, "status": "complete", **info})
@@ -301,7 +311,7 @@ def derive_tables(
     range_shift = range_shift_for(n_convs, cfg.n_range_buckets)
 
     def unit(name: str, step: Callable[[], dict]) -> dict:
-        if man is not None and man.done(name):
+        if man is not None and man.done(name, (lineage or {}).get("config_hash")):
             return man.read(name)
         t0 = time.time()
         info = step()
@@ -344,7 +354,7 @@ def derive_tables(
             provider,
             table("lexicon"),
         )
-        return {"n_terms": provider.num_rows(table("lexicon")), "range_shift": range_shift}
+        return {"range_shift": range_shift}
 
     unit(LEXICON_UNIT, lexicon)
     return stats
@@ -368,19 +378,13 @@ def build_index(
     os.makedirs(index_dir, exist_ok=True)
     man = Manifests(index_dir)
     chash = _config_hash(cfg, input_desc)
-    prior = man.read("build")
-    if prior and prior.get("config_hash") not in (None, chash):
-        raise ValueError(
-            f"index at {index_dir} was built with different config "
-            f"({prior.get('config_hash')} != {chash}); delete it or use a new dir"
-        )
 
     t_build0 = time.time()
     lineage = {"config_hash": chash, "input": input_desc, "config": cfg.lineage()}
     store = ParquetDirProvider(index_dir)
 
     # ---------------- stage 0: conv ids ----------------
-    if not man.done("stage0_convmap"):
+    if not man.done("stage0_convmap", chash):
         t0 = time.time()
         n_convs = ib.assign_and_write_convmap(spark, transcripts, store.location("convmap"))
         man.record(
@@ -391,7 +395,6 @@ def build_index(
 
     docs = ib.with_doc_ids(transcripts, convmap)
 
-    docs_path = os.path.join(index_dir, "docs")
     n_chunks = cfg.n_segment_chunks
     if n_convs < cfg.chunk_min_convs:
         # deterministic for a given input (n_convs comes from stage 0),
@@ -424,22 +427,6 @@ def build_index(
         -(-doc_range_parts(cfg.n_range_buckets) // n_chunks),
         spark.sparkContext.defaultParallelism,
     )
-    legacy_docs = man.done("stage4_docs")  # pre-round-4 flat doc store
-    if not legacy_docs and os.path.isdir(docs_path):
-        # A pre-round-4 build that crashed MID-stage-4 leaves flat
-        # part-*.parquet files at docs/ root with no manifest; writing
-        # docs/chunk=<i>/ beside them would mix leaf depths and break
-        # Spark partition discovery. No manifest means the flat write
-        # never committed — remove the strays before the first chunk.
-        for entry in os.listdir(docs_path):
-            if entry.startswith("chunk="):
-                continue
-            full = os.path.join(docs_path, entry)
-            if os.path.isdir(full):
-                shutil.rmtree(full)
-            else:
-                os.remove(full)
-
     # Materialized (persisted/cached) input changes the optimal chunk
     # plan: tokenizing from the doc-store read-back exists to avoid a
     # SECOND scan of raw input, but when the input relation is already
@@ -461,7 +448,7 @@ def build_index(
 
         def do_stage4() -> None:
             unit4 = f"stage4_chunk_{chunk:03d}"
-            if legacy_docs or man.done(unit4):
+            if man.done(unit4, chash):
                 return
             t0 = time.time()
             part = docs.filter((F.col("conv_int") >= lo) & (F.col("conv_int") < hi))
@@ -481,10 +468,10 @@ def build_index(
 
         def do_stage1(from_input: bool) -> None:
             unit1 = f"stage1_chunk_{chunk:03d}"
-            if man.done(unit1):
+            if man.done(unit1, chash):
                 return
             t0 = time.time()
-            if legacy_docs or from_input:
+            if from_input:
                 part = docs.filter(
                     (F.col("conv_int") >= lo) & (F.col("conv_int") < hi)
                 )
@@ -497,7 +484,7 @@ def build_index(
                 unit1, conv_range=[lo, hi], rows=rows, seconds=time.time() - t0, **lineage
             )
 
-        if input_materialized and not legacy_docs:
+        if input_materialized:
             with ThreadPoolExecutor(max_workers=2) as pool:
                 f4 = pool.submit(do_stage4)
                 f1 = pool.submit(do_stage1, True)

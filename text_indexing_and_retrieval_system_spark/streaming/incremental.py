@@ -249,10 +249,5 @@ def refresh_postings(
     # catalog transactions on Iceberg) + stats/manifest update
     provider.commit_staged(["doclen", "postings", "lexicon", "docs"])
     segments.write_json(os.path.join(index_dir, "stats.json"), stats)
-    man.record(
-        "refresh_postings",
-        range_shift=range_shift,
-        n_terms=provider.num_rows("lexicon"),
-        **stats,
-    )
+    man.record("refresh_postings", range_shift=range_shift, **stats)
     return stats

@@ -97,47 +97,45 @@ def test_driver_merge_threshold_prune_is_exact():
     the full 3-key lexsort over ~1M winner rows was a 0.3 s flat driver
     constant) must stay bit-identical to the unpruned sort+cut on
     adversarial inputs: heavy score ties straddling the kth position,
-    ragged per-query bucket counts, and k larger than any pool."""
+    ragged per-query bucket counts, and k larger than any pool — on one
+    winner table and on the same rows in several chunks."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     from text_indexing_and_retrieval_system_spark.operators import wand
 
-    def brute(lpdf, k):
-        if lpdf.empty:
-            return {}
-        counts = lpdf["doc_ids"].map(len).to_numpy(dtype=np.int64) // 8
-        qids = np.repeat(lpdf["query_id"].to_numpy(dtype=np.int64), counts)
-        docs = np.frombuffer(b"".join(lpdf["doc_ids"]), dtype=np.int64)
-        scores = np.frombuffer(b"".join(lpdf["scores"]), dtype=np.float64)
-        order = np.lexsort((docs, -scores, qids))
-        qids, docs, scores = qids[order], docs[order], scores[order]
+    def brute(table, k):
+        cols = (table.column(c).to_pylist() for c in ("query_id", "doc_ids", "scores"))
+        rows = sorted(
+            (q, -s, d) for q, ds, ss in zip(*cols) for d, s in zip(ds, ss)
+        )  # by query, score desc, doc asc
         out = {}
-        starts = np.flatnonzero(np.r_[True, qids[1:] != qids[:-1]])
-        ends = np.r_[starts[1:], qids.size]
-        for s, e in zip(starts, ends):
-            e = min(e, s + k)
-            out[int(qids[s])] = list(
-                zip(docs[s:e].tolist(), scores[s:e].tolist())
-            )
+        for q, s, d in rows:
+            kept = out.setdefault(q, [])
+            if len(kept) < k:
+                kept.append((d, -s))
         return out
 
     rng = np.random.default_rng(7)
-    rows = []
+    qids, doc_lists, score_lists = [], [], []
     for q in rng.choice(97, 600):
         n = int(rng.integers(1, 9))
         # few distinct scores -> tie plateaus at every kth boundary
         sc = rng.choice([1.0, 2.0, 2.0, 3.0, 3.5], n)
         dc = rng.choice(10_000, n, replace=False).astype(np.int64)
         o = np.lexsort((dc, -sc))  # kernel emission order
-        rows.append(
-            {
-                "query_id": int(q),
-                "doc_ids": dc[o].tobytes(),
-                "scores": sc[o].tobytes(),
-            }
-        )
-    pdf = pd.DataFrame(rows)
+        qids.append(int(q))
+        doc_lists.append(dc[o].tolist())
+        score_lists.append(sc[o].tolist())
+    table = pa.table(
+        {
+            "query_id": pa.array(qids, pa.int32()),
+            "doc_ids": pa.array(doc_lists, pa.list_(pa.int64())),
+            "scores": pa.array(score_lists, pa.list_(pa.float64())),
+        }
+    )
+    chunked = pa.concat_tables([table.slice(0, 211), table.slice(211, 0), table.slice(211)])
     for k in (1, 2, 3, 5, 40):
-        assert wand.merge_query_topk_driver(pdf, k) == brute(pdf, k)
-    assert wand.merge_query_topk_driver(pdf.iloc[:0], 5) == {}
+        assert wand.merge_query_topk_driver(table, k) == brute(table, k)
+        assert wand.merge_query_topk_driver(chunked, k) == brute(table, k)
+    assert wand.merge_query_topk_driver(table.slice(0, 0), 5) == {}

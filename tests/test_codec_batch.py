@@ -1,14 +1,35 @@
 """The batch codecs against their per-block references and their
 inverses: pack_postings_batch is wire-identical to per-block
 pack_postings, and the `pos_payload` rows round-trip through
-encode_position_rows / decode_position_rows."""
+encode_position_rows / decode_position_rows. The batch decoders read
+Arrow binary columns, which reach them whole, as slices with a non-zero
+offset, and in several chunks."""
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from text_indexing_and_retrieval_system_spark.functions import codec
+
+
+def _column_forms(values: list[bytes]) -> dict[str, pa.Array | pa.ChunkedArray]:
+    """`values` as the binary columns the decoders are fed: one array; a
+    slice at a non-zero offset of a longer array; and the multi-chunk
+    column that pa.concat_tables of slices of a table yields (each chunk
+    a slice too, one of them possibly empty)."""
+    padded = pa.array([b"\x81\x01", *values, b"\x82"], pa.binary())
+    table = pa.table({"col": padded})
+    half = len(values) // 2
+    chunked = pa.concat_tables([table.slice(1, half), table.slice(1 + half, len(values) - half)])
+    sliced = padded.slice(1, len(values))
+    assert sliced.offset == 1 and chunked.column("col").num_chunks == 2
+    return {
+        "array": pa.array(values, pa.binary()),
+        "sliced": sliced,
+        "chunked": chunked.column("col"),
+    }
 
 
 @given(
@@ -51,12 +72,16 @@ def test_batch_equals_per_block(blocks):
         d, t, l = codec.unpack_postings(got[b])
         assert list(d) == list(doc_ids[s:e])
 
-    # batch unpack must invert batch pack
-    bn, d_all, t_all, l_all = codec.unpack_postings_batch(got)
-    assert list(bn) == [e - s for s, e in zip(starts, ends)]
-    assert list(d_all) == list(doc_ids)
-    assert list(t_all) == list(tfs)
-    assert list(l_all) == list(dls)
+    # batch unpack must invert batch pack, and match the per-block
+    # decode, in every column form
+    per_block = [np.concatenate(c).tolist() for c in zip(*map(codec.unpack_postings, got))]
+    for form, col in _column_forms(got).items():
+        bn, d_all, t_all, l_all = codec.unpack_postings_batch(col)
+        assert list(bn) == [e - s for s, e in zip(starts, ends)], form
+        assert list(d_all) == list(doc_ids), form
+        assert list(t_all) == list(tfs), form
+        assert list(l_all) == list(dls), form
+        assert [d_all.tolist(), t_all.tolist(), l_all.tolist()] == per_block, form
 
 
 @given(
@@ -79,12 +104,13 @@ def test_position_rows_round_trip(rows, block_rows):
     cuts = np.cumsum(block_rows)
     cuts = [0, *cuts[cuts < len(rows)].tolist(), len(rows)]
     pos_payloads = [b"".join(encoded[s:e]) for s, e in zip(cuts, cuts[1:])]
-    flat = codec.decode_position_rows(pos_payloads, tfs)
-    assert flat.tolist() == np.concatenate(rows).tolist()
+    for form, col in _column_forms(pos_payloads).items():
+        flat = codec.decode_position_rows(col, tfs)
+        assert flat.tolist() == np.concatenate(rows).tolist(), form
     bad = tfs.copy()
     bad[-1] += 1
     with pytest.raises(ValueError, match="corrupt"):
-        codec.decode_position_rows(pos_payloads, bad)
+        codec.decode_position_rows(pa.array(pos_payloads, pa.binary()), bad)
 
 
 @given(
@@ -121,7 +147,7 @@ def test_batch_local32_mode(base, blocks):
     doc_ids, tfs, dls = np.array(doc_ids), np.array(tfs), np.array(dls)
     payloads = codec.pack_postings_batch(doc_ids, tfs, dls, np.array(starts))
     bn, d_loc, t_loc, l_loc = codec.unpack_postings_batch(
-        payloads, first_docs=np.array(first_docs, dtype=np.int64), base=base
+        pa.array(payloads, pa.binary()), first_docs=np.array(first_docs, dtype=np.int64), base=base
     )
     assert d_loc.dtype == np.int32 and t_loc.dtype == np.int32
     assert list(d_loc.astype(np.int64) + base) == list(doc_ids)

@@ -5,7 +5,8 @@ placement only, so every group count — one group, a few, one per bucket
 distributed kernel, and match the oracle."""
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 import pytest
 from pyspark.sql import functions as F
 
@@ -108,9 +109,9 @@ def test_kernel_frame_has_one_nonempty_partition_per_core(spark, built_index, te
         .alias("range_bucket"),
         "doc_id_int",
     )
+    key = "__slot"
     for df in (blocks, dl_b):
-        frame, key = wand._kernel_frame(df, n_buckets)
-        assert key == "__slot"
+        frame = wand._kernel_frame(df, n_buckets)
         assert frame.rdd.getNumPartitions() == want
         rows = frame.select(F.spark_partition_id().alias("p"), key).distinct().collect()
         assert {r["p"] for r in rows} == set(range(want))
@@ -122,7 +123,8 @@ def _synthetic_blocks(rng, bucket_bases, terms, block_rows=64):
     """Codec-packed posting blocks with positions: every term has
     postings in every bucket; docs of bucket b start at bucket_bases[b].
     Positions are drawn from the first 12 token offsets, so adjacent
-    pairs are common. Returns (blocks, {(term, doc): positions})."""
+    pairs are common. Returns (blocks as a pyarrow table, {(term, doc):
+    positions})."""
     rows, positions = [], {}
     for b, base in enumerate(bucket_bases):
         for t in terms:
@@ -146,7 +148,7 @@ def _synthetic_blocks(rng, bucket_bases, terms, block_rows=64):
                         "pos_payload": b"".join(pos_rows[s : s + block_rows]),
                     }
                 )
-    return pd.DataFrame(rows), positions
+    return pa.Table.from_pylist(rows), positions
 
 
 def test_packed_group_wider_than_int32_scores_like_per_bucket(spark, monkeypatch):
@@ -158,14 +160,14 @@ def test_packed_group_wider_than_int32_scores_like_per_bucket(spark, monkeypatch
     shift = 33
     bucket_bases = [0, 1 << shift, 2 << shift]
     terms = ["alpha", "beta", "gamma", "delta"]
-    pdf, positions = _synthetic_blocks(rng, bucket_bases, terms)
+    table, positions = _synthetic_blocks(rng, bucket_bases, terms)
     avgdl = 40.0
     # the fallback engages for the packed group, not for one bucket
-    assert wand._decode_terms(pdf, avgdl)[1] == 0
-    one = pdf[pdf["range_bucket"] == 1]
-    assert wand._decode_terms(one, avgdl)[1] == int(one["first_doc"].min())
+    assert wand._decode_terms(table, avgdl)[1] == 0
+    one = table.filter(pc.equal(table.column("range_bucket"), 1))
+    assert wand._decode_terms(one, avgdl)[1] == pc.min(one.column("first_doc")).as_py()
     blocks = spark.createDataFrame(
-        pdf,
+        table,
         "term string, range_bucket int, first_doc long, last_doc long, payload binary, "
         "pos_payload binary",
     )
@@ -182,7 +184,7 @@ def test_packed_group_wider_than_int32_scores_like_per_bucket(spark, monkeypatch
     def run(n_groups):
         _force_groups(monkeypatch, n_groups)
         local = wand.boolean_topk(blocks, queries, avgdl, K, n_buckets=len(bucket_bases))
-        return wand.merge_query_topk_driver(local.toPandas(), K)
+        return wand.merge_query_topk_driver(local.toArrow(), K)
 
     per_bucket = run(None)
     packed = run(1)

@@ -60,3 +60,28 @@ def test_word_freq_plan_shape(spark):
     assert plan.count("HashAggregate") >= 2, plan  # partial + final
     assert "TakeOrderedAndProject" in plan, plan
     assert X.scan_read_schema(plan, "text", absent=("lang", "source")), plan
+
+
+def test_kernel_stage_exchanges_arrow(built_index):
+    """The distributed kernel runs as Arrow UDFs: an OR batch plans one
+    FlatMapGroupsInArrow, a NOT batch (the doclen cogroup) one
+    FlatMapCoGroupsInArrow, and no stage converts to pandas."""
+    from text_indexing_and_retrieval_system_spark.operators import wand
+
+    idx = built_index
+    meta = {"said": [(0, 1.0)], "time": [(1, 1.0)]}
+    blocks = idx.blocks_for(sorted(meta))
+    common = dict(avgdl=idx.stats["avgdl"], k=10, n_buckets=idx.kernel_buckets)
+    ranked = wand.boolean_topk(blocks, {0: (wand.disjunction(sorted(meta)), meta)}, **common)
+    plan = X.plan_string(ranked)
+    assert "FlatMapGroupsInArrow" in plan and "InPandas" not in plan, plan
+    not_tree = ("and", ("tok", "said"), ("not", ("tok", "time")))
+    negated = wand.boolean_topk(
+        blocks,
+        {0: (not_tree, meta)},
+        doclen=idx.doclen(),
+        range_shift=idx.range_shift,
+        **common,
+    )
+    plan = X.plan_string(negated)
+    assert "FlatMapCoGroupsInArrow" in plan and "InPandas" not in plan, plan

@@ -37,7 +37,7 @@ def test_bulk_preload_bit_identical(built_index, spark):
     # the row index covers the whole vocabulary, so an absent term is a
     # miss in it, not a read
     assert set(on._term_rows) == set(on._full_lex)
-    assert on._blocks_pdf_for(["zzz_never_seen"]) is None
+    assert on._blocks_pdf_for(["zzz_never_seen"]).num_rows == 0
     assert on._block_cache_bytes == on._blocks.nbytes > 0
 
 
@@ -48,6 +48,6 @@ def test_positions_stay_per_term(built_index, spark):
     on.search_collect('"said" OR "time"', k=5)  # loads the resident table
     assert on._bulk_blocks is True
     assert "pos_payload" not in on._blocks.column_names
-    pdf = on._blocks_pdf_for(["said"], with_positions=True)
-    assert pdf is not None and "pos_payload" in pdf.columns
-    assert set(pdf["term"]) == {"said"}
+    table = on._blocks_pdf_for(["said"], with_positions=True)
+    assert table.num_rows and "pos_payload" in table.column_names
+    assert set(table.column("term").to_pylist()) == {"said"}

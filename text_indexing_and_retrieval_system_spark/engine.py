@@ -24,7 +24,9 @@ two are bit-identical in scores and order (the golden suite runs both
 against the same oracle). Control crosses driver→executor once per
 query or batch on the distributed leaf (plus a dict-lookup id
 resolution from the driver-cached convmap), matching SURVEY.md §3.1's
-target.
+target. Both leaves hand the kernel pyarrow tables of the block columns
+and merge its Arrow winner tables: no pandas between the block store
+and the ranked winners.
 
 The driver reads its index tables with pyarrow and never through Spark:
 lexicon lookup and id resolution on every path, and the whole driver
@@ -284,9 +286,9 @@ class InvertedIndex:
         return pd.DataFrame(rows, columns=self.LEX_COLS)
 
     def doclen(self) -> DataFrame:
-        """doclen table, persisted for the handle's lifetime — the NOT
-        universe of the distributed kernel reads it, and interactive
-        serving re-reads it per query otherwise.
+        """doclen table, persisted for the handle's lifetime: the
+        distributed kernel's doclen cogroup reads it for the NOT universe
+        (the driver leaf reads its universe with pyarrow, _doclen_ids).
         reload() drops the cached relation. (On a 10^12-doc deployment the
         executors' storage tier holds it the same way.)"""
         if self._doclen_df is None:
@@ -449,11 +451,11 @@ class InvertedIndex:
                 impact=impact,
             )
             mark("plan")
-            lpdf = local.toPandas()
+            table = local.toArrow()
             mark("kernel_and_collect")
         finally:
             bc.unpersist(blocking=False)
-        winners = wand.merge_query_topk_driver(lpdf, k)
+        winners = wand.merge_query_topk_driver(table, k)
         mark("driver_merge")
         return winners
 
@@ -483,11 +485,8 @@ class InvertedIndex:
         bigger bucket, so the single call is bit-identical to the
         per-bucket kernels, without the 2-stage shuffle job's scheduling
         floor."""
-        pdf = self._blocks_pdf_for(all_tokens, with_positions=has_phrase)
-        if pdf is None:
-            pdf = pd.DataFrame(columns=wand.KERNEL_COLS)
         out = wand.boolean_score_bucket(
-            pdf,
+            self._blocks_pdf_for(all_tokens, with_positions=has_phrase),
             {0: (tree, term_meta)},
             self.stats["avgdl"],
             k,
@@ -500,28 +499,23 @@ class InvertedIndex:
     # perfbench/tracing.py, which wraps it at install; nothing calls it.
     _search_wand_driver_rows = _search_kernel_driver_rows
 
-    def _blocks_pdf_for(
-        self, tokens: list[str], with_positions: bool = False
-    ) -> pd.DataFrame | None:
-        """The tokens' posting blocks for the driver leaf, never through
-        Spark: row slices of the resident table, or, for positions
-        (phrase queries) and over the budget, one filtered read
-        (_term_read). Returns None when no token has postings."""
+    def _blocks_pdf_for(self, tokens: list[str], with_positions: bool = False) -> pa.Table:
+        """The tokens' posting blocks for the driver leaf as one pyarrow
+        table (empty when no token has postings), never through Spark:
+        row slices of the resident table, or, for positions (phrase
+        queries) and over the budget, one filtered read (_term_read).
+        The name is the one perfbench/tracing.py wraps."""
         if self._bulk_blocks is None:
             self._maybe_bulk_load_blocks()
         if self._bulk_blocks and not with_positions:
             rows = [self._term_rows[t] for t in tokens if t in self._term_rows]
-            if not rows:
-                return None
-            return pa.concat_tables([self._blocks.slice(a, b - a) for a, b in rows]).to_pandas()
+            slices = [self._blocks.slice(a, b - a) for a, b in rows]
+            return pa.concat_tables(slices) if slices else self._blocks.slice(0, 0)
         if with_positions:
             self._require_positions()
-        if not tokens:
-            return None
-        table = self._term_read(
+        return self._term_read(
             "postings", wand.KERNEL_COLS + (["pos_payload"] if with_positions else []), tokens
         )
-        return table.to_pandas() if table.num_rows else None
 
     def _maybe_bulk_load_blocks(self) -> None:
         """Decide the driver block store (_blocks_pdf_for calls this once
@@ -652,16 +646,10 @@ class InvertedIndex:
                 timings[label] = timings.get(label, 0.0) + (t1 - t0)
         return out
 
-    def search_collect(
-        self, query: str, k: int = 50, scorer: str = "bm25", hydrate: bool = False
-    ) -> SearchResult:
-        if hydrate:
-            got = self.search(query, k, scorer=scorer, hydrate=True).collect()
-            rows = [(r["doc_id"], r["doc_id_int"], r["score"]) for r in got]
-        else:
-            # every path produces driver-side tuples — skip the
-            # local-DataFrame round trip entirely
-            rows = self._search_rows(query, k, scorer)
+    def search_collect(self, query: str, k: int = 50, scorer: str = "bm25") -> SearchResult:
+        # every path produces driver-side tuples: no local-DataFrame
+        # round trip
+        rows = self._search_rows(query, k, scorer)
         return SearchResult(
             query=query, docs=[r[0] for r in rows], scores=[r[2] for r in rows]
         )

@@ -7,9 +7,11 @@ on the final byte** of each integer. Gap coding keeps the first element
 absolute and subsequent elements as diffs (`encoder.py:11-59`).
 
 Unlike the reference (per-int Python loops), everything here is
-numpy-vectorized so it can run inside Arrow-batched pandas UDFs at
-full speed — one call encodes/decodes a whole posting list (or a whole
-batch of concatenated lists) without per-row Python.
+numpy-vectorized so it can run inside Arrow-batched UDFs at full speed —
+one call encodes/decodes a whole posting list (or a whole batch of
+concatenated lists) without per-row Python. The batch decoders read an
+Arrow binary column through its offsets and data buffers, with no
+per-block Python `bytes`.
 
 This module owns both block columns' layouts: `payload` (doc ids, tfs,
 doc lengths; pack_postings_batch / unpack_postings_batch) and
@@ -22,6 +24,7 @@ pack_postings / unpack_postings are the per-block reference of the
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 _MAX_VARINT_BYTES = 10  # 64 bits / 7
 
@@ -244,9 +247,26 @@ def encode_position_rows(pos_lists: list) -> list[bytes]:
     return [bytes(mv[int(s) : int(e)]) for s, e in zip(row_byte_start, row_byte_end)]
 
 
-def decode_position_rows(pos_payloads, tfs: np.ndarray) -> np.ndarray:
+def _binary_stream(column: pa.Array | pa.ChunkedArray) -> tuple[np.ndarray, np.ndarray]:
+    """A binary Arrow column -> (its values' bytes concatenated, as one
+    uint8 array; each value's byte length), read from the offsets and
+    data buffers at the array's `offset`. One chunk is zero-copy;
+    several (Spark's Arrow batches, concat_tables of table slices) are
+    combined first, one copy of their bytes."""
+    if isinstance(column, pa.ChunkedArray):
+        column = column.chunk(0) if column.num_chunks == 1 else column.combine_chunks()
+    if len(column) == 0:
+        return np.empty(0, dtype=np.uint8), np.empty(0, dtype=np.int64)
+    width = np.int64 if pa.types.is_large_binary(column.type) else np.int32
+    _, offsets, values = column.buffers()
+    offs = np.frombuffer(offsets, dtype=width)[column.offset : column.offset + len(column) + 1]
+    return np.frombuffer(values, dtype=np.uint8)[offs[0] : offs[-1]], np.diff(offs).astype(np.int64)
+
+
+def decode_position_rows(pos_payloads: pa.Array | pa.ChunkedArray, tfs: np.ndarray) -> np.ndarray:
     """Inverse of :func:`encode_position_rows` over MANY blocks in one
-    varbyte pass: `pos_payloads` (one per block) concatenated cover rows
+    varbyte pass: `pos_payloads` (a binary Arrow column, one value per
+    block) concatenated cover rows
     whose tfs are `tfs`, in order. Returns every row's absolute positions
     concatenated (row r owns the tfs[r] entries after sum(tfs[:r])).
 
@@ -254,7 +274,7 @@ def decode_position_rows(pos_payloads, tfs: np.ndarray) -> np.ndarray:
     vectorized cumsum. A row whose stored len differs from its tf is a
     corrupt block, and raises ValueError."""
     tfs = np.asarray(tfs, dtype=np.int64)
-    S = varbyte_decode(b"".join(pos_payloads))
+    S = _varbyte_decode_raw(_binary_stream(pos_payloads)[0])[0]
     row_ends = np.cumsum(tfs + 1)
     row_starts = row_ends - (tfs + 1)
     if S.size != (int(row_ends[-1]) if tfs.size else 0) or np.any(S[row_starts] != tfs):
@@ -298,12 +318,12 @@ def _varbyte_decode_raw_u32(b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 
 
 def unpack_postings_batch(
-    payloads, first_docs: np.ndarray | None = None, base: int = 0
+    payloads: pa.Array | pa.ChunkedArray, first_docs: np.ndarray | None = None, base: int = 0
 ) -> tuple[np.ndarray, ...]:
     """Decode MANY blocks in one vectorized pass.
 
-    `payloads` is a sequence of `payload` column values (varint [n] +
-    doc gaps + tfs + dls).
+    `payloads` is a binary Arrow column of `payload` values (varint [n] +
+    doc gaps + tfs + dls), read zero-copy (_binary_stream).
     Returns (block_n, doc_ids, tfs, dls): `block_n[b]` rows per block,
     and the per-row arrays concatenated in block order (doc ids already
     gap-decoded with per-block reset).
@@ -321,13 +341,11 @@ def unpack_postings_batch(
     faster: one varbyte pass over the concatenated byte stream + index
     arithmetic, instead of per-block numpy setup overhead (~90us/block
     measured on 128-row blocks)."""
-    n_blocks = len(payloads)
+    b, lens = _binary_stream(payloads)
+    n_blocks = lens.size
     if n_blocks == 0:
         z = np.empty(0, dtype=np.int64)
         return z, z, z, z
-    lens = np.fromiter((len(p) for p in payloads), dtype=np.int64, count=n_blocks)
-    stream = b"".join(bytes(p) for p in payloads)
-    b = np.frombuffer(stream, dtype=np.uint8)
     # one stop-bit scan shared by value decode and block-boundary mapping
     # (ints end at stop-bit bytes); int32 index arrays throughout — the
     # whole routine is memory-bandwidth-bound

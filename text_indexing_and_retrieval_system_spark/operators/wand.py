@@ -10,6 +10,13 @@ vectorized (numpy) and emits a local top-k; the global top-k is the
 merge of the per-group winners — the distributed analogue of the
 reference's single min-heap (`:407-450`).
 
+One columnar format runs from the block store to the ranked winners:
+the kernel reads a pyarrow table of the block columns (through
+`GroupedData.applyInArrow` on the distributed leaf, as a slice of the
+driver's resident table on the driver leaf), the codec decodes the
+binary columns from their Arrow buffers, and each group's winners go
+back as Arrow list columns that the driver merge reads flat.
+
 There is one group body, boolean_score_bucket: set evaluation of a
 batch of query trees, every query shape and every scorer. A group's
 blocks are decoded whole and exactly once, in one vectorized pass
@@ -27,7 +34,8 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -115,24 +123,12 @@ def kernel_groups(spark, n_buckets: int) -> int:
     return max(1, min(n_buckets, _core_slots(spark)))
 
 
-def _kernel_frame(df: DataFrame, n_buckets: int):
-    """`df` repartitioned so each kernel group sits alone on its own
-    shuffle partition -> (frame, grouping column)."""
+def _kernel_frame(df: DataFrame, n_buckets: int) -> DataFrame:
+    """`df` with its slot column (_with_slot), repartitioned so each
+    kernel group sits alone on its own shuffle partition; the kernel
+    groups it by "__slot"."""
     slotted, n_groups = _with_slot(df, n_buckets)
-    return slotted.repartition(n_groups, "__slot"), "__slot"
-
-
-def _grouped(df: DataFrame, n_buckets: int):
-    frame, key = _kernel_frame(df, n_buckets)
-    return frame.groupBy(key)
-
-
-def _bucket_grouped(blocks: DataFrame, n_buckets: int):
-    # slim the kernel shuffle to the columns the kernels read (drops the
-    # partition/bucket/stats columns; pos_payload rides along only when
-    # the caller selected it for a phrase tree)
-    cols = KERNEL_COLS + (["pos_payload"] if "pos_payload" in blocks.columns else [])
-    return _grouped(blocks.select(*cols), n_buckets)
+    return slotted.repartition(n_groups, "__slot")
 
 
 def _with_slot(df: DataFrame, n_buckets: int):
@@ -167,13 +163,9 @@ def _with_slot(df: DataFrame, n_buckets: int):
     return df.withColumn("__slot", mapping[F.col("range_bucket")]), n_groups
 
 
-# packed winner rows: ONE row per (query, kernel group) with the winners
-# as raw int64/float64 arrays. At 1k+ queries x dozens of groups the
-# row-per-winner format put ~1M rows through Arrow serialization, the
-# driver collect, and the merge lexsort input conversion — a corpus-
-# independent tail at every parallelism level; packed it is ~25k rows
-# for the same bytes and the merge unpacks with zero-copy frombuffer.
-BATCH_TOPK_SCHEMA = "query_id int, doc_ids binary, scores binary"
+# ONE winner row per (query, kernel group): the group's local top-k as
+# two Arrow lists, ranked (score desc, doc asc), global doc ids
+BATCH_TOPK_SCHEMA = "query_id int, doc_ids array<bigint>, scores array<double>"
 
 
 # NOTE (round-5 falsified experiment): a per-process decoded-block cache
@@ -184,15 +176,17 @@ BATCH_TOPK_SCHEMA = "query_id int, doc_ids binary, scores binary"
 # python assembly (dict lookups + 7k-array concatenate) costs more than
 # the ONE vectorized codec pass it saves. The vectorized decode stays
 # unconditional.
-def _decode_terms(pdf: pd.DataFrame, avgdl: float, impact=bm25_impact, universe=None):
-    """All of a kernel group's blocks -> (per_term, base, id_dtype):
+def _decode_terms(blocks: pa.Table, avgdl: float, impact=bm25_impact, universe=None):
+    """All of a kernel group's blocks (a table of KERNEL_COLS, plus
+    pos_payload for phrases) -> (per_term, base, id_dtype):
     per_term maps term -> (sorted doc ids, impacts, tfs, pos_payloads),
     decoded in ONE vectorized codec pass (codec.unpack_postings_batch) +
     one vectorized `impact` computation over every row — replaces the
     per-block decode loop (~90us/block of numpy setup overhead, which
     dominated the batch kernel at 300k+ blocks per query batch).
-    `pos_payloads` is the term's `pos_payload` values in block order (None
-    without that column); only a phrase decodes them (_phrase_matcher).
+    `pos_payloads` is the term's slice of the `pos_payload` column in
+    block order (None without that column); only a phrase decodes them
+    (_phrase_matcher).
 
     Doc ids are offsets from `base`: int32 whenever the group's doc span
     (the sorted int64 NOT `universe` included) fits 31 bits. One range
@@ -202,22 +196,21 @@ def _decode_terms(pdf: pd.DataFrame, avgdl: float, impact=bm25_impact, universe=
     kernel runs entirely in this id space: int32 is ~half the memory
     traffic on a kernel that is bandwidth-bound, identical scores."""
     per_term: dict[str, tuple] = {}
-    if not len(pdf):
+    if not blocks.num_rows:
         return per_term, 0, np.int64
-    pdf = pdf.sort_values(["term", "first_doc"], kind="stable")
-    lo, hi = int(pdf["first_doc"].min()), int(pdf["last_doc"].max())
+    blocks = blocks.sort_by([("term", "ascending"), ("first_doc", "ascending")])
+    first_docs = blocks.column("first_doc").to_numpy()
+    lo, hi = int(first_docs.min()), int(pc.max(blocks.column("last_doc")).as_py())
     if universe is not None and universe.size:
         lo, hi = min(lo, int(universe[0])), max(hi, int(universe[-1]))
     local32 = hi - lo < (1 << 31)
     base = lo if local32 else 0
     block_n, docs, tfs, dls = codec.unpack_postings_batch(
-        pdf["payload"].to_list(),
-        first_docs=pdf["first_doc"].to_numpy(dtype=np.int64) if local32 else None,
-        base=base,
+        blocks.column("payload"), first_docs=first_docs if local32 else None, base=base
     )
     imp = impact(tfs.astype(np.float64), dls, avgdl)
-    terms = pdf["term"].to_numpy()
-    pos = pdf["pos_payload"].to_numpy() if "pos_payload" in pdf.columns else None
+    terms = blocks.column("term").to_numpy()
+    pos = blocks.column("pos_payload") if "pos_payload" in blocks.column_names else None
     block_row_ends = np.cumsum(block_n)
     block_row_starts = block_row_ends - block_n
     term_first_block = np.flatnonzero(np.r_[True, terms[1:] != terms[:-1]])
@@ -229,7 +222,7 @@ def _decode_terms(pdf: pd.DataFrame, avgdl: float, impact=bm25_impact, universe=
             docs[r0:r1],
             imp[r0:r1],
             tfs[r0:r1],
-            None if pos is None else pos[b0:b1],
+            None if pos is None else pos.slice(b0, b1 - b0),
         )
     return per_term, base, np.int32 if local32 else np.int64
 
@@ -421,20 +414,27 @@ def _phrase_matcher(per_term: dict[str, tuple]):
     return ev
 
 
+def _list_column(parts: list[np.ndarray], dtype) -> pa.ListArray:
+    """One Arrow list per array of `parts`, over their concatenation."""
+    offsets = np.cumsum([0, *(p.size for p in parts)], dtype=np.int32)
+    return pa.ListArray.from_arrays(offsets, np.concatenate([np.empty(0, dtype), *parts]))
+
+
 def boolean_score_bucket(
-    pdf: pd.DataFrame,
+    blocks: pa.Table,
     queries: dict[int, tuple],
     avgdl: float,
     k: int,
     universe=None,
     impact=bm25_impact,
-) -> pd.DataFrame:
-    """The set-evaluation kernel body: one kernel group's blocks and a
-    batch {query_id: (tree, term_meta)} -> packed per-query winners
-    (BATCH_TOPK_SCHEMA rows, global doc ids), scored with `term_meta`
-    weights times `impact`. The distributed boolean_topk applies it per
-    group inside applyInPandas; the engine's driver-local leaf calls it
-    in-process over the whole cached block frame.
+) -> pa.Table:
+    """The set-evaluation kernel body: one kernel group's blocks (a
+    pyarrow table of KERNEL_COLS) and a batch {query_id: (tree,
+    term_meta)} -> its per-query winners as a BATCH_TOPK_SCHEMA table
+    (global doc ids), scored with `term_meta` weights times `impact`.
+    The distributed boolean_topk applies it per group inside
+    applyInArrow; the engine's driver-local leaf calls it in-process
+    over the query's slices of the resident block table.
 
     The group is decoded once for the whole batch, and every query —
     phrases included — reads that one decode. A pure disjunction
@@ -442,15 +442,15 @@ def boolean_score_bucket(
     any other tree is set-evaluated. `universe` (sorted int64 doc ids of
     the group) is required when a tree contains NOT; a phrase needs the
     `pos_payload` column."""
-    per_term, base, id_dtype = _decode_terms(pdf, avgdl, impact, universe)
+    per_term, base, id_dtype = _decode_terms(blocks, avgdl, impact, universe)
     term_docs = {t: v[0] for t, v in per_term.items()}
     if universe is not None:
         universe = (universe - base).astype(id_dtype)
     phrase_eval = _phrase_matcher(per_term)
 
     qids: list[int] = []
-    doc_blobs: list[bytes] = []
-    score_blobs: list[bytes] = []
+    doc_lists: list[np.ndarray] = []
+    score_lists: list[np.ndarray] = []
     for qid, (tree, term_meta) in queries.items():
         matches = (
             None
@@ -458,16 +458,15 @@ def boolean_score_bucket(
             else _eval_tree(tree, term_docs, universe, phrase_eval)
         )
         docs, scores = _score(per_term, term_meta, k, matches)
-        docs = docs.astype(np.int64) + np.int64(base)
         if docs.size:
             qids.append(qid)
-            doc_blobs.append(docs.tobytes())
-            score_blobs.append(scores.tobytes())
-    return pd.DataFrame(
+            doc_lists.append(docs.astype(np.int64) + np.int64(base))
+            score_lists.append(scores)
+    return pa.table(
         {
-            "query_id": np.asarray(qids, dtype=np.int32),
-            "doc_ids": pd.Series(doc_blobs, dtype=object),
-            "scores": pd.Series(score_blobs, dtype=object),
+            "query_id": pa.array(qids, pa.int32()),
+            "doc_ids": _list_column(doc_lists, np.int64),
+            "scores": _list_column(score_lists, np.float64),
         }
     )
 
@@ -487,9 +486,10 @@ def boolean_topk(
     ranking (`term_meta` weights times `impact`, so any scorer) in ONE
     distributed pass: per kernel group (a run of whole range buckets, see
     _with_slot) one boolean_score_bucket call over a single shared scan
-    and decode. Returns packed (query_id, doc_ids, scores) rows — each
-    group's local top-k per query; the caller merges them
-    (merge_query_topk_driver). A single query is a batch of one.
+    and decode, exchanged with the Python workers as Arrow
+    (applyInArrow). Returns BATCH_TOPK_SCHEMA rows — each group's local
+    top-k per query; the caller merges them (merge_query_topk_driver). A
+    single query is a batch of one.
 
     Cost model: each kernel group is one Python task with ~0.2 s of
     fixed overhead, plus one pass of the per-query loop over the group's
@@ -512,9 +512,14 @@ def boolean_topk(
     is exactly its buckets' docs) — this also covers groups where the
     queries' tokens have no blocks at all but whose docs still match the
     complement."""
-    def run_group(pdf: pd.DataFrame, universe) -> pd.DataFrame:
+    # slim the kernel shuffle to the columns the kernel reads; pos_payload
+    # rides along only when the caller selected it for a phrase tree
+    cols = KERNEL_COLS + (["pos_payload"] if "pos_payload" in blocks.columns else [])
+    grouped = _kernel_frame(blocks.select(*cols), n_buckets).groupBy("__slot")
+
+    def score(table, universe):
         return boolean_score_bucket(
-            pdf,
+            table,
             queries.value if hasattr(queries, "value") else queries,
             avgdl,
             k,
@@ -522,39 +527,32 @@ def boolean_topk(
             impact,
         )
 
-    if doclen is not None:
-        dl_b = doclen.select(
-            F.shiftrightunsigned("doc_id_int", range_shift)
-            .cast("int")
-            .alias("range_bucket"),
-            "doc_id_int",
-        )
+    # the applyInArrow functions stay unannotated: PySpark 4.1.2 raises
+    # UnboundLocalError on a partly annotated one
+    if doclen is None:
+        return grouped.applyInArrow(lambda table: score(table, None), schema=BATCH_TOPK_SCHEMA)
+    dl_b = doclen.select(
+        F.shiftrightunsigned("doc_id_int", range_shift).cast("int").alias("range_bucket"),
+        "doc_id_int",
+    )
 
-        def run_co(key, blocks_pdf: pd.DataFrame, dl_pdf: pd.DataFrame) -> pd.DataFrame:
-            universe = np.sort(dl_pdf["doc_id_int"].to_numpy(dtype=np.int64))
-            return run_group(blocks_pdf, universe)
+    def score_co(table, dl):
+        return score(table, np.sort(dl.column("doc_id_int").to_numpy().astype(np.int64)))
 
-        return (
-            _bucket_grouped(blocks, n_buckets)
-            .cogroup(_grouped(dl_b, n_buckets))
-            .applyInPandas(run_co, schema=BATCH_TOPK_SCHEMA)
-        )
-
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        return run_group(pdf, None)
-
-    return _bucket_grouped(blocks, n_buckets).applyInPandas(
-        run, schema=BATCH_TOPK_SCHEMA
+    return grouped.cogroup(_kernel_frame(dl_b, n_buckets).groupBy("__slot")).applyInArrow(
+        score_co, schema=BATCH_TOPK_SCHEMA
     )
 
 
 def merge_query_topk_driver(
-    lpdf: pd.DataFrame, k: int
+    winners: pa.Table, k: int
 ) -> dict[int, list[tuple[int, float]]]:
-    """Driver-side vectorized merge of the per-(query, group) winners.
+    """Driver-side vectorized merge of the per-(query, group) winners (a
+    BATCH_TOPK_SCHEMA table, read as the list columns' flat values and
+    lengths).
 
     Two stages, both exact: (1) a per-query k-th-largest-score threshold
-    (padded 2D np.partition over the row-level blobs) prunes the winner
+    (padded 2D np.partition over the per-row winner lists) prunes the winner
     pool to rows with score >= tau — a provable superset of the top-k,
     since any row ranked <= k under (score desc, doc asc) has score >=
     the query's k-th largest score; (2) the (doc, -score, qid) lexsort +
@@ -565,18 +563,18 @@ def merge_query_topk_driver(
     size: the driver holds k x queries result rows anyway, so a
     distributed merge would save at most a factor of the group count
     (and measured slower up to at least 1.6M winner rows)."""
-    if lpdf.empty:
+    if not winners.num_rows:
         return {}
-    counts = lpdf["doc_ids"].map(len).to_numpy(dtype=np.int64) // 8
-    qids_row = lpdf["query_id"].to_numpy(dtype=np.int64)
-    docs = np.frombuffer(b"".join(lpdf["doc_ids"]), dtype=np.int64)
-    scores = np.frombuffer(b"".join(lpdf["scores"]), dtype=np.float64)
+    counts = pc.list_value_length(winners.column("doc_ids")).to_numpy().astype(np.int64)
+    qids_row = winners.column("query_id").to_numpy().astype(np.int64)
+    docs = pc.list_flatten(winners.column("doc_ids")).to_numpy()
+    scores = pc.list_flatten(winners.column("scores")).to_numpy()
     qids = np.repeat(qids_row, counts)
     uq, qrow = np.unique(qids_row, return_inverse=True)
     totals = np.bincount(qrow, weights=counts).astype(np.int64)
     width = int(totals.max()) if totals.size else 0
     if width > k:
-        # column start of each row-blob = prefix sum of counts within
+        # column start of each row's list = prefix sum of counts within
         # its query (rows arrive bucket-interleaved, so group first)
         order_rows = np.argsort(qrow, kind="stable")
         c_sorted = counts[order_rows]

@@ -1,5 +1,5 @@
 """Physical-plan audit helpers: assert the plans we designed for are the
-plans Catalyst actually produces (pushdown, pruning, broadcast, codegen).
+plans Catalyst actually produces (pushdown, pruning, broadcast).
 """
 
 from __future__ import annotations
@@ -49,9 +49,3 @@ def has_partition_filter(plan: str, fragment: str) -> bool:
 
 def has_broadcast_join(plan: str) -> bool:
     return "BroadcastHashJoin" in plan
-
-
-def codegen_stage_count(plan: str) -> int:
-    # "WholeStageCodegen (n)" in simple/extended mode, "[codegen id : n]"
-    # in formatted mode
-    return max(plan.count("WholeStageCodegen"), plan.count("codegen id"))

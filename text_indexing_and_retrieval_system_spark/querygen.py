@@ -10,16 +10,13 @@ already-preprocessed corpus, which is why its runtime query
 preprocessing can be a no-op).
 
 The word-frequency distribution itself is the reference's P7 operator
-(`utils.py:62-82`) expressed as the classic explode→groupBy→count.
+(`utils.py:62-82`), `docquery.word_freq_top`.
 """
 
 from __future__ import annotations
 
 import random
 from dataclasses import dataclass
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 QUERY_TEMPLATES = [
     "_M_",
@@ -46,15 +43,6 @@ class PoolSpec:
     high: tuple[int, int] = (100, 500)  # rank windows, 1-based inclusive
     mid: tuple[int, int] = (501, 2000)
     low: tuple[int, int] = (2001, 10000)
-
-
-def word_frequencies(tokens_df: DataFrame, term_col: str = "term") -> DataFrame:
-    """(.. term ..) → (term, freq) desc — P7 as a hash aggregate."""
-    return (
-        tokens_df.groupBy(term_col)
-        .agg(F.count("*").alias("freq"))
-        .orderBy(F.desc("freq"), F.asc(term_col))
-    )
 
 
 def pools_from_frequencies(

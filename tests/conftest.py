@@ -58,3 +58,20 @@ def built_index(spark, corpus_df, tmp_path_factory):
     index_dir = str(tmp_path_factory.mktemp("index") / "small")
     cfg = IndexBuildConfig(n_term_buckets=8, n_range_buckets=8, n_segment_chunks=2, chunk_min_convs=0)
     return engine.build(spark, corpus_df, index_dir, cfg, input_desc="conftest-small")
+
+
+@pytest.fixture
+def kernel_frames(monkeypatch):
+    """The DataFrames wand.boolean_topk returns during the test, in call
+    order: the distributed leaf's kernel stage, for plan and width checks."""
+    from text_indexing_and_retrieval_system_spark.operators import wand
+
+    frames = []
+    topk = wand.boolean_topk
+
+    def recording(*args, **kw):
+        frames.append(topk(*args, **kw))
+        return frames[-1]
+
+    monkeypatch.setattr(wand, "boolean_topk", recording)
+    return frames

@@ -67,12 +67,13 @@ def test_batch_duplicate_queries(built_index, oracle_index):
 
 def test_batch_kernel_split_is_placement_invariant(built_index, oracle_index):
     """Placement invariance holds only in the COARSER direction: groups
-    may be unions of whole doc-range buckets (the null-slot overflow
-    path merges several buckets into one group), but never subdivisions
-    of one — a sub-bucket split was tried in round 5 and emitted partial
-    scores (a doc's terms' blocks have different first_docs, so they
-    landed in different groups; this test caught it). Here every bucket
-    above id 1 shares the overflow group and results must not move."""
+    may be unions of whole doc-range buckets (the last group's open upper
+    edge merges every bucket above the count into it), but never
+    subdivisions of one — a sub-bucket split was tried in round 5 and
+    emitted partial scores (a doc's terms' blocks have different
+    first_docs, so they landed in different groups; this test caught
+    it). Here every bucket from id 1 up shares the last group and
+    results must not move."""
     from text_indexing_and_retrieval_system_spark import engine as eng
 
     terms = sorted(
@@ -85,7 +86,7 @@ def test_batch_kernel_split_is_placement_invariant(built_index, oracle_index):
     ]
     base = built_index.search_batch(queries, k=10)
     coarse = eng.InvertedIndex(built_index.spark, built_index.dir)
-    coarse.kernel_buckets = 2  # buckets >= 2 all map to the null slot
+    coarse.kernel_buckets = 2  # buckets >= 1 all fall in the last group
     merged = coarse.search_batch(queries, k=10)
     for q in queries:
         assert merged[q].docs == base[q].docs, q

@@ -257,3 +257,26 @@ def test_batch_of_unknown_terms_launches_no_spark_job(spark, built_index):
     )
     assert jobs == []
     assert {q: (r.docs, r.scores) for q, r in got.items()} == {q: ([], []) for q in batch}
+
+
+def test_distributed_leaf_is_one_job_of_one_stage(spark, built_index, oracle_index):
+    """With both route gates at 0, a search_batch and a NOT search_collect
+    each launch exactly one Spark job of one stage: the kernel tasks read
+    their own range buckets, with no scan job, no shuffle stage and no
+    doclen cogroup. The batch runs first on a fresh handle, so the count
+    also shows that listing the postings launches no schema or listing
+    job."""
+    by_df = sorted(oracle_index.postings, key=lambda t: (-len(oracle_index.postings[t]), t))
+    tracker = spark.sparkContext.statusTracker()
+    idx = _gates_closed(engine.InvertedIndex(spark, built_index.dir))
+    batch = [f'"{by_df[0]}"', f'"{by_df[1]}" OR "{by_df[5]}"', f'"{by_df[2]}" OR "{by_df[30]}"']
+    negated = f'"{by_df[20]}" AND NOT "{by_df[0]}"'
+    got, jobs = _jobs_in_group(spark, "test-batch-one-job", lambda: idx.search_batch(batch, k=K))
+    assert len(jobs) == 1 and len(tracker.getJobInfo(jobs[0]).stageIds) == 1
+    for q in batch:
+        _assert_match(oracle_index.search(q, k=K), got[q], q)
+    got, jobs = _jobs_in_group(
+        spark, "test-not-one-job", lambda: idx.search_collect(negated, k=K)
+    )
+    assert len(jobs) == 1 and len(tracker.getJobInfo(jobs[0]).stageIds) == 1
+    _assert_match(oracle_index.search(negated, k=K), got, negated)

@@ -1,14 +1,18 @@
-"""Kernel-group packing: the bucket-kernel stages pack whole doc-range
-buckets into one group per core slot (wand._with_slot). Packing is
-placement only, so every group count — one group, a few, one per bucket
-— must return the same docs and bit-identical scores on every
-distributed kernel, and match the oracle."""
+"""Kernel-group packing: the distributed kernel packs whole doc-range
+buckets into one group per core slot (wand.group_bounds), and each
+group's task reads its own buckets. Packing is placement only, so every
+group count — one group, a few, one per bucket — must return the same
+docs and bit-identical scores on every distributed kernel, and match
+the oracle."""
+
+import os
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
 
 from text_indexing_and_retrieval_system_spark import engine
 from text_indexing_and_retrieval_system_spark.functions import codec
@@ -97,26 +101,37 @@ def test_packed_groups_match_unpacked_and_oracle(
         assert packed == unpacked, n_groups
 
 
-def test_kernel_frame_has_one_nonempty_partition_per_core(spark, built_index, terms):
-    """The kernel stage is min(n_buckets, defaultParallelism) wide, with
-    no empty partition (each would pay a Python task for nothing)."""
+def test_group_bounds_partition_the_buckets(spark, built_index, kernel_frames):
+    """group_bounds cuts the buckets into contiguous runs of whole
+    buckets, one per group, by the rule b * n_groups // n_buckets; the
+    outer edges are open, so every bucket id, in range or not, has
+    exactly one group. The engine's kernel stage has kernel_groups() of
+    them: min(n_buckets, defaultParallelism) tasks."""
+    for n_buckets in (1, 2, 3, 7, 8, 32, 33):
+        for n_groups in range(1, n_buckets + 1):
+            bounds = wand.group_bounds(n_groups, n_buckets)
+            assert len(bounds) == n_groups
+            assert bounds[0][0] is None and bounds[-1][1] is None
+            for (_, hi), (lo, _) in zip(bounds, bounds[1:]):
+                assert hi == lo  # contiguous: no gap, no overlap
+            for b in range(-2, n_buckets + 2):
+                owners = [
+                    g
+                    for g, (lo, hi) in enumerate(bounds)
+                    if (lo is None or b >= lo) and (hi is None or b < hi)
+                ]
+                assert len(owners) == 1, (n_buckets, n_groups, b)
+                if 0 <= b < n_buckets:
+                    assert owners[0] == b * n_groups // n_buckets
+            # no group is empty: each owns at least one in-range bucket
+            assert {b * n_groups // n_buckets for b in range(n_buckets)} == set(range(n_groups))
+
     n_buckets = built_index.kernel_buckets
     want = min(n_buckets, spark.sparkContext.defaultParallelism)
-    blocks = built_index.blocks_for(terms[:3]).select(*wand.KERNEL_COLS)
-    dl_b = built_index.doclen().select(
-        F.shiftrightunsigned("doc_id_int", built_index.range_shift)
-        .cast("int")
-        .alias("range_bucket"),
-        "doc_id_int",
-    )
-    key = "__slot"
-    for df in (blocks, dl_b):
-        frame = wand._kernel_frame(df, n_buckets)
-        assert frame.rdd.getNumPartitions() == want
-        rows = frame.select(F.spark_partition_id().alias("p"), key).distinct().collect()
-        assert {r["p"] for r in rows} == set(range(want))
-        # one group per partition: the slot mapping never collides
-        assert len({r[key] for r in rows}) == want
+    assert wand.kernel_groups(spark, n_buckets) == want
+    meta = {"said": [(0, 1.0)]}
+    built_index._boolean_topk_winners({0: (("tok", "said"), meta)}, ["said"], K)
+    assert kernel_frames[0].rdd.getNumPartitions() == want
 
 
 def _synthetic_blocks(rng, bucket_bases, terms, block_rows=64):
@@ -151,7 +166,7 @@ def _synthetic_blocks(rng, bucket_bases, terms, block_rows=64):
     return pa.Table.from_pylist(rows), positions
 
 
-def test_packed_group_wider_than_int32_scores_like_per_bucket(spark, monkeypatch):
+def test_packed_group_wider_than_int32_scores_like_per_bucket(spark, tmp_path):
     """A packed group whose doc span exceeds 2^31 decodes in global int64
     (the int32 group-local fast path cannot hold it); its scores must be
     bit-identical to scoring each bucket on its own — a phrase included,
@@ -166,11 +181,11 @@ def test_packed_group_wider_than_int32_scores_like_per_bucket(spark, monkeypatch
     assert wand._decode_terms(table, avgdl)[1] == 0
     one = table.filter(pc.equal(table.column("range_bucket"), 1))
     assert wand._decode_terms(one, avgdl)[1] == pc.min(one.column("first_doc")).as_py()
-    blocks = spark.createDataFrame(
-        table,
-        "term string, range_bucket int, first_doc long, last_doc long, payload binary, "
-        "pos_payload binary",
-    )
+    for b in range(len(bucket_bases)):
+        os.makedirs(tmp_path / f"bucket={b}")
+        part = table.filter(pc.equal(table.column("range_bucket"), b))
+        pq.write_table(part, str(tmp_path / f"bucket={b}" / "part-0.parquet"))
+    postings = pads.dataset(str(tmp_path), format="parquet", partitioning="hive")
     metas = {
         0: {"alpha": [(0, 1.5)]},
         1: {"beta": [(0, 0.7)], "gamma": [(1, 2.1)]},
@@ -182,8 +197,11 @@ def test_packed_group_wider_than_int32_scores_like_per_bucket(spark, monkeypatch
     queries[4] = (("phrase", ("alpha", "beta")), metas[1])
 
     def run(n_groups):
-        _force_groups(monkeypatch, n_groups)
-        local = wand.boolean_topk(blocks, queries, avgdl, K, n_buckets=len(bucket_bases))
+        n_buckets = len(bucket_bases)
+        bounds = wand.group_bounds(n_groups or n_buckets, n_buckets)
+        local = wand.boolean_topk(
+            spark, postings, terms, queries, avgdl, K, bounds, with_positions=True
+        )
         return wand.merge_query_topk_driver(local.toArrow(), K)
 
     per_bucket = run(None)
@@ -201,3 +219,33 @@ def test_packed_group_wider_than_int32_scores_like_per_bucket(spark, monkeypatch
     }
     assert len(adjacent) > K
     assert len(packed[4]) == K and {d for d, _ in packed[4]} <= adjacent
+
+
+def test_decode_is_independent_of_block_order():
+    """_decode_terms gathers the blocks into (term, first_doc) order only
+    when they are out of it: a sorted table and a row-permuted copy must
+    decode to the same per_term arrays, base and id dtype, and score to
+    the same winners, a phrase included."""
+    rng = np.random.default_rng(5)
+    table, _ = _synthetic_blocks(rng, [0, 1 << 20], ["alpha", "beta", "gamma"])
+    in_order = table.sort_by([("term", "ascending"), ("first_doc", "ascending")])
+    shuffled = in_order.take(rng.permutation(in_order.num_rows))
+    avgdl = 40.0
+    got, want = wand._decode_terms(shuffled, avgdl), wand._decode_terms(in_order, avgdl)
+    assert got[1:] == want[1:]
+    assert got[0].keys() == want[0].keys() == {"alpha", "beta", "gamma"}
+    for t, (docs, imps, tfs, pos) in want[0].items():
+        for a, b in zip(got[0][t][:3], (docs, imps, tfs)):
+            assert a.dtype == b.dtype and np.array_equal(a, b)
+        assert got[0][t][3].equals(pos)
+    meta = {"alpha": [(0, 1.3)], "beta": [(1, 0.6)]}
+    queries = {
+        0: (wand.disjunction(sorted(meta)), meta),
+        1: (("phrase", ("alpha", "beta")), meta),
+        2: (("and", ("tok", "alpha"), ("not", ("tok", "gamma"))), meta),
+    }
+    universe = np.unique(np.concatenate([v[0] for v in want[0].values()])).astype(np.int64)
+    universe += want[1]
+    assert wand.boolean_score_bucket(
+        shuffled, queries, avgdl, K, universe
+    ).equals(wand.boolean_score_bucket(in_order, queries, avgdl, K, universe))

@@ -11,11 +11,17 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_postings_scan_pruned(built_index):
-    blocks = built_index.blocks_for(["said"])
-    plan = X.plan_string(blocks)
-    # partition-dir pruning on the term bucket + row-group pushdown on term
-    assert X.has_partition_filter(plan, "bucket"), plan
-    assert X.has_pushed_filter(plan, "term"), plan
+    """The distributed leaf's postings read is pruned on the driver to the
+    term's bucket= dirs, and the read itself keeps only the term's rows."""
+    from text_indexing_and_retrieval_system_spark.operators.segments import term_bucket_py
+
+    files = built_index._term_files(["said"])
+    every = built_index._dataset("postings").files
+    bucket = term_bucket_py("said", built_index.n_term_buckets)
+    assert files.files and len(files.files) < len(every), files.files
+    assert all(f"/bucket={bucket}/" in f for f in files.files), files.files
+    rows = built_index._term_read("postings", ["term"], ["said"])
+    assert rows.num_rows and set(rows.column("term").to_pylist()) == {"said"}
 
 
 def test_column_pruning_on_ranked_topk(spark):
@@ -62,26 +68,17 @@ def test_word_freq_plan_shape(spark):
     assert X.scan_read_schema(plan, "text", absent=("lang", "source")), plan
 
 
-def test_kernel_stage_exchanges_arrow(built_index):
-    """The distributed kernel runs as Arrow UDFs: an OR batch plans one
-    FlatMapGroupsInArrow, a NOT batch (the doclen cogroup) one
-    FlatMapCoGroupsInArrow, and no stage converts to pandas."""
+def test_kernel_stage_exchanges_arrow(built_index, kernel_frames):
+    """The distributed kernel is one Arrow UDF stage with no shuffle: an
+    OR batch and an AND NOT batch each plan one MapInArrow node over a
+    range of group ids, no Exchange (the kernel tasks read their range
+    buckets themselves) and no stage that converts to pandas."""
     from text_indexing_and_retrieval_system_spark.operators import wand
 
-    idx = built_index
     meta = {"said": [(0, 1.0)], "time": [(1, 1.0)]}
-    blocks = idx.blocks_for(sorted(meta))
-    common = dict(avgdl=idx.stats["avgdl"], k=10, n_buckets=idx.kernel_buckets)
-    ranked = wand.boolean_topk(blocks, {0: (wand.disjunction(sorted(meta)), meta)}, **common)
-    plan = X.plan_string(ranked)
-    assert "FlatMapGroupsInArrow" in plan and "InPandas" not in plan, plan
     not_tree = ("and", ("tok", "said"), ("not", ("tok", "time")))
-    negated = wand.boolean_topk(
-        blocks,
-        {0: (not_tree, meta)},
-        doclen=idx.doclen(),
-        range_shift=idx.range_shift,
-        **common,
-    )
-    plan = X.plan_string(negated)
-    assert "FlatMapCoGroupsInArrow" in plan and "InPandas" not in plan, plan
+    for tree in (wand.disjunction(sorted(meta)), not_tree):
+        built_index._boolean_topk_winners({0: (tree, meta)}, sorted(meta), 10)
+        plan = X.plan_string(kernel_frames[-1])
+        assert "MapInArrow" in plan, plan
+        assert "Exchange" not in plan and "InPandas" not in plan, plan

@@ -126,28 +126,3 @@ def test_jaccard_hot_shingle_guard(spark):
         + " order by doc_a, doc_b"
     ).df()
     assert got.reset_index(drop=True).equals(want.reset_index(drop=True))
-
-
-def test_murmur3_matches_spark_hash(spark):
-    """wand._slot_values predicts Spark's HashPartitioning placement with
-    a python murmur3 — it must match F.hash for int keys exactly, and
-    the slot remapping must give every bucket its own partition."""
-    from pyspark.sql import functions as F
-
-    from text_indexing_and_retrieval_system_spark.operators.wand import (
-        _murmur3_int32,
-        _slot_values,
-    )
-
-    pdf = (
-        spark.range(0, 256)
-        .select(F.col("id").cast("int").alias("b"))
-        .select("b", F.hash("b").alias("h"))
-        .toPandas()
-    )
-    for b, h in zip(pdf["b"], pdf["h"]):
-        assert _murmur3_int32(int(b)) == int(h), b
-    # slot values place bucket b exactly on partition b (mod n_parts)
-    for nb in (8, 16, 32, 33, 64):
-        vals = _slot_values(nb)
-        assert [(_murmur3_int32(v) % nb) for v in vals] == list(range(nb))

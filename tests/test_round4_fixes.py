@@ -1,6 +1,7 @@
 """Round-4 fixes: ADVICE r3 items + the per-chunk doc store.
 
-- IN-list literal escaping must handle backslashes (engine.blocks_for)
+- terms with backslashes and quotes go through the distributed leaf's
+  term read (engine._boolean_topk_winners) without error
 - phrase query on a store_positions=False index raises a clear error
 - add_documents replay stays idempotent with zero-token docs at the
   range extremes (bounds now come from the docs frame, not the segment)
@@ -27,9 +28,11 @@ CFG = IndexBuildConfig(n_term_buckets=8, n_range_buckets=8, n_segment_chunks=2, 
 
 def test_in_list_escapes_backslash(built_index):
     # a term ending in a backslash (reachable with remove_punctuation=False)
-    # must not escape the closing quote of the one-shot IN literal
+    # or holding a quote is a plain value of the kernel tasks' term
+    # filter: absent from the index, it finds no winners and raises nothing
     for weird in ["foo\\", "a\\'b", "it's", "\\"]:
-        assert built_index.blocks_for([weird]).count() == 0
+        meta = {weird: [(0, 1.0)]}
+        assert built_index._boolean_topk_winners({0: (("tok", weird), meta)}, [weird], 10) == {}
 
 
 def test_backslash_term_roundtrip(spark, tmp_path):

@@ -25,8 +25,11 @@ Reference analogue: none — the reference's dict build
 single-process upsert and cannot exhibit reducer skew.
 """
 
+import os
+
 import numpy as np
 import pandas as pd
+import pyarrow.dataset as pads
 import pytest
 from pyspark.sql import functions as F
 
@@ -72,11 +75,12 @@ def skew_index(spark, skew_df, tmp_path_factory):
 
 
 def _hot_blocks(skew_index) -> pd.DataFrame:
-    return (
-        skew_index.blocks_for([HOT])
-        .select("range_bucket", "first_doc", "last_doc", "n")
-        .toPandas()
+    postings = pads.dataset(
+        os.path.join(skew_index.dir, "postings"), format="parquet", partitioning="hive"
     )
+    return postings.to_table(
+        columns=["range_bucket", "first_doc", "last_doc", "n"], filter=pads.field("term") == HOT
+    ).to_pandas()
 
 
 def test_hot_term_splits_into_disjoint_range_buckets(skew_index, skew_pdf):

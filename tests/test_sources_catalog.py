@@ -134,7 +134,8 @@ def test_incremental_add_and_delete(spark, corpus_df, tmp_path):
     stats3 = inc.refresh_postings(spark, idx_dir)
     assert stats3["n_docs"] == stats2["n_docs"] + more.count() - 1
     idx3 = engine.load(spark, idx_dir)
-    assert idx3.doclen().filter(f"doc_id = '{fresh}'").count() == 0
+    doclen = spark.read.parquet(os.path.join(idx_dir, "doclen"))
+    assert doclen.filter(f"doc_id = '{fresh}'").count() == 0
     assert idx3.docs().filter(f"doc_id = '{fresh}'").count() == 0
     assert idx3.docs().filter("conv_id = 'conv-00000050'").count() == 2
     text = more.filter(

@@ -1,9 +1,9 @@
 """Bit-exactness of the repr()+"D" SQL double-literal pattern.
 
-Several driver-side hot paths avoid per-literal py4j round trips by
-composing ONE SQL string instead of F.lit() Column trees (the kernel
-slot map `wand._with_slot`, the IVF centroid cosines
-`similarity._centroid_cos_exprs`). Their correctness rests on:
+A driver-side hot path, the IVF centroid cosines
+(`similarity._centroid_cos_exprs`), avoids per-literal py4j round trips
+by composing ONE SQL string instead of F.lit() Column trees. Its
+correctness rests on:
 
   parse(repr(v) + "D")  ==  F.lit(v)   bit-for-bit, for every double v
 

@@ -12,7 +12,7 @@ query_processing_engine.py:549-651`):
         BM25 tf-normalization; tfidf: ln(N/df) × tf; wordcount: tf)
       → routing by gate (InvertedIndex._search_rows): driver-local when
         the terms' Σdf (and, for NOT, the corpus size) is under the size
-        gates, else one distributed bucket-kernel job
+        gates, else one distributed kernel job of one stage
       → top-k (score DESC, doc_id_int ASC) → optional hydration join
 
 That gives two leaves: driver (_search_kernel_driver_rows) and
@@ -22,21 +22,24 @@ a batch of one, and search_batch sends its whole batch, each query as
 the disjunction of its scoring terms, through the distributed leaf. The
 two are bit-identical in scores and order (the golden suite runs both
 against the same oracle). Control crosses driver→executor once per
-query or batch on the distributed leaf (plus a dict-lookup id
+query or batch on the distributed leaf, as one Spark job of one stage
+with no shuffle: each kernel task reads its own range buckets of the
+batch's terms (and, for NOT, its own doc-id range of doclen/) with
+pyarrow, from the files the handle listed (plus a dict-lookup id
 resolution from the driver-cached convmap), matching SURVEY.md §3.1's
 target. Both leaves hand the kernel pyarrow tables of the block columns
 and merge its Arrow winner tables: no pandas between the block store
 and the ranked winners.
 
-The driver reads its index tables with pyarrow and never through Spark:
-lexicon lookup and id resolution on every path, and the whole driver
-leaf. One rule covers the postings' kernel columns, the lexicon and the
-convmap: a table whose read columns (summed from the parquet footers)
-fit DRIVER_RESIDENT_MAX_BYTES is read whole once per handle (the blocks
-as one Arrow table sorted by term, sliced per query); a bigger one takes
-one read per call, filtered to the call's terms or conv ints. Phrase
-positions always take the filtered read; the NOT doc-id universe is
-read once per handle.
+Nothing reads an index table through Spark on the query path. The
+driver reads its tables with pyarrow: lexicon lookup and id resolution
+on every path, and the whole driver leaf. One rule covers the postings'
+kernel columns, the lexicon and the convmap: a table whose read columns
+(summed from the parquet footers) fit DRIVER_RESIDENT_MAX_BYTES is read
+whole once per handle (the blocks as one Arrow table sorted by term,
+sliced per query); a bigger one takes one read per call, filtered to the
+call's terms or conv ints. Phrase positions always take the filtered
+read; the NOT doc-id universe is read once per handle.
 """
 
 from __future__ import annotations
@@ -119,10 +122,6 @@ class InvertedIndex:
             self.normalize_cfg = NormalizeConfig(**norm)
         else:
             self.normalize_cfg = NormalizeConfig()
-        doclen_df = getattr(self, "_doclen_df", None)
-        if doclen_df is not None:
-            doclen_df.unpersist()
-        self._doclen_df = None
         # the driver-side index tables, each resident once it fits
         # DRIVER_RESIDENT_MAX_BYTES, else read filtered per call; None =
         # not (yet) resident. The lexicon and convmap turn the lexicon
@@ -130,7 +129,6 @@ class InvertedIndex:
         self._full_lex: dict | None = None
         self._convmap: dict[int, str] | None = None
         self._turn_strs: list[str] | None = None
-        self._postings_df = None
         self._datasets: dict[str, pads.Dataset] = {}
         self._footer_sizes: dict[tuple, int] = {}
         # the driver leaf's block store (see _maybe_bulk_load_blocks):
@@ -148,23 +146,6 @@ class InvertedIndex:
 
     # ------------------------------ scans ------------------------------
 
-    def blocks_for(self, tokens: list[str], with_positions: bool = False) -> DataFrame:
-        """Posting blocks for normalized tokens — bucket-dir pruned +
-        term predicate pushed to parquet row groups. The reader relation
-        is built once per handle (a fresh spark.read.parquet costs a
-        1-task schema/footer job per query).
-
-        `with_positions=False` (the ranked/boolean default) drops the
-        `pos_payload` column BEFORE any shuffle, so parquet column
-        pruning keeps position bytes entirely off the hot path — only
-        phrase queries pay for them."""
-        if with_positions:
-            self._require_positions()
-        df = self._blocks_relation(with_positions)
-        if not tokens:
-            return df.filter(F.lit(False))
-        return df.filter(self._bucket_term_filter(tokens))
-
     def _require_positions(self) -> None:
         if not self.store_positions:
             raise ValueError(
@@ -172,47 +153,19 @@ class InvertedIndex:
                 "phrase queries require positions — rebuild with "
                 "store_positions=True"
             )
-
-    def _bucket_term_filter(self, tokens: list[str]):
-        """`bucket IN (...) AND term IN (...)` over the tokens' term
-        buckets, as ONE SQL expression: Column.isin costs a py4j round
-        trip PER literal (~1.5 s at 2k terms, pure driver time); expr()
-        ships one string and parses JVM-side. Same plan: bucket-dir
-        partition pruning plus parquet row-group pushdown on term."""
-        buckets = sorted({term_bucket_py(t, self.n_term_buckets) for t in tokens})
-        # backslash FIRST, then quote: a term ending in '\' (reachable
-        # with remove_punctuation=False) must not escape the closing quote
-        quoted = ",".join(
-            "'" + t.replace("\\", "\\\\").replace("'", "\\'") + "'" for t in tokens
-        )
-        return F.expr(
-            f"bucket IN ({','.join(map(str, buckets))}) AND term IN ({quoted})"
-        )
-
-    def _blocks_relation(self, with_positions: bool) -> DataFrame:
-        """The postings block relation (built once per handle), position
-        payload dropped before any downstream operator unless requested."""
-        if self._postings_df is None:
-            self._postings_df = self.spark.read.parquet(
-                os.path.join(self.dir, "postings")
+        if "pos_payload" not in self._dataset("postings").schema.names:
+            raise ValueError(
+                f"index at {self.dir} predates the split payload/pos_payload "
+                "block format — rebuild it (positions were inlined in "
+                "`payload` before round 3)"
             )
-            if "pos_payload" not in self._postings_df.columns:
-                raise ValueError(
-                    f"index at {self.dir} predates the split payload/pos_payload "
-                    "block format — rebuild it (positions were inlined in "
-                    "`payload` before round 3)"
-                )
-        df = self._postings_df
-        if not with_positions:
-            df = df.drop("pos_payload")
-        return df
 
     LEX_COLS = ["term", "df", "cf", "n_blocks"]
     CONVMAP_COLS = ["conv_int", "conv_id"]
     # interactive driver-leaf gate: queries whose terms' total df is under
     # this run driver-local (in-process scoring over the driver block
-    # store) instead of paying a 2-stage shuffle job (~0.4 s of
-    # scheduling for microseconds of math at low df). ~8 payload
+    # store) instead of paying a Spark job (its scheduling and Python
+    # task floor, for microseconds of math at low df). ~8 payload
     # bytes/posting -> <=~32 MB read worst-case; on a 10^12-doc
     # deployment hot terms blow past the cap and take the distributed
     # kernel automatically.
@@ -254,17 +207,30 @@ class InvertedIndex:
     def _fits(self, table: str, cols: list[str]) -> bool:
         return self._footer_bytes(table, cols) <= self.DRIVER_RESIDENT_MAX_BYTES
 
+    def _term_buckets(self, tokens: list[str]) -> pads.Expression:
+        """`bucket IN (...)` over the tokens' term buckets."""
+        return pads.field("bucket").isin(
+            sorted({term_bucket_py(t, self.n_term_buckets) for t in tokens})
+        )
+
     def _term_read(self, table: str, cols: list[str], tokens: list[str]) -> pa.Table:
         """One pyarrow read of `table` (postings or lexicon) filtered on
         `bucket IN (...) AND term IN (...)`: bucket-dir pruning plus
         row-group statistics on term."""
-        buckets = sorted({term_bucket_py(t, self.n_term_buckets) for t in tokens})
         return self._dataset(table).to_table(
             columns=cols,
             # typed, so that no tokens is an empty read, not a type error
-            filter=pads.field("bucket").isin(buckets)
+            filter=self._term_buckets(tokens)
             & pads.field("term").isin(pa.array(tokens, pa.string())),
         )
+
+    def _term_files(self, tokens: list[str]) -> pads.Dataset:
+        """The handle's listing of postings/ pruned to the tokens'
+        bucket= dirs, for the distributed leaf's tasks to read: no I/O,
+        and every task reads the files this handle listed."""
+        ds = self._dataset("postings")
+        frags = list(ds.get_fragments(filter=self._term_buckets(tokens)))
+        return pads.FileSystemDataset(frags, ds.schema, ds.format, ds.filesystem)
 
     def lexicon_for(self, tokens: list[str]) -> pd.DataFrame:
         """The tokens' lexicon rows (LEX_COLS), in token order, unknown
@@ -285,29 +251,12 @@ class InvertedIndex:
         rows = [(t, *lex[t]) for t in tokens if t in lex]
         return pd.DataFrame(rows, columns=self.LEX_COLS)
 
-    def doclen(self) -> DataFrame:
-        """doclen table, persisted for the handle's lifetime: the
-        distributed kernel's doclen cogroup reads it for the NOT universe
-        (the driver leaf reads its universe with pyarrow, _doclen_ids).
-        reload() drops the cached relation. (On a 10^12-doc deployment the
-        executors' storage tier holds it the same way.)"""
-        if self._doclen_df is None:
-            self._doclen_df = (
-                self.spark.read.parquet(os.path.join(self.dir, "doclen"))
-                # the contract columns: doclen/ is flat (build and
-                # refresh write it once over all segments), but indexes
-                # built before that hold doclen/chunk=<i>/ partitions
-                .select("doc_id_int", "doc_id", "dl")
-                .persist()
-            )
-        return self._doclen_df
-
     def docs(self) -> DataFrame:
         from .operators.segments import DOC_COLS
 
         # fresh builds write docs/chunk=<i>/ (per-chunk pipeline); select
         # the contract columns so the inferred partition column never
-        # leaks (mirrors doclen())
+        # leaks
         return self.spark.read.parquet(os.path.join(self.dir, "docs")).select(
             *DOC_COLS
         )
@@ -430,24 +379,32 @@ class InvertedIndex:
         """The distributed set-evaluation leaf: ONE wand.boolean_topk job
         over a batch {query_id: (tree, term_meta)} whose trees use
         `tokens`, then the driver winner merge -> per-query ranked
-        (doc_id_int, score) lists. The batch travels as a broadcast: as a
-        plain closure capture it would be re-unpickled by every kernel
-        task (grows with batch size); as a broadcast it is fetched once
-        per worker process. `mark(label)` closes search_batch's timed
-        phases."""
+        (doc_id_int, score) lists. Each kernel task reads its own range
+        buckets of the files this handle listed (_term_files), so every
+        task sees the snapshot the handle holds until reload(). The
+        batch travels as a broadcast: as a plain closure capture it
+        would be re-unpickled by every kernel task (grows with batch
+        size); as a broadcast it is fetched once per worker process.
+        `mark(label)` closes search_batch's timed phases."""
         trees = [tree for tree, _ in queries.values()]
         needs_universe = any(wand.tree_has(t, "not") for t in trees)
         with_positions = any(wand.tree_has(t, "phrase") for t in trees)
+        if with_positions:
+            self._require_positions()
+        n_groups = wand.kernel_groups(self.spark, self.kernel_buckets)
         bc = self.spark.sparkContext.broadcast(queries)
         try:
             local = wand.boolean_topk(
-                self.blocks_for(tokens, with_positions=with_positions),
+                self.spark,
+                self._term_files(tokens),
+                tokens,
                 bc,
                 self.stats["avgdl"],
                 k,
-                doclen=self.doclen() if needs_universe else None,
+                wand.group_bounds(n_groups, self.kernel_buckets),
+                doclen=self._dataset("doclen") if needs_universe else None,
                 range_shift=self.range_shift,
-                n_buckets=self.kernel_buckets,
+                with_positions=with_positions,
                 impact=impact,
             )
             mark("plan")
@@ -481,9 +438,9 @@ class InvertedIndex:
         kernel body (wand.boolean_score_bucket) called ONCE in-process on a
         batch of one over all the query's blocks, with the whole
         doc-id universe for NOT. Exact by the packing argument of
-        wand._with_slot: a group of whole range buckets scores like one
+        wand.group_bounds: a group of whole range buckets scores like one
         bigger bucket, so the single call is bit-identical to the
-        per-bucket kernels, without the 2-stage shuffle job's scheduling
+        per-group kernel tasks, without a Spark job's scheduling
         floor."""
         out = wand.boolean_score_bucket(
             self._blocks_pdf_for(all_tokens, with_positions=has_phrase),

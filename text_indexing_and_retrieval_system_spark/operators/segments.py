@@ -142,11 +142,11 @@ def range_shift_for(n_convs: int, n_range_buckets: int) -> int:
 
 
 def kernel_buckets_for(n_convs: int, range_shift: int) -> int:
-    """Range buckets the query kernels pack into groups (wand._with_slot).
+    """Range buckets the query kernels pack into groups (wand.group_bounds).
     Every doc id is below n_convs << TURN_BITS, so the realized count can
     be below n_range_buckets; counting exactly keeps an always-empty
     bucket from owning a group (a doc outside the count would still score
-    exactly, in the null overflow group)."""
+    exactly, in the first or last group, whose outer bounds are open)."""
     top = max((n_convs << ib.TURN_BITS) - 1, 0)
     return (top >> range_shift) + 1
 

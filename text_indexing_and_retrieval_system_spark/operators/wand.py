@@ -11,9 +11,10 @@ merge of the per-group winners — the distributed analogue of the
 reference's single min-heap (`:407-450`).
 
 One columnar format runs from the block store to the ranked winners:
-the kernel reads a pyarrow table of the block columns (through
-`GroupedData.applyInArrow` on the distributed leaf, as a slice of the
-driver's resident table on the driver leaf), the codec decodes the
+the kernel reads a pyarrow table of the block columns (a task's own
+pyarrow read of its range buckets inside `mapInArrow` on the
+distributed leaf, a slice of the driver's resident table on the driver
+leaf), the codec decodes the
 binary columns from their Arrow buffers, and each group's winners go
 back as Arrow list columns that the driver merge reads flat.
 
@@ -36,8 +37,8 @@ import math
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..functions import codec
 
@@ -68,99 +69,49 @@ def tf_impact(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
     return tf
 
 
-def _murmur3_int32(x: int, seed: int = 42) -> int:
-    """Murmur3_x86_32 of one int32, matching Spark's `hash()` /
-    HashPartitioning for integer keys (same seed 42) — lets the driver
-    predict which shuffle partition a bucket id lands on without a job."""
-    m = 0xFFFFFFFF
-    k = (x & m) * 0xCC9E2D51 & m
-    k = ((k << 15) | (k >> 17)) & m
-    k = (k * 0x1B873593) & m
-    h = (seed ^ k) & m
-    h = ((h << 13) | (h >> 19)) & m
-    h = (h * 5 + 0xE6546B64) & m
-    h ^= 4  # length in bytes
-    h ^= h >> 16
-    h = (h * 0x85EBCA6B) & m
-    h ^= h >> 13
-    h = (h * 0xC2B2AE35) & m
-    h ^= h >> 16
-    return h - (1 << 32) if h >= (1 << 31) else h  # int32
-
-
-def _slot_values(n_parts: int) -> list[int]:
-    """For each partition index p in [0, n_parts): an int v with
-    murmur3(v) % n_parts == p. Remapping kernel group g to value v_g
-    makes Spark's HashPartitioning place every group on its OWN
-    partition — n_parts tasks, all non-empty, no hash-collision
-    stragglers and no empty partitions each paying the UDF-closure
-    ship + unpickle."""
-    out: dict[int, int] = {}
-    v = 0
-    while len(out) < n_parts:
-        p = _murmur3_int32(v) % n_parts
-        if p not in out:
-            out[p] = v
-        v += 1
-    return [out[p] for p in range(n_parts)]
-
-
-def _core_slots(spark) -> int:
-    """Width of every kernel-side Python stage: one task per core slot.
-    A Python task costs ~0.2 s of fixed slot time (worker hand-off,
-    closure unpickle, Arrow setup), so a stage wider than the cores pays
-    that overhead in extra waves while doing no more scoring work. An
-    EXPLICIT repartition to this count also keeps AQE from coalescing
-    the stage by Arrow byte size — the kernel's cost is Python CPU,
-    which AQE's size heuristic cannot see."""
-    return max(1, spark.sparkContext.defaultParallelism)
-
-
 def kernel_groups(spark, n_buckets: int) -> int:
     """Number of kernel groups (= kernel tasks) for `n_buckets` range
     buckets: one per core slot, never more than there are buckets. With
-    at least as many cores as buckets this is one group per bucket."""
-    return max(1, min(n_buckets, _core_slots(spark)))
+    at least as many cores as buckets this is one group per bucket. A
+    Python task costs fixed slot time (worker hand-off, closure
+    unpickle, Arrow setup), so a stage wider than the cores pays that
+    overhead in extra waves while doing no more scoring work."""
+    return max(1, min(n_buckets, spark.sparkContext.defaultParallelism))
 
 
-def _kernel_frame(df: DataFrame, n_buckets: int) -> DataFrame:
-    """`df` with its slot column (_with_slot), repartitioned so each
-    kernel group sits alone on its own shuffle partition; the kernel
-    groups it by "__slot"."""
-    slotted, n_groups = _with_slot(df, n_buckets)
-    return slotted.repartition(n_groups, "__slot")
-
-
-def _with_slot(df: DataFrame, n_buckets: int):
-    """Attach the partition-placement slot column (see _slot_values):
-    range bucket b belongs to kernel group b * n_groups // n_buckets, so
-    each group is a contiguous run of whole buckets and there are
-    kernel_groups() of them — one per core slot. Returns (frame,
-    n_groups).
+def group_bounds(n_groups: int, n_buckets: int) -> list[tuple[int | None, int | None]]:
+    """The range buckets [lo, hi) of each of `n_groups` kernel groups
+    over `n_buckets` buckets: bucket b belongs to group
+    b * n_groups // n_buckets, so each group is a contiguous run of
+    whole buckets, and with n_groups <= n_buckets none is empty. The
+    first group's lo and the last group's hi are None (open), so a
+    bucket outside [0, n_buckets) still lands in a group.
 
     Packing is EXACT: a group holding several buckets' blocks scores
-    like one bigger bucket (doc sets are disjoint), so placement only
-    ever affects performance, never results. Buckets outside
-    [0, n_buckets) map to null and share one more group, which is exact
-    for the same reason.
+    like one bigger bucket (doc sets are disjoint), so the bounds only
+    ever affect performance, never results. The driver leaf relies on
+    the same argument when it scores a query's whole index in one call.
 
     NOTE (round-5 falsified idea): subdividing a range bucket into
-    finer placement groups (e.g. by first_doc bits) is NOT sound here,
-    even though blocks are doc-disjoint per term: a doc's score
-    accumulates across ITS QUERY TERMS' blocks, whose first_docs differ
-    per term — a sub-bucket split can send them to different groups and
-    emit partial scores (caught by
-    test_batch_kernel_split_is_placement_invariant before it shipped).
-    Groups must stay unions of whole doc-range buckets."""
-    n_groups = kernel_groups(df.sparkSession, n_buckets)
-    vals = _slot_values(n_groups)
-    # ONE py4j call: F.create_map over 2*n literal Columns costs ~n
-    # driver round trips (~0.1 s/query at 32 buckets, pure driver time)
-    pairs = ",".join(
-        f"{b},{vals[b * n_groups // n_buckets]}" for b in range(n_buckets)
-    )
-    mapping = F.expr(f"map({pairs})")
-    return df.withColumn("__slot", mapping[F.col("range_bucket")]), n_groups
+    finer groups (e.g. by first_doc bits) is NOT sound here, even
+    though blocks are doc-disjoint per term: a doc's score accumulates
+    across ITS QUERY TERMS' blocks, whose first_docs differ per term —
+    a sub-bucket split can send them to different groups and emit
+    partial scores (caught by test_batch_kernel_split_is_placement_invariant
+    before it shipped). Groups must stay unions of whole doc-range
+    buckets."""
+    cuts = [-(-g * n_buckets // n_groups) for g in range(1, n_groups)]
+    return list(zip([None, *cuts], [*cuts, None]))
+
+
+def _in_range(column: str, lo: int | None, hi: int | None, shift: int = 0) -> pc.Expression:
+    """`column >> shift` in [lo, hi), None being an open end."""
+    expr = pc.scalar(True)
+    if lo is not None:
+        expr &= pc.field(column) >= lo << shift
+    if hi is not None:
+        expr &= pc.field(column) < hi << shift
+    return expr
 
 
 # ONE winner row per (query, kernel group): the group's local top-k as
@@ -191,14 +142,21 @@ def _decode_terms(blocks: pa.Table, avgdl: float, impact=bm25_impact, universe=N
     Doc ids are offsets from `base`: int32 whenever the group's doc span
     (the sorted int64 NOT `universe` included) fits 31 bits. One range
     bucket always does; a group packing several buckets (few cores over
-    a very large doc-id space) or the null overflow group may not, and
-    falls back to global int64 with base=0 — slower, same scores. The
+    a very large doc-id space) or an edge group holding buckets beyond
+    the count may not, and falls back to global int64 with base=0 —
+    slower, same scores. The
     kernel runs entirely in this id space: int32 is ~half the memory
     traffic on a kernel that is bandwidth-bound, identical scores."""
     per_term: dict[str, tuple] = {}
     if not blocks.num_rows:
         return per_term, 0, np.int64
-    blocks = blocks.sort_by([("term", "ascending"), ("first_doc", "ascending")])
+    # gather (every column, payload included) only when out of order: the
+    # driver leaf's slices of the term-sorted resident table never are
+    order = pc.sort_indices(
+        blocks, sort_keys=[("term", "ascending"), ("first_doc", "ascending")]
+    ).to_numpy()
+    if (order[1:] < order[:-1]).any():
+        blocks = blocks.take(order)
     first_docs = blocks.column("first_doc").to_numpy()
     lo, hi = int(first_docs.min()), int(pc.max(blocks.column("last_doc")).as_py())
     if universe is not None and universe.size:
@@ -350,7 +308,7 @@ def _eval_tree(tree, term_docs, universe, phrase_eval):
         )
     if kind == "not":
         if universe is None:
-            raise ValueError("NOT requires the bucket universe (doclen cogroup)")
+            raise ValueError("NOT requires the group's doc-id universe")
         return np.setdiff1d(
             universe,
             _eval_tree(tree[1], term_docs, universe, phrase_eval),
@@ -433,7 +391,7 @@ def boolean_score_bucket(
     term_meta)} -> its per-query winners as a BATCH_TOPK_SCHEMA table
     (global doc ids), scored with `term_meta` weights times `impact`.
     The distributed boolean_topk applies it per group inside
-    applyInArrow; the engine's driver-local leaf calls it in-process
+    mapInArrow; the engine's driver-local leaf calls it in-process
     over the query's slices of the resident block table.
 
     The group is decoded once for the whole batch, and every query —
@@ -472,31 +430,38 @@ def boolean_score_bucket(
 
 
 def boolean_topk(
-    blocks: DataFrame,
+    spark,
+    postings: pads.Dataset,
+    terms: list[str],
     queries,
     avgdl: float,
     k: int,
-    doclen: DataFrame | None = None,
+    bounds: list[tuple[int | None, int | None]],
+    doclen: pads.Dataset | None = None,
     range_shift: int | None = None,
     *,
-    n_buckets: int,
+    with_positions: bool = False,
     impact=bm25_impact,
 ) -> DataFrame:
     """A batch {query_id: (tree, term_meta)} of boolean/phrase queries +
-    ranking (`term_meta` weights times `impact`, so any scorer) in ONE
-    distributed pass: per kernel group (a run of whole range buckets, see
-    _with_slot) one boolean_score_bucket call over a single shared scan
-    and decode, exchanged with the Python workers as Arrow
-    (applyInArrow). Returns BATCH_TOPK_SCHEMA rows — each group's local
-    top-k per query; the caller merges them (merge_query_topk_driver). A
-    single query is a batch of one.
+    ranking (`term_meta` weights times `impact`, so any scorer) as ONE
+    Spark job of one stage, with no shuffle: task g of
+    `spark.range(len(bounds)).mapInArrow` owns the range buckets
+    `bounds[g]` (see group_bounds), makes one pyarrow read of `postings`
+    (the files holding `terms`, listed on the driver) filtered on
+    `term IN terms AND range_bucket in [lo, hi)`, and calls
+    boolean_score_bucket on it. Returns BATCH_TOPK_SCHEMA rows — each
+    group's local top-k per query; the caller merges them
+    (merge_query_topk_driver). A single query is a batch of one.
 
-    Cost model: each kernel group is one Python task with ~0.2 s of
-    fixed overhead, plus one pass of the per-query loop over the group's
-    decoded terms. Both scale with the number of GROUPS, not buckets, so
-    the range buckets are packed into one group per core slot: at 4
-    cores a 32-bucket index runs 4 kernel tasks, each looping the batch
-    once over 8 buckets' postings.
+    Cost model: each kernel group is one Python task with fixed slot
+    overhead, one read of the batch's term-filtered postings (the files
+    are term-major, so every task reads all of the batch's terms and
+    keeps its own range buckets) and one pass of the per-query loop
+    over the group's decoded terms. The range buckets are packed into
+    one group per core slot (kernel_groups): at 4 cores a 32-bucket
+    index runs 4 kernel tasks, each looping the batch once over 8
+    buckets' postings.
 
     `queries` may be a plain dict or a pyspark Broadcast of one. Pass a
     Broadcast for big batches: a plain dict is pickled into the UDF
@@ -506,42 +471,38 @@ def boolean_topk(
     size).
 
     NOT needs the complement universe, so when a tree contains one the
-    caller passes `doclen` and `range_shift`, and the blocks are
-    COGROUPed with the doclen table (bucketed by the same doc-id range
-    shift and slotted with the same group mapping, so a group's universe
-    is exactly its buckets' docs) — this also covers groups where the
-    queries' tokens have no blocks at all but whose docs still match the
-    complement."""
-    # slim the kernel shuffle to the columns the kernel reads; pos_payload
-    # rides along only when the caller selected it for a phrase tree
-    cols = KERNEL_COLS + (["pos_payload"] if "pos_payload" in blocks.columns else [])
-    grouped = _kernel_frame(blocks.select(*cols), n_buckets).groupBy("__slot")
+    caller passes the `doclen` table and the `range_shift` of the
+    postings' range buckets: task g reads the doc ids of its own range,
+    [lo << range_shift, hi << range_shift), so a group's universe is
+    exactly its buckets' docs — this also covers groups where the
+    queries' tokens have no blocks at all but whose docs still match
+    the complement. `with_positions` adds the `pos_payload` column a
+    phrase reads."""
+    cols = KERNEL_COLS + (["pos_payload"] if with_positions else [])
 
-    def score(table, universe):
-        return boolean_score_bucket(
-            table,
-            queries.value if hasattr(queries, "value") else queries,
-            avgdl,
-            k,
-            universe,
-            impact,
-        )
+    # the mapInArrow function stays unannotated: PySpark 4.1.2 raises
+    # UnboundLocalError on a partly annotated Arrow UDF
+    def run(batches):
+        term_filter = pc.field("term").isin(pa.array(terms, pa.string()))
+        batch = queries.value if hasattr(queries, "value") else queries
+        for ids in batches:
+            for g in ids.column(0).to_pylist():
+                lo, hi = bounds[g]
+                blocks = postings.to_table(
+                    columns=cols, filter=term_filter & _in_range("range_bucket", lo, hi)
+                )
+                universe = None
+                if doclen is not None:
+                    dl = doclen.to_table(
+                        columns=["doc_id_int"],
+                        filter=_in_range("doc_id_int", lo, hi, range_shift),
+                    )
+                    universe = np.sort(dl.column(0).to_numpy().astype(np.int64))
+                out = boolean_score_bucket(blocks, batch, avgdl, k, universe, impact)
+                yield from out.to_batches()
 
-    # the applyInArrow functions stay unannotated: PySpark 4.1.2 raises
-    # UnboundLocalError on a partly annotated one
-    if doclen is None:
-        return grouped.applyInArrow(lambda table: score(table, None), schema=BATCH_TOPK_SCHEMA)
-    dl_b = doclen.select(
-        F.shiftrightunsigned("doc_id_int", range_shift).cast("int").alias("range_bucket"),
-        "doc_id_int",
-    )
-
-    def score_co(table, dl):
-        return score(table, np.sort(dl.column("doc_id_int").to_numpy().astype(np.int64)))
-
-    return grouped.cogroup(_kernel_frame(dl_b, n_buckets).groupBy("__slot")).applyInArrow(
-        score_co, schema=BATCH_TOPK_SCHEMA
-    )
+    n_groups = len(bounds)
+    return spark.range(n_groups, numPartitions=n_groups).mapInArrow(run, BATCH_TOPK_SCHEMA)
 
 
 def merge_query_topk_driver(

@@ -41,11 +41,5 @@ def has_pushed_filter(plan: str, fragment: str) -> bool:
     )
 
 
-def has_partition_filter(plan: str, fragment: str) -> bool:
-    return any(
-        "PartitionFilters" in line and fragment in line for line in plan.splitlines()
-    )
-
-
 def has_broadcast_join(plan: str) -> bool:
     return "BroadcastHashJoin" in plan

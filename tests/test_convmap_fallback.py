@@ -12,6 +12,10 @@ Reference parity: doc-id hydration per SURVEY.md S8 (reference
 deployment cannot hold the conv map on the driver.
 """
 
+import os
+
+import pyarrow.dataset as pads
+
 from text_indexing_and_retrieval_system_spark import engine
 
 
@@ -24,7 +28,8 @@ def _over_budget(spark, idx):
 
 def test_doc_ids_for_fallback_small_and_large(spark, built_index):
     resident = engine.InvertedIndex(spark, built_index.dir)
-    all_ids = resident._doclen_ids()[:300].tolist()
+    doclen = pads.dataset(os.path.join(built_index.dir, "doclen"), partitioning="hive")
+    all_ids = sorted(doclen.to_table(columns=["doc_id_int"]).column(0).to_pylist())[:300]
     small, large = all_ids[:17], all_ids
     assert len(large) > 256
     want_small = resident._doc_ids_for(small)

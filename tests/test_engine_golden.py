@@ -51,16 +51,15 @@ SCORERS = ["bm25", "tfidf", "wordcount"]
 
 
 def _gates_closed(idx):
-    """`idx` with both driver-leaf gates closed: every kernel query runs
-    as a distributed Spark job."""
-    idx.DRIVER_WAND_MAX_DF = 0
-    idx.DRIVER_NOT_MAX_DOCS = 0
+    """`idx` with the driver-leaf route gate closed: every kernel query
+    runs as a distributed Spark job."""
+    idx.DRIVER_MAX_ROWS = 0
     return idx
 
 
 @pytest.fixture(scope="module")
 def distributed_index(spark, built_index):
-    """A second handle on the same index with both driver-local gates
+    """A second handle on the same index with the driver-local gate
     closed, so every kernel query runs as a distributed Spark job."""
     return _gates_closed(engine.InvertedIndex(spark, built_index.dir))
 
@@ -206,9 +205,9 @@ def test_driver_leaf_launches_no_spark_job(spark, built_index, oracle_index, cor
     """A fresh handle answers OR, AND, AND NOT and PHRASE on the driver
     leaf bit-exact without one Spark job: lexicon, convmap, NOT universe
     and blocks are read with pyarrow. With the resident budget at 0 no
-    table becomes resident: every lexicon lookup, id resolution and
-    block read is a filtered pyarrow read, still with no Spark job, and
-    the golden queries, an absent term and a search_batch stay bit-exact."""
+    table becomes resident: every lexicon lookup and id resolution is a
+    filtered pyarrow read, still with no Spark job, and the golden
+    queries, an absent term and a search_batch stay bit-exact."""
     by_df = sorted(oracle_index.postings, key=lambda t: (-len(oracle_index.postings[t]), t))
     hot, mid = by_df[0], by_df[20]
     tokens = normalize_to_tokens(corpus_pdf["text"].head(50))
@@ -224,7 +223,6 @@ def test_driver_leaf_launches_no_spark_job(spark, built_index, oracle_index, cor
         spark, "test-driver-leaf-no-job", lambda: {q: idx.search_collect(q, k=K) for q in queries}
     )
     assert jobs == []
-    assert idx._bulk_blocks is True
     for q in queries:
         _assert_match(oracle_index.search(q, k=K), got[q], q)
 
@@ -244,8 +242,7 @@ def test_driver_leaf_launches_no_spark_job(spark, built_index, oracle_index, cor
     got = filtered.search_batch(batch, k=K)
     for q in batch:
         _assert_match(oracle_index.search(q, k=K), got[q], q + " [filtered batch]")
-    assert filtered._bulk_blocks is False
-    assert filtered._full_lex is None and filtered._convmap is None and filtered._blocks is None
+    assert filtered._full_lex is None and filtered._convmap is None
 
 
 def test_batch_of_unknown_terms_launches_no_spark_job(spark, built_index):
@@ -260,7 +257,7 @@ def test_batch_of_unknown_terms_launches_no_spark_job(spark, built_index):
 
 
 def test_distributed_leaf_is_one_job_of_one_stage(spark, built_index, oracle_index):
-    """With both route gates at 0, a search_batch and a NOT search_collect
+    """With the route gate at 0, a search_batch and a NOT search_collect
     each launch exactly one Spark job of one stage: the kernel tasks read
     their own range buckets, with no scan job, no shuffle stage and no
     doclen cogroup. The batch runs first on a fresh handle, so the count

@@ -69,8 +69,7 @@ def _queries(terms, phrase):
 
 def _run_all(spark, index_dir, batch, wand_qs, bool_qs):
     idx = engine.InvertedIndex(spark, index_dir)
-    idx.DRIVER_WAND_MAX_DF = 0  # force the distributed kernels
-    idx.DRIVER_NOT_MAX_DOCS = 0
+    idx.DRIVER_MAX_ROWS = 0  # force the distributed kernels
     out = {}
     for q, res in idx.search_batch(batch, k=K).items():
         out[("batch", q)] = (res.docs, res.scores)

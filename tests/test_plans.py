@@ -10,18 +10,24 @@ from text_indexing_and_retrieval_system_spark.plans import explain as X
 SF = "/root/testdata/sf0.001"
 
 
-def test_postings_scan_pruned(built_index):
-    """The distributed leaf's postings read is pruned on the driver to the
-    term's bucket= dirs, and the read itself keeps only the term's rows."""
+def test_postings_scan_pruned(spark, built_index):
+    """Both leaves read postings/ from a listing pruned on the driver to
+    the term's bucket= dirs, and a lexicon over the resident budget is
+    read keeping only the asked terms' rows."""
+    from text_indexing_and_retrieval_system_spark import engine
     from text_indexing_and_retrieval_system_spark.operators.segments import term_bucket_py
 
+    bucket = term_bucket_py("said", built_index.n_term_buckets)
     files = built_index._term_files(["said"])
     every = built_index._dataset("postings").files
-    bucket = term_bucket_py("said", built_index.n_term_buckets)
     assert files.files and len(files.files) < len(every), files.files
     assert all(f"/bucket={bucket}/" in f for f in files.files), files.files
-    rows = built_index._term_read("postings", ["term"], ["said"])
-    assert rows.num_rows and set(rows.column("term").to_pylist()) == {"said"}
+    filtered = engine.InvertedIndex(spark, built_index.dir)
+    filtered.DRIVER_RESIDENT_MAX_BYTES = 0
+    rows = filtered.lexicon_for(["said", "zzzznonexistentzzz"])
+    assert rows["term"].tolist() == ["said"]
+    assert filtered._full_lex is None
+    assert rows.values.tolist() == built_index.lexicon_for(["said"]).values.tolist()
 
 
 def test_column_pruning_on_ranked_topk(spark):

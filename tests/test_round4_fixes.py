@@ -132,8 +132,7 @@ def test_driver_paths_bit_identical_to_distributed(spark, built_index):
     """The interactive driver-local leaf (head cache) must be
     bit-identical to the distributed applyInPandas kernel."""
     dist = engine.InvertedIndex(spark, built_index.dir)
-    dist.DRIVER_WAND_MAX_DF = 0  # force the distributed paths
-    dist.DRIVER_NOT_MAX_DOCS = 0
+    dist.DRIVER_MAX_ROWS = 0  # force the distributed paths
     queries = [
         '"said" OR "index" OR "the"',
         '"said" OR "order"',

@@ -43,7 +43,7 @@ def tiny(spark, tmp_path_factory):
 def test_tfidf_bit_identical_to_oracle(spark, tiny):
     idx, oracle = tiny
     dist = engine.InvertedIndex(spark, idx.dir)
-    dist.DRIVER_WAND_MAX_DF = 0  # force the distributed kernel
+    dist.DRIVER_MAX_ROWS = 0  # force the distributed kernel
     for q in ('"alpha"', '"alpha" AND "beta"'):
         want = oracle.search(q, k=10, scorer="tfidf")
         assert want
@@ -59,7 +59,7 @@ def test_bm25_idf_bit_identical_to_oracle(spark, tiny):
     lexicon's `idf` column holds the same values."""
     idx, oracle = tiny
     dist = engine.InvertedIndex(spark, idx.dir)
-    dist.DRIVER_WAND_MAX_DF = 0  # force the distributed kernel
+    dist.DRIVER_MAX_ROWS = 0  # force the distributed kernel
     for q in ('"alpha"', '"alpha" AND "beta"'):
         want = oracle.search(q, k=10, scorer="bm25")
         assert want

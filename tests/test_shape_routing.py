@@ -1,8 +1,7 @@
 """Routing: the removed `strategy` option and misspelled keywords raise,
 boolean queries are evaluated as boolean queries, the driver-local
 kernel scores all of a query's blocks as one group for every query
-shape, and an index over the driver block budget is read per query,
-filtered to the query's terms."""
+shape, and the one route gate counts the rows the driver leaf reads."""
 
 import pytest
 
@@ -69,15 +68,27 @@ def test_driver_kernel_scores_one_group(built_index, oracle_index, corpus_pdf, m
         _assert_oracle(oracle_index, got, q, 20)
 
 
-def test_preload_over_cache_budget_stays_per_term(spark, built_index, oracle_index):
-    """An index whose kernel columns (summed from the parquet footers)
-    exceed DRIVER_RESIDENT_MAX_BYTES never becomes resident: every
-    driver-leaf query reads only its own terms' blocks."""
-    idx = engine.InvertedIndex(spark, built_index.dir)
-    idx.DRIVER_RESIDENT_MAX_BYTES = 4096
-    assert idx._footer_bytes("postings", wand.KERNEL_COLS) > idx.DRIVER_RESIDENT_MAX_BYTES
-    for q in ('"said" OR "index"', '"said" AND "order"'):
-        got = idx.search_collect(q, k=10)
-        assert idx._bulk_blocks is False
-        assert idx._blocks is None and idx._block_cache_bytes == 0
-        _assert_oracle(oracle_index, got, q, 10)
+def test_route_gate_counts_rows_read(spark, built_index, oracle_index):
+    """DRIVER_MAX_ROWS counts the rows the driver leaf would read: the
+    terms' Σdf, plus every doc id when the tree has NOT. At that count a
+    fresh handle answers in-process with no Spark job; one row under it
+    the query takes exactly one distributed job. All four answers are
+    bit-exact against the oracle."""
+    by_df = sorted(oracle_index.postings, key=lambda t: (-len(oracle_index.postings[t]), t))
+    hot, mid = by_df[0], by_df[20]
+    sum_df = len(oracle_index.postings[hot]) + len(oracle_index.postings[mid])
+    n_docs = int(built_index.stats["n_docs"])
+    sc = spark.sparkContext
+    for q, rows in ((f'"{hot}" OR "{mid}"', sum_df), (f'"{mid}" AND NOT "{hot}"', sum_df + n_docs)):
+        for limit, n_jobs in ((rows, 0), (rows - 1, 1)):
+            idx = engine.InvertedIndex(spark, built_index.dir)
+            idx.DRIVER_MAX_ROWS = limit
+            group = f"test-route-gate-{limit}"
+            sc.setJobGroup(group, "counts the route's jobs")
+            try:
+                got = idx.search_collect(q, k=20)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) == n_jobs, (q, limit)
+            _assert_oracle(oracle_index, got, q, 20)

@@ -30,8 +30,7 @@ def test_engine_spans_install_record_and_uninstall(spark, built_index, oracle_in
         built_index.search_collect(f'"{hot}" OR "{mid}"', k=10)  # driver kernel
         built_index.search_collect(f'"{hot}" AND "{mid}"', k=10)  # driver kernel
         distributed = engine.InvertedIndex(spark, built_index.dir)
-        distributed.DRIVER_WAND_MAX_DF = 0
-        distributed.DRIVER_NOT_MAX_DOCS = 0
+        distributed.DRIVER_MAX_ROWS = 0
         distributed.search_collect(f'"{hot}" AND "{mid}"', k=10)
         built_index.search_batch([f'"{hot}"', f'"{mid}" OR "{by_df[5]}"'], k=10)
     finally:
@@ -39,31 +38,14 @@ def test_engine_spans_install_record_and_uninstall(spark, built_index, oracle_in
     names = {sp.name for sp in tracer.spans}
     for name in ("engine.path.driver_kernel", "engine.path.distributed", "wand.kernel"):
         assert name in names, (name, sorted(names))
-    # the former MaxScore names are wrapped but never called
-    assert "engine.path.driver_wand" not in names
+    # the former MaxScore leaf and block-store names are wrapped but
+    # never called
+    for name in ("engine.path.driver_wand", "engine.block_fetch", "engine.preload"):
+        assert name not in names, name
     assert sum(sp.name == "engine.path.driver_kernel" for sp in tracer.spans) == 2
     assert sum(sp.name == "engine.path.distributed" for sp in tracer.spans) == 2
     for owner, attr, orig in patches:
         assert getattr(owner, attr) is orig, attr
-
-
-def test_one_preload_per_handle_and_one_block_fetch_per_query(spark, built_index, oracle_index):
-    """`engine.cold.preload_ms` and the block-fetch layer read these spans:
-    a fresh handle decides its block store once, on its first driver-leaf
-    query, and each driver query fetches its blocks once."""
-    by_df = sorted(oracle_index.postings, key=lambda t: (-len(oracle_index.postings[t]), t))
-    queries = [f'"{by_df[0]}" OR "{by_df[20]}"', f'"{by_df[1]}" AND "{by_df[5]}"', f'"{by_df[30]}"']
-    tracer = Tracer("t")
-    tracer.install_engine_spans()
-    try:
-        fresh = engine.InvertedIndex(spark, built_index.dir)
-        for q in queries:
-            fresh.search_collect(q, k=10)
-    finally:
-        tracer.uninstall()
-    preloads = [sp for sp in tracer.spans if sp.name == "engine.preload"]
-    assert len(preloads) == 1 and preloads[0].attrs["cold"] is True
-    assert sum(sp.name == "engine.block_fetch" for sp in tracer.spans) == len(queries)
 
 
 def test_lexicon_and_id_resolution_spans_mark_the_cold_call(spark, built_index, oracle_index):

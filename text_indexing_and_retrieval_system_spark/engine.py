@@ -11,35 +11,34 @@ query_processing_engine.py:549-651`):
         matches are scored exactly as Σ weight × impact (bm25: idf ×
         BM25 tf-normalization; tfidf: ln(N/df) × tf; wordcount: tf)
       → routing by gate (InvertedIndex._search_rows): driver-local when
-        the terms' Σdf (and, for NOT, the corpus size) is under the size
-        gates, else one distributed kernel job of one stage
+        the rows the driver would read (the terms' Σdf, plus the corpus
+        size for NOT) fit DRIVER_MAX_ROWS, else one distributed kernel
+        job of one stage
       → top-k (score DESC, doc_id_int ASC) → optional hydration join
 
-That gives two leaves: driver (_search_kernel_driver_rows) and
-distributed (wand.boolean_topk). Both run the one kernel body,
-wand.boolean_score_bucket, on a batch of query trees: a single query is
-a batch of one, and search_batch sends its whole batch, each query as
-the disjunction of its scoring terms, through the distributed leaf. The
-two are bit-identical in scores and order (the golden suite runs both
-against the same oracle). Control crosses driver→executor once per
-query or batch on the distributed leaf, as one Spark job of one stage
-with no shuffle: each kernel task reads its own range buckets of the
-batch's terms (and, for NOT, its own doc-id range of doclen/) with
-pyarrow, from the files the handle listed (plus a dict-lookup id
-resolution from the driver-cached convmap), matching SURVEY.md §3.1's
-target. Both leaves hand the kernel pyarrow tables of the block columns
-and merge its Arrow winner tables: no pandas between the block store
-and the ranked winners.
+That gives one leaf body, wand.score_group, and two places to run it:
+the driver (_search_kernel_driver_rows, one in-process call over the
+open range of doc ids) and the distributed leaf (wand.boolean_topk, one
+call per kernel group inside one Spark job of one stage, no shuffle).
+The body reads the batch's terms' blocks (and, for NOT, its doc-id
+range of doclen/) with pyarrow from the files the handle listed, and
+runs the one kernel, wand.boolean_score_bucket, on a batch of query
+trees: a single query is a batch of one, and search_batch sends its
+whole batch, each query as the disjunction of its scoring terms,
+through the distributed leaf. Both leaves merge the kernel's Arrow
+winner tables the same way (wand.merge_query_topk_driver) and are
+bit-identical in scores and order (the golden suite runs both against
+the same oracle). Control crosses driver→executor once per query or
+batch on the distributed leaf (plus a dict-lookup id resolution from the
+driver-cached convmap), matching SURVEY.md §3.1's target.
 
 Nothing reads an index table through Spark on the query path. The
-driver reads its tables with pyarrow: lexicon lookup and id resolution
-on every path, and the whole driver leaf. One rule covers the postings'
-kernel columns, the lexicon and the convmap: a table whose read columns
-(summed from the parquet footers) fit DRIVER_RESIDENT_MAX_BYTES is read
-whole once per handle (the blocks as one Arrow table sorted by term,
-sliced per query); a bigger one takes one read per call, filtered to the
-call's terms or conv ints. Phrase positions always take the filtered
-read; the NOT doc-id universe is read once per handle.
+driver reads the lexicon and the convmap with pyarrow under one rule: a
+table whose read columns (summed from the parquet footers) fit
+DRIVER_RESIDENT_MAX_BYTES is read whole once per handle; a bigger one
+takes one read per call, filtered to the call's terms or conv ints.
+Postings and doclen are never resident: every query reads what it
+scores.
 """
 
 from __future__ import annotations
@@ -49,7 +48,6 @@ import math
 import os
 from dataclasses import dataclass
 
-import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.dataset as pads
@@ -131,18 +129,6 @@ class InvertedIndex:
         self._turn_strs: list[str] | None = None
         self._datasets: dict[str, pads.Dataset] = {}
         self._footer_sizes: dict[tuple, int] = {}
-        # the driver leaf's block store (see _maybe_bulk_load_blocks):
-        # None = not yet decided, False = over budget (filtered reads),
-        # True = resident. Cleared here so a refresh can never serve
-        # stale blocks.
-        self._bulk_blocks: bool | None = None
-        self._blocks = None  # resident pa.Table of wand.KERNEL_COLS
-        self._term_rows: dict[str, tuple[int, int]] = {}
-        # read by perfbench/tracing.py only (its block-cache spans): no
-        # per-term cache exists; the bytes are the resident table's
-        self._block_cache: dict = {}
-        self._block_cache_bytes = 0
-        self._doclen_ids_cache = None
 
     # ------------------------------ scans ------------------------------
 
@@ -162,20 +148,19 @@ class InvertedIndex:
 
     LEX_COLS = ["term", "df", "cf", "n_blocks"]
     CONVMAP_COLS = ["conv_int", "conv_id"]
-    # interactive driver-leaf gate: queries whose terms' total df is under
-    # this run driver-local (in-process scoring over the driver block
-    # store) instead of paying a Spark job (its scheduling and Python
-    # task floor, for microseconds of math at low df). ~8 payload
-    # bytes/posting -> <=~32 MB read worst-case; on a 10^12-doc
-    # deployment hot terms blow past the cap and take the distributed
-    # kernel automatically.
-    DRIVER_WAND_MAX_DF = 4_000_000
-    # the one budget of the driver-side index tables (postings kernel
-    # columns, lexicon, convmap): a table whose read columns (parquet
-    # footers' uncompressed bytes) fit it is read whole once per handle;
-    # a bigger one is read per call, filtered to what the call needs
+    # the one route gate: a query whose driver-leaf read (its terms'
+    # postings, Σdf, plus every doc id when the tree has NOT) is at most
+    # this many rows runs in-process instead of paying a Spark job (its
+    # scheduling and Python task floor, for microseconds of math at low
+    # df). ~8 payload bytes/posting -> <=~32 MB read worst-case; on a
+    # 10^12-doc deployment hot terms blow past the cap and take the
+    # distributed kernel automatically.
+    DRIVER_MAX_ROWS = 4_000_000
+    # the one budget of the driver-resident tables (lexicon, convmap): a
+    # table whose read columns (parquet footers' uncompressed bytes) fit
+    # it is read whole once per handle; a bigger one is read per call,
+    # filtered to what the call needs
     DRIVER_RESIDENT_MAX_BYTES = 256 << 20
-    DRIVER_NOT_MAX_DOCS = 2_000_000  # NOT complement needs the universe
 
     def _dataset(self, table: str) -> pads.Dataset:
         """An index table (hive-partitioned parquet) for a driver-side
@@ -213,21 +198,11 @@ class InvertedIndex:
             sorted({term_bucket_py(t, self.n_term_buckets) for t in tokens})
         )
 
-    def _term_read(self, table: str, cols: list[str], tokens: list[str]) -> pa.Table:
-        """One pyarrow read of `table` (postings or lexicon) filtered on
-        `bucket IN (...) AND term IN (...)`: bucket-dir pruning plus
-        row-group statistics on term."""
-        return self._dataset(table).to_table(
-            columns=cols,
-            # typed, so that no tokens is an empty read, not a type error
-            filter=self._term_buckets(tokens)
-            & pads.field("term").isin(pa.array(tokens, pa.string())),
-        )
-
     def _term_files(self, tokens: list[str]) -> pads.Dataset:
         """The handle's listing of postings/ pruned to the tokens'
-        bucket= dirs, for the distributed leaf's tasks to read: no I/O,
-        and every task reads the files this handle listed."""
+        bucket= dirs, for both leaves to read: no I/O, and every read of
+        it, on the driver or in a kernel task, sees the files this handle
+        listed."""
         ds = self._dataset("postings")
         frags = list(ds.get_fragments(filter=self._term_buckets(tokens)))
         return pads.FileSystemDataset(frags, ds.schema, ds.format, ds.filesystem)
@@ -243,7 +218,13 @@ class InvertedIndex:
             if resident:
                 table = self._dataset("lexicon").to_table(columns=self.LEX_COLS)
             else:
-                table = self._term_read("lexicon", self.LEX_COLS, tokens)
+                # lexicon/ has no bucket= dirs: its files are sorted by
+                # term, so row-group statistics on term do the pruning
+                table = self._dataset("lexicon").to_table(
+                    columns=self.LEX_COLS,
+                    # typed, so that no tokens is an empty read, not a type error
+                    filter=pads.field("term").isin(pa.array(tokens, pa.string())),
+                )
             pdf = table.to_pandas()
             lex = dict(zip(pdf["term"], zip(pdf["df"], pdf["cf"], pdf["n_blocks"])))
             if resident:
@@ -334,12 +315,12 @@ class InvertedIndex:
         directly (no local-DataFrame round trip).
 
         Every query set-evaluates its tree and scores the matches
-        (wand.boolean_score_bucket), any shape and scorer. The gate picks
-        where: the interactive driver leaf (see DRIVER_WAND_MAX_DF) scores
-        small-df queries in-process over the driver block store; NOT needs
-        the complement universe (every doc id), so it additionally
-        requires a small corpus. Everything else runs as one distributed
-        bucket-kernel job. An unknown scorer raises before any Spark job."""
+        (wand.score_group), any shape and scorer. The one gate,
+        DRIVER_MAX_ROWS, picks where from the rows the driver leaf would
+        read: the terms' Σdf, plus every doc id (n_docs) when the tree has
+        NOT, whose complement needs the universe. Under it the driver
+        leaf scores in-process; everything else runs as one distributed
+        kernel job. An unknown scorer raises before any Spark job."""
         if scorer not in SCORERS:
             raise ValueError(f"unknown scorer {scorer!r}; expected one of {SCORERS}")
         node = qp.parse(query)
@@ -349,17 +330,12 @@ class InvertedIndex:
         )
         lex = self.lexicon_for(all_tokens)
         term_meta = self._term_meta(occ, self._term_weights(scorer, lex))
-        needs_universe = wand.tree_has(tree, "not")
-        driver = int(lex["df"].sum() or 0) <= self.DRIVER_WAND_MAX_DF and (
-            not needs_universe
-            or int(self.stats.get("n_docs") or 0) <= self.DRIVER_NOT_MAX_DOCS
-        )
+        rows = int(lex["df"].sum() or 0)
+        if wand.tree_has(tree, "not"):
+            rows += int(self.stats.get("n_docs") or 0)
         impact = wand.bm25_impact if scorer == "bm25" else wand.tf_impact
-        has_phrase = wand.tree_has(tree, "phrase")
-        if driver:
-            return self._search_kernel_driver_rows(
-                tree, term_meta, all_tokens, k, has_phrase, needs_universe, impact
-            )
+        if rows <= self.DRIVER_MAX_ROWS:
+            return self._search_kernel_driver_rows(tree, term_meta, all_tokens, k, impact)
         winners = self._boolean_topk_winners({0: (tree, term_meta)}, all_tokens, k, impact)
         return self._resolve(winners.get(0, []))
 
@@ -386,11 +362,7 @@ class InvertedIndex:
         would be re-unpickled by every kernel task (grows with batch
         size); as a broadcast it is fetched once per worker process.
         `mark(label)` closes search_batch's timed phases."""
-        trees = [tree for tree, _ in queries.values()]
-        needs_universe = any(wand.tree_has(t, "not") for t in trees)
-        with_positions = any(wand.tree_has(t, "phrase") for t in trees)
-        if with_positions:
-            self._require_positions()
+        reads = self._group_reads([tree for tree, _ in queries.values()])
         n_groups = wand.kernel_groups(self.spark, self.kernel_buckets)
         bc = self.spark.sparkContext.broadcast(queries)
         try:
@@ -402,10 +374,8 @@ class InvertedIndex:
                 self.stats["avgdl"],
                 k,
                 wand.group_bounds(n_groups, self.kernel_buckets),
-                doclen=self._dataset("doclen") if needs_universe else None,
-                range_shift=self.range_shift,
-                with_positions=with_positions,
                 impact=impact,
+                **reads,
             )
             mark("plan")
             table = local.toArrow()
@@ -416,83 +386,46 @@ class InvertedIndex:
         mark("driver_merge")
         return winners
 
-    def _doclen_ids(self) -> np.ndarray:
-        """Sorted int64 doc-id universe, driver-cached (gated by
-        DRIVER_NOT_MAX_DOCS at the call site)."""
-        if self._doclen_ids_cache is None:
-            ids = self._dataset("doclen").to_table(columns=["doc_id_int"]).column(0)
-            self._doclen_ids_cache = np.sort(ids.to_numpy().astype(np.int64))
-        return self._doclen_ids_cache
+    def _group_reads(self, trees: list) -> dict:
+        """What wand.score_group reads besides the blocks, for a batch of
+        `trees`, alike on both leaves: doclen/ (and the range_shift that
+        maps range buckets to doc ids) when a tree has NOT, and the
+        positions when one has a phrase."""
+        with_positions = any(wand.tree_has(t, "phrase") for t in trees)
+        if with_positions:
+            self._require_positions()
+        needs_universe = any(wand.tree_has(t, "not") for t in trees)
+        return {
+            "doclen": self._dataset("doclen") if needs_universe else None,
+            "range_shift": self.range_shift,
+            "with_positions": with_positions,
+        }
 
     def _search_kernel_driver_rows(
-        self,
-        tree,
-        term_meta: dict,
-        all_tokens: list[str],
-        k: int,
-        has_phrase: bool,
-        needs_universe: bool,
-        impact,
+        self, tree, term_meta: dict, all_tokens: list[str], k: int, impact
     ) -> list[tuple]:
-        """The driver leaf, every query shape: the distributed path's
-        kernel body (wand.boolean_score_bucket) called ONCE in-process on a
-        batch of one over all the query's blocks, with the whole
-        doc-id universe for NOT. Exact by the packing argument of
-        wand.group_bounds: a group of whole range buckets scores like one
-        bigger bucket, so the single call is bit-identical to the
-        per-group kernel tasks, without a Spark job's scheduling
-        floor."""
-        out = wand.boolean_score_bucket(
-            self._blocks_pdf_for(all_tokens, with_positions=has_phrase),
+        """The driver leaf, every query shape: the distributed leaf's
+        group body (wand.score_group) run ONCE in-process on a batch of
+        one, over the open range of doc ids. Exact by the packing
+        argument of wand.group_bounds: the whole index scores like one
+        group, so the single call is bit-identical to the per-group
+        kernel tasks, without a Spark job's scheduling floor."""
+        out = wand.score_group(
+            self._term_files(all_tokens),
+            all_tokens,
             {0: (tree, term_meta)},
             self.stats["avgdl"],
             k,
-            universe=self._doclen_ids() if needs_universe else None,
             impact=impact,
+            **self._group_reads([tree]),
         )
         return self._resolve(wand.merge_query_topk_driver(out, k).get(0, []))
 
-    # Former driver MaxScore leaf, kept by name only for
-    # perfbench/tracing.py, which wraps it at install; nothing calls it.
+    # Former driver MaxScore leaf and driver block store, kept by name
+    # only for perfbench/tracing.py, which wraps them at install; nothing
+    # calls them.
     _search_wand_driver_rows = _search_kernel_driver_rows
-
-    def _blocks_pdf_for(self, tokens: list[str], with_positions: bool = False) -> pa.Table:
-        """The tokens' posting blocks for the driver leaf as one pyarrow
-        table (empty when no token has postings), never through Spark:
-        row slices of the resident table, or, for positions (phrase
-        queries) and over the budget, one filtered read (_term_read).
-        The name is the one perfbench/tracing.py wraps."""
-        if self._bulk_blocks is None:
-            self._maybe_bulk_load_blocks()
-        if self._bulk_blocks and not with_positions:
-            rows = [self._term_rows[t] for t in tokens if t in self._term_rows]
-            slices = [self._blocks.slice(a, b - a) for a, b in rows]
-            return pa.concat_tables(slices) if slices else self._blocks.slice(0, 0)
-        if with_positions:
-            self._require_positions()
-        return self._term_read(
-            "postings", wand.KERNEL_COLS + (["pos_payload"] if with_positions else []), tokens
-        )
-
-    def _maybe_bulk_load_blocks(self) -> None:
-        """Decide the driver block store (_blocks_pdf_for calls this once
-        per handle, on its first driver-leaf query): when the postings'
-        kernel columns fit DRIVER_RESIDENT_MAX_BYTES, read them whole with
-        pyarrow into one table sorted by (term, range_bucket, first_doc)
-        with a term -> (start, stop) row index; otherwise the driver leaf
-        reads per query."""
-        self._bulk_blocks = self._fits("postings", wand.KERNEL_COLS)
-        if self._bulk_blocks:
-            table = self._dataset("postings").to_table(columns=wand.KERNEL_COLS).sort_by(
-                [("term", "ascending"), ("range_bucket", "ascending"), ("first_doc", "ascending")]
-            )
-            terms = table.column("term").to_numpy(zero_copy_only=False)
-            bounds = [0, *(np.flatnonzero(terms[1:] != terms[:-1]) + 1).tolist(), len(terms)]
-            self._term_rows = {
-                terms[a]: (a, b) for a, b in zip(bounds, bounds[1:]) if b > a
-            }
-            self._blocks = table
-            self._block_cache_bytes = table.nbytes
+    _blocks_pdf_for = _maybe_bulk_load_blocks = _search_kernel_driver_rows
 
     def _doc_ids_for(self, ids: list[int]) -> dict[int, str]:
         """doc_id_int -> doc_id string, never through Spark: the string

@@ -10,13 +10,12 @@ vectorized (numpy) and emits a local top-k; the global top-k is the
 merge of the per-group winners — the distributed analogue of the
 reference's single min-heap (`:407-450`).
 
-One columnar format runs from the block store to the ranked winners:
-the kernel reads a pyarrow table of the block columns (a task's own
-pyarrow read of its range buckets inside `mapInArrow` on the
-distributed leaf, a slice of the driver's resident table on the driver
-leaf), the codec decodes the
-binary columns from their Arrow buffers, and each group's winners go
-back as Arrow list columns that the driver merge reads flat.
+One columnar format runs from the postings files to the ranked
+winners: score_group reads a group's block columns as one pyarrow table
+(inside `mapInArrow` on the distributed leaf, once in-process over the
+open range on the driver leaf), the codec decodes the binary columns
+from their Arrow buffers, and each group's winners go back as Arrow
+list columns that the driver merge reads flat.
 
 There is one group body, boolean_score_bucket: set evaluation of a
 batch of query trees, every query shape and every scorer. A group's
@@ -90,7 +89,8 @@ def group_bounds(n_groups: int, n_buckets: int) -> list[tuple[int | None, int | 
     Packing is EXACT: a group holding several buckets' blocks scores
     like one bigger bucket (doc sets are disjoint), so the bounds only
     ever affect performance, never results. The driver leaf relies on
-    the same argument when it scores a query's whole index in one call.
+    the same argument when it scores the whole index as one group, the
+    open bound (None, None).
 
     NOTE (round-5 falsified idea): subdividing a range bucket into
     finer groups (e.g. by first_doc bits) is NOT sound here, even
@@ -150,8 +150,7 @@ def _decode_terms(blocks: pa.Table, avgdl: float, impact=bm25_impact, universe=N
     per_term: dict[str, tuple] = {}
     if not blocks.num_rows:
         return per_term, 0, np.int64
-    # gather (every column, payload included) only when out of order: the
-    # driver leaf's slices of the term-sorted resident table never are
+    # gather (every column, payload included) only when out of order
     order = pc.sort_indices(
         blocks, sort_keys=[("term", "ascending"), ("first_doc", "ascending")]
     ).to_numpy()
@@ -390,9 +389,8 @@ def boolean_score_bucket(
     pyarrow table of KERNEL_COLS) and a batch {query_id: (tree,
     term_meta)} -> its per-query winners as a BATCH_TOPK_SCHEMA table
     (global doc ids), scored with `term_meta` weights times `impact`.
-    The distributed boolean_topk applies it per group inside
-    mapInArrow; the engine's driver-local leaf calls it in-process
-    over the query's slices of the resident block table.
+    score_group calls it on the group it read: per group inside
+    boolean_topk's mapInArrow, or once in-process on the driver leaf.
 
     The group is decoded once for the whole batch, and every query —
     phrases included — reads that one decode. A pure disjunction
@@ -429,6 +427,43 @@ def boolean_score_bucket(
     )
 
 
+def score_group(
+    postings: pads.Dataset,
+    terms: list[str],
+    queries: dict[int, tuple],
+    avgdl: float,
+    k: int,
+    bound: tuple[int | None, int | None] = (None, None),
+    doclen: pads.Dataset | None = None,
+    range_shift: int | None = None,
+    *,
+    with_positions: bool = False,
+    impact=bm25_impact,
+) -> pa.Table:
+    """One kernel group, read and scored: one pyarrow read of `postings`
+    (KERNEL_COLS, plus pos_payload `with_positions`) filtered on
+    `term IN terms AND range_bucket in [lo, hi)` (`bound`, None being an
+    open end), for NOT one read of `doclen`'s doc ids in
+    [lo << range_shift, hi << range_shift) as the group's universe, then
+    boolean_score_bucket on the batch `queries`. Each distributed task
+    runs it with its group's bound; the driver leaf runs it in-process
+    with the open bound, the whole index as one group."""
+    lo, hi = bound
+    blocks = postings.to_table(
+        columns=KERNEL_COLS + (["pos_payload"] if with_positions else []),
+        # typed, so that no terms is an empty read, not a type error
+        filter=pc.field("term").isin(pa.array(terms, pa.string()))
+        & _in_range("range_bucket", lo, hi),
+    )
+    universe = None
+    if doclen is not None:
+        ids = doclen.to_table(
+            columns=["doc_id_int"], filter=_in_range("doc_id_int", lo, hi, range_shift)
+        ).column(0)
+        universe = np.sort(ids.to_numpy().astype(np.int64))
+    return boolean_score_bucket(blocks, queries, avgdl, k, universe, impact)
+
+
 def boolean_topk(
     spark,
     postings: pads.Dataset,
@@ -447,10 +482,9 @@ def boolean_topk(
     ranking (`term_meta` weights times `impact`, so any scorer) as ONE
     Spark job of one stage, with no shuffle: task g of
     `spark.range(len(bounds)).mapInArrow` owns the range buckets
-    `bounds[g]` (see group_bounds), makes one pyarrow read of `postings`
-    (the files holding `terms`, listed on the driver) filtered on
-    `term IN terms AND range_bucket in [lo, hi)`, and calls
-    boolean_score_bucket on it. Returns BATCH_TOPK_SCHEMA rows — each
+    `bounds[g]` (see group_bounds) and runs score_group over them,
+    reading `postings` (the files holding `terms`, listed on the
+    driver). Returns BATCH_TOPK_SCHEMA rows — each
     group's local top-k per query; the caller merges them
     (merge_query_topk_driver). A single query is a batch of one.
 
@@ -478,27 +512,16 @@ def boolean_topk(
     queries' tokens have no blocks at all but whose docs still match
     the complement. `with_positions` adds the `pos_payload` column a
     phrase reads."""
-    cols = KERNEL_COLS + (["pos_payload"] if with_positions else [])
-
     # the mapInArrow function stays unannotated: PySpark 4.1.2 raises
     # UnboundLocalError on a partly annotated Arrow UDF
     def run(batches):
-        term_filter = pc.field("term").isin(pa.array(terms, pa.string()))
         batch = queries.value if hasattr(queries, "value") else queries
         for ids in batches:
             for g in ids.column(0).to_pylist():
-                lo, hi = bounds[g]
-                blocks = postings.to_table(
-                    columns=cols, filter=term_filter & _in_range("range_bucket", lo, hi)
+                out = score_group(
+                    postings, terms, batch, avgdl, k, bounds[g], doclen, range_shift,
+                    with_positions=with_positions, impact=impact,
                 )
-                universe = None
-                if doclen is not None:
-                    dl = doclen.to_table(
-                        columns=["doc_id_int"],
-                        filter=_in_range("doc_id_int", lo, hi, range_shift),
-                    )
-                    universe = np.sort(dl.column(0).to_numpy().astype(np.int64))
-                out = boolean_score_bucket(blocks, batch, avgdl, k, universe, impact)
                 yield from out.to_batches()
 
     n_groups = len(bounds)

@@ -140,3 +140,15 @@ def test_driver_merge_threshold_prune_is_exact():
         assert wand.merge_query_topk_driver(table, k) == brute(table, k)
         assert wand.merge_query_topk_driver(chunked, k) == brute(table, k)
     assert wand.merge_query_topk_driver(table.slice(0, 0), 5) == {}
+
+
+def test_batch_results_share_doc_id_strings(built_index, oracle_index):
+    """Doc-id strings are interned: two search_batch calls that return the
+    same doc hand back one string object, so results kept across batches
+    hold each doc's id once."""
+    term = max(oracle_index.postings, key=lambda t: len(oracle_index.postings[t]))
+    q = f'"{term}"'
+    a = built_index.search_batch([q], k=5)[q].docs
+    b = built_index.search_batch([q], k=5)[q].docs
+    assert a and a == b
+    assert all(x is y for x, y in zip(a, b))

@@ -11,6 +11,7 @@ import json
 import os
 import shutil
 
+import pyarrow.dataset as pads
 import pytest
 
 from text_indexing_and_retrieval_system_spark import engine
@@ -156,6 +157,10 @@ def test_refresh_equals_rebuild(spark, corpus_df, corpus_pdf, tmp_path, n_chunks
     for key in ("n_docs", "avgdl", "total_tokens", "n_convs"):
         assert got.stats[key] == want.stats[key], key
     lex_cols = ["term", "df", "cf", "idf", "n_blocks"]
+    for handle in (got, want):  # no `bucket`: nothing reads one
+        assert sorted(pads.dataset(os.path.join(handle.dir, "lexicon")).schema.names) == sorted(
+            lex_cols
+        )
     lex = _rows(spark, want.dir, "lexicon", lex_cols, ["term"])
     assert _rows(spark, got.dir, "lexicon", lex_cols, ["term"]) == lex
     post_cols = ["term", "range_bucket", "first_doc", "last_doc", "payload"]

@@ -46,6 +46,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import sys
 from dataclasses import dataclass
 
 import pandas as pd
@@ -431,7 +432,9 @@ class InvertedIndex:
         """doc_id_int -> doc_id string, never through Spark: the string
         is the conv_id of conv_int = id >> TURN_BITS plus the zero-padded
         turn. A convmap that fits the budget is read once per handle;
-        a bigger one takes one read filtered to the ids' conv_ints."""
+        a bigger one takes one read filtered to the ids' conv_ints.
+        The strings are interned, so results of separate calls that
+        name the same doc share one string."""
         if not ids:
             return {}
         from .operators.index_build import TURN_BITS
@@ -467,7 +470,9 @@ class InvertedIndex:
             tt = self._turn_strs = [f"{i:04d}" for i in range(4096)]
         mask = (1 << TURN_BITS) - 1
         return {
-            i: cm[i >> TURN_BITS] + (tt[t] if (t := i & mask) < 4096 else f"{t:04d}")
+            i: sys.intern(
+                cm[i >> TURN_BITS] + (tt[t] if (t := i & mask) < 4096 else f"{t:04d}")
+            )
             for i in ids
         }
 

@@ -29,7 +29,7 @@ sources/catalog.py for the seam):
       stats.json            stage2: n_docs, avgdl, total_tokens, n_convs
       postings/bucket=<b>/  stage3: compressed blocks, term-bucketed,
                             sorted by (term, first_doc) within files
-      lexicon/              stage3: term, df, cf, idf, n_blocks, bucket
+      lexicon/              stage3: term, df, cf, idf, n_blocks
       docs/chunk=<i>/       stage4: doc store for hydration (per-chunk,
                             written FIRST in each pipeline; stage 1
                             tokenizes from it, so raw input is scanned
@@ -274,10 +274,9 @@ def write_lexicon(
             F.count("*").alias("n_blocks"),
         )
         .withColumn("idf", bm25_idf("df"))
-        .withColumn("bucket", term_bucket_col(F.col("term"), n_term_buckets))
     )
     provider.write(
-        lex.repartition(max(n_term_buckets // 4, 1), "bucket").sortWithinPartitions("term"),
+        lex.repartition(max(n_term_buckets // 4, 1), "term").sortWithinPartitions("term"),
         table,
     )
 

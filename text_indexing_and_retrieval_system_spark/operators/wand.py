@@ -72,9 +72,11 @@ def kernel_groups(spark, n_buckets: int) -> int:
     """Number of kernel groups (= kernel tasks) for `n_buckets` range
     buckets: one per core slot, never more than there are buckets. With
     at least as many cores as buckets this is one group per bucket. A
-    Python task costs fixed slot time (worker hand-off, closure
-    unpickle, Arrow setup), so a stage wider than the cores pays that
-    overhead in extra waves while doing no more scoring work."""
+    Python task costs fixed slot time, so a stage wider than the cores
+    pays that overhead in extra waves while doing no more scoring work.
+    Most of that time was PySpark re-reading its zip archives at every
+    task start, which the engine's daemon (pydaemon) removes; a task
+    still waits about 40 ms for its first input batch from the JVM."""
     return max(1, min(n_buckets, spark.sparkContext.defaultParallelism))
 
 
@@ -489,7 +491,9 @@ def boolean_topk(
     (merge_query_topk_driver). A single query is a batch of one.
 
     Cost model: each kernel group is one Python task with fixed slot
-    overhead, one read of the batch's term-filtered postings (the files
+    overhead (about 40 ms waiting for its first input batch from the
+    JVM, once pydaemon stops the per-task re-read of PySpark's zip
+    archives), one read of the batch's term-filtered postings (the files
     are term-major, so every task reads all of the batch's terms and
     keeps its own range buckets) and one pass of the per-query loop
     over the group's decoded terms. The range buckets are packed into

@@ -21,9 +21,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
-    On a real cluster pass ``master=None`` with a pre-configured
-    spark-submit environment; all settings below are cluster-safe.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32),
+    so ``master=None`` does not defer to spark-submit. Clusters run
+    ``scripts/submit_*.py``, which build their own session from the
+    spark-submit environment and keep Spark's default Python daemon.
+
+    Python workers start from the engine's daemon (``pydaemon``), which
+    keeps each task from re-reading Spark's zip archives.
     """
     # make this package importable in executor Python workers regardless of
     # the caller's cwd (local mode inherits the driver env; on a cluster use
@@ -61,6 +65,7 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
+        .config("spark.python.daemon.module", "text_indexing_and_retrieval_system_spark.pydaemon")
     )
     # shuffle/spill scratch: prefer RAM-backed storage when available —
     # the sandbox has one virtio disk whose IOPS serialize concurrent

@@ -1,9 +1,10 @@
 """The batch codecs against their per-block references and their
 inverses: pack_postings_batch is wire-identical to per-block
 pack_postings, and the `pos_payload` rows round-trip through
-encode_position_rows / decode_position_rows. The batch decoders read
-Arrow binary columns, which reach them whole, as slices with a non-zero
-offset, and in several chunks."""
+encode_position_rows / decode_position_rows. The batch encoders return
+Arrow binary arrays; the batch decoders read Arrow binary columns, which
+reach them whole, as slices with a non-zero offset, and in several
+chunks."""
 
 import numpy as np
 import pyarrow as pa
@@ -64,7 +65,7 @@ def test_batch_equals_per_block(blocks):
     dls = np.array(dls)
     starts = np.array(block_starts)
 
-    got = codec.pack_postings_batch(doc_ids, tfs, dls, starts)
+    got = codec.pack_postings_batch(doc_ids, tfs, dls, starts).to_pylist()
 
     ends = list(starts[1:]) + [len(doc_ids)]
     for b, (s, e) in enumerate(zip(starts, ends)):
@@ -99,7 +100,7 @@ def test_position_rows_round_trip(rows, block_rows):
     pass; a tf that disagrees with a row's stored len is refused."""
     rows = [np.array(sorted(r), dtype=np.int64) for r in rows]
     tfs = np.array([r.size for r in rows])
-    encoded = codec.encode_position_rows(rows)
+    encoded = codec.encode_position_rows(np.concatenate(rows), tfs).to_pylist()
     assert len(encoded) == len(rows)
     cuts = np.cumsum(block_rows)
     cuts = [0, *cuts[cuts < len(rows)].tolist(), len(rows)]
@@ -147,7 +148,7 @@ def test_batch_local32_mode(base, blocks):
     doc_ids, tfs, dls = np.array(doc_ids), np.array(tfs), np.array(dls)
     payloads = codec.pack_postings_batch(doc_ids, tfs, dls, np.array(starts))
     bn, d_loc, t_loc, l_loc = codec.unpack_postings_batch(
-        pa.array(payloads, pa.binary()), first_docs=np.array(first_docs, dtype=np.int64), base=base
+        payloads, first_docs=np.array(first_docs, dtype=np.int64), base=base
     )
     assert d_loc.dtype == np.int32 and t_loc.dtype == np.int32
     assert list(d_loc.astype(np.int64) + base) == list(doc_ids)

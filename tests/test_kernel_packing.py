@@ -147,7 +147,7 @@ def _synthetic_blocks(rng, bucket_bases, terms, block_rows=64):
             dls = rng.integers(5, 90, docs.size)
             pos = [np.sort(rng.choice(12, tf, replace=False)) for tf in tfs]
             positions.update({(t, int(d)): set(p.tolist()) for d, p in zip(docs, pos)})
-            pos_rows = codec.encode_position_rows(pos)
+            pos_rows = codec.encode_position_rows(np.concatenate(pos), tfs).to_pylist()
             for s in range(0, docs.size, block_rows):
                 d = docs[s : s + block_rows]
                 rows.append(

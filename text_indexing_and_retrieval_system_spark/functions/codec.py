@@ -9,9 +9,10 @@ absolute and subsequent elements as diffs (`encoder.py:11-59`).
 Unlike the reference (per-int Python loops), everything here is
 numpy-vectorized so it can run inside Arrow-batched UDFs at full speed —
 one call encodes/decodes a whole posting list (or a whole batch of
-concatenated lists) without per-row Python. The batch decoders read an
-Arrow binary column through its offsets and data buffers, with no
-per-block Python `bytes`.
+concatenated lists) without per-row Python. The batch encoders emit,
+and the batch decoders read, an Arrow binary column through its offsets
+and data buffers (_binary_array / _binary_stream), with no per-value
+Python `bytes`.
 
 This module owns both block columns' layouts: `payload` (doc ids, tfs,
 doc lengths; pack_postings_batch / unpack_postings_batch) and
@@ -48,12 +49,13 @@ def gap_decode(gaps: np.ndarray) -> np.ndarray:
     return np.cumsum(gaps)
 
 
-def varbyte_encode_with_sizes(numbers: np.ndarray) -> tuple[bytes, np.ndarray]:
-    """Vectorized VByte returning (stream, bytes-per-integer array) —
-    the sizes let callers slice one big encode into per-block payloads."""
+def varbyte_encode_with_sizes(numbers: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Vectorized VByte returning (stream as a uint8 array, bytes-per-
+    integer array) — the sizes let callers cut one big encode into
+    per-block values."""
     v = np.asarray(numbers, dtype=np.uint64)
     if v.size == 0:
-        return b"", np.empty(0, dtype=np.int64)
+        return np.empty(0, dtype=np.uint8), np.empty(0, dtype=np.int64)
     if np.any(np.asarray(numbers, dtype=np.int64) < 0):
         raise ValueError("varbyte_encode requires non-negative integers")
     # bytes needed per value (loop over at most 10 shift levels, vectorized)
@@ -71,12 +73,12 @@ def varbyte_encode_with_sizes(numbers: np.ndarray) -> tuple[bytes, np.ndarray]:
             np.uint8
         )
     out[ends - 1] |= 128  # stop bit on the final byte of each integer
-    return out.tobytes(), nb
+    return out, nb
 
 
 def varbyte_encode(numbers: np.ndarray) -> bytes:
     """Vectorized VByte: little-endian 7-bit groups, stop bit on last byte."""
-    return varbyte_encode_with_sizes(numbers)[0]
+    return varbyte_encode_with_sizes(numbers)[0].tobytes()
 
 
 def _varbyte_decode_raw(b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -150,9 +152,9 @@ def pack_postings_batch(
     tfs: np.ndarray,
     dls: np.ndarray,
     block_starts: np.ndarray,
-) -> list[bytes]:
-    """Pack MANY blocks in one vectorized pass; wire-identical to calling
-    :func:`pack_postings` per block.
+) -> pa.BinaryArray:
+    """Pack MANY blocks in one vectorized pass; value b is wire-identical
+    to :func:`pack_postings` of block b.
 
     doc_ids/tfs/dls: flat row arrays (doc-id-sorted within each block).
     block_starts: int array of B block start row-indices (ascending,
@@ -160,7 +162,7 @@ def pack_postings_batch(
 
     The per-block int sequence [n][doc gaps][tfs][dls] is assembled for
     all blocks into one flat array with index arithmetic, varbyte-encoded
-    once, and sliced at per-block byte offsets.
+    once, and cut at per-block byte offsets into one binary array.
     """
     doc_ids = np.asarray(doc_ids, dtype=np.int64)
     tfs = np.asarray(tfs, dtype=np.int64)
@@ -169,7 +171,7 @@ def pack_postings_batch(
     block_starts = np.asarray(block_starts, dtype=np.int64)
     n_blocks = block_starts.size
     if n_blocks == 0:
-        return []
+        return pa.array([], pa.binary())
     block_ends = np.empty(n_blocks, dtype=np.int64)
     block_ends[:-1] = block_starts[1:]
     block_ends[-1] = n_rows
@@ -199,28 +201,21 @@ def pack_postings_batch(
     S[idx_gap + 2 * nbr] = dls
 
     stream, nb_bytes = varbyte_encode_with_sizes(S)
-    byte_ends = np.cumsum(nb_bytes)
-    # byte offset where each block begins/ends
-    blk_byte_end = byte_ends[block_int_ends - 1]
-    blk_byte_start = np.empty(n_blocks, dtype=np.int64)
-    blk_byte_start[0] = 0
-    blk_byte_start[1:] = blk_byte_end[:-1]
-    mv = memoryview(stream)
-    return [bytes(mv[int(s) : int(e)]) for s, e in zip(blk_byte_start, blk_byte_end)]
+    return _binary_array(stream, np.add.reduceat(nb_bytes, base))
 
 
-def encode_position_rows(pos_lists: list) -> list[bytes]:
-    """Per row: varbyte([len] + position gaps). The build encodes each
+def encode_position_rows(positions: np.ndarray, lens: np.ndarray) -> pa.BinaryArray:
+    """Per row: varbyte([len] + position gaps), as one binary array.
+    `positions` holds every row's ascending positions concatenated; row r
+    owns the lens[r] entries after sum(lens[:r]). The build encodes each
     (doc, term) row ONCE, at tokenize time, so the big pack shuffle moves
     compact binary instead of Arrow int lists, and a block's
     `pos_payload` is the concatenation of its rows' encodings."""
-    if not pos_lists:
-        return []
-    lens = np.fromiter((len(p) for p in pos_lists), dtype=np.int64, count=len(pos_lists))
-    total = int(lens.sum())
-    if total == 0:
-        return [b""] * len(pos_lists)
-    flat = np.concatenate([np.asarray(p, dtype=np.int64) for p in pos_lists if len(p)])
+    lens = np.asarray(lens, dtype=np.int64)
+    n_rows = lens.size
+    if n_rows == 0:
+        return pa.array([], pa.binary())
+    flat = np.asarray(positions, dtype=np.int64)
     row_ends = np.cumsum(lens)
     row_starts = row_ends - lens
     gaps = flat.copy()
@@ -228,23 +223,29 @@ def encode_position_rows(pos_lists: list) -> list[bytes]:
     nz = lens > 0
     gaps[row_starts[nz]] = flat[row_starts[nz]]
     # interleave [len, gaps...] per row
-    n_rows = len(pos_lists)
-    out_ints = np.empty(n_rows + total, dtype=np.int64)
+    out_ints = np.empty(n_rows + flat.size, dtype=np.int64)
     len_idx = row_starts + np.arange(n_rows)
     out_ints[len_idx] = lens
-    mask = np.ones(n_rows + total, dtype=bool)
+    mask = np.ones(out_ints.size, dtype=bool)
     mask[len_idx] = False
     out_ints[mask] = gaps
     stream, nb = varbyte_encode_with_sizes(out_ints)
-    ints_per_row = 1 + lens
-    row_int_ends = np.cumsum(ints_per_row)
-    byte_ends = np.cumsum(nb)
-    row_byte_end = byte_ends[row_int_ends - 1]
-    row_byte_start = np.empty(n_rows, dtype=np.int64)
-    row_byte_start[0] = 0
-    row_byte_start[1:] = row_byte_end[:-1]
-    mv = memoryview(stream)
-    return [bytes(mv[int(s) : int(e)]) for s, e in zip(row_byte_start, row_byte_end)]
+    return _binary_array(stream, np.add.reduceat(nb, len_idx))
+
+
+def _binary_array(stream: np.ndarray, lens: np.ndarray) -> pa.BinaryArray:
+    """Inverse of :func:`_binary_stream`: one uint8 byte stream cut into
+    consecutive values of byte lengths `lens`, as a binary Arrow array
+    over the stream's buffer (no copy of the bytes)."""
+    offsets = np.zeros(lens.size + 1, dtype=np.int64)
+    np.cumsum(lens, out=offsets[1:])
+    if offsets[-1] > np.iinfo(np.int32).max:
+        raise ValueError("binary column over 2 GiB in one batch")
+    return pa.Array.from_buffers(
+        pa.binary(),
+        lens.size,
+        [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(stream)],
+    )
 
 
 def _binary_stream(column: pa.Array | pa.ChunkedArray) -> tuple[np.ndarray, np.ndarray]:

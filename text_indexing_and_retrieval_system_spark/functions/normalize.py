@@ -1,4 +1,4 @@
-"""Tokenize/normalize pipeline — vectorized Arrow (pandas) implementation.
+"""Tokenize/normalize pipeline — one vectorized pandas string pass.
 
 Reproduces the reference's fixed preprocessing order — lowercase →
 stopword-removal → char-strip → stem → (lemmatize) — documented at
@@ -9,7 +9,13 @@ rewrites:
 
     series of text  →  explode to tokens  →  isin() stopword filter
     →  regex char-strip (str.replace, vectorized)  →  memoized stem over
-    unique tokens  →  regroup to list<token> per row
+    unique tokens  →  flat (row id, token) arrays (normalize_flat)
+
+The build's tokenize groups the flat arrays with numpy; the query side
+and the oracle regroup them to one token list per text
+(normalize_to_tokens). pandas stays here because Python's Unicode `\\w`,
+`str.lower` and `str.split` are the tokenizer contract (pyarrow's RE2
+`\\w` is ASCII-only).
 
 Equivalences that make this identical to the reference semantics:
 - the reference splits/rejoins on whitespace at every step, so token
@@ -35,9 +41,13 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
 import pandas as pd
 
+from .lancaster import MemoLancaster
+from .morphy import MemoMorphy
 from .porter import MemoStemmer
+from .porter2 import MemoPorter2
 from .stopwords import stopwords_for
 
 
@@ -64,30 +74,37 @@ class NormalizeConfig:
 
 DEFAULT_CONFIG = NormalizeConfig()
 
-_stemmer = MemoStemmer()
-
-from .lancaster import MemoLancaster  # noqa: E402
-from .porter2 import MemoPorter2  # noqa: E402  (shares the module cache)
-
-_stemmer2 = MemoPorter2()
-_stemmer_lanc = MemoLancaster()
-
-from .morphy import MemoMorphy  # noqa: E402
-
+_porter2 = MemoPorter2()
+_STEMMERS = {
+    "porter": MemoStemmer().stem_many,
+    "snowball": _porter2.stem_many,
+    "porter2": _porter2.stem_many,
+    "lancaster": MemoLancaster().stem_many,
+}
 _lemmatizer = MemoMorphy()
 
 
-def normalize_to_tokens(texts: pd.Series, cfg: NormalizeConfig = DEFAULT_CONFIG) -> pd.Series:
-    """Series[str] -> Series[list[str]] of normalized tokens (positions =
-    list index). Vectorized; the only Python loop is memoized stemming
-    over the batch's unique tokens."""
+def _map_unique(tokens: pd.Series, fn) -> pd.Series:
+    """`fn` (a memoized word list -> word list) over the unique tokens,
+    mapped back onto every token."""
+    uniq = pd.unique(tokens)
+    return tokens.map(dict(zip(uniq, fn(uniq))))
+
+
+def normalize_flat(texts, cfg: NormalizeConfig = DEFAULT_CONFIG) -> tuple[np.ndarray, np.ndarray]:
+    """Texts (a sequence or Arrow string array; None = empty) -> (row
+    ids, tokens): every normalized token as one flat array, in row order
+    and token order within a row, with the int64 position of its text in
+    `texts`. A token's position in its text is its rank among its row's
+    tokens. Vectorized; the only Python loop is memoized stemming over
+    the batch's unique tokens."""
     if cfg.lemmatization not in (None, "morphy"):
         raise NotImplementedError(
             "lemmatization=wordnet needs a WordNet corpus (unavailable in "
             "this environment); use 'morphy' for the documented rule "
             "approximation; reference default is null (config.yaml:17)"
         )
-    s = texts.fillna("")
+    s = pd.Series(np.asarray(texts, dtype=object)).fillna("")
     if cfg.lowercase:
         s = s.str.lower()
 
@@ -110,35 +127,31 @@ def normalize_to_tokens(texts: pd.Series, cfg: NormalizeConfig = DEFAULT_CONFIG)
         exploded = exploded.str.replace(pat, "", regex=True)
     exploded = exploded[exploded != ""]
 
-    if cfg.stemming == "porter":
-        uniq = pd.unique(exploded)
-        mapping = dict(zip(uniq, _stemmer.stem_many(uniq)))
-        exploded = exploded.map(mapping)
-    elif cfg.stemming in ("snowball", "porter2"):
-        uniq = pd.unique(exploded)
-        mapping = dict(zip(uniq, _stemmer2.stem_many(uniq)))
-        exploded = exploded.map(mapping)
-    elif cfg.stemming == "lancaster":
-        uniq = pd.unique(exploded)
-        mapping = dict(zip(uniq, _stemmer_lanc.stem_many(uniq)))
-        exploded = exploded.map(mapping)
-    elif cfg.stemming is not None:
-        raise NotImplementedError(
-            f"stemming algorithm {cfg.stemming!r} not available "
-            "(porter | snowball/porter2 | lancaster)"
-        )
-
+    if cfg.stemming is not None:
+        if cfg.stemming not in _STEMMERS:
+            raise NotImplementedError(
+                f"stemming algorithm {cfg.stemming!r} not available "
+                "(porter | snowball/porter2 | lancaster)"
+            )
+        exploded = _map_unique(exploded, _STEMMERS[cfg.stemming])
     if cfg.lemmatization == "morphy":
         # reference order is stem THEN lemmatize when both are on
         # (preprocessor.py applies them as successive pipeline steps)
-        uniq = pd.unique(exploded)
-        mapping = dict(zip(uniq, _lemmatizer.lemmatize_many(uniq)))
-        exploded = exploded.map(mapping)
+        exploded = _map_unique(exploded, _lemmatizer.lemmatize_many)
 
-    regrouped = exploded.groupby(level=0).agg(list)
-    out = pd.Series([[] for _ in range(len(texts))], index=texts.index, dtype=object)
-    out[regrouped.index] = regrouped
-    return out
+    return exploded.index.to_numpy(dtype=np.int64), exploded.to_numpy(dtype=object)
+
+
+def normalize_to_tokens(texts: pd.Series, cfg: NormalizeConfig = DEFAULT_CONFIG) -> pd.Series:
+    """Series[str] -> Series[list[str]] of normalized tokens (positions =
+    list index): normalize_flat regrouped per text."""
+    rows, tokens = normalize_flat(texts, cfg)
+    counts = np.bincount(rows, minlength=len(texts))
+    ends = np.cumsum(counts)
+    starts = ends - counts
+    return pd.Series(
+        [tokens[a:b].tolist() for a, b in zip(starts, ends)], index=texts.index, dtype=object
+    )
 
 
 _QUERY_NORM_CACHE: dict[tuple[str, NormalizeConfig], tuple[str, ...]] = {}

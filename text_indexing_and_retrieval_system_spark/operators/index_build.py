@@ -5,15 +5,19 @@ Spark-first redesign of the reference's single-pass dict build
 scale:
 
   stage 0  dense conversation ids (two-phase range-sort, no global window)
-  stage 1  tokenize + per-doc posting rows via ONE mapInPandas pass
+  stage 1  tokenize + per-doc posting rows via ONE mapInArrow pass
            (doc-level pre-aggregation: emits (doc, term, tf, positions)
            instead of a token stream → the only big shuffle moves
            pre-combined rows); written as chunked *segments* (resumable)
   stage 2  doclen + collection stats (N, avgdl) from all segments
-  stage 3  shuffle all segments to (term, doc-range bucket) → mapInPandas
+  stage 3  shuffle all segments to (term, doc-range bucket) → mapInArrow
            packs doc-id-sorted blocks (delta-gap+varint payloads)
            + lexicon (term, df, cf, idf)
   stage 4  doc store (hydration table)
+
+Both Python stages take Arrow record batches and run numpy bodies; the
+codec's batch encoders return their binary columns as Arrow arrays, so
+no pandas object sits between Spark and the segment or block rows.
 
 Skew: high-df terms are split by **contiguous doc-id ranges**
 (`range_bucket = doc_id >> range_shift`) — the salted two-level split the
@@ -34,17 +38,18 @@ mirrors the reference's string ids (`dataset_news.py:340`).
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
 from dataclasses import asdict, dataclass
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import codec
-from ..functions.normalize import DEFAULT_CONFIG, NormalizeConfig, normalize_to_tokens
+from ..functions.normalize import DEFAULT_CONFIG, NormalizeConfig, normalize_flat
 
 TURN_BITS = 16  # turn_idx < 65536 per conversation
 
@@ -90,6 +95,21 @@ class IndexBuildConfig:
 # --------------------------------------------------------------------------
 
 
+def _driver_conv_ids(transcripts: DataFrame, driver_threshold: int) -> pa.Array | None:
+    """The distinct conv ids, sorted, when at most `driver_threshold`
+    (one bounded Arrow collect tells us), else None. limit(threshold+1)
+    proves over-threshold without materializing the full set on the
+    driver. Sorted by UTF-8 bytes, which is code-point (Python str and
+    Spark string) order."""
+    if not driver_threshold:
+        return None
+    head = transcripts.select("conv_id").distinct().limit(driver_threshold + 1).toArrow()
+    if head.num_rows > driver_threshold:
+        return None
+    ids = head.column("conv_id").cast(pa.string())
+    return ids.take(pc.sort_indices(ids)).combine_chunks()
+
+
 def assign_conv_ids(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -98,25 +118,23 @@ def assign_conv_ids(
 ) -> DataFrame:
     """(conv_id) -> dense conv_int, ordered lexicographically.
 
-    Fast path: when the distinct conv list fits the driver (one bounded
-    collect tells us), sort + rank in Python — ONE Spark job instead of
-    the range-sample + per-partition window + offsets three-job plan.
-    The bounded collect is itself scale-safe: limit(threshold+1) proves
-    over-threshold without materializing the full set on the driver.
+    Fast path: when the distinct conv list fits the driver, sort + rank
+    it there (_driver_conv_ids) — ONE Spark job instead of the
+    range-sample + per-partition window + offsets three-job plan.
 
     Scale path (over threshold): range-repartition by conv_id, rank
     within partitions (window is per-partition, no single-reducer sort),
     then add partition offsets computed from per-partition counts (tiny
     driver collect).
     """
+    ids = _driver_conv_ids(transcripts, driver_threshold)
+    if ids is not None:
+        out = spark.createDataFrame(
+            pa.table({"conv_id": ids, "conv_int": np.arange(len(ids), dtype=np.int64)}),
+            schema="conv_id string, conv_int long",
+        )
+        return out.repartition(min(n_parts, max(len(ids) // 10_000, 1)))
     convs = transcripts.select("conv_id").distinct()
-    if driver_threshold:
-        head = convs.limit(driver_threshold + 1).toPandas()  # Arrow fetch
-        if len(head) <= driver_threshold:
-            ids = sorted(head["conv_id"])
-            pdf = pd.DataFrame({"conv_id": ids, "conv_int": range(len(ids))})
-            out = spark.createDataFrame(pdf, schema="conv_id string, conv_int long")
-            return out.repartition(min(n_parts, max(len(ids) // 10_000, 1)))
     parted = convs.repartitionByRange(n_parts, "conv_id").withColumn(
         "_pid", F.spark_partition_id()
     )
@@ -154,21 +172,11 @@ def assign_and_write_convmap(
     driver-local 15 MB table back through a Spark write job costs ~3 s of
     pure round-trip. (Object-store deployments point pyarrow at the same
     filesystem via pa.fs, or fall back to the Spark writer.)"""
-    convs = transcripts.select("conv_id").distinct()
-    head = convs.limit(driver_threshold + 1).toPandas()
-    if len(head) <= driver_threshold:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        ids = sorted(head["conv_id"])
+    ids = _driver_conv_ids(transcripts, driver_threshold)
+    if ids is not None:
         os.makedirs(path, exist_ok=True)
         pq.write_table(
-            pa.table(
-                {
-                    "conv_id": pa.array(ids, pa.string()),
-                    "conv_int": pa.array(range(len(ids)), pa.int64()),
-                }
-            ),
+            pa.table({"conv_id": ids, "conv_int": np.arange(len(ids), dtype=np.int64)}),
             os.path.join(path, "part-00000.parquet"),
         )
         return len(ids)
@@ -207,65 +215,62 @@ SEGMENT_SCHEMA = (
 def tokenize_to_doc_postings(docs: DataFrame, cfg: NormalizeConfig) -> DataFrame:
     """(doc_id_int, text) → (doc_id_int, term, tf, dl, positions binary).
 
-    Pre-aggregates (term, doc) inside the pandas batch so the shuffle in
-    stage 3 moves one row per (doc, distinct term), not per token; the
-    row's position list is already varint-encoded (see
-    :func:`codec.encode_position_rows`). Docs with zero tokens emit a sentinel
-    row (term = "", tf = 0) so dl=0 documents still reach doclen.
+    Pre-aggregates (term, doc) inside each Arrow batch so the shuffle in
+    stage 3 moves one row per (doc, distinct term), not per token: the
+    batch's flat tokens (normalize_flat) are dictionary-encoded, one
+    stable lexsort by (row, term code) lines each (doc, term) run up
+    with its positions ascending, and the run boundaries give the rows.
+    The row's position list is already varint-encoded (see
+    :func:`codec.encode_position_rows`). Docs with zero tokens emit a
+    sentinel row (term = "", tf = 0, positions = b"") so dl=0 documents
+    still reach doclen.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            token_lists = normalize_to_tokens(pdf["text"], cfg)
-            n_rows = len(pdf)
-            dls = token_lists.map(len).to_numpy(dtype=np.int64)
-            doc_ids = pdf["doc_id_int"].to_numpy(dtype=np.int64)
-            # flatten to (row_idx, pos, term) then group with pandas
-            flat_terms = [t for lst in token_lists for t in lst]
-            if flat_terms:
-                row_idx = np.repeat(np.arange(n_rows), dls)
-                pos = np.concatenate([np.arange(n, dtype=np.int64) for n in dls if n])
-                tok = pd.DataFrame(
+    # the mapInArrow function stays unannotated (see wand.boolean_topk)
+    def run(batches):
+        for batch in batches:
+            doc_ids = batch.column("doc_id_int").to_numpy()
+            rows, tokens = normalize_flat(batch.column("text"), cfg)
+            dls = np.bincount(rows, minlength=batch.num_rows)
+            if rows.size:
+                # token i sits at position i - (first token index of its row)
+                pos = np.arange(rows.size) - (np.cumsum(dls) - dls)[rows]
+                terms = pa.array(tokens, pa.string()).dictionary_encode()
+                codes = terms.indices.to_numpy()
+                order = np.lexsort((codes, rows))  # stable: positions stay ascending
+                rows, codes, pos = rows[order], codes[order], pos[order]
+                change = np.empty(rows.size, dtype=bool)
+                change[0] = True
+                change[1:] = (rows[1:] != rows[:-1]) | (codes[1:] != codes[:-1])
+                starts = np.flatnonzero(change)
+                tfs = np.diff(starts, append=rows.size)
+                # each doc's terms in order of first occurrence, as the
+                # token stream has them (the segment files' row order)
+                runs = np.lexsort((pos[starts], rows[starts]))
+                starts, tfs = starts[runs], tfs[runs]
+                gather = np.arange(rows.size) + np.repeat(starts - (np.cumsum(tfs) - tfs), tfs)
+                yield pa.record_batch(
                     {
-                        "doc_id_int": doc_ids[row_idx],
-                        "dl": dls[row_idx],
-                        "term": flat_terms,
-                        "pos": pos,
+                        "doc_id_int": doc_ids[rows[starts]],
+                        "term": terms.dictionary.take(codes[starts]),
+                        "tf": tfs.astype(np.int32),
+                        "dl": dls[rows[starts]].astype(np.int32),
+                        "positions": codec.encode_position_rows(pos[gather], tfs),
                     }
                 )
-                grouped = (
-                    tok.groupby(["doc_id_int", "dl", "term"], sort=False)["pos"]
-                    .agg(list)
-                    .reset_index()
-                )
-                out = pd.DataFrame(
+            empty = np.flatnonzero(dls == 0)
+            if empty.size:
+                yield pa.record_batch(
                     {
-                        "doc_id_int": grouped["doc_id_int"],
-                        "term": grouped["term"],
-                        "tf": grouped["pos"].map(len).astype("int32"),
-                        "dl": grouped["dl"].astype("int32"),
-                        "positions": codec.encode_position_rows(grouped["pos"].to_list()),
+                        "doc_id_int": doc_ids[empty],
+                        "term": pa.repeat(pa.scalar("", pa.string()), empty.size),
+                        "tf": np.zeros(empty.size, dtype=np.int32),
+                        "dl": np.zeros(empty.size, dtype=np.int32),
+                        "positions": pa.repeat(pa.scalar(b"", pa.binary()), empty.size),
                     }
                 )
-            else:
-                out = pd.DataFrame(
-                    columns=["doc_id_int", "term", "tf", "dl", "positions"]
-                )
-            empty_mask = dls == 0
-            if empty_mask.any():
-                sentinel = pd.DataFrame(
-                    {
-                        "doc_id_int": doc_ids[empty_mask],
-                        "term": "",
-                        "tf": np.int32(0),
-                        "dl": np.int32(0),
-                        "positions": b"",
-                    }
-                )
-                out = pd.concat([out, sentinel], ignore_index=True)
-            yield out
 
-    return docs.select("doc_id_int", "text").mapInPandas(run, schema=SEGMENT_SCHEMA)
+    return docs.select("doc_id_int", "text").mapInArrow(run, SEGMENT_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -276,18 +281,6 @@ BLOCKS_SCHEMA = (
     "term string, range_bucket int, first_doc long, last_doc long, n int, "
     "sum_tf long, payload binary, pos_payload binary"
 )
-
-
-_BLOCK_COLS = [
-    "term",
-    "range_bucket",
-    "first_doc",
-    "last_doc",
-    "n",
-    "sum_tf",
-    "payload",
-    "pos_payload",
-]
 
 
 def build_blocks(
@@ -302,94 +295,76 @@ def build_blocks(
     bucket so a hot term splits across buckets without overlapping
     block ranges.
 
-    Physical shape: repartition + sortWithinPartitions + mapInPandas with
-    a cross-batch carry buffer — NOT groupBy().applyInPandas(), which
-    pays a per-group Python/pandas round trip (measured 100x slower on a
+    Physical shape: repartition + sortWithinPartitions + mapInArrow with
+    a cross-batch carry (the last (term, bucket) run of a batch waits
+    for the next batch as a table slice) — NOT groupBy().applyInArrow(),
+    which pays a per-group Python round trip (measured 100x slower on a
     Zipfian vocabulary where most (term, bucket) groups are tiny).
-    One Python invocation per Arrow batch; per-term packing is numpy.
+    One Python invocation per Arrow batch; packing is numpy over the
+    batch's columns, and `pos_payload` reuses the `positions` bytes
+    with block offsets.
     """
     store_pos = cfg.store_positions
     block_size = cfg.block_size
 
-    def pack_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pending: pd.DataFrame | None = None
+    def pack(tbl: pa.Table, change: np.ndarray) -> pa.Table:
+        """Pack all blocks of `tbl` (rows sorted by (term, range_bucket,
+        doc_id_int), whole runs only) in ONE vectorized pass; `change`
+        marks each run's first row."""
+        n = tbl.num_rows
+        doc_ids = tbl.column("doc_id_int").to_numpy()
+        tfs = tbl.column("tf").to_numpy().astype(np.int64)
+        group_starts = np.flatnonzero(change)
+        rel = np.arange(n) - group_starts[np.cumsum(change) - 1]
+        block_starts = np.flatnonzero(rel % block_size == 0)
+        block_ends = np.append(block_starts[1:], n)
 
-        def pack_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-            """Pack all complete blocks of a batch in ONE vectorized pass
-            (rows sorted by (term, range_bucket, doc_id_int) upstream)."""
-            n = len(pdf)
-            terms = pdf["term"].to_numpy()
-            buckets = pdf["range_bucket"].to_numpy(dtype=np.int64)
-            doc_ids = pdf["doc_id_int"].to_numpy(dtype=np.int64)
-            tfs = pdf["tf"].to_numpy(dtype=np.int64)
-            dls = pdf["dl"].to_numpy(dtype=np.int64)
+        # payload = varbyte([n] + doc gaps + tfs + dls); positions go
+        # to their OWN column (concatenation of the rows' pre-encoded
+        # bytes) so ranked queries never scan/shuffle/decode them —
+        # parquet column pruning halves the hot read path
+        payloads = codec.pack_postings_batch(
+            doc_ids, tfs, tbl.column("dl").to_numpy(), block_starts
+        )
+        if store_pos:
+            stream, row_lens = codec._binary_stream(tbl.column("positions"))
+            pos_payloads = codec._binary_array(stream, np.add.reduceat(row_lens, block_starts))
+        else:
+            pos_payloads = pa.nulls(block_starts.size, pa.binary())
+        return pa.table(
+            {
+                "term": tbl.column("term").take(block_starts),
+                "range_bucket": tbl.column("range_bucket").take(block_starts),
+                "first_doc": doc_ids[block_starts],
+                "last_doc": doc_ids[block_ends - 1],
+                "n": (block_ends - block_starts).astype(np.int32),
+                "sum_tf": np.add.reduceat(tfs, block_starts),
+                "payload": payloads,
+                "pos_payload": pos_payloads,
+            }
+        )
 
-            change = np.empty(n, dtype=bool)
-            change[0] = True
-            change[1:] = (terms[1:] != terms[:-1]) | (buckets[1:] != buckets[:-1])
-            group_id = np.cumsum(change) - 1
-            group_starts = np.flatnonzero(change)
-            rel = np.arange(n) - group_starts[group_id]
-            block_starts = np.flatnonzero(rel % block_size == 0)
-            block_ends = np.empty_like(block_starts)
-            block_ends[:-1] = block_starts[1:]
-            block_ends[-1] = n
-
-            # payload = varbyte([n] + doc gaps + tfs + dls); positions go
-            # to their OWN column (concatenation of the rows' pre-encoded
-            # bytes) so ranked queries never scan/shuffle/decode them —
-            # parquet column pruning halves the hot read path
-            payloads = codec.pack_postings_batch(doc_ids, tfs, dls, block_starts)
-            if store_pos:
-                row_bytes = pdf["positions"].to_list()
-                row_lens = np.fromiter(
-                    (len(b) for b in row_bytes), dtype=np.int64, count=n
-                )
-                all_bytes = b"".join(row_bytes)
-                byte_ends = np.cumsum(row_lens)
-                blk_byte_start = byte_ends[block_starts] - row_lens[block_starts]
-                blk_byte_end = byte_ends[block_ends - 1]
-                mv = memoryview(all_bytes)
-                pos_payloads = [
-                    bytes(mv[int(s) : int(e)])
-                    for s, e in zip(blk_byte_start, blk_byte_end)
-                ]
-            else:
-                pos_payloads = [None] * len(payloads)
-            return pd.DataFrame(
-                {
-                    "term": terms[block_starts],
-                    "range_bucket": buckets[block_starts].astype("int32"),
-                    "first_doc": doc_ids[block_starts],
-                    "last_doc": doc_ids[block_ends - 1],
-                    "n": (block_ends - block_starts).astype("int32"),
-                    "sum_tf": np.add.reduceat(tfs, block_starts),
-                    "payload": payloads,
-                    "pos_payload": pos_payloads,
-                }
-            )
-
-        def split_tail(pdf: pd.DataFrame) -> tuple[pd.DataFrame, pd.DataFrame]:
-            """Split off the final (term, bucket) group to carry it into
-            the next Arrow batch."""
-            terms = pdf["term"].to_numpy()
-            buckets = pdf["range_bucket"].to_numpy()
-            last_t, last_b = terms[-1], buckets[-1]
-            other = (terms != last_t) | (buckets != last_b)
-            cut = int(np.flatnonzero(other)[-1]) + 1 if other.any() else 0
-            return pdf.iloc[:cut], pdf.iloc[cut:]
-
-        for pdf in batches:
-            if pdf.empty:
+    # the mapInArrow function stays unannotated (see wand.boolean_topk)
+    def pack_partition(batches):
+        pending = None  # the last (term, bucket) run seen, not yet packed
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
+            tbl = pa.Table.from_batches([batch])
             if pending is not None:
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
-            head, pending = split_tail(pdf)
-            if len(head):
-                yield pack_batch(head)
-        if pending is not None and len(pending):
-            yield pack_batch(pending)
+                tbl = pa.concat_tables([pending, tbl]).combine_chunks()
+            terms, buckets = tbl.column("term"), tbl.column("range_bucket")
+            change = np.empty(tbl.num_rows, dtype=bool)
+            change[0] = True
+            change[1:] = pc.or_(
+                pc.not_equal(terms[1:], terms[:-1]), pc.not_equal(buckets[1:], buckets[:-1])
+            ).to_numpy()
+            cut = int(np.flatnonzero(change)[-1])
+            pending = tbl.slice(cut)
+            if cut:
+                yield from pack(tbl.slice(0, cut), change[:cut]).to_batches()
+        if pending is not None:
+            yield from pack(pending, np.arange(pending.num_rows) == 0).to_batches()
 
     if n_partitions is None:
         try:
@@ -404,5 +379,5 @@ def build_blocks(
     return (
         with_bucket.repartition(n_partitions, "term", "range_bucket")
         .sortWithinPartitions("term", "range_bucket", "doc_id_int")
-        .mapInPandas(pack_partition, schema=BLOCKS_SCHEMA)
+        .mapInArrow(pack_partition, BLOCKS_SCHEMA)
     )

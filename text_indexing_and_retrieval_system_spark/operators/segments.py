@@ -45,7 +45,7 @@ import time
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -262,9 +262,9 @@ def write_lexicon(
     function, because Spark's `log` rounds some arguments one ulp away."""
     n_docs = int(stats["n_docs"])
 
-    @F.pandas_udf("double")
-    def bm25_idf(df: pd.Series) -> pd.Series:
-        return pd.Series([wand.bm25_idf(n_docs, d) for d in df.tolist()], dtype="float64")
+    @F.arrow_udf("double")
+    def bm25_idf(df: pa.Array) -> pa.Array:
+        return pa.array([wand.bm25_idf(n_docs, d) for d in df.to_pylist()], pa.float64())
 
     lex = (
         postings.groupBy("term")

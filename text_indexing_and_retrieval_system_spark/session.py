@@ -2,8 +2,9 @@
 
 Defaults chosen for the local[$SPARK_GRAFT_CPUS] sandbox but expressed so
 the same settings make sense on a 1000-executor cluster: AQE on (runtime
-skew-join + partition coalescing), Arrow enabled for all pandas UDF
-boundaries, shuffle partitions sized to the parallelism.
+skew-join + partition coalescing), Arrow for every Python boundary (the
+build's and the query kernel's mapInArrow stages, and toPandas /
+createDataFrame from pandas), shuffle partitions sized to the parallelism.
 """
 
 from __future__ import annotations
